@@ -25,15 +25,17 @@ from cog3pio_spark.cells import h3x as _h3x
 from cog3pio_spark.cells import s2 as _s2
 
 
-def _coords_or_null(la: pd.Series, ln: pd.Series):
-    """(lat, lng, null_mask): Arrow delivers null doubles as NaN, and a NaN
-    fed to the int casts inside the cell kernels produced a VALID-LOOKING
-    cell id (platform-dependent, clipped to a face corner) — null
-    coordinates must come out as null cells, never as a real spatial key
-    (r4 review: null-centroid rows silently joined into face-2's corner)."""
-    lat_np = la.to_numpy(np.float64)
-    lng_np = ln.to_numpy(np.float64)
-    mask = np.isnan(lat_np) | np.isnan(lng_np)
+def _coords_or_null(la, ln):
+    """(lat, lng, null_mask) for pandas Series or numpy arrays: Arrow
+    delivers null doubles as NaN, and a NaN or ±inf fed to the int casts
+    inside the cell kernels produced a VALID-LOOKING cell id (clipped to a
+    face corner; every inf row collapsed into one cell) — null and
+    non-finite coordinates must come out as null cells, never as a real
+    spatial key (r4 review: null-centroid rows silently joined into
+    face-2's corner)."""
+    lat_np = np.asarray(la, dtype=np.float64)
+    lng_np = np.asarray(ln, dtype=np.float64)
+    mask = ~(np.isfinite(lat_np) & np.isfinite(lng_np))
     if mask.any():
         lat_np = np.where(mask, 0.0, lat_np)
         lng_np = np.where(mask, 0.0, lng_np)

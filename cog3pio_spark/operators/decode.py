@@ -1,7 +1,8 @@
 """COG decode as a vectorized Arrow stage (reference R1-R8 re-expressed).
 
-Pipeline position (SURVEY §3.4): ``dropDuplicates(media_ref)`` →
-``mapInArrow(decode_batch)`` → equi-join back to spans. Decoding runs once
+Pipeline position (SURVEY §3.4): ``decode_tiles`` is the standalone decode
+stage over distinct refs; the flagship tile path calls ``_decode_one``
+inside the fused kernel (operators/tile_kernel.py). Decoding runs once
 per *distinct* object no matter how many spans reference it (the Zipfian skew
 makes this dedupe essential at scale: the hottest ref appears in ~18% of
 media spans).
@@ -32,6 +33,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 DECODE_SCHEMA = T.StructType(
     [
@@ -60,32 +62,7 @@ DECODE_SCHEMA = T.StructType(
     ]
 )
 
-_ARROW_SCHEMA = pa.schema(
-    [
-        ("media_ref", pa.string()),
-        ("status", pa.string()),
-        ("error_msg", pa.string()),
-        ("dtype", pa.string()),
-        ("bands", pa.int32()),
-        ("height", pa.int32()),
-        ("width", pa.int32()),
-        ("mean", pa.float64()),
-        ("band_means", pa.list_(pa.float64())),
-        ("px_min", pa.float64()),
-        ("px_max", pa.float64()),
-        ("pixel_sha256", pa.string()),
-        ("a", pa.float64()),
-        ("b", pa.float64()),
-        ("c", pa.float64()),
-        ("d", pa.float64()),
-        ("e", pa.float64()),
-        ("f", pa.float64()),
-        ("centroid_x", pa.float64()),
-        ("centroid_y", pa.float64()),
-        ("pixels", pa.binary()),
-        ("fetched_bytes", pa.int64()),
-    ]
-)
+_ARROW_SCHEMA = to_arrow_schema(DECODE_SCHEMA)
 
 
 def _decode_one(
@@ -122,7 +99,7 @@ def _decode_one(
         http_range_fetcher,
     )
 
-    row: dict = {k.name: None for k in _ARROW_SCHEMA}
+    row: dict = dict.fromkeys(DECODE_SCHEMA.names)
     if not ref:
         # null/empty ref (a malformed doc's media span can carry one): a
         # taxonomy error row, not a TypeError-text row with a null in the

@@ -192,7 +192,9 @@ def _bbox_pairs_grid(px, py, pack):
 
 
 def _pip_candidates(px: np.ndarray, py: np.ndarray, pack: dict):
-    """Return (point_idx, poly_idx) pairs passing bbox + exact even-odd PIP."""
+    """Return (point_idx, poly_idx) pairs passing bbox + exact even-odd PIP,
+    in ascending point order (the fused tile kernel's row assembly relies
+    on it)."""
     if "grid" in pack:
         pt_idx, pg_idx = _bbox_pairs_grid(px, py, pack)
     else:

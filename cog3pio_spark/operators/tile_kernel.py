@@ -1,11 +1,12 @@
-"""Fused tile kernel: decode → cell-assign → PIP verdict in ONE Arrow stage.
+"""The tile path: decode → cell-assign → PIP verdict in ONE Arrow stage.
 
-The modular operators (decode.py, assign.py, pip_join.py) each cross the
-JVM↔Python boundary once; chained they cost 3-4 Python stage launches for a
-tile branch whose data volume is tiny (distinct refs). This kernel fuses the
-whole branch into a single ``mapInArrow`` pass — the hand-fused analogue of
-whole-stage codegen for the Python side. The modular operators remain the
-general-purpose API; plans/flagship.py uses the fused kernel.
+``fused_decode_assign_pip`` is the only code that turns media refs into
+cell and polygon rows. It runs the whole raster⋈vector branch as a single
+``mapInArrow`` pass: each distinct ref is decoded once, its centroid is
+assigned an S2 cell and hex cells res lo..hi, and it is probed against the
+broadcast polygon pack. ``decode_tiles``, ``assign_cells`` and ``pip_join``
+stay as separate public operators over the same helpers (``_decode_one``,
+``_coords_or_null``, ``_pip_candidates``), not as a second tile path.
 
 Passthrough contract: every input column is carried to the output (Arrow
 ``take``), so callers can pipe pre-aggregated per-ref statistics (counts,
@@ -15,7 +16,8 @@ exactly one shuffle over the span table.
 
 Output: one row per (input row, containing polygon); rows whose tile is in
 no polygon get polygon_id NULL (so decode/assign results are never lost);
-decode errors get status='error' with NULL geometry.
+decode errors get status='error', the decode taxonomy's error_msg and NULL
+geometry. Non-finite centroids get NULL cells and no polygon.
 """
 
 from __future__ import annotations
@@ -26,18 +28,22 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from cog3pio_spark.operators.decode import DECODE_SCHEMA
 
 COMPUTED_FIELDS = [
-    T.StructField("status", T.StringType(), False),
-    T.StructField("dtype", T.StringType(), True),
-    T.StructField("bands", T.IntegerType(), True),
-    T.StructField("mean", T.DoubleType(), True),
+    *(DECODE_SCHEMA[n] for n in ("status", "error_msg", "dtype", "bands", "mean")),
     T.StructField("s2_cell", T.LongType(), True),
     T.StructField("hex_cells", T.ArrayType(T.LongType()), True),
-    T.StructField("centroid_x", T.DoubleType(), True),
-    T.StructField("centroid_y", T.DoubleType(), True),
+    DECODE_SCHEMA["centroid_x"],
+    DECODE_SCHEMA["centroid_y"],
     T.StructField("polygon_id", T.StringType(), True),
 ]
+# the decode-derived output columns, as one Arrow batch per input batch
+_DECODED = to_arrow_schema(
+    T.StructType([f for f in COMPUTED_FIELDS if f.name in DECODE_SCHEMA.names])
+)
 
 
 def fused_decode_assign_pip(
@@ -61,92 +67,58 @@ def fused_decode_assign_pip(
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from cog3pio_spark.cells import h3x, s2
+        from cog3pio_spark.functions.cells import _coords_or_null
         from cog3pio_spark.functions.geo import EARTH_RADIUS_M
         from cog3pio_spark.operators.decode import _decode_one
         from cog3pio_spark.operators.pip_join import _pip_candidates
 
         pack = bc.value
+        poly_ids = pa.array([str(i) for i in pack["ids"]], pa.string())
         for batch in batches:
-            refs_list = batch.column(ref_idx).to_pylist()
-            n = len(refs_list)
+            n = batch.num_rows
             if n == 0:
                 continue
-            decoded = [_decode_one(r, include_pixels=False) for r in refs_list]
-            # np.isfinite, not `is not None` (r5 review): a NaN centroid
-            # (NaN affine tags on an otherwise-ok decode) through the int
-            # cell cast makes VALID-LOOKING s2/hex ids — the exact class
-            # _coords_or_null nulls in the modular path
-            geo = np.array(
+            decoded = pa.RecordBatch.from_pylist(
                 [
-                    d["status"] == "ok"
-                    and d["centroid_x"] is not None
-                    and np.isfinite(d["centroid_x"])
-                    and d["centroid_y"] is not None
-                    and np.isfinite(d["centroid_y"])
-                    for d in decoded
-                ]
+                    _decode_one(r, include_pixels=False)
+                    for r in batch.column(ref_idx).to_pylist()
+                ],
+                schema=_DECODED,
             )
-            cx = np.array(
-                [d["centroid_x"] if g else np.nan for d, g in zip(decoded, geo)]
+            # error rows carry NULL centroids, which arrive here as NaN
+            cx = decoded.column("centroid_x").to_numpy(zero_copy_only=False)
+            cy = decoded.column("centroid_y").to_numpy(zero_copy_only=False)
+            lat, lng, nulls = _coords_or_null(
+                np.degrees(cy / EARTH_RADIUS_M), np.degrees(cx / EARTH_RADIUS_M)
             )
-            cy = np.array(
-                [d["centroid_y"] if g else np.nan for d, g in zip(decoded, geo)]
+            s2c = pa.array(
+                s2.to_signed(s2.latlng_to_cell(lat, lng, s2_level)), mask=nulls
             )
-            s2c = np.zeros(n, dtype=np.int64)
-            hexes = np.zeros((n, n_res), dtype=np.int64)
-            if geo.any():
-                lat = np.degrees(cy[geo] / EARTH_RADIUS_M)
-                lng = np.degrees(cx[geo] / EARTH_RADIUS_M)
-                s2c[geo] = s2.to_signed(s2.latlng_to_cell(lat, lng, s2_level))
-                # one projection for ALL resolutions (r5 review: the loop
-                # redid the lat→xyz→face trig 8× — the modular path already
-                # switched to the multi-res helper in r4, the fused kernel
-                # is the flagship's actual hot tile stage)
-                hexes[geo] = h3x.latlng_to_cells_multi(
-                    lat, lng, list(range(hex_lo, hex_hi + 1))
-                )
-            pt_idx, pg_idx = _pip_candidates(cx, cy, pack)  # NaN rows never match
-
-            by_row: dict[int, list[int]] = {}
-            for pi, gi in zip(pt_idx.tolist(), pg_idx.tolist()):
-                by_row.setdefault(pi, []).append(gi)
-            rows_out: list[int] = []
-            poly_out: list[str | None] = []
-            for i in range(n):
-                hits = by_row.get(i)
-                if not hits:
-                    rows_out.append(i)
-                    poly_out.append(None)
-                else:
-                    for gi in hits:
-                        rows_out.append(i)
-                        poly_out.append(str(pack["ids"][gi]))
-
-            take = pa.array(rows_out, type=pa.int64())
-            cols = [batch.column(i).take(take) for i in range(batch.num_columns)]
-            d_at = lambda key, typ: pa.array(  # noqa: E731
-                [decoded[i][key] for i in rows_out], type=typ
-            )
-            cols.append(d_at("status", pa.string()))
-            cols.append(d_at("dtype", pa.string()))
-            cols.append(d_at("bands", pa.int32()))
-            cols.append(d_at("mean", pa.float64()))
-            cols.append(
+            hexes = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, (n + 1) * n_res, n_res, dtype=np.int32)),
                 pa.array(
-                    [int(s2c[i]) if geo[i] else None for i in rows_out], pa.int64()
-                )
+                    h3x.latlng_to_cells_multi(
+                        lat, lng, list(range(hex_lo, hex_hi + 1))
+                    ).ravel()
+                ),
+                mask=pa.array(nulls),
             )
-            cols.append(
-                pa.array(
-                    [hexes[i].tolist() if geo[i] else None for i in rows_out],
-                    pa.list_(pa.int64()),
-                )
+            pt_idx, pg_idx = _pip_candidates(
+                np.where(nulls, np.nan, cx), np.where(nulls, np.nan, cy), pack
             )
-            cols.append(d_at("centroid_x", pa.float64()))
-            cols.append(d_at("centroid_y", pa.float64()))
-            cols.append(pa.array(poly_out, pa.string()))
-            yield pa.RecordBatch.from_arrays(
-                cols, names=[*batch.schema.names, *[f.name for f in COMPUTED_FIELDS]]
-            )
+            # one output row per hit, or one NULL-polygon row for a ref
+            # without hits; pairs arrive in ascending point order, so the
+            # hit rows' slots are filled in pair order
+            hits = np.bincount(pt_idx, minlength=n)
+            per_ref = np.maximum(hits, 1)
+            take = pa.array(np.repeat(np.arange(n), per_ref))
+            poly = np.full(len(take), -1, np.int64)
+            poly[np.repeat(hits > 0, per_ref)] = pg_idx
+            computed = dict(zip(_DECODED.names, decoded.columns))
+            computed.update(s2_cell=s2c, hex_cells=hexes)
+            cols = [c.take(take) for c in batch.columns]
+            cols += [computed[f.name].take(take) for f in COMPUTED_FIELDS[:-1]]
+            cols.append(poly_ids.take(pa.array(poly, mask=poly < 0)))
+            yield pa.RecordBatch.from_arrays(cols, names=out_schema.fieldNames())
 
     return refs.mapInArrow(kernel, out_schema)

@@ -1,30 +1,27 @@
 """Flagship spatial-join + tile-assignment pipeline.
 
-    docs → posexplode(spans) → filter(kind='media')
-         → dropDuplicates(media_ref) → decode (mapInArrow)
-         → join back on media_ref (broadcast: distinct refs ≪ spans)
-         → assign cells (S2 + hex res 5..12)
-         → broadcast PIP join vs polygon layer
-         → groupBy(polygon_id) aggregation
+    docs → posexplode(spans) → filter(kind='media')          doc_media_refs
+         → groupBy(media_ref): span count + HLL doc sketch
+         → repartition → fused decode + cell assign + PIP     flagship_enriched
+           (ONE mapInArrow, operators/tile_kernel.py; the
+           per-ref stats ride through as passthrough columns)
+         → filter(polygon_id NOT NULL) → groupBy(polygon_id)  flagship_aggregate
 
 Shuffle inventory (SURVEY §3.4 node boundaries):
-  1. dropDuplicates(media_ref)      — shuffle on media_ref, input = refs only
-                                      (one narrow column, not pixels)
-  2. join decoded↔spans             — broadcast of decoded side (distinct refs
-                                      with stats; small), NO shuffle of spans
-  3. final groupBy(polygon_id)      — partial agg map-side, tiny shuffle
+  1. groupBy(media_ref)   — the only shuffle over the span table; map-side
+                            partial agg collapses each task to ≤ |distinct
+                            refs| narrow rows first
+  2. repartition          — round-robin over the distinct refs, so the
+                            decode spreads over every core
+  3. groupBy(polygon_id)  — partial agg map-side, tiny shuffle
 
-Scale-critical plan property: the PIP theta-join runs over *distinct tiles*
-(O(distinct media_refs)), never over spans — containment depends only on the
-tile geometry, so the verdict (media_ref → polygon_id) is computed once per
-tile and equi-joined back to the fat span table JVM-side. The Python/Arrow
-boundary therefore carries O(tiles) narrow rows, not O(spans) fat rows
-(measured 2.2× end-to-end on the 400k-doc bench; the gap widens with doc
-count since span volume scales and tile volume doesn't).
-
-At 10^12 docs with ~10^7 distinct refs the tile side outgrows a broadcast;
-the media_ref equi-join then degrades gracefully to a shuffled hash join on
-an 8-byte-hashable key — still never a theta join on the big side.
+Scale-critical plan property: decode and the PIP theta-join run over
+*distinct tiles* (O(distinct media_refs)), never over spans — containment
+depends only on the tile geometry, so each tile is decoded and tested once
+and its span statistics arrive pre-aggregated. The Python/Arrow boundary
+carries O(tiles) narrow rows, and no verdict is joined back to the span
+table. Only the polygon pack is broadcast; at 10^12 docs with ~10^7
+distinct refs the ref side still streams through map tasks.
 """
 
 from __future__ import annotations
@@ -32,9 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cog3pio_spark.operators.assign import assign_cells
-from cog3pio_spark.operators.decode import decode_tiles
-from cog3pio_spark.operators.pip_join import pip_join
+from cog3pio_spark.operators.tile_kernel import fused_decode_assign_pip
 
 
 def media_spans(docs: DataFrame) -> DataFrame:
@@ -48,44 +43,6 @@ def media_spans(docs: DataFrame) -> DataFrame:
         F.col("span.text").alias("text"),
         F.col("span.media_ref").alias("media_ref"),
         F.col("span.offset").alias("offset"),
-    )
-
-
-def tiles_for_docs(docs: DataFrame, include_pixels: bool = False) -> DataFrame:
-    """Decode every distinct media_ref once; return media spans joined to
-    their decoded tile stats + cell assignments.
-
-    EVERY media span keeps a row: refs that failed to decode come through
-    with status='error' + error_msg and null cell columns (r4 review — the
-    former status filter + inner join silently DROPPED all spans of a
-    corrupt ref, so callers could not distinguish 'no media' from 'decode
-    failed'; the fused kernel documents the never-lose-decode-results
-    contract, and the modular path now honors it too). Filter
-    status == 'ok' to recover the old shape explicitly."""
-    spans = media_spans(docs).filter(F.col("kind") == "media")
-    refs = spans.select("media_ref").dropDuplicates(["media_ref"])
-    decoded = decode_tiles(refs, include_pixels=include_pixels)
-    ok = assign_cells(decoded.filter(F.col("status") == "ok"))
-    err = decoded.filter(F.col("status") != "ok")
-    # error rows gain the assignment columns as nulls
-    tiles = ok.unionByName(err, allowMissingColumns=True)
-    # broadcast the decoded side: distinct refs ≪ spans (Zipf dedupe)
-    joined = spans.join(F.broadcast(tiles), "media_ref", "left")
-    # r5 review: a media span with NULL media_ref can't equi-join its error
-    # row (decode emits it under media_ref '' per its non-null contract),
-    # so it surfaced with status NULL — violating the status='error'
-    # accounting contract above. Tag it explicitly with the decode
-    # taxonomy's own message.
-    # error_msg FIRST: the condition reads status, which the second
-    # withColumn overwrites (a status-then-msg order left error_msg null)
-    null_ref = F.col("media_ref").isNull() & F.col("status").isNull()
-    return joined.withColumn(
-        "error_msg",
-        F.when(
-            null_ref, F.lit("Cannot parse url: null or empty media_ref")
-        ).otherwise(F.col("error_msg")),
-    ).withColumn(
-        "status", F.when(null_ref, F.lit("error")).otherwise(F.col("status"))
     )
 
 
@@ -156,8 +113,6 @@ def flagship_enriched(
     decode+assign+PIP kernel ONCE (localCheckpoint and derive both) instead
     of once per consumer — run_flagship.py previously decoded every tile
     twice per submission."""
-    from cog3pio_spark.operators.tile_kernel import fused_decode_assign_pip
-
     span_refs = doc_media_refs(docs, prune_text=prune_text)
     per_ref = span_refs.groupBy("media_ref").agg(
         F.count("*").alias("ref_spans"),
@@ -191,12 +146,12 @@ def flagship_pipeline(
       * span side: ONE pass over (doc_id, spans) — with ``prune_text=True``
         the parquet scan reads only the kind/media_ref subfields (the
         cluster shape; see doc_media_refs for the measured trade);
-      * ref side: per-doc distinct refs (cheap array op) → global dedupe on
-        one narrow column → repartition (AQE would coalesce the tiny ref set
-        to 1 partition and serialize the decode — Amdahl) → fused
+      * ref side: per-ref span count + HLL sketch (one shuffle on one
+        narrow key) → repartition (AQE would coalesce the tiny ref set to 1
+        partition and serialize the decode — Amdahl) → fused
         decode+assign+PIP kernel: a single Python stage for the whole tile
         branch;
-      * verdict broadcast back; final partial-agg shuffle is tiny.
+      * final partial-agg shuffle is tiny.
     """
     # ONE pass + ONE shuffle over the span table inside flagship_enriched:
     # pre-aggregate per media_ref (count + HLL doc sketch). Map-side partial

@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 import struct
 import sys
+import tempfile
 import zlib
 
 import numpy as np
@@ -234,14 +235,25 @@ def write_tiff(
         return path
     # atomic publish (r6 review): fixture regeneration rewrites files that
     # a concurrent session's executors may be mid-read — write the bytes to
-    # a per-process temp name and os.replace so readers only ever see a
-    # complete old or complete new file, never a truncated one
-    tmp = f"{path}.tmp{os.getpid()}"
-    with open(tmp, "wb") as f:
-        f.write(struct.pack("<2sHI", b"II", 42, sections[0]["ifd"]))
-        for s in sections:
-            f.write(bytes(s["blob"]))
-    os.replace(tmp, path)
+    # a uniquely named temp file in the target directory (unique per thread,
+    # not just per process) and os.replace so readers only ever see a
+    # complete old or complete new file, never a truncated one. A failed
+    # write removes its temp file.
+    tmp = tempfile.NamedTemporaryFile(
+        dir=os.path.dirname(os.path.abspath(path)),
+        prefix=f".{os.path.basename(path)}.",
+        suffix=".tmp",
+        delete=False,
+    )
+    try:
+        with tmp as f:
+            f.write(struct.pack("<2sHI", b"II", 42, sections[0]["ifd"]))
+            for s in sections:
+                f.write(bytes(s["blob"]))
+        os.replace(tmp.name, path)
+    except BaseException:
+        os.unlink(tmp.name)
+        raise
     return path
 
 

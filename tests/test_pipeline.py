@@ -2,12 +2,14 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from cog3pio_spark.fixtures.docs import interleaved_docs, span_sequence_checksum
 from cog3pio_spark.fixtures.polygons import polygons_df
-from cog3pio_spark.plans.flagship import flagship_pipeline, media_spans, tiles_for_docs
+from cog3pio_spark.plans.flagship import flagship_enriched, flagship_pipeline, media_spans
 
 
 @pytest.fixture(scope="module")
@@ -62,101 +64,137 @@ def test_span_sequence_invariant(spark, docs):
     assert before.count() == rebuilt.count()
 
 
-def test_media_dedupe_decodes_each_ref_once(spark, docs, fixture_refs):
-    st = tiles_for_docs(docs)
-    n_refs_used = st.select("media_ref").distinct().count()
-    assert n_refs_used <= len(fixture_refs)
-    # every media span that references a valid fixture got its tile row
-    spans = media_spans(docs).filter(F.col("kind") == "media")
-    assert st.count() == spans.count()
+MISSING_REF = "file:///nonexistent/xx.tif"
 
 
-def test_tiles_for_docs_keeps_failed_ref_spans(spark, docs):
-    """r4 review: spans whose ref fails to decode must surface as
-    status='error' rows with null cells — never silently vanish (the old
-    status filter + inner join dropped them)."""
+@pytest.fixture(scope="module")
+def enriched_with_bad_refs(spark, docs):
+    """flagship_enriched over the docs plus a missing-file ref and a NULL
+    ref, against a polygon layer dense enough that most tiles hit several
+    polygons. Returns (docs, polygons, rows); each row carries the Spark
+    partition it was built in, which is one kernel Arrow batch here."""
     from pyspark.sql import Row
 
     bad = spark.createDataFrame(
         [
-            Row(
-                doc_id="baddoc",
-                spans=[
-                    Row(kind="media", text=None,
-                        media_ref="file:///nonexistent/xx.tif", offset=0)
-                ],
-            )
+            Row(doc_id="baddoc", spans=[
+                Row(kind="media", text=None, media_ref=MISSING_REF, offset=0)
+            ]),
+            Row(doc_id="nullref", spans=[
+                Row(kind="media", text=None, media_ref=None, offset=0)
+            ]),
         ],
         docs.select("doc_id", "spans").schema,
     )
     both = docs.select("doc_id", "spans").unionByName(bad)
-    st = tiles_for_docs(both)
-    spans = media_spans(both).filter(F.col("kind") == "media")
-    assert st.count() == spans.count()  # exactly-once, incl. the bad ref
-    errs = st.filter(F.col("status") != "ok").collect()
-    assert len(errs) == 1
-    assert "Cannot find file" in errs[0]["error_msg"]
-    assert errs[0]["s2_cell"] is None
-
-
-def test_tiles_for_docs_null_media_ref_is_error_row(spark, docs):
-    """r5 review: a media span with NULL media_ref could not equi-join its
-    decode error row (emitted under media_ref ''), so it surfaced with
-    status NULL — breaking filter(status == 'error') failure accounting."""
-    from pyspark.sql import Row
-
-    bad = spark.createDataFrame(
-        [
-            Row(
-                doc_id="nullref",
-                spans=[Row(kind="media", text=None, media_ref=None, offset=0)],
-            )
-        ],
-        docs.select("doc_id", "spans").schema,
+    polys = polygons_df(spark, 300)
+    rows = (
+        flagship_enriched(both, polys)
+        .withColumn("part", F.spark_partition_id())
+        .collect()
     )
-    both = docs.select("doc_id", "spans").unionByName(bad)
-    st = tiles_for_docs(both)
+    return both, polys, rows
+
+
+def _bad_row(rows, pred):
+    """The single output row matching ``pred``; its Arrow batch must also
+    hold multi-hit refs, so the row assembly ran on mixed rows."""
+    found = [r for r in rows if pred(r)]
+    assert len(found) == 1
+    per_ref = Counter(r["media_ref"] for r in rows if r["part"] == found[0]["part"])
+    assert max(per_ref.values()) > 1
+    return found[0]
+
+
+def test_flagship_enriched_exactly_once(enriched_with_bad_refs):
+    """Every media span is counted once (sum of ref_spans), and every ref
+    has max(hits, 1) rows, with hits from the standalone decode_tiles +
+    pip_join operators."""
+    from cog3pio_spark.operators.decode import decode_tiles
+    from cog3pio_spark.operators.pip_join import pip_join
+
+    both, polys, rows = enriched_with_bad_refs
     spans = media_spans(both).filter(F.col("kind") == "media")
-    assert st.count() == spans.count()
-    row = st.filter(F.col("doc_id") == "nullref").collect()[0]
+    per_ref = {}
+    for r in rows:
+        per_ref.setdefault(r["media_ref"], []).append(r)
+    assert sum(rs[0]["ref_spans"] for rs in per_ref.values()) == spans.count()
+    for rs in per_ref.values():
+        assert len({r["ref_spans"] for r in rs}) == 1
+
+    refs = spans.select("media_ref").dropDuplicates().dropna()
+    hits = {}
+    for r in pip_join(decode_tiles(refs).filter(F.col("status") == "ok"), polys).collect():
+        hits.setdefault(r["media_ref"], []).append(r["polygon_id"])
+    assert max(len(h) for h in hits.values()) > 1
+    for ref, rs in per_ref.items():
+        want = sorted(hits.get(ref, []))
+        assert len(rs) == max(len(want), 1), ref
+        assert sorted(r["polygon_id"] for r in rs if r["polygon_id"]) == want, ref
+
+
+def test_flagship_enriched_missing_file_is_error_row(enriched_with_bad_refs):
+    """r4 review: a ref that fails to decode surfaces as ONE status='error'
+    row with the decode taxonomy's message and NULL geometry — it never
+    silently vanishes."""
+    row = _bad_row(enriched_with_bad_refs[2], lambda r: r["media_ref"] == MISSING_REF)
+    assert row["status"] == "error"
+    assert "Cannot find file" in row["error_msg"]
+    assert row["s2_cell"] is None and row["hex_cells"] is None
+    assert row["polygon_id"] is None
+
+
+def test_flagship_enriched_null_media_ref_is_error_row(enriched_with_bad_refs):
+    """r5 review: a media span with NULL media_ref must be a status='error'
+    row — never a row with NULL status, which breaks
+    filter(status == 'error') failure accounting."""
+    rows = enriched_with_bad_refs[2]
+    row = _bad_row(rows, lambda r: r["media_ref"] is None)
     assert row["status"] == "error"
     assert "null or empty media_ref" in row["error_msg"]
-    assert st.filter(F.col("status").isNull()).count() == 0
+    assert row["s2_cell"] is None and row["polygon_id"] is None
+    assert all(r["status"] is not None for r in rows)
 
 
-def test_fused_kernel_nan_centroid_yields_null_cells(spark, tmp_path):
+@pytest.mark.parametrize(
+    "pixel_scale,tiepoint",
+    [
+        pytest.param(
+            (float("nan"), float("nan")),
+            (0, 0, 0, float("nan"), float("nan"), 0),
+            id="nan",
+        ),
+        pytest.param((1.0, 1.0), (0, 0, 0, float("inf"), 5_300_000.0, 0), id="inf"),
+    ],
+)
+def test_nonfinite_centroid_yields_null_cells(spark, tmp_path, pixel_scale, tiepoint):
     """r5 review: an ok decode with NaN affine tags produced NaN centroids
-    that the fused kernel pushed through int cell casts — VALID-LOOKING
-    s2/hex ids (the modular path nulls them via _coords_or_null). The
-    kernel must emit null cells for non-finite centroids."""
+    that went through int cell casts to VALID-LOOKING s2/hex ids; ±inf did
+    the same in assign_cells, collapsing every inf row into one cell. Both
+    the fused kernel and assign_cells must emit NULL cells for non-finite
+    centroids."""
     import numpy as np
 
+    from cog3pio_spark.operators.assign import assign_cells
+    from cog3pio_spark.operators.decode import decode_tiles
     from cog3pio_spark.operators.tile_kernel import fused_decode_assign_pip
     from cog3pio_spark.tiff.writer import write_tiff
 
-    p = str(tmp_path / "nan_affine.tif")
+    p = str(tmp_path / "nonfinite_affine.tif")
     write_tiff(
         p,
         np.arange(64, dtype=np.uint8).reshape(1, 8, 8),
-        pixel_scale=(float("nan"), float("nan")),
-        tiepoint=(0, 0, 0, float("nan"), float("nan"), 0),
+        pixel_scale=pixel_scale,
+        tiepoint=tiepoint,
     )
     refs = spark.createDataFrame([("file://" + p,)], ["media_ref"])
     row = fused_decode_assign_pip(refs, polygons_df(spark, 4)).collect()[0]
     assert row["status"] == "ok"
     assert row["s2_cell"] is None and row["hex_cells"] is None
     assert row["polygon_id"] is None
-
-
-def test_plan_has_no_per_row_python(spark, docs):
-    """input_hint: zero per-row Python — the plan must never contain
-    BatchEvalPython (row-at-a-time UDF); only ArrowEvalPython / MapInArrow /
-    FlatMapGroupsInPandas are allowed Python boundaries (SURVEY §7)."""
-    st = tiles_for_docs(docs)
-    plan = st._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    # and the decode is an Arrow map stage
-    assert "MapInArrow" in plan or "ArrowEvalPython" in plan
+    ok = decode_tiles(refs).filter(F.col("status") == "ok")
+    row = assign_cells(ok).collect()[0]
+    assert row["s2_cell"] is None and row["hex_cells"] is None
 
 
 def test_entry_contract(spark):

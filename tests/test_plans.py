@@ -83,6 +83,7 @@ def test_doc_media_refs_pruned_scan_equal(spark, tmp_path):
         "ann_brute",
         "knn_ring",
         "text_features",
+        "flagship",
     ],
 )
 def test_no_per_row_python_anywhere(spark, build):
@@ -110,9 +111,19 @@ def test_no_per_row_python_anywhere(spark, build):
         )
         qs = spark.createDataFrame([(0, 40.1, 7.0)], ["query_id", "lat", "lng"])
         df = knn_join(qs, pts, k=3, res=6, ring=1)
+    elif build == "flagship":
+        from cog3pio_spark.fixtures.docs import interleaved_docs
+        from cog3pio_spark.fixtures.polygons import polygons_df
+        from cog3pio_spark.plans.flagship import flagship_enriched
+
+        df = flagship_enriched(
+            interleaved_docs(spark, 50, ["file:///a.tif"]), polygons_df(spark, 4)
+        )
     else:
         from cog3pio_spark.operators.text import text_features
 
         df = text_features(docs.limit(50))
     plan = _plan(df)
     assert "BatchEvalPython" not in plan, build
+    if build == "flagship":
+        assert "MapInArrow" in plan  # the whole tile path is one Arrow map

@@ -322,6 +322,58 @@ def test_writer_big_endian_input_roundtrip():
     np.testing.assert_array_equal(got, arr.astype(np.uint16))
 
 
+@pytest.mark.parametrize("fail_at", ["write", "publish"])
+def test_writer_failed_write_leaves_no_temp_file(tmp_path, monkeypatch, fail_at):
+    """A write that raises mid-stream, or a publish (os.replace) that
+    raises, must remove its temp file and leave the target path untouched
+    (the old per-process temp name leaked)."""
+    import os
+    import tempfile
+
+    def boom(*_):
+        raise OSError("simulated disk full")
+
+    if fail_at == "publish":
+        monkeypatch.setattr(os, "replace", boom)
+    else:
+        real = tempfile.NamedTemporaryFile
+
+        def failing(*args, **kwargs):
+            f = real(*args, **kwargs)
+            # the header write goes through; the first image blob raises
+            f.write = lambda data: f.file.write(data) if data[:2] == b"II" else boom()
+            return f
+
+        monkeypatch.setattr(tempfile, "NamedTemporaryFile", failing)
+    with pytest.raises(OSError, match="simulated disk full"):
+        write_tiff(str(tmp_path / "x.tif"), np.zeros((4, 4), np.uint8))
+    assert os.listdir(tmp_path) == []
+
+
+def test_writer_concurrent_threads_same_path(tmp_path):
+    """Two threads of one process publishing the same path both finish, and
+    the file left behind decodes to one of their arrays (the old temp name
+    was per process, so the threads clobbered one shared temp file)."""
+    import os
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    p = str(tmp_path / "same.tif")
+    arrays = [np.full((1, 256, 256), v, np.uint16) for v in (1, 2)]
+    start = threading.Barrier(2)
+
+    def publish(arr):
+        start.wait(timeout=30)
+        for _ in range(20):
+            write_tiff(p, arr)
+
+    with ThreadPoolExecutor(2) as ex:
+        list(ex.map(publish, arrays, timeout=120))  # re-raises a writer error
+    got = CogReader(open(p, "rb").read()).to_numpy()
+    assert any(np.array_equal(got, a) for a in arrays)
+    assert os.listdir(tmp_path) == ["same.tif"]
+
+
 def test_writer_rgba_extra_samples_imageio_conformant(spark):
     """r5 review: 4-band output used to be BlackIsZero with no ExtraSamples
     (TIFF 6.0-invalid); now RGB + ExtraSamples=alpha. Java ImageIO — an
