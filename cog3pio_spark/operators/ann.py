@@ -1,17 +1,45 @@
-"""Similarity search over embedding columns (task brief: ANN first-class).
+"""Similarity search over embedding columns: one exact reference, one
+indexed top-k core, and the pair family.
 
-* brute_force_topk — exact cosine top-k: queries broadcast, dot products via
-  a vectorized pandas_udf (numpy matmul per Arrow batch — one BLAS call per
-  batch, not per row), window row_number for the k cut. This is the
-  correctness baseline and has a DuckDB oracle (list_cosine_similarity).
-* lsh_topk         — scale path: random-hyperplane LSH buckets both sides;
-  only same-bucket pairs are scored, multi-probe via sign-flip neighbors.
-  The shuffle key is the (table, bucket) pair; the big side is never
-  crossed with the whole query set.
-* embedding_dupes  — near-duplicate pairs by cosine ≥ τ within LSH buckets.
+Reference (exact, what tests and the q17/q18 oracles compare against):
+
+* brute_force_topk — exact cosine top-k: the query matrix rides the UDF
+  closure, one numpy matmul per Arrow batch, a per-batch partial top-k, a
+  window for the final k cut. DuckDB oracle: list_cosine_similarity.
+* top_cosine_pairs — exact all-pairs global top-N, guarded by ``max_rows``.
+
+Indexed top-k core (``_search``), after Jégou et al., *Product Quantization
+for Nearest Neighbor Search* (TPAMI 2011): one coarse partition of the
+corpus into lists, optional PQ codes, one probe of a few lists per query.
+``assign`` maps each normalised vector to one list id and ``probe`` maps
+each query to distinct list ids. One encoder pass stores
+(id, ivf_list, payload); a literal ``isin`` of the probed lists prunes
+list-partitioned storage; one per-batch kernel scores every probed
+(vector, query) pair — exact cosine, or ADC over PQ codes — and cuts a
+partial top-k that one window ranks. Its callers differ only in
+``assign``/``probe`` and codes:
+
+* lsh_topk   — random-hyperplane buckets; query-directed
+  (query_directed_probes) or Hamming-ball multi-probe.
+* ivf_topk   — nearest spherical k-means centroid (train_ivf_centroids).
+* ivf2_topk  — flat coarse·n_fine + fine list of a two-level codebook
+  (train_ivf2_centroids).
+* ivfpq_topk — IVF lists with PQ codes (train_pq_codebooks), by default
+  IVFADC residual codes; ivfpq_encode is its stored index layout.
+* pq_topk    — ivfpq_topk with one list and raw (non-residual) codes.
+
+Embeddings that are NULL or hold a non-finite component are never trained
+on, indexed or scored (``_finite_vectors``); such a query vector raises.
+
+Pair family (LSH-blocked, per-bucket gram matrices):
+top_cosine_pairs_blocked (global top-N pairs), embedding_dupes
+(pairs at cosine ≥ τ, planes sized by dupes_plane_count); cosine_pairs_udf
+scores explicit pairs for top_cosine_pairs.
 """
 
 from __future__ import annotations
+
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -24,6 +52,20 @@ from pyspark.sql.functions import pandas_udf
 # shared default sample size for all codebook/centroid trainers (hoisted so
 # composed operators like ivfpq_topk can never drift from the trainers)
 TRAIN_SAMPLE = 4096
+# largest query batch any indexed top-k collects to the driver
+MAX_QUERIES = 10_000
+# (vector, query) pairs the search kernel expands at once: bounds its memory
+# when many queries probe the same lists
+PAIR_CHUNK = 1 << 16
+
+
+def _finite_vectors(df: DataFrame, vec_col: str) -> DataFrame:
+    """Rows whose embedding is non-NULL with every component finite. A NULL
+    or NaN component makes ``forall`` NULL or false, so the row is dropped."""
+    return df.filter(
+        F.col(vec_col).isNotNull()
+        & F.forall(vec_col, lambda x: ~F.isnan(x) & (F.abs(x) != float("inf")))
+    )
 
 
 def _collect_query_batch(
@@ -31,31 +73,37 @@ def _collect_query_batch(
 ) -> list:
     """Bounded driver-side collection of a *serving-sized* query batch.
 
-    pq_topk/ivfpq_topk build a per-query ADC lookup table on the driver, so
-    the query set must be small (the documented serving shape). The guard is
-    a bounded ``limit(max+1).count()`` probe — never an O(n) scan of the set
-    it refuses (same pattern as top_cosine_pairs' max_rows guard) — and it
-    runs in the SAME job as the fetch (r5 review: take(max+1) IS the
-    guarded collect — the former limit().count() probe spent an extra
-    driver job and left a TOCTOU window; same convention as
-    pip_join.pack_polygons), so an oversized query set errors loudly
-    instead of OOMing the driver (VERDICT r3 #2)."""
+    Every indexed top-k computes probes (and PQ lookup tables) for the query
+    batch on the driver, so the batch must be small. ``take(max+1)`` is the
+    guarded collect itself — one job, no O(n) scan of the set it refuses —
+    so an oversized query set errors loudly instead of OOMing the driver."""
     rows = queries.select(query_id_col, vec_col).take(max_queries + 1)
     if len(rows) > max_queries:
         raise ValueError(
-            f"query set exceeds max_queries={max_queries}: the PQ/IVFPQ LUT "
-            f"path collects queries to the driver (serving shape). For bulk "
-            f"query sets use a join-based scorer (ivf_topk/lsh_topk keep "
-            f"queries distributed) or raise max_queries= explicitly."
+            f"query set exceeds max_queries={max_queries}: indexed top-k "
+            f"collects the query batch to the driver to compute its probes. "
+            f"Split bulk query sets into batches of at most {max_queries} "
+            f"(pq_topk/ivfpq_topk also take max_queries=)."
         )
     if not rows:
-        # r5 review: an empty query set used to crash downstream in
-        # _normalize (numpy AxisError on a 0-dim matrix) — refuse clearly
+        # an empty set used to crash downstream in _normalize (numpy
+        # AxisError on a 0-dim matrix) — refuse clearly
         raise ValueError(
             "query set is empty: nothing to score (an upstream filter "
             "matched no rows?)"
         )
     return rows
+
+
+def _query_matrix(vecs: list) -> np.ndarray:
+    """Normalised query matrix; a NULL or non-finite query vector raises
+    (its scores would be NaN, and NaN ranks as a valid-looking top hit)."""
+    if any(v is None for v in vecs):
+        raise ValueError("query vector is NULL")
+    qmat = np.array([list(v) for v in vecs], dtype=np.float64)
+    if not np.isfinite(qmat).all():
+        raise ValueError("query vector has a NULL or non-finite component")
+    return _normalize(qmat)
 
 
 def _normalize(mat: np.ndarray) -> np.ndarray:
@@ -65,6 +113,22 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     n = np.linalg.norm(mat, axis=1, keepdims=True)
     n[n == 0] = 1.0
     return mat / n
+
+
+def _rank_topk(
+    scored: DataFrame, k: int, query_id_col: str, id_col: str, score_col: str
+) -> DataFrame:
+    """Final per-query cut over partial top-k survivors. Ordering uses the
+    UNROUNDED score with ascending id on ties (the oracle's ORDER BY);
+    rounding happens only on the emitted value."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col(score_col).desc(), F.col(id_col).asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, "rank", id_col, F.round(score_col, 6).alias(score_col))
+    )
 
 
 def brute_force_topk(
@@ -77,32 +141,26 @@ def brute_force_topk(
     """Exact cosine top-k of ``vectors`` for each (query_id, query_vec).
 
     The query matrix rides the UDF closure (auto-broadcast with the task
-    binary); scoring is one numpy matmul per Arrow batch.
+    binary); scoring is one numpy matmul per Arrow batch. Vectors that are
+    NULL or non-finite are skipped; such a query vector raises.
     Returns (query_id, rank, vec_id, cosine).
     """
-    from typing import Iterator as _It
-
     if not queries:
-        # r5 review: [] crashed in _normalize with an obscure numpy
-        # AxisError — refuse with the actual problem named
+        # [] crashed in _normalize with an obscure numpy AxisError — refuse
+        # with the actual problem named
         raise ValueError("queries list is empty: nothing to score")
     qids = np.array([q[0] for q in queries], dtype=np.int64)
-    qmat = _normalize(np.array([q[1] for q in queries], dtype=np.float64))
+    qmat = _query_matrix([q[1] for q in queries])
 
     # partial top-k per Arrow batch (exact: top-k is a monoid), so the
     # final per-query window ranks ≤ batches·|queries|·k rows instead of
     # shuffling every (vector, query) score — the 10⁹-vector-safe shape.
-    # Ordering uses UNROUNDED cosine (matching the oracle's ORDER BY);
-    # rounding happens only on the emitted value.
-    part_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField(id_col, vectors.schema[id_col].dataType),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    part_schema = (
+        T.StructType().add("query_id", T.LongType())
+        .add(id_col, vectors.schema[id_col].dataType).add("cosine", T.DoubleType())
     )
 
-    def _partial_topk(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+    def _partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -117,43 +175,8 @@ def brute_force_topk(
                 out["cosine"].extend(sims[qi][order].tolist())
             yield pd.DataFrame(out)
 
-    scored = vectors.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        _partial_topk, part_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col(id_col), F.round("cosine", 6).alias("cosine"))
-    )
-
-
-def _two_stage_topk(
-    scored: DataFrame, k: int, query_id_col: str, id_col: str, score_col: str = "cosine"
-) -> DataFrame:
-    """Per-query top-k without funneling all of a query's candidates into
-    one window task: stage 1 ranks within (query, physical partition) —
-    parallel — keeping ≤ k rows per partition; stage 2 ranks the ≤
-    partitions·k survivors. Top-k is a monoid, so the result is identical
-    to a single global per-query window (ties broken the same way in both
-    stages). This is the hot-partition fix for skewed/huge candidate sets
-    (a popular IVF list at 10⁹ vectors lands ~10⁸ candidate rows on one
-    query's window task otherwise)."""
-    order = [F.col(score_col).desc(), F.col(id_col).asc()]
-    w1 = Window.partitionBy(query_id_col, "_pid").orderBy(*order)
-    pruned = (
-        scored.withColumn("_pid", F.spark_partition_id())
-        .withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= k)
-        .drop("_pid", "_r1")
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-    )
+    v = _finite_vectors(vectors, vec_col).select(id_col, vec_col)
+    return _rank_topk(v.mapInPandas(_partial_topk, part_schema), k, "query_id", id_col, "cosine")
 
 
 def cosine_pairs_udf():
@@ -348,331 +371,6 @@ def _lsh_blocked_pairs(
     )
 
 
-def hyperplane_bucket(vec: F.Column, dim: int, n_planes: int = 16, seed: int = 7) -> F.Column:
-    """Random-hyperplane LSH bucket id (sign bits packed into an int)."""
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(dim, n_planes)
-    pow2 = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
-
-    @pandas_udf(T.LongType())
-    def _b(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-        signs = (mat @ planes) > 0
-        return pd.Series((signs @ pow2.astype(np.float64)).astype(np.int64))
-
-    return _b(vec)
-
-
-def query_directed_probes(
-    vec: F.Column, dim: int, n_planes: int, n_probes: int, seed: int = 7
-) -> F.Column:
-    """ARRAY<LONG> of the ``n_probes`` most promising LSH buckets per query
-    (multi-probe LSH, query-directed): the home bucket first, then sign-flip
-    perturbations ranked by cost = sum of |hyperplane margins| flipped — a
-    plane whose margin is near zero is the one a true neighbor most likely
-    sits across. Candidate flips are all singles and pairs, so the ranked
-    pool is p + C(p,2); only the cheapest ``n_probes − 1`` are emitted.
-    Bounded fan-out at ANY n_planes (the r2 Hamming-ball probing exploded as
-    C(p,2) rows per query and was capped at 2 bits for that reason)."""
-    rng = np.random.RandomState(seed)  # SAME planes as hyperplane_bucket
-    planes = rng.randn(dim, n_planes)
-    pow2 = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64)).astype(np.float64)
-    iu, ju = np.triu_indices(n_planes, 1)
-    # flip masks for singles then pairs (int64 via float dot with pow2)
-    single_masks = (1 << np.arange(n_planes, dtype=np.int64))
-    pair_masks = single_masks[iu] | single_masks[ju]
-    all_masks = np.concatenate([single_masks, pair_masks])
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _probes(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-        margins = mat @ planes  # (n, p) signed distances
-        home = ((margins > 0).astype(np.float64) @ pow2).astype(np.int64)
-        a = np.abs(margins)
-        costs = np.concatenate([a, a[:, iu] + a[:, ju]], axis=1)  # (n, p+C(p,2))
-        t = min(n_probes - 1, costs.shape[1])
-        top = np.argsort(costs, axis=1)[:, :t]  # cheapest flips first
-        out = []
-        for i in range(len(mat)):
-            out.append(np.concatenate([[home[i]], home[i] ^ all_masks[top[i]]]))
-        return pd.Series(out)
-
-    return _probes(vec)
-
-
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_planes: int = 12,
-    probe_bits: int = 0,
-    n_probes: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Approximate cosine top-k via shared LSH buckets (scale path).
-
-    Both sides get a bucket id; candidates = equi-join on bucket. Recall is
-    tuned by n_planes (fewer planes → bigger buckets → higher recall/cost)
-    plus one of two probing modes:
-
-    * ``n_probes=T`` (preferred, r3): query-directed multi-probe — each
-      query probes its home bucket plus the T−1 cheapest sign-flip
-      perturbations ranked by |margin| (see query_directed_probes). Probe
-      fan-out is exactly T per query at any n_planes.
-    * ``probe_bits`` (r2, kept for comparison): the full Hamming ball —
-      probe_bits=1 → n_planes+1 probes, =2 adds all C(n_planes, 2) two-flip
-      buckets; capped at 2, beyond which the fan-out exceeds simply using
-      fewer planes.
-
-    Vectors keep ONE bucket, so a (query, vector) candidate occurs at most
-    once and the big side never expands.
-    """
-    from itertools import combinations
-
-    if probe_bits > 2:
-        raise ValueError("probe_bits > 2 unsupported: use n_probes= instead")
-    if n_probes is not None and probe_bits:
-        raise ValueError("set either n_probes or probe_bits, not both")
-    v = vectors.withColumn("bucket", hyperplane_bucket(F.col(vec_col), dim, n_planes))
-    if n_probes is not None and n_probes > 1:
-        q = queries.withColumn(
-            "bucket",
-            F.explode(query_directed_probes(F.col(vec_col), dim, n_planes, n_probes)),
-        )
-    else:
-        q = queries.withColumn("bucket", hyperplane_bucket(F.col(vec_col), dim, n_planes))
-    if probe_bits >= 1:  # mutually exclusive with n_probes (guard above)
-        masks = [0] + [1 << i for i in range(n_planes)]
-        if probe_bits >= 2:
-            masks += [
-                (1 << i) | (1 << j) for i, j in combinations(range(n_planes), 2)
-            ]
-        probes = F.array(*[F.col("bucket").bitwiseXOR(F.lit(mk)) for mk in masks])
-        q = q.withColumn("bucket", F.explode(probes))
-
-    cosine = cosine_pairs_udf()  # shared helper (r4: was a verbatim copy)
-    cand = F.broadcast(
-        q.select(F.col(query_id_col), F.col("bucket"), F.col(vec_col).alias("_qv"))
-    ).join(v.select(id_col, "bucket", vec_col), "bucket")
-    scored = cand.withColumn("cosine", cosine(F.col("_qv"), F.col(vec_col)))
-    return _two_stage_topk(scored, k, query_id_col, id_col).select(
-        query_id_col, "rank", id_col, F.round("cosine", 6).alias("cosine")
-    )
-
-
-def _deterministic_sample(
-    vectors: DataFrame, vec_col: str, id_col: str, sample: int
-) -> list:
-    """First ``sample`` rows by id (ADVICE r2: limit() without sort is
-    partition-order dependent, so codebooks could change across runs under
-    AQE / cluster re-reads, breaking the determinism contract). orderBy +
-    limit plans as TakeOrderedAndProject — parallel per-partition partial
-    top-k merged on the driver, never a full sort."""
-    return vectors.select(id_col, vec_col).orderBy(id_col).limit(sample).select(vec_col).collect()
-
-
-def train_ivf_centroids(
-    vectors: DataFrame,
-    dim: int,
-    n_centroids: int = 32,
-    sample: int = TRAIN_SAMPLE,
-    iters: int = 8,
-    seed: int = 77,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_rows: list | None = None,
-) -> np.ndarray:
-    """Deterministic mini-KMeans on a fixed-size sample (driver-side numpy).
-
-    Centroid training is O(sample × dim × iters) — independent of table
-    size; the expensive part (assignment) stays distributed. Seeded init +
-    fixed iteration count + id-ordered sample ⇒ bit-reproducible across runs
-    and physical layouts (resume/goldens). ``sample_rows``: pre-collected
-    sample (one collection shared across trainers, e.g. ivfpq_topk).
-    """
-    rows = sample_rows if sample_rows is not None else _deterministic_sample(
-        vectors, vec_col, id_col, sample
-    )
-    mat = _normalize(np.array([list(r[0]) for r in rows], dtype=np.float64))
-    rng = np.random.RandomState(seed)
-    cents = mat[rng.choice(len(mat), size=min(n_centroids, len(mat)), replace=False)]
-    for _ in range(iters):
-        sims = mat @ cents.T
-        assign = sims.argmax(axis=1)
-        for c in range(len(cents)):
-            members = mat[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-        cents = _normalize(cents)
-    return cents
-
-
-def ivf_assign(vec: F.Column, centroids: np.ndarray, nprobe: int = 1) -> F.Column:
-    """ARRAY<INT> of the ``nprobe`` nearest centroid ids (vectorized)."""
-    cents = centroids
-
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def _a(vecs: pd.Series) -> pd.Series:
-        mat = _normalize(np.vstack(vecs.to_numpy()))
-        sims = mat @ cents.T
-        # kind="stable": on tied similarities the LOWER centroid index wins,
-        # matching argmax (r3 review: default introsort is unstable, so a
-        # tied vector could be stored in one list but residual-encoded /
-        # probed against another)
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-        return pd.Series(list(top))
-
-    return _a(vec)
-
-
-def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_centroids: int = 32,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """IVF approximate top-k: inverted-file partitioning by nearest centroid.
-
-    Scale shape: vectors are assigned to exactly 1 list (a one-pass narrow
-    stage, persistable as a partition layout); queries probe their nprobe
-    nearest lists, so each query scores ~nprobe/n_centroids of the corpus.
-    The join key is the int centroid id — an 8-byte shuffle key, and the
-    probe side is broadcast. Recall/cost is tuned by (n_centroids, nprobe).
-    """
-    cents = train_ivf_centroids(vectors, dim, n_centroids, vec_col=vec_col, id_col=id_col)
-    v = vectors.withColumn(
-        "ivf_list", F.element_at(ivf_assign(F.col(vec_col), cents, 1), 1)
-    )
-    q = queries.withColumn("ivf_list", F.explode(ivf_assign(F.col(vec_col), cents, nprobe)))
-
-    cosine = cosine_pairs_udf()
-    cand = F.broadcast(
-        q.select(query_id_col, "ivf_list", F.col(vec_col).alias("_qv"))
-    ).join(v.select(id_col, "ivf_list", vec_col), "ivf_list")
-    scored = cand.withColumn("cosine", cosine(F.col("_qv"), F.col(vec_col)))
-    return _two_stage_topk(scored, k, query_id_col, id_col).select(
-        query_id_col, "rank", id_col, F.round("cosine", 6).alias("cosine")
-    )
-
-
-def train_ivf2_centroids(
-    vectors: DataFrame,
-    dim: int,
-    n_coarse: int = 8,
-    n_fine: int = 8,
-    sample: int = TRAIN_SAMPLE,
-    iters: int = 8,
-    seed: int = 177,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> tuple[np.ndarray, np.ndarray]:
-    """Two-level IVF codebook: coarse k-means, then per-coarse-cell fine
-    k-means over that cell's sample members. Returns (coarse[n_coarse,dim],
-    fine[n_coarse,n_fine,dim]). Same determinism contract as the one-level
-    trainer (fixed id-ordered sample, seeds, iteration count)."""
-    rows = _deterministic_sample(vectors, vec_col, id_col, sample)
-    mat = _normalize(np.array([list(r[0]) for r in rows], dtype=np.float64))
-    rng = np.random.RandomState(seed)
-    coarse = mat[rng.choice(len(mat), size=min(n_coarse, len(mat)), replace=False)]
-    for _ in range(iters):
-        assign = (mat @ coarse.T).argmax(axis=1)
-        for c in range(len(coarse)):
-            members = mat[assign == c]
-            if len(members):
-                coarse[c] = members.mean(axis=0)
-        coarse = _normalize(coarse)
-    assign = (mat @ coarse.T).argmax(axis=1)
-    fine = np.zeros((len(coarse), n_fine, dim))
-    for c in range(len(coarse)):
-        members = mat[assign == c]
-        if len(members) == 0:
-            members = mat  # degenerate empty cell: reuse global sample
-        sel = rng.choice(len(members), size=min(n_fine, len(members)), replace=False)
-        fc = members[sel]
-        if len(fc) < n_fine:  # pad by repeating (stable ids)
-            fc = np.vstack([fc] * (n_fine // len(fc) + 1))[:n_fine]
-        for _ in range(iters):
-            fa = (members @ fc.T).argmax(axis=1)
-            for f in range(n_fine):
-                m = members[fa == f]
-                if len(m):
-                    fc[f] = m.mean(axis=0)
-            fc = _normalize(fc)
-        fine[c] = fc
-    return coarse, fine
-
-
-def ivf2_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_coarse: int = 8,
-    n_fine: int = 8,
-    nprobe_coarse: int = 2,
-    nprobe_fine: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Two-level IVF approximate top-k (round-2 stretch; VERDICT r1 noted
-    single-level only). Each vector gets ONE flat list id
-    (coarse·n_fine + fine); queries probe nprobe_coarse coarse cells ×
-    nprobe_fine fine cells each, so a query scores ~(nprobe_c·nprobe_f)/
-    (n_coarse·n_fine) of the corpus — a quadratically finer partition than
-    one level at the same codebook-train cost shape. Join key stays a single
-    int; probe side broadcast."""
-    coarse, fine = train_ivf2_centroids(
-        vectors, dim, n_coarse, n_fine, vec_col=vec_col, id_col=id_col
-    )
-
-    @pandas_udf(T.IntegerType())
-    def _assign1(vecs: pd.Series) -> pd.Series:
-        mat = _normalize(np.vstack(vecs.to_numpy()))
-        c = (mat @ coarse.T).argmax(axis=1)
-        # fine argmax within the assigned coarse cell only
-        sims = np.einsum("nd,nfd->nf", mat, fine[c])
-        f = sims.argmax(axis=1)
-        return pd.Series((c * fine.shape[1] + f).astype(np.int32))
-
-    nf = fine.shape[1]
-
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def _probe(vecs: pd.Series) -> pd.Series:
-        mat = _normalize(np.vstack(vecs.to_numpy()))
-        # stable argsorts: tie-breaking matches _assign1's argmax (lowest
-        # index wins), so a vector in a tied list is always probed
-        ctop = np.argsort(-(mat @ coarse.T), axis=1, kind="stable")[:, :nprobe_coarse]
-        out = []
-        for i in range(len(mat)):
-            lists = []
-            for c in ctop[i]:
-                fs = np.argsort(-(fine[c] @ mat[i]), kind="stable")[:nprobe_fine]
-                lists.extend(int(c) * nf + int(f) for f in fs)
-            out.append(np.array(lists, dtype=np.int32))
-        return pd.Series(out)
-
-    v = vectors.withColumn("ivf_list", _assign1(F.col(vec_col)))
-    q = queries.withColumn("ivf_list", F.explode(_probe(F.col(vec_col))))
-    cosine = cosine_pairs_udf()
-    cand = F.broadcast(
-        q.select(query_id_col, "ivf_list", F.col(vec_col).alias("_qv"))
-    ).join(v.select(id_col, "ivf_list", vec_col), "ivf_list")
-    scored = cand.withColumn("cosine", cosine(F.col("_qv"), F.col(vec_col)))
-    # no dedupe needed: every vector lives in exactly one flat list, so a
-    # (query, vector) candidate pair occurs at most once across probes
-    return _two_stage_topk(scored, k, query_id_col, id_col).select(
-        query_id_col, "rank", id_col, F.round("cosine", 6).alias("cosine")
-    )
-
 
 def dupes_plane_count(
     n_rows: int, threshold: float, n_tables: int, recall_target: float
@@ -752,6 +450,417 @@ def embedding_dupes(
     )
 
 
+
+def _encode(
+    vectors: DataFrame,
+    assign,
+    id_col: str,
+    vec_col: str,
+    books: np.ndarray | None = None,
+    centroids: np.ndarray | None = None,
+    list_type: T.DataType = T.IntegerType(),
+) -> DataFrame:
+    """(id, ivf_list, payload) in ONE mapInPandas pass: the encoder behind
+    every indexed top-k. ``assign(mat)`` gives one list id per normalised
+    vector. The payload is the embedding itself, or with ``books`` its PQ
+    codes (``pq``) — of the residual v − centroids[list] when ``centroids``
+    is given (IVFADC), which is why assignment and residual share one
+    computation here and can never disagree on a tie."""
+    schema = T.StructType().add(id_col, vectors.schema[id_col].dataType).add("ivf_list", list_type)
+    if books is None:
+        schema = schema.add(vec_col, vectors.schema[vec_col].dataType)
+    else:
+        schema = schema.add("pq", T.ArrayType(T.ShortType()))
+
+    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            mat = _normalize(np.vstack(pdf[vec_col].to_numpy()))
+            lists = assign(mat)
+            out = {id_col: pdf[id_col], "ivf_list": lists}
+            if books is None:
+                out[vec_col] = pdf[vec_col]
+            else:
+                res = mat if centroids is None else mat - centroids[lists]
+                out["pq"] = list(_pq_codes(res, books))
+            yield pd.DataFrame(out)
+
+    v = _finite_vectors(vectors, vec_col).select(id_col, vec_col)
+    return v.mapInPandas(_enc, schema)
+
+
+def _search(
+    vectors: DataFrame,
+    queries: DataFrame,
+    assign,
+    probe,
+    k: int,
+    *,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    max_queries: int = MAX_QUERIES,
+    books: np.ndarray | None = None,
+    centroids: np.ndarray | None = None,
+    encoded: DataFrame | None = None,
+    list_type: T.DataType = T.IntegerType(),
+) -> DataFrame:
+    """The one indexed top-k core (see the module docstring).
+
+    ``probe(qmat)`` gives an (n_queries, P) array of DISTINCT list ids per
+    query; since every vector lives in exactly one list, each
+    (query, vector) pair is scored at most once. Without ``books`` the
+    probed vectors are scored by exact cosine; with ``books`` by ADC over
+    their codes, plus ⟨q, c_list⟩ for residual codes (``centroids``). Pass
+    ``encoded`` to search a persisted (id, ivf_list, payload) index.
+    Returns (query_id_col, rank, id_col, cosine | pq_score).
+
+    The query batch is collected (bounded by ``max_queries``) and its probes
+    are computed on the driver. The probed-list set is a literal, so the
+    ``isin`` filter is a pushable predicate: over storage partitioned by
+    ivf_list it prunes at file-listing time. The kernel finds each row's
+    probing queries through a CSR index of the probes (lists sorted, one
+    run of query indices per list), expands the (vector, query) pairs in
+    numpy, and keeps each query's top-k per slice (top-k is a monoid), so
+    the final window ranks ≤ slices·|queries|·k rows."""
+    rows = _collect_query_batch(queries, query_id_col, vec_col, max_queries)
+    qvals = pd.Series([r[0] for r in rows]).to_numpy()
+    qmat = _query_matrix([r[1] for r in rows])
+    probes = np.asarray(probe(qmat))
+    order = np.argsort(probes.ravel(), kind="stable")
+    q_of = order // probes.shape[1]
+    lists, starts, counts = np.unique(probes.ravel()[order], return_index=True, return_counts=True)
+    if encoded is None:
+        encoded = _encode(vectors, assign, id_col, vec_col, books, centroids, list_type)
+    if books is None:
+        score_col, payload = "cosine", vec_col
+    else:
+        score_col, payload = "pq_score", "pq"
+        m, _, sub = books.shape  # the codebooks, not an m parameter, are authoritative
+        lut = np.einsum("qjs,jcs->qjc", qmat.reshape(len(qmat), m, sub), books)
+        qcent = None if centroids is None else qmat @ centroids.T
+    step = max(1, PAIR_CHUNK // int(counts.max()))
+
+    def _score(pdf: pd.DataFrame) -> pd.DataFrame:
+        lst = pdf["ivf_list"].to_numpy()
+        pos = np.searchsorted(lists, lst)
+        cnt = counts[pos]
+        row = np.repeat(np.arange(len(pdf)), cnt)
+        first = np.repeat(starts[pos] - (np.cumsum(cnt) - cnt), cnt)
+        qi = q_of[first + np.arange(len(row))]
+        if books is None:
+            mat = _normalize(np.vstack(pdf[vec_col].to_numpy()))
+            s = (qmat[qi] * mat[row]).sum(axis=1)
+        else:
+            codes = np.vstack(pdf["pq"].to_numpy()).astype(np.int64)[row]
+            s = lut[qi[:, None], np.arange(m)[None, :], codes].sum(axis=1)
+            if qcent is not None:
+                s = qcent[qi, lst[row]] + s
+        ids = pdf[id_col].to_numpy()[row]
+        o = np.lexsort((ids, -s, qi))
+        qi, ids, s = qi[o], ids[o], s[o]
+        head = np.r_[True, qi[1:] != qi[:-1]]
+        at = np.arange(len(qi))
+        keep = at - np.maximum.accumulate(np.where(head, at, 0)) < k
+        return pd.DataFrame({query_id_col: qvals[qi[keep]], id_col: ids[keep], score_col: s[keep]})
+
+    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for lo in range(0, len(pdf), step):
+                yield _score(pdf.iloc[lo : lo + step])
+
+    part_schema = (
+        T.StructType().add(query_id_col, queries.schema[query_id_col].dataType)
+        .add(id_col, encoded.schema[id_col].dataType).add(score_col, T.DoubleType())
+    )
+    probed = encoded.filter(F.col("ivf_list").isin(lists.tolist()))
+    probed = probed.select(id_col, "ivf_list", payload)
+    return _rank_topk(probed.mapInPandas(_kernel, part_schema), k, query_id_col, id_col, score_col)
+
+
+def _top_lists(sims: np.ndarray, n: int) -> np.ndarray:
+    """The ``n`` most similar list ids along the last axis. kind="stable":
+    on tied similarities the LOWER id wins, like the argmax that assigns
+    vectors, so a vector in a tied list is always probed by its own query."""
+    return np.argsort(-sims, axis=-1, kind="stable")[..., :n]
+
+
+def _nearest(cents: np.ndarray):
+    """assign(): nearest centroid by cosine, first index on ties."""
+    return lambda mat: (mat @ cents.T).argmax(axis=1).astype(np.int32)
+
+
+def _lsh_planes(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
+    return np.random.RandomState(seed).randn(dim, n_planes)
+
+
+def _buckets(margins: np.ndarray) -> np.ndarray:
+    """Hyperplane LSH bucket ids: sign bits of the margins packed into an int."""
+    return ((margins > 0) @ 2.0 ** np.arange(margins.shape[1])).astype(np.int64)
+
+
+def _flip_masks(n_planes: int) -> np.ndarray:
+    """Sign-flip masks: every single plane, then every plane pair (i < j)."""
+    single = np.int64(1) << np.arange(n_planes, dtype=np.int64)
+    iu, ju = np.triu_indices(n_planes, 1)
+    return np.concatenate([single, single[iu] | single[ju]])
+
+
+def _directed_probes(mat: np.ndarray, planes: np.ndarray, n_probes: int) -> np.ndarray:
+    """(n, n_probes) buckets: the home bucket, then the cheapest single and
+    pair flips ranked by cost = sum of |hyperplane margins| flipped."""
+    margins = mat @ planes
+    home = _buckets(margins)[:, None]
+    a = np.abs(margins)
+    iu, ju = np.triu_indices(planes.shape[1], 1)
+    costs = np.concatenate([a, a[:, iu] + a[:, ju]], axis=1)  # (n, p+C(p,2))
+    top = np.argsort(costs, axis=1)[:, : n_probes - 1]  # cheapest flips first
+    return np.concatenate([home, home ^ _flip_masks(planes.shape[1])[top]], axis=1)
+
+
+def query_directed_probes(
+    vec: F.Column, dim: int, n_planes: int, n_probes: int, seed: int = 7
+) -> F.Column:
+    """ARRAY<LONG> of the ``n_probes`` most promising LSH buckets per query
+    (multi-probe LSH, query-directed): the home bucket first, then sign-flip
+    perturbations ranked by cost = sum of |hyperplane margins| flipped — a
+    plane whose margin is near zero is the one a true neighbor most likely
+    sits across. Candidate flips are all singles and pairs, so the ranked
+    pool is p + C(p,2); only the cheapest ``n_probes − 1`` are emitted.
+    Bounded fan-out at ANY n_planes (Hamming-ball probing grows as C(p,2)).
+    These are the probes lsh_topk(n_probes=...) computes for its queries."""
+    planes = _lsh_planes(dim, n_planes, seed)
+
+    @pandas_udf(T.ArrayType(T.LongType()))
+    def _probes(vecs: pd.Series) -> pd.Series:
+        mat = np.vstack(vecs.to_numpy()).astype(np.float64)
+        return pd.Series(list(_directed_probes(mat, planes, n_probes)))
+
+    return _probes(vec)
+
+
+def lsh_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 10,
+    n_planes: int = 12,
+    probe_bits: int = 0,
+    n_probes: int | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+) -> DataFrame:
+    """Approximate cosine top-k via random-hyperplane LSH buckets.
+
+    Each vector lands in ONE bucket (its list); each query probes buckets.
+    Recall is tuned by n_planes (fewer planes → bigger buckets → higher
+    recall/cost) plus one of two probing modes:
+
+    * ``n_probes=T`` (preferred): query-directed multi-probe — each query
+      probes its home bucket plus the T−1 cheapest sign-flip perturbations
+      ranked by |margin| (see query_directed_probes). Probe fan-out is
+      exactly T per query at any n_planes.
+    * ``probe_bits``: the full Hamming ball — probe_bits=1 → n_planes+1
+      probes, =2 adds all C(n_planes, 2) two-flip buckets; capped at 2,
+      beyond which the fan-out exceeds simply using fewer planes.
+
+    The query batch is collected to the driver (at most MAX_QUERIES).
+    """
+    if probe_bits > 2:
+        raise ValueError("probe_bits > 2 unsupported: use n_probes= instead")
+    if n_probes is not None and probe_bits:
+        raise ValueError("set either n_probes or probe_bits, not both")
+    planes = _lsh_planes(dim, n_planes)
+    if n_probes is not None and n_probes > 1:
+        def probe(qmat):
+            return _directed_probes(qmat, planes, n_probes)
+    else:
+        ball = np.r_[0, _flip_masks(n_planes)[: [0, n_planes, None][probe_bits]]]
+
+        def probe(qmat):
+            return _buckets(qmat @ planes)[:, None] ^ ball
+
+    return _search(
+        vectors, queries, lambda mat: _buckets(mat @ planes), probe, k,
+        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
+        list_type=T.LongType(),
+    )
+
+
+def _deterministic_sample(
+    vectors: DataFrame, vec_col: str, id_col: str, sample: int
+) -> list:
+    """First ``sample`` finite rows by id (limit() without sort is
+    partition-order dependent, so codebooks could change across runs under
+    AQE / cluster re-reads, breaking the determinism contract). orderBy +
+    limit plans as TakeOrderedAndProject — parallel per-partition partial
+    top-k merged on the driver, never a full sort."""
+    v = _finite_vectors(vectors, vec_col).select(id_col, vec_col)
+    return v.orderBy(id_col).limit(sample).select(vec_col).collect()
+
+
+def _sample_matrix(
+    vectors: DataFrame, vec_col: str, id_col: str, sample: int, rows: list | None
+) -> np.ndarray:
+    if rows is None:
+        rows = _deterministic_sample(vectors, vec_col, id_col, sample)
+    return _normalize(np.array([list(r[0]) for r in rows], dtype=np.float64))
+
+
+def _spherical_kmeans(mat: np.ndarray, cents: np.ndarray, iters: int) -> np.ndarray:
+    """Lloyd iterations on the unit sphere from the initial ``cents``:
+    assign by max cosine (first index on ties), move each non-empty
+    centroid to its members' mean, renormalise."""
+    for _ in range(iters):
+        assign = (mat @ cents.T).argmax(axis=1)
+        for c in range(len(cents)):
+            members = mat[assign == c]
+            if len(members):
+                cents[c] = members.mean(axis=0)
+        cents = _normalize(cents)
+    return cents
+
+
+def train_ivf_centroids(
+    vectors: DataFrame,
+    dim: int,
+    n_centroids: int = 32,
+    sample: int = TRAIN_SAMPLE,
+    iters: int = 8,
+    seed: int = 77,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    sample_rows: list | None = None,
+) -> np.ndarray:
+    """Deterministic mini-KMeans on a fixed-size sample (driver-side numpy).
+
+    Centroid training is O(sample × dim × iters) — independent of table
+    size; the expensive part (assignment) stays distributed. Seeded init +
+    fixed iteration count + id-ordered sample ⇒ bit-reproducible across runs
+    and physical layouts (resume/goldens). ``sample_rows``: pre-collected
+    sample (one collection shared across trainers, e.g. ivfpq_topk).
+    """
+    mat = _sample_matrix(vectors, vec_col, id_col, sample, sample_rows)
+    rng = np.random.RandomState(seed)
+    cents = mat[rng.choice(len(mat), size=min(n_centroids, len(mat)), replace=False)]
+    return _spherical_kmeans(mat, cents, iters)
+
+
+def ivf_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 10,
+    n_centroids: int = 32,
+    nprobe: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+) -> DataFrame:
+    """IVF approximate top-k: inverted-file partitioning by nearest centroid.
+
+    Vectors are assigned to exactly 1 list (a one-pass narrow stage,
+    persistable as a partition layout); queries probe their nprobe nearest
+    lists, so each query scores ~nprobe/n_centroids of the corpus.
+    Recall/cost is tuned by (n_centroids, nprobe). The query batch is
+    collected to the driver (at most MAX_QUERIES).
+    """
+    cents = train_ivf_centroids(vectors, dim, n_centroids, vec_col=vec_col, id_col=id_col)
+    return _search(
+        vectors, queries, _nearest(cents),
+        lambda qmat: _top_lists(qmat @ cents.T, nprobe), k,
+        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
+    )
+
+
+def train_ivf2_centroids(
+    vectors: DataFrame,
+    dim: int,
+    n_coarse: int = 8,
+    n_fine: int = 8,
+    sample: int = TRAIN_SAMPLE,
+    iters: int = 8,
+    seed: int = 177,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> tuple[np.ndarray, np.ndarray]:
+    """Two-level IVF codebook: coarse k-means, then per-coarse-cell fine
+    k-means over that cell's sample members. Returns (coarse[n_coarse,dim],
+    fine[n_coarse,n_fine,dim]). Same determinism contract as the one-level
+    trainer (fixed id-ordered sample, seeds, iteration count)."""
+    mat = _sample_matrix(vectors, vec_col, id_col, sample, None)
+    rng = np.random.RandomState(seed)
+    coarse = mat[rng.choice(len(mat), size=min(n_coarse, len(mat)), replace=False)]
+    coarse = _spherical_kmeans(mat, coarse, iters)
+    assign = (mat @ coarse.T).argmax(axis=1)
+    fine = np.zeros((len(coarse), n_fine, dim))
+    for c in range(len(coarse)):
+        members = mat[assign == c]
+        if len(members) == 0:
+            members = mat  # degenerate empty cell: reuse global sample
+        sel = rng.choice(len(members), size=min(n_fine, len(members)), replace=False)
+        fc = members[sel]
+        if len(fc) < n_fine:  # pad by repeating (stable ids)
+            fc = np.vstack([fc] * (n_fine // len(fc) + 1))[:n_fine]
+        fine[c] = _spherical_kmeans(members, fc, iters)
+    return coarse, fine
+
+
+def ivf2_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 10,
+    n_coarse: int = 8,
+    n_fine: int = 8,
+    nprobe_coarse: int = 2,
+    nprobe_fine: int = 3,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+) -> DataFrame:
+    """Two-level IVF approximate top-k. Each vector gets ONE flat list id
+    (coarse·n_fine + fine, the fine argmax taken within its coarse cell);
+    queries probe nprobe_coarse coarse cells × nprobe_fine fine cells each,
+    so a query scores ~(nprobe_c·nprobe_f)/(n_coarse·n_fine) of the corpus —
+    a quadratically finer partition than one level at the same
+    codebook-train cost shape. The query batch is collected to the driver
+    (at most MAX_QUERIES)."""
+    coarse, fine = train_ivf2_centroids(
+        vectors, dim, n_coarse, n_fine, vec_col=vec_col, id_col=id_col
+    )
+    nf = fine.shape[1]
+
+    def assign(mat):
+        c = (mat @ coarse.T).argmax(axis=1)
+        f = np.einsum("nd,nfd->nf", mat, fine[c]).argmax(axis=1)
+        return (c * nf + f).astype(np.int32)
+
+    def probe(qmat):
+        c = _top_lists(qmat @ coarse.T, nprobe_coarse)  # (nq, Pc)
+        f = _top_lists(np.einsum("qd,qcfd->qcf", qmat, fine[c]), nprobe_fine)
+        return (c[:, :, None] * nf + f).reshape(len(qmat), -1)
+
+    return _search(
+        vectors, queries, assign, probe, k,
+        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
+    )
+
+
+
+
+def _sq_dists(part: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    # |x−c|² = |x|² − 2x·c + |c|²: one BLAS matmul instead of a
+    # (rows, k, sub) broadcast temp
+    return (
+        (part**2).sum(axis=1, keepdims=True)
+        - 2.0 * part @ cents.T
+        + (cents**2).sum(axis=1)[None, :]
+    )
+
+
 def train_pq_codebooks(
     vectors: DataFrame,
     dim: int,
@@ -775,17 +884,14 @@ def train_pq_codebooks(
     ``centroids``: train on RESIDUALS v − c(v) against these IVF centroids
     (classic IVFADC) — residuals have far smaller spread than raw vectors,
     so the same byte budget quantizes much finer. Encode/score must then use
-    the same centroids (pq_encode/ivfpq_topk keep the contract)."""
+    the same centroids (ivfpq_encode/ivfpq_topk keep the contract)."""
     if dim % m != 0:
-        # ValueError, not assert (r5 review): under python -O the assert
-        # vanishes and the tail dims are silently DROPPED from training,
-        # encoding and scoring
+        # ValueError, not assert: under python -O the assert vanishes and
+        # the tail dims are silently DROPPED from training, encoding and
+        # scoring
         raise ValueError(f"dim={dim} must be divisible by m={m}")
     sub = dim // m
-    rows = sample_rows if sample_rows is not None else _deterministic_sample(
-        vectors, vec_col, id_col, sample
-    )
-    mat = _normalize(np.array([list(r[0]) for r in rows], dtype=np.float64))
+    mat = _sample_matrix(vectors, vec_col, id_col, sample, sample_rows)
     if centroids is not None:
         mat = mat - centroids[(mat @ centroids.T).argmax(axis=1)]
     rng = np.random.RandomState(seed)
@@ -794,13 +900,8 @@ def train_pq_codebooks(
         part = mat[:, j * sub : (j + 1) * sub]
         kk = min(k, len(part))
         cents = part[rng.choice(len(part), size=kk, replace=False)]
-        pn = (part**2).sum(axis=1, keepdims=True)
         for _ in range(iters):
-            # |x−c|² = |x|² − 2x·c + |c|²: one BLAS matmul instead of a
-            # (sample, k, sub) broadcast temp per iteration (same argmin —
-            # pq_encode already scores with this expansion)
-            d2 = pn - 2.0 * part @ cents.T + (cents**2).sum(axis=1)[None, :]
-            assign = d2.argmin(axis=1)
+            assign = _sq_dists(part, cents).argmin(axis=1)
             for c in range(kk):
                 members = part[assign == c]
                 if len(members):
@@ -811,31 +912,13 @@ def train_pq_codebooks(
     return books
 
 
-def pq_encode(
-    vec: F.Column, books: np.ndarray, centroids: np.ndarray | None = None
-) -> F.Column:
-    """ARRAY<SHORT> of per-subspace code ids (m entries, each < 256).
-    With ``centroids``, codes quantize the residual v − c(v) (IVFADC) —
-    must match how ``books`` were trained."""
-    m, k, sub = books.shape
-
-    @pandas_udf(T.ArrayType(T.ShortType()))
-    def _enc(vecs: pd.Series) -> pd.Series:
-        mat = _normalize(np.vstack(vecs.to_numpy()))
-        if centroids is not None:
-            mat = mat - centroids[(mat @ centroids.T).argmax(axis=1)]
-        out = np.zeros((len(mat), m), dtype=np.int16)
-        for j in range(m):
-            part = mat[:, j * sub : (j + 1) * sub]
-            d2 = (
-                (part**2).sum(axis=1, keepdims=True)
-                - 2.0 * part @ books[j].T
-                + (books[j] ** 2).sum(axis=1)[None, :]
-            )
-            out[:, j] = d2.argmin(axis=1).astype(np.int16)
-        return pd.Series(list(out))
-
-    return _enc(vec)
+def _pq_codes(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(rows, m) int16 nearest-codeword ids per subspace (each < 256)."""
+    m, _, sub = books.shape
+    codes = np.zeros((len(mat), m), dtype=np.int16)
+    for j in range(m):
+        codes[:, j] = _sq_dists(mat[:, j * sub : (j + 1) * sub], books[j]).argmin(axis=1)
+    return codes
 
 
 def ivfpq_encode(
@@ -851,53 +934,12 @@ def ivfpq_encode(
     vectors this is what sits on disk, partitioned by ivf_list, so a probe
     touches only nprobe/n_centroids of the files. ``residual=True`` (IVFADC
     default) quantizes v − c(v); ``books`` must be trained the same way.
-
-    ONE fused mapInPandas pass (r4 review): the former
-    ivf_assign + pq_encode composition normalized every vector and computed
-    the full centroid-similarity matrix TWICE (two separate Arrow
-    crossings) — here the assignment is computed once and reused for both
-    the list id and the residual subtraction, which also removes any risk
-    of the two call sites' tie rules drifting apart (argmax == first-index
-    ties, the same rule ivf_assign's stable argsort encodes)."""
-    from typing import Iterator as _It
-
-    m, k, sub = books.shape
-    cents = centroids
-    id_type = vectors.schema[id_col].dataType
-    schema = T.StructType(
-        [
-            T.StructField(id_col, id_type),
-            T.StructField("ivf_list", T.IntegerType()),
-            T.StructField("pq", T.ArrayType(T.ShortType())),
-        ]
+    One fused mapInPandas pass (the search core's encoder); NULL and
+    non-finite embeddings are not indexed."""
+    return _encode(
+        vectors, _nearest(centroids), id_col, vec_col, books,
+        centroids if residual else None,
     )
-
-    def _enc(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = _normalize(np.vstack(pdf[vec_col].to_numpy()))
-            assign = np.argmax(mat @ cents.T, axis=1)  # first index on ties
-            if residual:
-                mat = mat - cents[assign]
-            codes = np.zeros((len(mat), m), dtype=np.int16)
-            for j in range(m):
-                part = mat[:, j * sub : (j + 1) * sub]
-                d2 = (
-                    (part**2).sum(axis=1, keepdims=True)
-                    - 2.0 * part @ books[j].T
-                    + (books[j] ** 2).sum(axis=1)[None, :]
-                )
-                codes[:, j] = d2.argmin(axis=1).astype(np.int16)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "ivf_list": assign.astype(np.int32),
-                    "pq": list(codes),
-                }
-            )
-
-    return vectors.select(id_col, vec_col).mapInPandas(_enc, schema)
 
 
 def ivfpq_topk(
@@ -915,39 +957,31 @@ def ivfpq_topk(
     centroids: np.ndarray | None = None,
     books: np.ndarray | None = None,
     residual: bool = True,
-    max_queries: int = 10_000,
+    max_queries: int = MAX_QUERIES,
 ) -> DataFrame:
     """IVF-PQ: inverted-list pruning × product-quantized ADC scoring — the
-    composition VERDICT r2 #4 asked for, and the actual 10⁹-vector serving
-    shape (VERDICT: "pq_topk scans ALL codes"). Each vector is stored once
-    as (ivf_list:int, pq:m bytes); a query probes its ``nprobe`` nearest
+    10⁹-vector serving shape. Each vector is stored once as
+    (ivf_list:int, pq:m bytes); a query probes its ``nprobe`` nearest
     lists and ADC-scores only those lists' codes via a per-query (m, 256)
     lookup table — no float vectors and no full-corpus scan at query time.
 
     ``residual=True`` is classic IVFADC: codes quantize v − c(v) (the
     residual spread is far smaller than raw vectors, so the same m bytes
     quantize much finer) and the score decomposes exactly as
-    ⟨q, c_list⟩ + Σ_j LUT[q, j, code_j] — the ⟨q, c_list⟩ constant rides
-    the broadcast probe table as a column, costing nothing at scan time.
-    Recall improvement pinned by
+    ⟨q, c_list⟩ + Σ_j LUT[q, j, code_j]. Recall improvement pinned by
     tests/test_training_ops.py::test_ivfpq_residual_beats_raw.
 
-    The probed-list set is a driver-side literal, so the ``isin`` filter on
-    ``ivf_list`` is a pushable predicate: over a parquet/Iceberg layout
-    partitioned by ivf_list it prunes at file-listing time (pinned by
-    tests/test_training_ops.py::test_ivfpq_scan_prunes_lists). Candidates
-    then shrink further to each query's own lists via the broadcast probe
-    join. Per-batch partial top-k (monoid) keeps the final window to
-    ≤ batches·|q|·k rows. Pass ``encoded``/``centroids``/``books`` to reuse
-    a persisted index (resume path); by default they are trained and encoded
-    in-line (deterministic: seeded, id-ordered samples).
+    The probed-list ``isin`` filter reaches a parquet/Iceberg layout
+    partitioned by ivf_list as a partition filter (pinned by
+    tests/test_training_ops.py::test_ivfpq_scan_prunes_lists). Pass
+    ``encoded``/``centroids``/``books`` to reuse a persisted index (resume
+    path); by default they are trained and encoded in-line (deterministic:
+    seeded, id-ordered samples). Query ids keep their input dtype and
+    column name; the query batch is bounded by ``max_queries``.
     """
-    from typing import Iterator as _It
-
     shared_sample = None
     if centroids is None or books is None:
-        # ONE sample collection feeds both trainers (they used to run the
-        # identical TakeOrderedAndProject job twice); size comes from the
+        # ONE sample collection feeds both trainers; size comes from the
         # trainers' shared default so the composed path can never drift
         # from direct trainer calls (bit-reproducibility contract)
         shared_sample = _deterministic_sample(vectors, vec_col, id_col, TRAIN_SAMPLE)
@@ -962,110 +996,12 @@ def ivfpq_topk(
             centroids=centroids if residual else None,
             sample_rows=shared_sample,
         )
-    if encoded is None:
-        encoded = ivfpq_encode(
-            vectors, centroids, books, id_col=id_col, vec_col=vec_col,
-            residual=residual,
-        )
-    # derive the ADC shape from the CODEBOOKS, not the m parameter (r5
-    # review: a persisted index trained with a different m plus the default
-    # m=8 raised a confusing reshape error on the resume path — books is
-    # authoritative whenever provided)
-    m = books.shape[0]
-    sub = books.shape[2]
-
-    # query ids keep their INPUT dtype and column name end-to-end (ADVICE r3:
-    # the old path forced int64 ids and a hardcoded 'query_id' output column,
-    # crashing on string ids and silently renaming non-default columns,
-    # unlike lsh_topk/ivf_topk)
-    qid_type = queries.schema[query_id_col].dataType
-    qrows = _collect_query_batch(queries, query_id_col, vec_col, max_queries)
-    qvals = [r[0] for r in qrows]
-    qmat = _normalize(np.array([list(r[1]) for r in qrows], dtype=np.float64))
-    lut = np.einsum("qjs,jcs->qjc", qmat.reshape(len(qmat), m, sub), books)
-    # kind="stable" argsort of -sims: ties prefer the LOWER centroid index,
-    # exactly like ivf_assign's storage assignment and the argmax used for
-    # residual encoding — a vector in a tied list is never probed-around by
-    # its own query, and codes always quantize against the stored list's
-    # centroid (r3 review: plain argsort/[::-1] are both tie-unsafe)
-    qsims = qmat @ centroids.T
-    qprobe = np.argsort(-qsims, axis=1, kind="stable")[:, :nprobe]
-
-    spark = vectors.sparkSession
-    probe_rows = [
-        # qc = <q, c_list>: the residual score's constant term (0.0 when
-        # scoring raw codes — the LUT then carries the whole score)
-        (
-            qvals[qi],
-            int(lst),
-            float(qsims[qi, lst]) if residual else 0.0,
-        )
-        for qi in range(len(qvals))
-        for lst in qprobe[qi]
-    ]
-    probe_schema = T.StructType(
-        [
-            T.StructField(query_id_col, qid_type),
-            T.StructField("ivf_list", T.IntegerType()),
-            T.StructField("qc", T.DoubleType()),
-        ]
-    )
-    probe = spark.createDataFrame(probe_rows, probe_schema)
-    probed_lists = sorted({lst for _, lst, _ in probe_rows})
-
-    cand = F.broadcast(probe).join(
-        # literal isin BEFORE the join: prunes list-partitioned storage at
-        # file-listing time (the join alone would only filter post-scan)
-        encoded.filter(F.col("ivf_list").isin(probed_lists)),
-        "ivf_list",
-    )
-
-    qidx = {q: i for i, q in enumerate(qvals)}
-    part_schema = T.StructType(
-        [
-            T.StructField(query_id_col, qid_type),
-            T.StructField(id_col, vectors.schema[id_col].dataType),
-            T.StructField("pq_score", T.DoubleType()),
-        ]
-    )
-
-    def _adc_probe_topk(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        j_idx = np.arange(m)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.vstack(pdf["pq"].to_numpy()).astype(np.int64)  # (rows, m)
-            qi = pdf[query_id_col].map(qidx).to_numpy()
-            # unrounded for ordering (r5 review; see pq_topk) — rounded
-            # once on the final emit
-            scores = (
-                pdf["qc"].to_numpy()
-                + lut[qi[:, None], j_idx[None, :], codes].sum(axis=1)
-            )
-            ids = pdf[id_col].to_numpy()
-            qs = pdf[query_id_col].to_numpy()
-            out = {query_id_col: [], id_col: [], "pq_score": []}
-            for q in pd.unique(qs):
-                sel = qs == q
-                order = np.lexsort((ids[sel], -scores[sel]))[:k]
-                out[query_id_col].extend([q] * len(order))
-                out[id_col].extend(ids[sel][order].tolist())
-                out["pq_score"].extend(scores[sel][order].tolist())
-            yield pd.DataFrame(out)
-
-    scored = cand.select(query_id_col, id_col, "pq", "qc").mapInPandas(
-        _adc_probe_topk, part_schema
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col, "rank", id_col,
-            F.round("pq_score", 6).alias("pq_score"),
-        )
+    return _search(
+        vectors, queries, _nearest(centroids),
+        lambda qmat: _top_lists(qmat @ centroids.T, nprobe), k,
+        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
+        max_queries=max_queries, books=books,
+        centroids=centroids if residual else None, encoded=encoded,
     )
 
 
@@ -1078,70 +1014,16 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    max_queries: int = 10_000,
+    max_queries: int = MAX_QUERIES,
 ) -> DataFrame:
     """Approximate cosine top-k over PQ-compressed vectors (asymmetric
     distance computation): each query builds an (m, 256) inner-product
     lookup table against the codebooks; a compressed vector's score is the
     sum of m table lookups — no decompression, no float vectors at scan
-    time. The scan side carries only the m-byte codes: at 10^9+ vectors
-    this is the shape that fits an embedding table in cluster memory."""
-    books = train_pq_codebooks(vectors, dim, m=m, vec_col=vec_col, id_col=id_col)
-    sub = books.shape[2]
-    enc = vectors.select(id_col, pq_encode(F.col(vec_col), books).alias("pq"))
-
-    qid_type = queries.schema[query_id_col].dataType
-    qrows = _collect_query_batch(queries, query_id_col, vec_col, max_queries)
-    qvals = [r[0] for r in qrows]
-    qmat = _normalize(np.array([list(r[1]) for r in qrows], dtype=np.float64))
-    # LUT[q, j, c] = <q_subvector_j, codeword_jc>  (cosine via normalized q
-    # and codeword reconstruction of the normalized data vector)
-    lut = np.einsum("qjs,jcs->qjc", qmat.reshape(len(qmat), m, sub), books)
-
-    # partial top-k per Arrow batch (top-k is a monoid: per-batch top-k then
-    # global top-k == global top-k). The shuffle into the final per-query
-    # window therefore carries ≤ batches·|queries|·k rows instead of
-    # |vectors|·|queries| — the difference between a merge and a full-table
-    # shuffle at 10⁹ vectors.
-    from typing import Iterator as _It
-
-    part_schema = T.StructType(
-        [
-            T.StructField(query_id_col, qid_type),
-            T.StructField(id_col, vectors.schema[id_col].dataType),
-            T.StructField("pq_score", T.DoubleType()),
-        ]
-    )
-
-    def _adc_partial_topk(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        j_idx = np.arange(m)[None, :]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cc = np.vstack(pdf["pq"].to_numpy()).astype(np.int64)  # (batch, m)
-            ids = pdf[id_col].to_numpy()
-            # UNROUNDED scores for ordering (r5 review: ranking on 6dp-
-            # rounded values diverges from the oracle's unrounded ORDER BY
-            # whenever two cosines tie at 6dp — same contract note as
-            # brute_force_topk); rounding happens once on the final emit
-            scores = lut[:, j_idx, cc].sum(axis=2)  # (n_q, batch)
-            out = {query_id_col: [], id_col: [], "pq_score": []}
-            for qi in range(len(qvals)):
-                order = np.lexsort((ids, -scores[qi]))[:k]
-                out[query_id_col].extend([qvals[qi]] * len(order))
-                out[id_col].extend(ids[order].tolist())
-                out["pq_score"].extend(scores[qi][order].tolist())
-            yield pd.DataFrame(out)
-
-    scored = enc.mapInPandas(_adc_partial_topk, part_schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col, "rank", id_col,
-            F.round("pq_score", 6).alias("pq_score"),
-        )
+    time. This is ivfpq_topk with a single list and raw (non-residual)
+    codes: the same seed-277 codebooks on the same id-ordered sample."""
+    return ivfpq_topk(
+        vectors, queries, dim, k=k, m=m, n_centroids=1, nprobe=1,
+        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
+        residual=False, max_queries=max_queries,
     )

@@ -784,7 +784,7 @@ def test_pq_ivfpq_string_query_ids_and_column_name(spark):
     """ADVICE r3: pq_topk/ivfpq_topk must preserve the query-id DTYPE
     (string ids used to crash on np.int64 coercion) and the caller's
     query_id_col NAME in the output schema, matching lsh_topk/ivf_topk."""
-    from cog3pio_spark.operators.ann import ivfpq_topk, pq_topk
+    from cog3pio_spark.operators.ann import ivf2_topk, ivf_topk, ivfpq_topk, lsh_topk, pq_topk
 
     rng = np.random.RandomState(11)
     mat = rng.randn(60, 8)
@@ -796,10 +796,13 @@ def test_pq_ivfpq_string_query_ids_and_column_name(spark):
         ["qname", "embedding"],
     )
     for op, kw in (
-        (pq_topk, {}),
-        (ivfpq_topk, {"n_centroids": 4, "nprobe": 4}),
+        (pq_topk, {"m": 4}),
+        (ivfpq_topk, {"m": 4, "n_centroids": 4, "nprobe": 4}),
+        (lsh_topk, {"n_planes": 2, "n_probes": 4}),
+        (ivf_topk, {"n_centroids": 4, "nprobe": 4}),
+        (ivf2_topk, {"n_coarse": 2, "n_fine": 2, "nprobe_coarse": 2, "nprobe_fine": 2}),
     ):
-        got = op(df, qdf, dim=8, k=3, m=4, query_id_col="qname", **kw)
+        got = op(df, qdf, dim=8, k=3, query_id_col="qname", **kw)
         assert got.columns[0] == "qname"
         assert dict(got.dtypes)["qname"] == "string"
         rows = got.collect()
@@ -807,6 +810,91 @@ def test_pq_ivfpq_string_query_ids_and_column_name(spark):
         # each query's own vector is its cosine-1.0 top hit
         best = {r["qname"]: r["vec_id"] for r in rows if r["rank"] == 1}
         assert best == {"qa": 7, "qb": 9}
+
+
+def _ann_topk(api, vectors, qdf, k=5, **kw):
+    """Run one top-k API on a DataFrame query set; brute_force_topk takes
+    the collected (id, vector) list."""
+    from cog3pio_spark.operators import ann
+
+    if api == "brute":
+        qs = [(r[0], r[1]) for r in qdf.collect()]
+        return ann.brute_force_topk(vectors, qs, k=k)
+    return getattr(ann, f"{api}_topk")(vectors, qdf, k=k, **kw)
+
+
+_NONFINITE_CONFIGS = {
+    "brute": {},
+    "lsh": {"dim": 16, "n_planes": 4, "n_probes": 3},
+    "ivf": {"dim": 16, "n_centroids": 8, "nprobe": 2},
+    "ivf2": {"dim": 16, "n_coarse": 4, "n_fine": 2, "nprobe_coarse": 2, "nprobe_fine": 1},
+    "pq": {"dim": 16, "m": 4},
+    "ivfpq": {"dim": 16, "m": 4, "n_centroids": 8, "nprobe": 2},
+}
+
+
+@pytest.mark.parametrize("api", list(_NONFINITE_CONFIGS))
+def test_ann_nonfinite_embeddings_ignored(spark, api):
+    """NULL and non-finite embeddings are never trained on, indexed or
+    scored: a corpus with one NaN, one +inf and one NULL row must give
+    exactly the clean corpus's top-k (a NULL used to crash every API; one
+    NaN turned a centroid NaN, so ivfpq_topk returned no rows and pq_topk
+    ranked NULL scores first). Such a query vector is refused."""
+    kw = _NONFINITE_CONFIGS[api]
+    rng = np.random.RandomState(29)
+    mat = rng.randn(300, 16)
+    schema = "vec_id long, embedding array<double>"
+    clean = [(i, [float(x) for x in mat[i]]) for i in range(300)]
+    bad = [
+        (1000, [float("nan")] + [1.0] * 15),
+        (1001, [1.0] * 15 + [float("inf")]),
+        (1002, None),
+    ]
+    qdf = spark.createDataFrame(
+        [(1, [float(x) for x in mat[3] + 0.1 * rng.randn(16)]), (2, clean[40][1])],
+        ["query_id", "embedding"],
+    )
+    want = sorted(_ann_topk(api, spark.createDataFrame(clean, schema), qdf, **kw).collect())
+    dirty = spark.createDataFrame(clean + bad, schema)
+    got = sorted(_ann_topk(api, dirty, qdf, **kw).collect())
+    assert got == want and len(want) == 10
+
+    for vec in ([float("nan")] * 16, None):
+        bad_q = spark.createDataFrame([(9, vec)], "query_id long, embedding array<double>")
+        with pytest.raises(ValueError, match="query vector"):
+            _ann_topk(api, dirty, bad_q, **kw)
+
+
+# the registry's provably lossless configurations (q32, q36, q48, q50, q52)
+_LOSSLESS_CONFIGS = {
+    "lsh": (500, {"n_planes": 2, "n_probes": 4}),
+    "ivf": (500, {"n_centroids": 16, "nprobe": 16}),
+    "ivf2": (500, {"n_coarse": 8, "n_fine": 4, "nprobe_coarse": 8, "nprobe_fine": 4}),
+    "pq": (200, {"m": 8}),
+    "ivfpq": (200, {"m": 8, "n_centroids": 16, "nprobe": 16}),
+}
+
+
+@pytest.mark.parametrize("api", list(_LOSSLESS_CONFIGS))
+def test_lossless_ann_equals_brute_force(spark, monkeypatch, api):
+    """At the registry's lossless configurations every indexed top-k scores
+    the whole corpus exactly (all lists probed; ≤ 256 vectors per PQ
+    codebook, so every subvector is its own codeword): query, rank and id
+    must equal brute force, and scores agree within 1e-6. A small
+    PAIR_CHUNK makes the kernel cut every batch into many slices."""
+    from cog3pio_spark.operators import ann
+
+    monkeypatch.setattr(ann, "PAIR_CHUNK", 64)
+    n, kw = _LOSSLESS_CONFIGS[api]
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    corpus = emb.filter(F.col("vec_id") < n)
+    q = emb.filter(F.col("vec_id").isin(5, 6, 10, 11, 150)).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    got = sorted(tuple(r) for r in _ann_topk(api, corpus, q, dim=64, **kw).collect())
+    want = sorted(tuple(r) for r in _ann_topk("brute", corpus, q).collect())
+    assert [r[:3] for r in got] == [r[:3] for r in want] and len(want) == 25
+    assert max(abs(a[3] - b[3]) for a, b in zip(got, want)) <= 1e-6
 
 
 def test_simhash_blocked_equals_exact_scan(spark):
@@ -1415,18 +1503,19 @@ def test_signed_int_tiff_histogram_not_empty(spark):
     assert abs(row["features"][14] - float(arr.mean())) < 1e-9
 
 
-def test_ann_empty_query_set_refused_clearly(spark):
+@pytest.mark.parametrize("api", ["pq", "ivfpq", "lsh", "ivf", "ivf2"])
+def test_ann_empty_query_set_refused_clearly(spark, api):
     """r5 review: an empty query set crashed pq/ivfpq/brute in _normalize
     with an obscure numpy AxisError; a non-divisible dim/m pair was only an
     assert (stripped under python -O, silently dropping tail dims)."""
-    from cog3pio_spark.operators.ann import brute_force_topk, pq_topk, train_pq_codebooks
+    from cog3pio_spark.operators.ann import brute_force_topk, train_pq_codebooks
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     none = emb.filter(F.col("vec_id") < 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     with pytest.raises(ValueError, match="query set is empty"):
-        pq_topk(emb, none, dim=64, k=3, m=8)
+        _ann_topk(api, emb, none, k=3, dim=64)
     with pytest.raises(ValueError, match="queries list is empty"):
         brute_force_topk(emb, [], k=3)
     with pytest.raises(ValueError, match="divisible"):
