@@ -68,6 +68,12 @@ def _finite_vectors(df: DataFrame, vec_col: str) -> DataFrame:
     )
 
 
+def _size_planes(n_rows: int) -> int:
+    """Hyperplanes for ~256-row LSH buckets: max(2, ceil(log2(n/256))),
+    capped at 30 — the pair family's corpus-size plane rule."""
+    return min(30, max(2, int(np.ceil(np.log2(max(2.0, n_rows / 256.0))))))
+
+
 def _collect_query_batch(
     queries: DataFrame, query_id_col: str, vec_col: str, max_queries: int
 ) -> list:
@@ -214,6 +220,7 @@ def top_cosine_pairs(
             f"> max_rows={max_rows} rows. Use top_cosine_pairs_blocked "
             f"(the scale path) or pass max_rows= explicitly to force."
         )
+    vectors = _finite_vectors(vectors, vec_col)
     cosine = cosine_pairs_udf()
     left = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     right = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
@@ -311,13 +318,14 @@ def _lsh_blocked_pairs(
     """
     if (per_bucket_top_n is None) == (threshold is None):
         raise ValueError("set exactly one of per_bucket_top_n / threshold")
+    vectors = _finite_vectors(vectors, vec_col)
     if n_planes is None:
         # n_rows stat hint skips the implicit O(n) count (r4 review: same
         # contract embedding_dupes gained in ADVICE r3 — order-of-magnitude
         # accuracy suffices for a plane count)
         if n_rows is None:
             n_rows = vectors.count()
-        n_planes = min(30, max(2, int(np.ceil(np.log2(max(2.0, n_rows / 256.0))))))
+        n_planes = _size_planes(n_rows)
     rng = np.random.RandomState(seed)
     planes = rng.randn(dim, n_tables * n_planes)
     pow2 = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64)).astype(np.float64)
@@ -379,7 +387,7 @@ def dupes_plane_count(
     clamped to the largest k whose all-tables miss probability
     (1 − p^k)^tables stays ≤ 1 − recall_target for pairs at cosine =
     threshold (p = 1 − acos(τ)/π). Pure math, unit-tested directly."""
-    size_based = min(30, max(2, int(np.ceil(np.log2(max(2.0, n_rows / 256.0))))))
+    size_based = _size_planes(n_rows)
     p = 1.0 - np.arccos(min(1.0, max(-1.0, threshold))) / np.pi
     if p >= 1.0:  # threshold 1.0: identical directions never cross a plane —
         return size_based  # any plane count has zero miss; don't clamp

@@ -12,6 +12,7 @@ from cog3pio_spark.operators.dedupe import (
     minhash_lsh_dupes,
     ngram_jaccard_pairs,
     simhash_dupes,
+    simhash_hamming_pairs_exact,
 )
 from cog3pio_spark.operators.multimodal import (
     attach_media_meta,
@@ -216,24 +217,52 @@ def test_curate_refuses_clobbering_caller_columns(spark):
         curate(docs)
 
 
-def test_minhash_null_text_docs_emit_no_pairs(spark):
-    """fingerprint(NULL) is NULL; the pre-r6 star-pair inner join dropped
-    NULL keys, so NULL-text docs must never be reported as exact duplicates
-    of each other (the r6 Window.partitionBy rewrite would otherwise group
-    NULL fingerprints into one partition and emit jaccard_est=1.0 pairs)."""
+_NULL_TEXT_PAIRS = {
+    "minhash": lambda docs: minhash_lsh_dupes(docs, jaccard_threshold=0.5),
+    "simhash_blocked": lambda docs: simhash_dupes(docs, max_hamming=3),
+    "simhash_exact": lambda docs: simhash_hamming_pairs_exact(docs, max_hamming=3),
+}
+
+
+@pytest.mark.parametrize("api", list(_NULL_TEXT_PAIRS))
+def test_null_text_docs_emit_no_pairs(spark, api):
+    """NULL text is no document's duplicate: not another NULL's, and not a
+    blank document's. NULL used to shingle like the empty string, so
+    minhash paired the NULL group's representative with a blank doc at
+    jaccard_est 1.0 and simhash paired all four at hamming 0. Blank docs
+    are exact duplicates of each other and still pair."""
+    real = "some real text repeated across documents here"
     docs = spark.createDataFrame(
-        [
-            (1, None),
-            (2, None),
-            (3, "some real text repeated across documents here"),
-            (4, "some real text repeated across documents here"),
-        ],
+        [(1, None), (2, None), (3, ""), (4, "   "), (5, real), (6, real)],
         "doc_id long, text string",
     )
-    pairs = minhash_lsh_dupes(docs, jaccard_threshold=0.5).collect()
-    ids_touched = {r["id_a"] for r in pairs} | {r["id_b"] for r in pairs}
-    assert ids_touched.isdisjoint({1, 2}), f"NULL-text docs paired: {pairs}"
-    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(3, 4)}
+    pairs = _NULL_TEXT_PAIRS[api](docs).collect()
+    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(3, 4), (5, 6)}, pairs
+
+
+@pytest.mark.parametrize("over_cap", ["truncate", "drop"])
+@pytest.mark.parametrize("extra", [0, 1])
+def test_candidate_pairs_cap_boundary(spark, over_cap, extra):
+    """The skeleton's cap is ≤: a block of exactly ``cap`` members is kept
+    whole and unflagged under both policies; at ``cap + 1`` ``drop`` removes
+    the block and ``truncate`` keeps the ``cap`` smallest ids, flagged. A
+    second, small block is never touched."""
+    from itertools import combinations
+
+    from cog3pio_spark.operators.dedupe import _candidate_pairs
+
+    cap = 4
+    hot = list(range(10 + cap + extra - 1, 9, -1))  # descending: truncation must sort
+    keyed = spark.createDataFrame(
+        [(i, 7) for i in hot] + [(1, 8), (2, 8)], "doc_id long, blk long"
+    )
+    rows = _candidate_pairs(keyed, "doc_id", cap, over_cap).collect()
+    got = sorted((r["id_a"], r["id_b"]) for r in rows)
+    kept = [] if (extra and over_cap == "drop") else sorted(hot)[:cap]
+    assert got == sorted([(1, 2)] + list(combinations(kept, 2)))
+    if over_cap == "truncate":
+        flagged = {(r["id_a"], r["id_b"]) for r in rows if r["overflow"]}
+        assert flagged == (set(combinations(kept, 2)) if extra else set())
 
 
 def test_minhash_bucket_cap_flags_overflow(spark):
@@ -863,6 +892,40 @@ def test_ann_nonfinite_embeddings_ignored(spark, api):
         bad_q = spark.createDataFrame([(9, vec)], "query_id long, embedding array<double>")
         with pytest.raises(ValueError, match="query vector"):
             _ann_topk(api, dirty, bad_q, **kw)
+
+
+_PAIR_FAMILY = {
+    "top_cosine_pairs": lambda ann, df: ann.top_cosine_pairs(df, top_n=10),
+    "top_cosine_pairs_blocked": lambda ann, df: ann.top_cosine_pairs_blocked(
+        df, dim=16, top_n=10
+    ),
+    "embedding_dupes": lambda ann, df: ann.embedding_dupes(df, dim=16, threshold=0.9),
+}
+
+
+@pytest.mark.parametrize("api", list(_PAIR_FAMILY))
+def test_ann_pair_family_nonfinite_embeddings_ignored(spark, api):
+    """The pair family skips NULL and non-finite embeddings the way the
+    top-k family does: a clean corpus plus one NaN, one +inf and one NULL
+    row gives exactly the clean corpus's pairs (a NULL embedding used to
+    raise inside the Python kernels)."""
+    from cog3pio_spark.operators import ann
+
+    rng = np.random.RandomState(31)
+    mat = rng.randn(300, 16)
+    for i in range(10):  # planted near-dups, so every API has pairs to find
+        mat[200 + i] = mat[i] + rng.randn(16) * 0.01
+    schema = "vec_id long, embedding array<double>"
+    clean = [(i, [float(x) for x in mat[i]]) for i in range(300)]
+    bad = [
+        (1000, [float("nan")] + [1.0] * 15),
+        (1001, [1.0] * 15 + [float("inf")]),
+        (1002, None),
+    ]
+    run = _PAIR_FAMILY[api]
+    want = sorted(run(ann, spark.createDataFrame(clean, schema)).collect())
+    got = sorted(run(ann, spark.createDataFrame(clean + bad, schema)).collect())
+    assert got == want and len(want) >= 10
 
 
 # the registry's provably lossless configurations (q32, q36, q48, q50, q52)

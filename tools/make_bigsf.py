@@ -10,12 +10,17 @@ Structure-preserving perturbations keep workload *shape* realistic:
 
 * keys: every replica i shifts each table's keys by i * OFFSET so joins keep
   referential integrity and per-key cardinalities (no hot keys introduced).
-* documents.text: a per-replica letter-permutation cipher. Within a replica,
-  exact duplicates stay exact and k-shingle Jaccard is EXACTLY preserved
-  (bijection on characters => bijection on shingles); across replicas texts
-  share ~no shingles, so dedupe/similarity pair counts scale linearly with R
-  instead of quadratically (10 exact copies of the corpus would be a
-  different, degenerate workload).
+* documents.text: a per-replica letter-permutation cipher over every word
+  EXCEPT the hot vocabulary — the most frequent words of the source corpus,
+  which together cover HOT_SHARE (half) of its word occurrences. Hot words
+  stay plain in every replica, so a gram made of hot words is shared across
+  replicas and its document frequency grows with R, the way stop-phrase
+  grams do in real text; grams with a ciphered word stay replica-local.
+  Within a replica exact duplicates stay exact and word n-gram Jaccard is
+  preserved (the cipher maps distinct words to distinct words, unless a
+  ciphered word happens to spell a hot one). Ciphering every word would
+  leave replicas sharing ~no grams, so near-dup candidate counts would grow
+  only linearly with R and hide the cost of hot-gram pair expansion.
 * embeddings.embedding: a per-replica permutation of the dimensions.
   Orthogonal => within-replica distances exact; cross-replica decorrelated.
 
@@ -25,7 +30,9 @@ Usage: python tools/make_bigsf.py [--out /root/bigsf] [--replicas 10]
 from __future__ import annotations
 
 import argparse
+import collections
 import os
+import re
 
 import numpy as np
 import pyarrow as pa
@@ -46,6 +53,7 @@ KEY_SHIFTS = {
     "embeddings": ["vec_id"],
 }
 SINGLETON = ["nation", "region"]  # fixed-size dimension tables: one copy
+HOT_SHARE = 0.5  # share of word occurrences the unciphered hot words cover
 
 
 def cipher_table(replica: int) -> dict:
@@ -61,6 +69,34 @@ def cipher_table(replica: int) -> dict:
     return tbl
 
 
+WORD = re.compile(r"[A-Za-z]+")
+
+
+def hot_words(texts, share: float) -> set:
+    """Most frequent (lower-cased) words that together cover ``share`` of all
+    word occurrences in ``texts``."""
+    counts = collections.Counter(
+        w.lower() for t in texts if t is not None for w in WORD.findall(t)
+    )
+    total, covered, hot = sum(counts.values()), 0, set()
+    for w, c in counts.most_common():
+        if covered >= share * total:
+            break
+        hot.add(w)
+        covered += c
+    return hot
+
+
+def cipher_text(texts, table: dict, hot: set) -> list:
+    """Apply the letter cipher to every word that is not in ``hot``."""
+
+    def sub(m):
+        w = m.group(0)
+        return w if w.lower() in hot else w.translate(table)
+
+    return [None if t is None else WORD.sub(sub, t) for t in texts]
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default="/root/bigsf")
@@ -74,6 +110,9 @@ def main() -> None:
 
     for t, keys in KEY_SHIFTS.items():
         base = pq.read_table(f"{SRC}/{t}.parquet")
+        if t == "documents":
+            hot = hot_words(base.column("text").to_pylist(), HOT_SHARE)
+            print(f"documents: {len(hot)} hot words stay unciphered")
         chunks = []
         for i in range(args.replicas):
             tb = base
@@ -82,9 +121,9 @@ def main() -> None:
                 shifted = pa.compute.add(col, i * OFFSET).cast(col.type)
                 tb = tb.set_column(tb.schema.get_field_index(k), k, shifted)
             if t == "documents" and i > 0:
-                txt = tb.column("text").to_pandas().str.translate(cipher_table(i))
+                txt = cipher_text(tb.column("text").to_pylist(), cipher_table(i), hot)
                 tb = tb.set_column(
-                    tb.schema.get_field_index("text"), "text", pa.array(txt)
+                    tb.schema.get_field_index("text"), "text", pa.array(txt, pa.string())
                 )
             if t == "embeddings" and i > 0:
                 emb = tb.column("embedding").combine_chunks()
