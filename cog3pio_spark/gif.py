@@ -12,6 +12,13 @@ Supported: GIF87a/89a, global and local color tables, interlaced images
 decoded and composited onto the logical screen (r5: sub-rectangle first
 frames — partial updates — are placed at their descriptor offsets over the
 background color instead of being returned mispositioned).
+
+Work is bounded by the header before any pixel is produced: a logical
+screen of more than ``MAX_SCREEN_PIXELS`` pixels is refused (the
+composited first frame allocates ``3 × width × height`` bytes), and a
+frame rectangle must lie inside the screen before its LZW data is
+decoded. The limit is PIL's ``Image.MAX_IMAGE_PIXELS`` (about 89.5 M
+pixels, a 256 MiB RGB canvas); the format allows 65535 × 65535.
 Performance note: the LZW loop is per-code Python — correctness-first
 reference decoder (same contract note as jpeg.py/png.py).
 """
@@ -21,6 +28,10 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+
+# largest logical screen decoded (PIL's Image.MAX_IMAGE_PIXELS)
+MAX_SCREEN_PIXELS = 1024 * 1024 * 1024 // 4 // 3
 
 
 class GifDecodeError(ValueError):
@@ -114,6 +125,11 @@ def _decode_gif(raw: bytes) -> np.ndarray:
     if len(raw) < 13 or raw[:6] not in (b"GIF87a", b"GIF89a"):
         raise GifDecodeError("Cannot parse GIF: bad signature")
     sw, sh, packed, _bg, _ar = struct.unpack_from("<HHBBB", raw, 6)
+    if sw * sh > MAX_SCREEN_PIXELS:
+        raise GifDecodeError(
+            f"Cannot decode GIF: logical screen {sw}x{sh} exceeds "
+            f"{MAX_SCREEN_PIXELS} pixels"
+        )
     pos = 13
     gct = None
     if packed & 0x80:
@@ -132,6 +148,11 @@ def _decode_gif(raw: bytes) -> np.ndarray:
         elif block == 0x2C:  # image descriptor — decode this (first) frame
             ix, iy, iw, ih, ipacked = struct.unpack_from("<HHHHB", raw, pos)
             pos += 9
+            if ix + iw > sw or iy + ih > sh:
+                raise GifDecodeError(
+                    f"Cannot decode GIF: frame rect ({ix},{iy})+"
+                    f"{iw}x{ih} exceeds logical screen {sw}x{sh}"
+                )
             ct = gct
             if ipacked & 0x80:  # local color table
                 n = 2 << (ipacked & 0x07)
@@ -162,11 +183,6 @@ def _decode_gif(raw: bytes) -> np.ndarray:
             # with the background color (GCT[bg]; black without a GCT —
             # there is no on-screen prior for frame 1).
             if (ix, iy, iw, ih) != (0, 0, sw, sh):
-                if ix + iw > sw or iy + ih > sh:
-                    raise GifDecodeError(
-                        f"Cannot decode GIF: frame rect ({ix},{iy})+"
-                        f"{iw}x{ih} exceeds logical screen {sw}x{sh}"
-                    )
                 bg_rgb = (
                     gct[_bg] if gct is not None and _bg < len(gct)
                     else np.zeros(3, np.uint8)

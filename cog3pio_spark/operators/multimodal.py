@@ -1,33 +1,50 @@
-"""Multimodal binary-column operators (task brief: first-class).
+"""Multimodal binary-column operators.
 
 Images/audio/video are opaque ``binary`` columns + typed metadata. FIVE
 media families decode FOR REAL with in-repo pure-numpy/stdlib codecs —
-TIFF (operators/decode.py + tiff/), JPEG baseline+progressive (cog3pio_spark/jpeg.py, r4),
-PNG (cog3pio_spark/png.py), GIF (cog3pio_spark/gif.py) and WAV audio (here) — plus REAL MP4 container
-metadata. Formats whose codecs are genuinely absent in-sandbox (webp,
+TIFF (``tiff/``), JPEG baseline+progressive (``jpeg.py``), PNG
+(``png.py``), GIF (``gif.py``) and WAV audio (here) — plus REAL MP4
+container metadata. Formats whose codecs are genuinely absent (webp,
 video FRAME decode...) keep honest deterministic stand-ins: the Spark
 plumbing — schema, Arrow batch shape, error channel, row-explosion
 contracts — is real and tested; foreign decodes are never faked.
 
+Every per-blob operator runs one path, ``_per_blob``: one
+``mapInPandas`` over ``(media_id, blob)`` Arrow batches, where the
+operator supplies only a parser that turns one blob into zero or more
+rows of its output schema and what a bad blob becomes. A blob is bad when
+its parse raises one of ``MEDIA_ERRORS`` — the codecs' typed errors (all
+``ValueError`` subclasses) plus the struct/zlib/EOF errors truncated
+containers raise. Any other exception is a programming error and fails
+the task. Pixel operators share one magic-byte dispatch,
+``_decode_pixels`` (TIFF/JPEG/PNG/GIF).
+
 * ``attach_media_meta``  — parse magic bytes → (media_type, byte_len) columns.
-* ``extract_features``   — mapInPandas fixed-size feature vector per blob:
-  PIXEL statistics for TIFF/JPEG/PNG/GIF (tagged ';decoded'),
-  byte-histogram stand-in otherwise.
+* ``extract_features``   — fixed-size feature vector per blob: PIXEL
+  statistics for TIFF/JPEG/PNG/GIF (tagged ';decoded'), byte-histogram
+  stand-in otherwise. Bad blob → the byte-histogram row ('raw-bytes').
 * ``frame_sample``       — deterministic byte-range sampler standing in for
-  video frame extraction (same batch/row-count contract: one row per frame).
+  video frame extraction (one row per frame). Cannot fail.
 * ``resize_media``       — REAL for TIFF/JPEG/PNG/GIF (decode → resample →
-  re-encode as TIFF).
-* ``audio_meta`` / ``audio_features`` — REAL for WAV (r3): typed stream
+  re-encode as TIFF); ``status='unsupported'`` for other formats.
+* ``audio_meta`` / ``audio_features`` — REAL for WAV: typed stream
   metadata + per-window RMS/peak/zero-crossing features over decoded PCM.
-* ``video_meta``         — REAL MP4/ISO-BMFF container parse (r3): brand,
+  A bad blob gets no ``audio_features`` rows.
+* ``video_meta``         — REAL MP4/ISO-BMFF container parse: brand,
   duration, track count, video dimensions; frame DECODE stays stubbed.
+* ``image_meta``         — header-only dims/bands/format detail.
+
+``resize_media``, ``audio_meta``, ``video_meta`` and ``image_meta`` turn a
+bad blob into one error row: ``status='error'``, ``error_msg`` = the
+exception text, every other field NULL.
 """
 
 from __future__ import annotations
 
+import io
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -35,7 +52,63 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cog3pio_spark.gif import decode_gif
+from cog3pio_spark.jpeg import decode_jpeg
+from cog3pio_spark.png import decode_png
+from cog3pio_spark.tiff.reader import CogReader
+from cog3pio_spark.tiff.writer import write_tiff
+
 N_FEATURES = 16
+
+# corrupt-input classes: the codec errors subclass ValueError; struct, zlib
+# and EOF errors are what truncated containers raise before a parser can
+# classify them. Anything else (TypeError, a numpy shape bug...) propagates.
+MEDIA_ERRORS = (ValueError, EOFError, struct.error, zlib.error)
+
+Rows = list[dict]
+
+
+def _per_blob(
+    df: DataFrame,
+    id_col: str,
+    blob_col: str,
+    schema: T.StructType,
+    rows: Callable[[bytes], Rows],
+    on_error: Callable[[bytes, Exception], Rows],
+) -> DataFrame:
+    """Map every blob (NULL reads as ``b""``) to ``rows(raw)`` — row dicts
+    keyed by ``schema`` names without ``media_id``, absent keys NULL — or,
+    when that raises one of MEDIA_ERRORS, to ``on_error(raw, exc)``. One
+    pandas frame per Arrow batch."""
+    sel = df.select(
+        F.col(id_col).cast("string").alias("media_id"), F.col(blob_col).alias("blob")
+    )
+    names = schema.names
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            ids, out = [], []
+            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
+                raw = bytes(blob or b"")
+                try:
+                    got = rows(raw)
+                except MEDIA_ERRORS as exc:
+                    got = on_error(raw, exc)
+                ids += [mid] * len(got)
+                out += got
+            cols = {n: [r.get(n) for r in out] for n in names}
+            cols["media_id"] = ids
+            yield pd.DataFrame(cols, columns=names)
+
+    return sel.mapInPandas(batches, schema)
+
+
+def _error_row(raw: bytes, exc: Exception) -> Rows:
+    return [{"status": "error", "error_msg": str(exc)}]
+
+
+def _no_rows(raw: bytes, exc: Exception) -> Rows:
+    return []
 
 
 def attach_media_meta(df: DataFrame, blob_col: str = "blob") -> DataFrame:
@@ -77,105 +150,67 @@ FEATURE_SCHEMA = T.StructType(
     ]
 )
 
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def _decode_pixels(raw: bytes) -> tuple[np.ndarray, str] | None:
+    """Magic-byte dispatch to the in-repo pixel codecs → ((band, h, w)
+    array, media type), or None when no codec reads the format."""
+    if raw[:2] in (b"II", b"MM"):
+        return CogReader(raw).to_numpy(), "image/tiff"
+    if raw[:2] == b"\xff\xd8":
+        return decode_jpeg(raw), "image/jpeg"
+    if raw[:8] == _PNG_SIG:
+        return decode_png(raw), "image/png"
+    if raw[:4] == b"GIF8":
+        return decode_gif(raw), "image/gif"
+    return None
+
+
+def _feature_vec(px: np.ndarray) -> list[float]:
+    """14-bin value histogram + mean + std. Integer dtypes bin over their
+    whole dtype range (uint8 pixels and bytes over (0, 255); a fixed range
+    would drop 16-bit or negative samples), floats over their own
+    min/max."""
+    values = px.astype(np.float64)
+    if px.dtype.kind in "ui":
+        info = np.iinfo(px.dtype)
+        lo, hi = float(info.min), float(info.max)
+    else:
+        lo, hi = float(values.min()), float(values.max())
+        if hi <= lo:
+            hi = lo + 1.0
+    hist = np.histogram(values, bins=N_FEATURES - 2, range=(lo, hi))[0] / values.size
+    return [*hist.tolist(), float(values.mean()), float(values.std())]
+
+
+def _byte_row(raw: bytes, exc: Exception | None = None) -> Rows:
+    return [
+        {"media_type": "raw-bytes", "features": _feature_vec(np.frombuffer(raw, np.uint8))}
+    ]
+
 
 def extract_features(df: DataFrame, id_col: str = "media_id", blob_col: str = "blob") -> DataFrame:
     """Per-blob fixed-size feature vector via mapInPandas (Arrow batches).
 
-    TIFF, baseline-JPEG, PNG and GIF blobs decode FOR REAL (in-repo codecs,
-    r3) and the 16-vector is computed over PIXELS (14-bin dtype-range value
-    histogram + mean + std; media_type tagged ';decoded'). Other formats
-    keep the byte-level stand-in — same vector shape, honest about what was
-    computed: batch iteration, schema, and partitioning are identical
-    either way.
+    TIFF, JPEG (baseline and progressive), PNG and GIF blobs decode FOR
+    REAL (in-repo codecs) and the 16-vector is computed over PIXELS
+    (14-bin dtype-range value histogram + mean + std; media_type tagged
+    ';decoded'). Other formats, and blobs their codec refuses, keep the
+    byte-level stand-in ('raw-bytes') — same vector shape, honest about
+    what was computed. Empty/NULL blobs give zeros tagged 'empty'.
     """
-    sel = df.select(F.col(id_col).cast("string"), F.col(blob_col))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-        import zlib as _zlib
+    def features(raw: bytes) -> Rows:
+        if not raw:
+            return [{"media_type": "empty", "features": [0.0] * N_FEATURES}]
+        decoded = _decode_pixels(raw)
+        if decoded is None:
+            return _byte_row(raw)
+        px, media_type = decoded
+        return [{"media_type": media_type + ";decoded", "features": _feature_vec(px)}]
 
-        from cog3pio_spark.gif import decode_gif
-        from cog3pio_spark.jpeg import decode_jpeg
-        from cog3pio_spark.png import decode_png
-        from cog3pio_spark.tiff.reader import CogReader
-
-        # ONLY corrupt-input error types downgrade a blob to the
-        # byte-histogram path (ADVICE r3: a bare `except Exception` let a
-        # codec regression silently re-tag every blob 'raw-bytes' instead of
-        # surfacing). The four codec error classes all subclass ValueError;
-        # struct/zlib/EOF errors are what truncated containers raise before
-        # the codec can classify them. Anything else (TypeError, a numpy
-        # shape bug...) is a programming error and propagates.
-        DECODE_ERRORS = (ValueError, EOFError, _struct.error, _zlib.error)
-
-        def vec(values: np.ndarray, vrange=(0.0, 255.0)) -> list[float]:
-            # dtype-aware histogram range (r3 review: a fixed (0,255) range
-            # silently drops every sample of 16-bit/float imagery; r4: and
-            # (0, max) dropped every NEGATIVE sample of signed dtypes —
-            # an all-negative int16 DEM binned to all-zero histograms
-            # tagged ';decoded'); floats bin over their own min/max
-            if vrange is None:
-                lo, hi = float(values.min()), float(values.max())
-                if hi <= lo:
-                    hi = lo + 1.0
-            else:
-                lo, hi = float(vrange[0]), float(vrange[1])
-            hist = np.histogram(values, bins=N_FEATURES - 2, range=(lo, hi))[0]
-            hist = hist / values.size
-            return [*hist.tolist(), float(values.mean()), float(values.std())]
-
-        for pdf in it:
-            feats, types = [], []
-            for blob in pdf[blob_col]:
-                raw = bytes(blob or b"")
-                if not raw:
-                    feats.append([0.0] * N_FEATURES)
-                    types.append("empty")
-                    continue
-                def _vrange(a: np.ndarray):
-                    if a.dtype.kind in "ui":
-                        info = np.iinfo(a.dtype)
-                        return (float(info.min), float(info.max))
-                    return None  # floats: bin over their own min/max
-
-                try:
-                    if raw[:2] in (b"II", b"MM"):
-                        # CogReader self-wraps crash classes into
-                        # TiffDecodeError (a ValueError) since r5 — the
-                        # former local conversion wrapper is gone
-                        px = CogReader(raw).to_numpy()
-                        feats.append(vec(px.astype(np.float64), _vrange(px)))
-                        types.append("image/tiff;decoded")
-                        continue
-                    if raw[:2] == b"\xff\xd8":
-                        px = decode_jpeg(raw)  # always uint8
-                        feats.append(vec(px.astype(np.float64), (0.0, 255.0)))
-                        types.append("image/jpeg;decoded")
-                        continue
-                    if raw[:8] == b"\x89PNG\r\n\x1a\n":
-                        px = decode_png(raw)  # uint8 or uint16
-                        feats.append(vec(px.astype(np.float64), _vrange(px)))
-                        types.append("image/png;decoded")
-                        continue
-                    if raw[:4] == b"GIF8":
-                        px = decode_gif(raw)  # uint8 RGB
-                        feats.append(vec(px.astype(np.float64), (0.0, 255.0)))
-                        types.append("image/gif;decoded")
-                        continue
-                except DECODE_ERRORS:
-                    pass  # corrupt image: fall through to the byte path
-                arr = np.frombuffer(raw, dtype=np.uint8)
-                feats.append(vec(arr))
-                types.append("raw-bytes")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "media_type": types,
-                    "features": feats,
-                }
-            )
-
-    return sel.mapInPandas(batches, FEATURE_SCHEMA)
+    return _per_blob(df, id_col, blob_col, FEATURE_SCHEMA, features, _byte_row)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -196,21 +231,15 @@ def frame_sample(
         # r5 review: n_frames=0 reached len(raw)//0 inside the executor
         # UDF — fail at the call site instead
         raise ValueError(f"n_frames must be >= 1: {n_frames}")
-    sel = df.select(F.col(id_col).cast("string"), F.col(blob_col))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"media_id": [], "frame_idx": [], "frame": []}
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                raw = bytes(blob or b"")
-                step = max(1, len(raw) // n_frames)
-                for i in range(n_frames):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["frame"].append(raw[i * step : (i + 1) * step])
-            yield pd.DataFrame(out)
+    def frames(raw: bytes) -> Rows:
+        step = max(1, len(raw) // n_frames)
+        return [
+            {"frame_idx": i, "frame": raw[i * step : (i + 1) * step]}
+            for i in range(n_frames)
+        ]
 
-    return sel.mapInPandas(batches, FRAME_SCHEMA)
+    return _per_blob(df, id_col, blob_col, FRAME_SCHEMA, frames, _no_rows)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -234,79 +263,42 @@ def resize_media(
 ) -> DataFrame:
     """Resize media blobs to (target_w, target_h) via mapInPandas.
 
-    TIFF, baseline-JPEG, PNG and GIF blobs are REALLY resized (in-repo decoders
-    → nearest-neighbor pixel-center resample → in-repo TIFF writer; the
-    resized payload is always TIFF — the repo has no JPEG/PNG encoder, and
-    the format conversion is documented rather than faked). Formats whose
-    codecs are absent in-sandbox (webp/...) produce an honest
-    ``status='unsupported'`` row — the task-brief stub contract: the
-    Spark plumbing (batching, schema, error channel) is real, the foreign
-    decode is not faked.
+    TIFF, JPEG (baseline and progressive), PNG and GIF blobs are REALLY
+    resized (in-repo decoders → nearest-neighbor pixel-center resample →
+    in-repo TIFF writer; the resized payload is always TIFF — the repo has
+    no JPEG/PNG encoder, and the format conversion is documented rather
+    than faked). Formats whose codecs are absent (webp/...) produce an
+    honest ``status='unsupported'`` row — the Spark plumbing (batching,
+    schema, error channel) is real, the foreign decode is not faked.
     """
-    sel = df.select(F.col(id_col).cast("string"), F.col(blob_col))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from cog3pio_spark.gif import decode_gif
-        from cog3pio_spark.jpeg import decode_jpeg
-        from cog3pio_spark.png import decode_png
-        from cog3pio_spark.tiff.reader import CogReader
-        from cog3pio_spark.tiff.writer import write_tiff
+    def resized(raw: bytes) -> Rows:
+        decoded = _decode_pixels(raw)
+        if decoded is None:
+            return [{
+                "status": "unsupported",
+                "error_msg": "resize: only TIFF/baseline-JPEG/PNG/GIF decodable"
+                " in-sandbox (no PIL/ffmpeg)",
+            }]
+        arr = decoded[0]  # (bands, h, w)
+        _, h, w = arr.shape
+        if h == 0 or w == 0:
+            # r5 review: clip(0, -1) on a size-0 axis raised an uncaught
+            # IndexError in the executor
+            raise ValueError(f"resize: zero-sized image ({h}x{w})")
+        # nearest-neighbor at pixel centers (matches the affine pixel-center
+        # contract used everywhere else)
+        yi = ((np.arange(target_h) + 0.5) * h / target_h).astype(np.int64)
+        xi = ((np.arange(target_w) + 0.5) * w / target_w).astype(np.int64)
+        res = arr[:, yi.clip(0, h - 1)][:, :, xi.clip(0, w - 1)]
+        buf = io.BytesIO()
+        write_tiff(buf, np.ascontiguousarray(res))
+        return [{
+            "status": "ok", "width": int(target_w), "height": int(target_h),
+            "resized": buf.getvalue(),
+        }]
 
-        for pdf in it:
-            out = {k.name: [] for k in RESIZE_SCHEMA}
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                raw = bytes(blob or b"")
-                out["media_id"].append(mid)
-                is_png = raw[:8] == b"\x89PNG\r\n\x1a\n"
-                is_gif = raw[:4] == b"GIF8"
-                if raw[:2] not in (b"II", b"MM", b"\xff\xd8") and not (is_png or is_gif):
-                    out["status"].append("unsupported")
-                    out["error_msg"].append(
-                        "resize: only TIFF/baseline-JPEG/PNG/GIF decodable"
-                        " in-sandbox (no PIL/ffmpeg)"
-                    )
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["resized"].append(None)
-                    continue
-                try:
-                    if is_gif:
-                        arr = decode_gif(raw)  # (3, h, w) uint8
-                    elif is_png:
-                        arr = decode_png(raw)  # (bands, h, w)
-                    elif raw[:2] == b"\xff\xd8":
-                        arr = decode_jpeg(raw)  # (bands, h, w) uint8
-                    else:
-                        arr = CogReader(raw).to_numpy()  # (bands, h, w)
-                    _, h, w = arr.shape
-                    if h == 0 or w == 0:
-                        # r5 review: clip(0, -1) on a size-0 axis raised an
-                        # uncaught IndexError in the executor
-                        raise ValueError(f"resize: zero-sized image ({h}x{w})")
-                    # nearest-neighbor at pixel centers (matches the affine
-                    # pixel-center contract used everywhere else)
-                    yi = ((np.arange(target_h) + 0.5) * h / target_h).astype(np.int64)
-                    xi = ((np.arange(target_w) + 0.5) * w / target_w).astype(np.int64)
-                    res = arr[:, yi.clip(0, h - 1)][:, :, xi.clip(0, w - 1)]
-                    import io
-
-                    buf = io.BytesIO()
-                    write_tiff(buf, np.ascontiguousarray(res))
-                    data = buf.getvalue()
-                    out["status"].append("ok")
-                    out["error_msg"].append(None)
-                    out["width"].append(int(target_w))
-                    out["height"].append(int(target_h))
-                    out["resized"].append(data)
-                except (ValueError, EOFError, struct.error, zlib.error) as exc:
-                    out["status"].append("error")
-                    out["error_msg"].append(str(exc))
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["resized"].append(None)
-            yield pd.DataFrame(out)
-
-    return sel.mapInPandas(batches, RESIZE_SCHEMA)
+    return _per_blob(df, id_col, blob_col, RESIZE_SCHEMA, resized, _error_row)
 
 
 # -- audio (REAL for WAV — RIFF is stdlib-parseable, like TIFF for images) ----
@@ -332,8 +324,6 @@ def _parse_wav(raw: bytes):
     8/16/32-bit) and IEEE-float (format 3, 32/64-bit) supported; anything
     else raises with an honest message. Pure struct/numpy — the audio
     analogue of the in-repo TIFF reader (no external codec libraries)."""
-    import struct
-
     if len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
         raise ValueError("Cannot parse audio: not a RIFF/WAVE stream")
     pos, fmt, data = 12, None, None
@@ -396,28 +386,11 @@ def _parse_wav(raw: bytes):
 def audio_meta(df: DataFrame, id_col: str = "media_id", blob_col: str = "blob") -> DataFrame:
     """Typed audio metadata per blob (REAL for WAV; error-channel rows for
     everything else — same contract as the TIFF decode operator)."""
-    sel = df.select(F.col(id_col).cast("string"), F.col(blob_col))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in AUDIO_META_SCHEMA}
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                out["media_id"].append(mid)
-                try:
-                    meta, _ = _parse_wav(bytes(blob or b""))
-                    out["status"].append("ok")
-                    out["error_msg"].append(None)
-                    for k, v in meta.items():
-                        out[k].append(v)
-                except (ValueError, EOFError, struct.error, zlib.error) as exc:
-                    out["status"].append("error")
-                    out["error_msg"].append(str(exc))
-                    for k in ("codec", "channels", "sample_rate", "bit_depth",
-                              "n_samples", "duration_s"):
-                        out[k].append(None)
-            yield pd.DataFrame(out)
+    def meta(raw: bytes) -> Rows:
+        return [{"status": "ok", **_parse_wav(raw)[0]}]
 
-    return sel.mapInPandas(batches, AUDIO_META_SCHEMA)
+    return _per_blob(df, id_col, blob_col, AUDIO_META_SCHEMA, meta, _error_row)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -442,36 +415,22 @@ def audio_features(
     row per window, vectorized numpy per blob; the audio analogue of
     per-tile band stats. Undecodable blobs contribute no rows (audio_meta
     carries their error channel)."""
-    sel = df.select(F.col(id_col).cast("string"), F.col(blob_col))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in AUDIO_FEATURES_SCHEMA}
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                try:
-                    meta, mat = _parse_wav(bytes(blob or b""))
-                except (ValueError, EOFError, struct.error):
-                    # corrupt-input classes only (ADVICE r3 pattern): the
-                    # no-rows contract is for undecodable BLOBS; a parser
-                    # programming error must still propagate
-                    continue
-                mono = mat.mean(axis=1)
-                win = max(1, meta["sample_rate"] * window_ms // 1000)
-                n_win = len(mono) // win
-                if n_win == 0:
-                    continue
-                w = mono[: n_win * win].reshape(n_win, win)
-                rms = np.sqrt((w * w).mean(axis=1))
-                peak = np.abs(w).max(axis=1)
-                zc = (np.diff(np.signbit(w), axis=1) != 0).sum(axis=1)
-                out["media_id"].extend([mid] * n_win)
-                out["window_idx"].extend(range(n_win))
-                out["rms"].extend(np.round(rms, 9).tolist())
-                out["peak"].extend(np.round(peak, 9).tolist())
-                out["zero_crossings"].extend(int(z) for z in zc)
-            yield pd.DataFrame(out)
+    def windows(raw: bytes) -> Rows:
+        meta, mat = _parse_wav(raw)
+        mono = mat.mean(axis=1)
+        win = max(1, meta["sample_rate"] * window_ms // 1000)
+        n_win = len(mono) // win
+        w = mono[: n_win * win].reshape(n_win, win)
+        rms = np.round(np.sqrt((w * w).mean(axis=1)), 9).tolist()
+        peak = np.round(np.abs(w).max(axis=1), 9).tolist()
+        zc = (np.diff(np.signbit(w), axis=1) != 0).sum(axis=1).tolist()
+        return [
+            {"window_idx": i, "rms": r, "peak": p, "zero_crossings": z}
+            for i, (r, p, z) in enumerate(zip(rms, peak, zc))
+        ]
 
-    return sel.mapInPandas(batches, AUDIO_FEATURES_SCHEMA)
+    return _per_blob(df, id_col, blob_col, AUDIO_FEATURES_SCHEMA, windows, _no_rows)
 
 
 # -- video (REAL container metadata for MP4/ISO-BMFF; frame decode stays an
@@ -526,8 +485,6 @@ def _parse_mp4(raw: bytes) -> dict:
 
 
 def _parse_mp4_impl(raw: bytes) -> dict:
-    import struct
-
     def boxes(buf, pos, end):
         while pos + 8 <= end:
             size, btype = struct.unpack_from(">I4s", buf, pos)
@@ -614,34 +571,13 @@ def _parse_mp4_impl(raw: bytes) -> dict:
 def video_meta(df: DataFrame, id_col: str = "media_id", blob_col: str = "blob") -> DataFrame:
     """Typed container metadata per video blob (REAL for MP4/ISO-BMFF;
     error-channel rows otherwise — decode operator contract)."""
-    sel = df.select(F.col(id_col).cast("string"), F.col(blob_col))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in VIDEO_META_SCHEMA}
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                out["media_id"].append(mid)
-                try:
-                    meta = _parse_mp4(bytes(blob or b""))
-                    out["status"].append("ok")
-                    out["error_msg"].append(None)
-                    for k in ("brand", "duration_s", "n_tracks", "width", "height"):
-                        out[k].append(meta[k])
-                    out["tracks"].append(
-                        [
-                            (t["handler"], t["codec"], t["width"], t["height"])
-                            for t in meta["tracks"]
-                        ]
-                    )
-                except (ValueError, EOFError, struct.error, zlib.error) as exc:
-                    out["status"].append("error")
-                    out["error_msg"].append(str(exc))
-                    for k in ("brand", "duration_s", "n_tracks", "width",
-                              "height", "tracks"):
-                        out[k].append(None)
-            yield pd.DataFrame(out)
+    def meta(raw: bytes) -> Rows:
+        m = _parse_mp4(raw)
+        tracks = [(t["handler"], t["codec"], t["width"], t["height"]) for t in m["tracks"]]
+        return [{"status": "ok", **m, "tracks": tracks}]
 
-    return sel.mapInPandas(batches, VIDEO_META_SCHEMA)
+    return _per_blob(df, id_col, blob_col, VIDEO_META_SCHEMA, meta, _error_row)
 
 
 # -- header-only image metadata (r4) -----------------------------------------
@@ -709,7 +645,7 @@ def _image_header_meta(raw: bytes) -> dict:
                 }
             pos += seglen
         raise ValueError("Cannot parse image: JPEG SOF not found")
-    if raw[:8] == b"\x89PNG\r\n\x1a\n":
+    if raw[:8] == _PNG_SIG:
         if len(raw) < 26 or raw[12:16] != b"IHDR":
             raise ValueError("Cannot parse image: PNG IHDR missing")
         w, h = struct.unpack_from(">II", raw, 16)
@@ -723,10 +659,6 @@ def _image_header_meta(raw: bytes) -> dict:
         return {"media_type": "image/gif", "width": int(w), "height": int(h),
                 "bands": 3, "detail": raw[:6].decode("ascii", "replace")}
     if raw[:2] in (b"II", b"MM"):
-        from cog3pio_spark.tiff.reader import CogReader
-
-        # CogReader self-wraps crash classes into TiffDecodeError (a
-        # ValueError) since r5 — no local conversion needed
         r = CogReader(raw)  # tag parse only; decode stays lazy
         return {"media_type": "image/tiff", "width": r.width,
                 "height": r.height, "bands": r.bands, "detail": str(r.dtype)}
@@ -773,24 +705,8 @@ def image_meta(df: DataFrame, id_col: str = "media_id", blob_col: str = "blob") 
     WebP VP8/VP8L/VP8X). The pre-decode curation filter: size/format gates
     run over headers at a fraction of decode cost; error-channel rows for
     unparseable blobs (decode operator contract)."""
-    sel = df.select(F.col(id_col).cast("string"), F.col(blob_col))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in IMAGE_META_SCHEMA}
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                out["media_id"].append(mid)
-                try:
-                    m = _image_header_meta(bytes(blob or b""))
-                    out["status"].append("ok")
-                    out["error_msg"].append(None)
-                    for k in ("media_type", "width", "height", "bands", "detail"):
-                        out[k].append(m[k])
-                except (ValueError, EOFError, struct.error) as exc:
-                    out["status"].append("error")
-                    out["error_msg"].append(str(exc))
-                    for k in ("media_type", "width", "height", "bands", "detail"):
-                        out[k].append(None)
-            yield pd.DataFrame(out)
+    def meta(raw: bytes) -> Rows:
+        return [{"status": "ok", **_image_header_meta(raw)}]
 
-    return sel.mapInPandas(batches, IMAGE_META_SCHEMA)
+    return _per_blob(df, id_col, blob_col, IMAGE_META_SCHEMA, meta, _error_row)

@@ -192,8 +192,10 @@ def file_range_fetcher(path: str):
 
     def fetch(off: int, n: int) -> bytes:
         with open(local, "rb") as f:
+            # read() allocates its full length up front: a tag declaring
+            # 2^28 values would allocate 1 GiB to read a few hundred bytes
             f.seek(off)
-            return f.read(n)
+            return f.read(max(0, min(n, os.fstat(f.fileno()).st_size - off)))
 
     return fetch
 
@@ -292,7 +294,15 @@ def _read_ifds(rd) -> tuple[list[dict[int, list]], str]:
                 else:
                     (off,) = struct.unpack_from(bo + "I", entries, pos + 8)
                     payload = rd(off, total)
-                fmt = bo + W._TYPE_FMT[typ] * count
+                # checked before any format is built, so work is sized by
+                # the bytes present, never by the declared count
+                if len(payload) < total:
+                    raise TiffDecodeError(
+                        f"Cannot parse TIFF: truncated or corrupt (tag {tag} "
+                        f"declares {count} values, {len(payload)} of {total} "
+                        f"bytes present)"
+                    )
+                fmt = f"{bo}{count}{W._TYPE_FMT[typ]}"
                 tags[tag] = list(struct.unpack(fmt, payload))
             ifds.append(tags)
             (ifd_offset,) = struct.unpack_from(bo + "I", entries, n_entries * 12)

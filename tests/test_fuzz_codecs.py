@@ -8,11 +8,24 @@ never a bare crash class (IndexError/struct.error/KeyError/MemoryError/…),
 which would escape the operators' narrowed corrupt-input catches and kill
 executor tasks. Covers the paths single crafted blobs miss: Adam7 pass
 accounting, tRNS, progressive scan state, GIF LZW tables, TIFF IFD walk.
+
+Random flips almost never land on a count field, so a second sweep is
+structure-aware: it rewrites the count, offset, size and dimension fields
+of TIFF IFDs, GIF screen/frame descriptors, PNG IHDR and chunk headers,
+WAV chunks and MP4 boxes to boundary values, and runs every case in one
+subprocess under an address-space cap with a per-case time bound. Work
+must be sized by the bytes present, never by a header's claim: each case
+ends in a decode or in the codec's typed error — never MemoryError or a
+timeout.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import struct
+import subprocess
+import sys
 
 import numpy as np
 
@@ -72,3 +85,260 @@ def test_truncation_fuzz_never_escapes_error_taxonomy():
         cuts = sorted({int(c) for c in rng.randint(0, len(raw), size=8)})
         for cut in cuts:
             _drive(decode, err_type, raw[:cut], f"{name} cut@{cut}")
+
+
+# -- structure-aware sweep ------------------------------------------------
+SWEEP_AS_LIMIT = 1 << 30  # address-space cap of the sweep process (bytes)
+SWEEP_CASE_S = 5.0  # per-case time bound (clean fixtures decode in < 0.2 s)
+_U32 = (0, 1, 0xFFFF, 1 << 24, 1 << 28, 0xFFFFFFFF)
+_U16 = (0, 1, 0x7FFF, 0xFFFF)
+
+
+def _put(raw: bytes, pos: int, fmt: str, value: int) -> bytes:
+    buf = bytearray(raw)
+    struct.pack_into(fmt, buf, pos, value)
+    return bytes(buf)
+
+
+def _tiff_mutants(raw: bytes):
+    """Every IFD entry's count and value/offset field, each IFD's entry
+    count and next pointer, and the header's first-IFD offset."""
+    bo = "<" if raw[:2] == b"II" else ">"
+    for v in _U32:
+        yield f"ifd0_offset={v:#x}", _put(raw, 4, bo + "I", v)
+    (ifd,) = struct.unpack_from(bo + "I", raw, 4)
+    while ifd:
+        (n,) = struct.unpack_from(bo + "H", raw, ifd)
+        for v in _U16:
+            yield f"ifd@{ifd}.n_entries={v:#x}", _put(raw, ifd, bo + "H", v)
+        for i in range(n):
+            e = ifd + 2 + 12 * i
+            (tag,) = struct.unpack_from(bo + "H", raw, e)
+            for v in _U32:
+                yield f"tag{tag}.count={v:#x}", _put(raw, e + 4, bo + "I", v)
+                yield f"tag{tag}.value={v:#x}", _put(raw, e + 8, bo + "I", v)
+        nxt = ifd + 2 + 12 * n
+        for v in _U32:
+            yield f"ifd@{ifd}.next={v:#x}", _put(raw, nxt, bo + "I", v)
+        (ifd,) = struct.unpack_from(bo + "I", raw, nxt)
+
+
+def _gif_mutants(raw: bytes):
+    """Logical-screen and first-frame descriptor dimensions/offsets, and
+    the color-table size bits."""
+    for name, pos in (("screen_w", 6), ("screen_h", 8)):
+        for v in _U16:
+            yield f"{name}={v:#x}", _put(raw, pos, "<H", v)
+    both = _put(_put(raw, 6, "<H", 0xFFFF), 8, "<H", 0xFFFF)
+    yield "screen=65535x65535", both
+    yield "gct_size=7", _put(raw, 10, "B", raw[10] | 0x87)
+    pos = 13 + (3 * (2 << (raw[10] & 7)) if raw[10] & 0x80 else 0)
+    while raw[pos] == 0x21:  # skip extension blocks to the descriptor
+        pos += 2
+        while raw[pos]:
+            pos += 1 + raw[pos]
+        pos += 1
+    assert raw[pos] == 0x2C
+    for k, name in enumerate(("frame_x", "frame_y", "frame_w", "frame_h")):
+        for v in _U16:
+            yield f"{name}={v:#x}", _put(raw, pos + 1 + 2 * k, "<H", v)
+    big_frame = _put(_put(both, pos + 5, "<H", 0xFFFF), pos + 7, "<H", 0xFFFF)
+    yield "frame+screen=65535x65535", big_frame
+
+
+def _png_mutants(raw: bytes):
+    """IHDR width/height and every chunk's length field."""
+    for name, pos in (("ihdr_w", 16), ("ihdr_h", 20)):
+        for v in _U32:
+            yield f"{name}={v:#x}", _put(raw, pos, ">I", v)
+    pos = 8
+    while pos + 8 <= len(raw):
+        length, ctype = struct.unpack_from(">I4s", raw, pos)
+        for v in _U32:
+            yield f"{ctype.decode()}@{pos}.length={v:#x}", _put(raw, pos, ">I", v)
+        pos += 12 + length
+
+
+def _riff_mutants(raw: bytes):
+    """RIFF size, every chunk size, and the fmt chunk's channel/rate/bits."""
+    for v in _U32:
+        yield f"riff_size={v:#x}", _put(raw, 4, "<I", v)
+    pos = 12
+    while pos + 8 <= len(raw):
+        cid, size = struct.unpack_from("<4sI", raw, pos)
+        for v in _U32:
+            yield f"{cid.decode()}.size={v:#x}", _put(raw, pos + 4, "<I", v)
+        if cid == b"fmt ":
+            fields = (("channels", 2, "<H"), ("rate", 4, "<I"), ("bits", 14, "<H"))
+            for name, off, fmt in fields:
+                for v in (_U16 if fmt == "<H" else _U32):
+                    yield f"fmt.{name}={v:#x}", _put(raw, pos + 8 + off, fmt, v)
+        pos += 8 + size + (size & 1)
+
+
+def _mp4_mutants(raw: bytes):
+    """Every box's 32-bit size (0 = to end, 1 = 64-bit largesize follows)."""
+    def walk(pos, end):
+        while pos + 8 <= end:
+            size, btype = struct.unpack_from(">I4s", raw, pos)
+            yield pos, btype
+            if btype in (b"moov", b"trak", b"mdia", b"minf", b"stbl"):
+                yield from walk(pos + 8, pos + size)
+            pos += size
+
+    for pos, btype in list(walk(0, len(raw))):
+        for v in (0, 1, 7, 8, 9, 0x7FFFFFFF, 0xFFFFFFFF):
+            yield f"{btype.decode()}@{pos}.size={v:#x}", _put(raw, pos, ">I", v)
+
+
+def _built_tiffs():
+    from io import BytesIO
+
+    from cog3pio_spark.tiff.writer import write_tiff
+
+    ramp = np.arange(64, dtype=np.uint8).reshape(1, 8, 8)
+    rgb = np.arange(3 * 40 * 40, dtype=np.uint16).reshape(3, 40, 40)
+    for name, arr, kw in (
+        ("writer_8x8.tif", ramp, {}),
+        ("writer_tiled_deflate.tif", rgb,
+         {"tiled": True, "tile_size": 16, "compression": "deflate"}),
+    ):
+        buf = BytesIO()
+        write_tiff(buf, arr, **kw)
+        yield name, buf.getvalue()
+
+
+def _built_wav() -> bytes:
+    import io
+    import wave
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(2)
+        w.setsampwidth(2)
+        w.setframerate(8000)
+        w.writeframes(np.arange(-400, 400, dtype=np.int16).tobytes())
+    return buf.getvalue()
+
+
+def _built_mp4() -> bytes:
+    def box(btype, payload):
+        return struct.pack(">I4s", 8 + len(payload), btype) + payload
+
+    mvhd = bytes(4) + b"\x00" * 8 + struct.pack(">II", 1000, 3000) + b"\x00" * 80
+    tkhd = bytes(4) + b"\x00" * 72 + struct.pack(">II", 320 << 16, 180 << 16)
+    hdlr = bytes(8) + b"vide" + bytes(12)
+    entry = (
+        struct.pack(">I4s", 86, b"avc1") + bytes(24)
+        + struct.pack(">HH", 320, 180) + bytes(50)
+    )
+    stsd = bytes(4) + struct.pack(">I", 1) + entry
+    stbl = box(b"stbl", box(b"stsd", stsd))
+    mdia = box(b"mdia", box(b"hdlr", hdlr) + box(b"minf", stbl))
+    moov = box(b"moov", box(b"mvhd", mvhd) + box(b"trak", box(b"tkhd", tkhd) + mdia))
+    return box(b"ftyp", b"isom" + b"\x00" * 8) + moov
+
+
+def _sweep_cases(tmpdir: str):
+    """(case name, blob, [(surface, decode, typed error), ...])."""
+    from cog3pio_spark.operators.multimodal import (
+        _image_header_meta,
+        _parse_mp4,
+        _parse_wav,
+    )
+    from cog3pio_spark.tiff.reader import file_range_fetcher
+
+    def tiff_ranged(blob):
+        path = os.path.join(tmpdir, "case.tif")
+        with open(path, "wb") as f:
+            f.write(blob)
+        return CogReader.from_fetcher(file_range_fetcher(path)).to_numpy()
+
+    header = ("_image_header_meta", _image_header_meta, ValueError)
+    tiff = [
+        ("CogReader", lambda b: CogReader(b).to_numpy(), TiffDecodeError),
+        ("CogReader.from_fetcher", tiff_ranged, TiffDecodeError),
+        header,
+    ]
+    gif = [("decode_gif", decode_gif, GifDecodeError), header]
+    png = [("decode_png", decode_png, PngDecodeError), header]
+    fixture = lambda name: open(os.path.join(DATA, name), "rb").read()  # noqa: E731
+    sources = [
+        *[(n, fixture(n), _tiff_mutants, tiff) for n in ("java_lzw.tif", "java_pb.tif")],
+        *[(n, b, _tiff_mutants, tiff) for n, b in _built_tiffs()],
+        ("java_indexed.gif", fixture("java_indexed.gif"), _gif_mutants, gif),
+        *[(n, fixture(n), _png_mutants, png) for n in ("java_gray.png", "java_rgba_ilace.png")],
+        ("built.wav", _built_wav(), _riff_mutants, [("_parse_wav", _parse_wav, ValueError)]),
+        ("built.mp4", _built_mp4(), _mp4_mutants, [("_parse_mp4", _parse_mp4, ValueError)]),
+    ]
+    for src, raw, mutants, surfaces in sources:
+        for case, blob in mutants(raw):
+            yield f"{src}:{case}", blob, surfaces
+
+
+class _CaseTimeout(BaseException):
+    """Raised by the interval timer; a BaseException so no codec's
+    corrupt-input catch can swallow it."""
+
+
+def _sweep() -> list[dict]:
+    """Run every case; one result per (case, surface): ``ok`` (decoded),
+    ``typed`` (the codec's own error) or the escaping class name."""
+    import signal
+    import tempfile
+    import time
+
+    def alarm(signum, frame):
+        raise _CaseTimeout
+
+    signal.signal(signal.SIGALRM, alarm)
+    out = []
+    with tempfile.TemporaryDirectory() as tmpdir:
+        for case, blob, surfaces in _sweep_cases(tmpdir):
+            for surface, decode, err_type in surfaces:
+                t0 = time.perf_counter()
+                signal.setitimer(signal.ITIMER_REAL, SWEEP_CASE_S)
+                try:
+                    decode(blob)
+                    outcome = "ok"
+                except err_type:
+                    outcome = "typed"
+                except _CaseTimeout:
+                    outcome = "timeout"
+                except Exception as exc:  # noqa: BLE001 — MemoryError included
+                    outcome = type(exc).__name__
+                finally:
+                    signal.setitimer(signal.ITIMER_REAL, 0)
+                elapsed = time.perf_counter() - t0
+                if outcome in ("ok", "typed") and elapsed > SWEEP_CASE_S:
+                    outcome = "timeout"  # a C call that ignored the timer
+                out.append({"case": case, "surface": surface, "outcome": outcome,
+                            "s": round(elapsed, 3)})
+    return out
+
+
+def test_structure_fuzz_work_bounded_by_bytes_present():
+    """Every structure-aware mutant decodes or raises the codec's typed
+    error inside the sweep process's address-space cap and the per-case
+    time bound (TIFF tag counts of 2^28 and a 65535x65535 GIF screen used
+    to end in MemoryError)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH")) if p)
+    env = {**os.environ, "PYTHONPATH": path, "OPENBLAS_NUM_THREADS": "1",
+           "OMP_NUM_THREADS": "1"}
+    proc = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--sweep"],
+        capture_output=True, text=True, env=env, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    results = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert len(results) > 500, len(results)
+    bad = [r for r in results if r["outcome"] not in ("ok", "typed")]
+    assert not bad, f"{len(bad)} of {len(results)} cases escaped: {bad[:12]}"
+
+
+if __name__ == "__main__" and sys.argv[1:] == ["--sweep"]:
+    import resource
+
+    resource.setrlimit(resource.RLIMIT_AS, (SWEEP_AS_LIMIT, SWEEP_AS_LIMIT))
+    print(json.dumps(_sweep()))

@@ -334,10 +334,7 @@ def test_binary_parsers_error_taxonomy_fuzz(prefix, junk):
             pass  # documented taxonomy (codec errors subclass ValueError)
     try:
         CogReader(raw)
-    except (TiffDecodeError, IndexError, KeyError, ZeroDivisionError,
-            ValueError):
-        # CogReader's tag walk is not fully self-wrapping (operators wrap
-        # its crash classes at call sites — see extract_features); the fuzz
-        # still pins that nothing OUTSIDE this set (e.g. a numpy
-        # shape/TypeError) ever escapes
+    except TiffDecodeError:
+        # CogReader wraps every crash class of its tag walk into
+        # TiffDecodeError itself; operators add no wrapping of their own
         pass

@@ -1385,7 +1385,14 @@ def test_corrupt_blobs_surface_as_error_rows_not_crashes(spark):
     declaring channels=0, marker fill-bytes running to EOF) must come out
     as error/byte-path rows through every operator surface — the decoders
     wrap their own crash classes into the documented taxonomy, so the
-    operators' narrowed corrupt-input catches hold."""
+    operators' narrowed corrupt-input catches hold. Two header bombs ride
+    along: a TIFF tag whose count claims 2^28 values and a GIF whose
+    logical screen claims 65535x65535 — both must be refused from the
+    bytes present, not allocated."""
+    import io
+    import os
+    import struct
+
     from cog3pio_spark.gif import GifDecodeError, decode_gif  # noqa: F401
     from cog3pio_spark.jpeg import JpegDecodeError, decode_jpeg
     from cog3pio_spark.operators.multimodal import (
@@ -1394,9 +1401,13 @@ def test_corrupt_blobs_surface_as_error_rows_not_crashes(spark):
         audio_features,
         audio_meta,
         extract_features,
+        frame_sample,
         image_meta,
+        resize_media,
+        video_meta,
     )
     from cog3pio_spark.png import PngDecodeError, decode_png
+    from cog3pio_spark.tiff.writer import write_tiff
 
     short_sof = b"\xff\xd8\xff\xc0\x00\x02"  # SOF segment too short
     with pytest.raises(JpegDecodeError, match="truncated or corrupt"):
@@ -1414,20 +1425,50 @@ def test_corrupt_blobs_surface_as_error_rows_not_crashes(spark):
     with pytest.raises(ValueError, match="Cannot parse image"):
         _image_header_meta(b"\xff\xd8" + b"\xff" * 10)  # fill bytes to EOF
 
+    buf = io.BytesIO()
+    write_tiff(buf, np.arange(64, dtype=np.uint8).reshape(1, 8, 8))
+    tiff_bomb = bytearray(buf.getvalue())
+    (ifd,) = struct.unpack_from("<I", tiff_bomb, 4)
+    assert struct.unpack_from("<H", tiff_bomb, ifd + 2)[0] == 256  # ImageWidth
+    struct.pack_into("<I", tiff_bomb, ifd + 2 + 4, 1 << 28)  # its count
+    data = os.path.join(os.path.dirname(__file__), "data")
+    gif_bomb = bytearray(open(os.path.join(data, "java_indexed.gif"), "rb").read())
+    struct.pack_into("<HH", gif_bomb, 6, 0xFFFF, 0xFFFF)  # logical screen
+
     rows = [
         ("sof", short_sof),
         ("fill", b"\xff\xd8" + b"\xff" * 10),
         ("wav0", bad_wav),
         ("tiffjunk", b"II*\x00" + b"\x01" * 6),
+        ("tiffbomb", bytes(tiff_bomb)),
+        ("gifbomb", bytes(gif_bomb)),
     ]
     df = spark.createDataFrame(rows, ["media_id", "blob"])
     feats = {r["media_id"]: r["media_type"] for r in extract_features(df).collect()}
+    assert len(feats) == len(rows)
     assert all(t == "raw-bytes" for t in feats.values()), feats
     hdr = {r["media_id"]: r["status"] for r in image_meta(df).collect()}
     assert hdr["sof"] == "error" and hdr["fill"] == "error"
+    assert hdr["tiffbomb"] == "error"
     ameta = {r["media_id"]: r["status"] for r in audio_meta(df).collect()}
     assert ameta["wav0"] == "error"
     assert audio_features(df).filter(F.col("media_id") == "wav0").count() == 0
+    resized = {r["media_id"]: r for r in resize_media(df, 4, 4).collect()}
+    assert resized["wav0"]["status"] == "unsupported"
+    for mid in ("sof", "fill", "tiffjunk", "tiffbomb", "gifbomb"):
+        r = resized[mid]
+        assert r["status"] == "error" and r["error_msg"], r
+        assert (r["width"], r["height"], r["resized"]) == (None, None, None)
+    vmeta = video_meta(df).collect()
+    assert len(vmeta) == len(rows)
+    for r in vmeta:
+        assert r["status"] == "error" and r["error_msg"], r
+        assert all(r[k] is None for k in ("brand", "duration_s", "n_tracks", "tracks"))
+    frames = frame_sample(df, n_frames=3).collect()
+    for mid, blob in rows:
+        got = sorted((r["frame_idx"], bytes(r["frame"])) for r in frames if r["media_id"] == mid)
+        step = max(1, len(blob) // 3)
+        assert got == [(i, blob[i * step : (i + 1) * step]) for i in range(3)], mid
 
 
 def test_dedupe_corpus_one_call(dup_docs):
