@@ -1,11 +1,10 @@
 """GIF decoder in pure Python/numpy (fifth real in-repo media codec).
 
-GIF's LZW differs from the TIFF variant the repo already ships (LSB-first
-bit packing, per-image variable initial code size, clear/EOI codes, width
-growth WITHOUT TIFF's early change) — an independent implementation, not a
-reuse, validated the same way: GIF is lossless for ≤256-color frames, so
-the interop contract against Java ImageIO is EXACT per-pixel equality
-(tests/test_gif.py).
+GIF's LZW differs from the TIFF variant (LSB-first bit packing, per-image
+variable initial code size, width growth WITHOUT TIFF's early change); both
+run on the one numpy kernel in ``cog3pio_spark/lzw.py`` with those three
+settings. GIF is lossless for ≤256-color frames, so the interop contract
+against Java ImageIO is EXACT per-pixel equality (tests/test_gif.py).
 
 Supported: GIF87a/89a, global and local color tables, interlaced images
 (pass reordering), extensions skipped; the FIRST frame of animated GIFs is
@@ -19,8 +18,9 @@ composited first frame allocates ``3 × width × height`` bytes), and a
 frame rectangle must lie inside the screen before its LZW data is
 decoded. The limit is PIL's ``Image.MAX_IMAGE_PIXELS`` (about 89.5 M
 pixels, a 256 MiB RGB canvas); the format allows 65535 × 65535.
-Performance note: the LZW loop is per-code Python — correctness-first
-reference decoder (same contract note as jpeg.py/png.py).
+Performance: LZW decodes through the vectorised kernel at 23-43 MB/s on
+1 MB streams (4-core x86 VM; figures in ``cog3pio_spark/lzw.py``); the
+former per-code loop is the test oracle in tests/lzw_oracle.py.
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ import struct
 
 import numpy as np
 
+from cog3pio_spark import lzw
 
 # largest logical screen decoded (PIL's Image.MAX_IMAGE_PIXELS)
 MAX_SCREEN_PIXELS = 1024 * 1024 * 1024 // 4 // 3
@@ -39,57 +40,28 @@ class GifDecodeError(ValueError):
 
 
 def _lzw_decode_gif(data: bytes, min_code_size: int, n_pixels: int) -> np.ndarray:
-    """GIF-variant LZW: LSB-first packing, clear/EOI, 12-bit max codes."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8), bitorder="little")
-    pos = 0
-    width = min_code_size + 1
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
-    out = bytearray()
-    prev: bytes | None = None
-
-    def read_code() -> int:
-        nonlocal pos
-        if pos + width > len(bits):
-            return eoi  # truncated stream: stop (caller length-checks)
-        chunk = bits[pos : pos + width]
-        pos += width
-        v = 0
-        for i in range(width - 1, -1, -1):
-            v = (v << 1) | int(chunk[i])
-        return v
-
-    while len(out) < n_pixels:
-        code = read_code()
-        if code == clear:
-            table = [bytes([i]) for i in range(clear)] + [b"", b""]
-            width = min_code_size + 1
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise GifDecodeError("Cannot decode GIF: bad initial LZW code")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise GifDecodeError("Cannot decode GIF: LZW code out of range")
-        out.extend(entry)
-        prev = entry
-        if len(table) == (1 << width) and width < 12:
-            width += 1
+    """GIF-variant LZW (LSB-first, no early change, 12-bit max codes) of
+    exactly ``n_pixels`` indices. Decoding stops once they are produced;
+    the codes after that point are not read."""
+    if min_code_size > 8:
+        raise GifDecodeError(
+            f"Cannot decode GIF: LZW minimum code size {min_code_size} exceeds 8"
+        )
+    try:
+        out = lzw.decode(
+            data, lsb_first=True, early_change=False, min_code_size=min_code_size,
+            max_out=n_pixels, stop_at_max=True,
+        )
+    except lzw.CodeError as exc:
+        raise GifDecodeError(
+            "Cannot decode GIF: bad initial LZW code" if exc.initial
+            else "Cannot decode GIF: LZW code out of range"
+        ) from None
     if len(out) < n_pixels:
         raise GifDecodeError(
             f"Cannot decode GIF: expected {n_pixels} pixels, got {len(out)}"
         )
-    return np.frombuffer(bytes(out[:n_pixels]), dtype=np.uint8)
+    return out[:n_pixels]
 
 
 def _deinterlace(idx: np.ndarray) -> np.ndarray:

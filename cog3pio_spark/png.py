@@ -26,6 +26,8 @@ import zlib
 
 import numpy as np
 
+from cog3pio_spark.inflate import InflateLimitError, inflate
+
 
 class PngDecodeError(ValueError):
     """Parse/decode failure with an honest message."""
@@ -165,11 +167,6 @@ def _decode_png_stream(raw: bytes) -> np.ndarray:
     bits_per_px = depth * channels
     bpp = max(1, bits_per_px // 8)  # filter unit in bytes
 
-    try:
-        data = zlib.decompress(bytes(idat))
-    except zlib.error as exc:
-        raise PngDecodeError(f"Cannot decode PNG: corrupt IDAT ({exc})") from exc
-
     # one grid per pass: sequential = a single full-image pass; Adam7 = the
     # 7 spec passes, each an independently filtered sub-image (empty passes
     # of narrow/short images contribute zero bytes, not even filter bytes)
@@ -183,6 +180,15 @@ def _decode_png_stream(raw: bytes) -> np.ndarray:
     expected = sum(
         hp * ((wp * bits_per_px + 7) // 8 + 1) for _, wp, hp in passes if wp and hp
     )
+    # a deflate bomb is refused without allocating its output
+    try:
+        data = inflate(bytes(idat), expected)
+    except zlib.error as exc:
+        raise PngDecodeError(f"Cannot decode PNG: corrupt IDAT ({exc})") from exc
+    except InflateLimitError:
+        raise PngDecodeError(
+            f"Cannot decode PNG: expected {expected} filtered bytes, got more"
+        ) from None
     if len(data) != expected:
         raise PngDecodeError(
             f"Cannot decode PNG: expected {expected} filtered bytes, "

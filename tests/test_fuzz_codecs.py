@@ -144,6 +144,13 @@ def _gif_mutants(raw: bytes):
             yield f"{name}={v:#x}", _put(raw, pos + 1 + 2 * k, "<H", v)
     big_frame = _put(_put(both, pos + 5, "<H", 0xFFFF), pos + 7, "<H", 0xFFFF)
     yield "frame+screen=65535x65535", big_frame
+    packed = raw[pos + 9]
+    lzw = pos + 10 + (3 * (2 << (packed & 7)) if packed & 0x80 else 0)
+    for v in (0, 1, 7, 9, 12, 0xFF):
+        yield f"lzw_min_code_size={v}", _put(raw, lzw, "B", v)
+    # min code size 0 (1-bit codes, the width never grows): one segment of
+    # 256 literal codes, then a ClearCode
+    yield "lzw_m0_long_segment", raw[:lzw] + bytes([0, 33]) + bytes(32) + b"\x01\x00\x3b"
 
 
 def _png_mutants(raw: bytes):
