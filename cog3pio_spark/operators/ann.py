@@ -8,16 +8,16 @@ Reference (exact, what tests and the q17/q18 oracles compare against):
   window for the final k cut. DuckDB oracle: list_cosine_similarity.
 * top_cosine_pairs — exact all-pairs global top-N, guarded by ``max_rows``.
 
-Indexed top-k core (``_search``), after Jégou et al., *Product Quantization
-for Nearest Neighbor Search* (TPAMI 2011): one coarse partition of the
-corpus into lists, optional PQ codes, one probe of a few lists per query.
-``assign`` maps each normalised vector to one list id and ``probe`` maps
-each query to distinct list ids. One encoder pass stores
-(id, ivf_list, payload); a literal ``isin`` of the probed lists prunes
-list-partitioned storage; one per-batch kernel scores every probed
-(vector, query) pair — exact cosine, or ADC over PQ codes — and cuts a
-partial top-k that one window ranks. Its callers differ only in
-``assign``/``probe`` and codes:
+Indexed top-k (``_indexed_topk``) runs on the list-probe core that ring kNN
+shares, ``operators/probe.py::_search`` (after Jégou et al., *Product
+Quantization for Nearest Neighbor Search*, TPAMI 2011): one coarse
+partition of the corpus into lists, optional PQ codes, one probe of a few
+lists per query. ``assign`` maps each normalised vector to one list id and
+``probe`` maps each query to distinct list ids. One encoder pass
+(``_encode``) stores (id, ivf_list, payload); one ``IN`` filter keeps the
+probed lists, and the core scores every probed (vector, query) pair with
+the scorer built here — exact cosine, or ADC over PQ codes — and cuts the
+top-k. The callers differ only in ``assign``/``probe`` and codes:
 
 * lsh_topk   — random-hyperplane buckets; query-directed
   (query_directed_probes) or Hamming-ball multi-probe.
@@ -48,15 +48,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from cog3pio_spark.operators.probe import (
+    MAX_QUERIES,
+    Scorer,
+    _collect_query_batch,
+    _rank_topk,
+    _search,
+)
+
 
 # shared default sample size for all codebook/centroid trainers (hoisted so
 # composed operators like ivfpq_topk can never drift from the trainers)
 TRAIN_SAMPLE = 4096
-# largest query batch any indexed top-k collects to the driver
-MAX_QUERIES = 10_000
-# (vector, query) pairs the search kernel expands at once: bounds its memory
-# when many queries probe the same lists
-PAIR_CHUNK = 1 << 16
 
 
 def _finite_vectors(df: DataFrame, vec_col: str) -> DataFrame:
@@ -72,33 +75,6 @@ def _size_planes(n_rows: int) -> int:
     """Hyperplanes for ~256-row LSH buckets: max(2, ceil(log2(n/256))),
     capped at 30 — the pair family's corpus-size plane rule."""
     return min(30, max(2, int(np.ceil(np.log2(max(2.0, n_rows / 256.0))))))
-
-
-def _collect_query_batch(
-    queries: DataFrame, query_id_col: str, vec_col: str, max_queries: int
-) -> list:
-    """Bounded driver-side collection of a *serving-sized* query batch.
-
-    Every indexed top-k computes probes (and PQ lookup tables) for the query
-    batch on the driver, so the batch must be small. ``take(max+1)`` is the
-    guarded collect itself — one job, no O(n) scan of the set it refuses —
-    so an oversized query set errors loudly instead of OOMing the driver."""
-    rows = queries.select(query_id_col, vec_col).take(max_queries + 1)
-    if len(rows) > max_queries:
-        raise ValueError(
-            f"query set exceeds max_queries={max_queries}: indexed top-k "
-            f"collects the query batch to the driver to compute its probes. "
-            f"Split bulk query sets into batches of at most {max_queries} "
-            f"(pq_topk/ivfpq_topk also take max_queries=)."
-        )
-    if not rows:
-        # an empty set used to crash downstream in _normalize (numpy
-        # AxisError on a 0-dim matrix) — refuse clearly
-        raise ValueError(
-            "query set is empty: nothing to score (an upstream filter "
-            "matched no rows?)"
-        )
-    return rows
 
 
 def _query_matrix(vecs: list) -> np.ndarray:
@@ -121,20 +97,9 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     return mat / n
 
 
-def _rank_topk(
-    scored: DataFrame, k: int, query_id_col: str, id_col: str, score_col: str
-) -> DataFrame:
-    """Final per-query cut over partial top-k survivors. Ordering uses the
-    UNROUNDED score with ascending id on ties (the oracle's ORDER BY);
-    rounding happens only on the emitted value."""
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col(score_col).desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, F.round(score_col, 6).alias(score_col))
-    )
+def _rounded(score_col: str):
+    """The emitted score: rounded to 6 places (ordering uses the raw one)."""
+    return F.round(score_col, 6).alias(score_col)
 
 
 def brute_force_topk(
@@ -182,7 +147,10 @@ def brute_force_topk(
             yield pd.DataFrame(out)
 
     v = _finite_vectors(vectors, vec_col).select(id_col, vec_col)
-    return _rank_topk(v.mapInPandas(_partial_topk, part_schema), k, "query_id", id_col, "cosine")
+    return _rank_topk(
+        v.mapInPandas(_partial_topk, part_schema), k, "query_id", id_col, "cosine",
+        _rounded("cosine"),
+    )
 
 
 def cosine_pairs_udf():
@@ -498,7 +466,7 @@ def _encode(
     return v.mapInPandas(_enc, schema)
 
 
-def _search(
+def _indexed_topk(
     vectors: DataFrame,
     queries: DataFrame,
     assign,
@@ -514,77 +482,55 @@ def _search(
     encoded: DataFrame | None = None,
     list_type: T.DataType = T.IntegerType(),
 ) -> DataFrame:
-    """The one indexed top-k core (see the module docstring).
+    """Every indexed top-k, on the list-probe core (operators/probe.py).
 
+    The query batch is collected (bounded by ``max_queries``) and
     ``probe(qmat)`` gives an (n_queries, P) array of DISTINCT list ids per
-    query; since every vector lives in exactly one list, each
-    (query, vector) pair is scored at most once. Without ``books`` the
-    probed vectors are scored by exact cosine; with ``books`` by ADC over
-    their codes, plus ⟨q, c_list⟩ for residual codes (``centroids``). Pass
-    ``encoded`` to search a persisted (id, ivf_list, payload) index.
-    Returns (query_id_col, rank, id_col, cosine | pq_score).
-
-    The query batch is collected (bounded by ``max_queries``) and its probes
-    are computed on the driver. The probed-list set is a literal, so the
-    ``isin`` filter is a pushable predicate: over storage partitioned by
-    ivf_list it prunes at file-listing time. The kernel finds each row's
-    probing queries through a CSR index of the probes (lists sorted, one
-    run of query indices per list), expands the (vector, query) pairs in
-    numpy, and keeps each query's top-k per slice (top-k is a monoid), so
-    the final window ranks ≤ slices·|queries|·k rows."""
-    rows = _collect_query_batch(queries, query_id_col, vec_col, max_queries)
-    qvals = pd.Series([r[0] for r in rows]).to_numpy()
+    query. Without ``books`` the probed vectors are scored by exact cosine;
+    with ``books`` by ADC over their codes, plus ⟨q, c_list⟩ for residual
+    codes (``centroids``). Pass ``encoded`` to search a persisted
+    (id, ivf_list, payload) index.
+    Returns (query_id_col, rank, id_col, cosine | pq_score)."""
+    rows = _collect_query_batch(
+        queries, [query_id_col, vec_col], max_queries,
+        f"Split bulk query sets into batches of at most {max_queries} "
+        f"(pq_topk/ivfpq_topk also take max_queries=).",
+    )
+    if not rows:
+        # an empty set used to crash downstream in _normalize (numpy
+        # AxisError on a 0-dim matrix) — refuse clearly
+        raise ValueError("query set is empty: nothing to score (did a filter match no rows?)")
     qmat = _query_matrix([r[1] for r in rows])
-    probes = np.asarray(probe(qmat))
-    order = np.argsort(probes.ravel(), kind="stable")
-    q_of = order // probes.shape[1]
-    lists, starts, counts = np.unique(probes.ravel()[order], return_index=True, return_counts=True)
     if encoded is None:
         encoded = _encode(vectors, assign, id_col, vec_col, books, centroids, list_type)
     if books is None:
-        score_col, payload = "cosine", vec_col
+        def cosine(pdf, row, qi):
+            mat = _normalize(np.vstack(pdf[vec_col].to_numpy()))
+            return (qmat[qi] * mat[row]).sum(axis=1)
+
+        scorer = Scorer(cosine, (vec_col,), "cosine", _rounded("cosine"))
     else:
-        score_col, payload = "pq_score", "pq"
         m, _, sub = books.shape  # the codebooks, not an m parameter, are authoritative
         lut = np.einsum("qjs,jcs->qjc", qmat.reshape(len(qmat), m, sub), books)
         qcent = None if centroids is None else qmat @ centroids.T
-    step = max(1, PAIR_CHUNK // int(counts.max()))
 
-    def _score(pdf: pd.DataFrame) -> pd.DataFrame:
-        lst = pdf["ivf_list"].to_numpy()
-        pos = np.searchsorted(lists, lst)
-        cnt = counts[pos]
-        row = np.repeat(np.arange(len(pdf)), cnt)
-        first = np.repeat(starts[pos] - (np.cumsum(cnt) - cnt), cnt)
-        qi = q_of[first + np.arange(len(row))]
-        if books is None:
-            mat = _normalize(np.vstack(pdf[vec_col].to_numpy()))
-            s = (qmat[qi] * mat[row]).sum(axis=1)
-        else:
+        def adc(pdf, row, qi):
             codes = np.vstack(pdf["pq"].to_numpy()).astype(np.int64)[row]
             s = lut[qi[:, None], np.arange(m)[None, :], codes].sum(axis=1)
             if qcent is not None:
-                s = qcent[qi, lst[row]] + s
-        ids = pdf[id_col].to_numpy()[row]
-        o = np.lexsort((ids, -s, qi))
-        qi, ids, s = qi[o], ids[o], s[o]
-        head = np.r_[True, qi[1:] != qi[:-1]]
-        at = np.arange(len(qi))
-        keep = at - np.maximum.accumulate(np.where(head, at, 0)) < k
-        return pd.DataFrame({query_id_col: qvals[qi[keep]], id_col: ids[keep], score_col: s[keep]})
+                s = qcent[qi, pdf["ivf_list"].to_numpy()[row]] + s
+            return s
 
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for lo in range(0, len(pdf), step):
-                yield _score(pdf.iloc[lo : lo + step])
-
-    part_schema = (
-        T.StructType().add(query_id_col, queries.schema[query_id_col].dataType)
-        .add(id_col, encoded.schema[id_col].dataType).add(score_col, T.DoubleType())
-    )
-    probed = encoded.filter(F.col("ivf_list").isin(lists.tolist()))
-    probed = probed.select(id_col, "ivf_list", payload)
-    return _rank_topk(probed.mapInPandas(_kernel, part_schema), k, query_id_col, id_col, score_col)
+        scorer = Scorer(adc, ("pq",), "pq_score", _rounded("pq_score"))
+    qids, qtype = pd.Series([r[0] for r in rows]).to_numpy(), queries.schema[query_id_col].dataType
+    probes = probe(qmat)
+    # one parsed SQL IN over the probed lists, a pushable predicate (a
+    # partition filter on an ivf_list-partitioned index): Column.isin makes
+    # a py4j call per list (~0.5 ms)
+    lists = ", ".join(map(str, np.unique(probes).tolist()))
+    encoded = encoded.filter(F.expr(f"ivf_list IN ({lists})"))
+    return _search(encoded, qids, qtype, probes, scorer, k,
+                   id_col=id_col, query_id_col=query_id_col)
 
 
 def _top_lists(sims: np.ndarray, n: int) -> np.ndarray:
@@ -690,7 +636,7 @@ def lsh_topk(
         def probe(qmat):
             return _buckets(qmat @ planes)[:, None] ^ ball
 
-    return _search(
+    return _indexed_topk(
         vectors, queries, lambda mat: _buckets(mat @ planes), probe, k,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
         list_type=T.LongType(),
@@ -776,7 +722,7 @@ def ivf_topk(
     collected to the driver (at most MAX_QUERIES).
     """
     cents = train_ivf_centroids(vectors, dim, n_centroids, vec_col=vec_col, id_col=id_col)
-    return _search(
+    return _indexed_topk(
         vectors, queries, _nearest(cents),
         lambda qmat: _top_lists(qmat @ cents.T, nprobe), k,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
@@ -851,7 +797,7 @@ def ivf2_topk(
         f = _top_lists(np.einsum("qd,qcfd->qcf", qmat, fine[c]), nprobe_fine)
         return (c[:, :, None] * nf + f).reshape(len(qmat), -1)
 
-    return _search(
+    return _indexed_topk(
         vectors, queries, assign, probe, k,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     )
@@ -979,7 +925,7 @@ def ivfpq_topk(
     ⟨q, c_list⟩ + Σ_j LUT[q, j, code_j]. Recall improvement pinned by
     tests/test_training_ops.py::test_ivfpq_residual_beats_raw.
 
-    The probed-list ``isin`` filter reaches a parquet/Iceberg layout
+    The probed-list ``IN`` filter reaches a parquet/Iceberg layout
     partitioned by ivf_list as a partition filter (pinned by
     tests/test_training_ops.py::test_ivfpq_scan_prunes_lists). Pass
     ``encoded``/``centroids``/``books`` to reuse a persisted index (resume
@@ -1004,7 +950,7 @@ def ivfpq_topk(
             centroids=centroids if residual else None,
             sample_rows=shared_sample,
         )
-    return _search(
+    return _indexed_topk(
         vectors, queries, _nearest(centroids),
         lambda qmat: _top_lists(qmat @ centroids.T, nprobe), k,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,

@@ -1,30 +1,39 @@
-"""kNN via hex k-ring expansion join + brute-force fallback (SURVEY §2.B).
+"""Spatial kNN over (id, lat, lng) rows, three operators (SURVEY §2.B).
 
-Phase 1 (scale path): each query expands its hex cell to a k-ring
-(ARRAY explode → equi-join on cell). The join is a plain shuffled equi-join
-on cell id — broadcastable when the query side is small (we hint it).
-True distance is then exact haversine (column math) and a row_number()
-window keeps the k nearest.
+* knn_brute — exact, by broadcast cross product: the reference (q20's
+  DuckDB oracle) and knn_join's brute tier.
+* knn_join — ring kNN on the list-probe core that vector top-k shares
+  (operators/probe.py): a point's list is its h3x cell, a query probes the
+  cells of its k-ring, the exact scorer is haversine. The query batch is
+  collected, one histogram job counts the points per probed cell, and each
+  query's tier — base ring, 3× ring or brute force — is picked on the
+  driver from those counts.
+* knn_sort_merge — curve-order sort-merge on the S2 Hilbert curve: the
+  path for query sets too large to collect; approximate (recall tuned by
+  ``scan_width``).
 
-Phase 2 (completeness): queries with < k matches after phase 1 (sparse
-regions, face-boundary ring truncation — cells/h3x.py docstring) fall back
-to a broadcast brute-force pass over the points. At 100 TB the fallback set
-is the rare tail: ring misses are O(queries), never O(points); the fallback
-cost is |missed queries| × |points in coarse cells|, bounded by escalating
-ring radius before brute force.
+Queries and points with a NULL or non-finite coordinate take part in none
+of them (``_finite_points``): such a point has no distance to anything, and
+a query at one has no neighbours.
 
 Used with points = tile centroids and queries = arbitrary lat/lng rows.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
+from cog3pio_spark.cells import h3x
 from cog3pio_spark.functions import cells as C
+from cog3pio_spark.operators.probe import MAX_QUERIES, Scorer, _collect_query_batch, _search
+from cog3pio_spark.session import spread_small_scan
 
 EARTH_RADIUS_M = 6378137.0
 
@@ -45,6 +54,24 @@ def haversine_m(lat1, lng1, lat2, lng2):
     return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))
 
 
+def _haversine_np(lat1, lng1, lat2, lng2):
+    """haversine_m over numpy arrays: the same operations in the same order."""
+    rlat1, rlat2 = np.radians(lat1), np.radians(lat2)
+    dlat = np.radians(lat2 - lat1)
+    dlng = np.radians(lng2 - lng1)
+    a = np.sin(dlat / 2) ** 2 + np.cos(rlat1) * np.cos(rlat2) * np.sin(dlng / 2) ** 2
+    return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(a))
+
+
+def _finite_points(df: DataFrame) -> DataFrame:
+    """Rows whose lat and lng are both non-NULL and finite (the twin of
+    ann._finite_vectors). A point without both has no distance to anything,
+    and a NULL distance sorts first: kept, it would rank as every query's
+    nearest neighbour."""
+    lat, lng = (F.col(c).isNotNull() & ~F.isnan(c) & (F.abs(c) != np.inf) for c in ("lat", "lng"))
+    return df.filter(lat & lng)
+
+
 def knn_brute(
     queries: DataFrame,
     points: DataFrame,
@@ -52,11 +79,13 @@ def knn_brute(
     query_id: str = "query_id",
     point_id: str = "point_id",
 ) -> DataFrame:
-    """Exact kNN by broadcast cross product — the small-query-set path and
-    the correctness oracle for the ring join (oracle-checked by the driver).
+    """Exact kNN by broadcast cross product — knn_join's brute tier and the
+    correctness oracle for the ring join (q20 checks it against DuckDB).
     Returns (query_id, rank, point_id, dist_m)."""
-    q = queries.select(query_id, F.col("lat").alias("q_lat"), F.col("lng").alias("q_lng"))
-    p = points.select(point_id, F.col("lat").alias("p_lat"), F.col("lng").alias("p_lng"))
+    q = _finite_points(queries).select(
+        query_id, F.col("lat").alias("q_lat"), F.col("lng").alias("q_lng"))
+    p = _finite_points(points).select(
+        point_id, F.col("lat").alias("p_lat"), F.col("lng").alias("p_lng"))
     w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(), F.col(point_id).asc())
     return (
         F.broadcast(q)
@@ -108,8 +137,6 @@ def knn_sort_merge(
     curve discontinuities; recall is tuned by scan_width. Use when the query
     set is too large to broadcast and rings miss (sparse regions).
     """
-    from functools import reduce
-
     # _cell is the UNSIGNED curve key: s2_cell's int64 carrier stores uint64
     # ids two's-complement, so sorting the signed value directly would place
     # faces 4-5 before 0-3 — an artificial seam at the face 3|4 boundary
@@ -119,19 +146,11 @@ def knn_sort_merge(
     # uint order. ``cuts=`` hints are in this same flipped keyspace (any
     # monotone cut set is CORRECT regardless — cuts only shape buckets).
     sign_flip = F.lit(-(1 << 63))
-    q = queries.select(
-        F.col(query_id).alias("_id"),
-        F.lit(True).alias("_is_q"),
-        "lat",
-        "lng",
-        C.s2_cell(F.col("lat"), F.col("lng"), 30).bitwiseXOR(sign_flip).alias("_cell"),
-    )
-    p = points.select(
-        F.col(point_id).alias("_id"),
-        F.lit(False).alias("_is_q"),
-        "lat",
-        "lng",
-        C.s2_cell(F.col("lat"), F.col("lng"), 30).bitwiseXOR(sign_flip).alias("_cell"),
+    cell = C.s2_cell(F.col("lat"), F.col("lng"), 30).bitwiseXOR(sign_flip).alias("_cell")
+    q, p = (
+        _finite_points(df).select(
+            F.col(c).alias("_id"), F.lit(is_q).alias("_is_q"), "lat", "lng", cell)
+        for df, c, is_q in ((queries, query_id, True), (points, point_id, False))
     )
     # Materialize the (id, is_q, lat, lng, cell) union ONCE: the bucket
     # count, the quantile cuts, the ghost branches and the window otherwise
@@ -164,9 +183,11 @@ def knn_sort_merge(
         # millions of rows into one pandas frame. Any bucket count yields
         # the same result while interior buckets hold ≥ scan_width rows
         # (the ghost contract above); 2M-row buckets satisfy that hugely.
+        # The floor binds an explicit ``num_buckets`` too: it is a memory
+        # bound, not a default.
         floor = total // _BUCKET_ROWS_TARGET
         n_buckets = max(
-            1, min(num_buckets or max(default_p, floor), total // (4 * scan_width))
+            1, min(max(num_buckets or default_p, floor), total // (4 * scan_width))
         )
         if n_buckets > 1:
             cuts = both.stat.approxQuantile(
@@ -209,17 +230,10 @@ def knn_sort_merge(
             .withColumn("_ghost", F.lit(True))
         )
         rows = rows.unionByName(lo_ghosts).unionByName(hi_ghosts)
+    # _cell is never NULL: _finite_points drops the NaN/NULL coordinates
+    # whose s2_cell would be NULL (and would make Arrow deliver the whole
+    # bucket's _cell batch as float64, rounding every level-30 carrier)
     rows = rows.drop("_rn", "_n")
-    # NULL _cell rows (NaN coords → s2_cell NULL, the r5 fix) would make
-    # Arrow deliver the whole bucket's _cell batch as float64 — silently
-    # rounding every level-30 carrier in the bucket (the same corruption
-    # class fixed in functions/cells.py) and sorting NaN LAST where the
-    # JVM windows above sort NULLS FIRST. Coalesce NULL to int64 min: it
-    # sorts first (JVM null-ordering parity), is unreachable as a real
-    # carrier (level-30 ids have the trailing bit set, so every unsigned
-    # carrier is > int64 min), and _cell never appears in the output, so
-    # no restore is needed.
-    rows = rows.withColumn("_cell", F.coalesce(F.col("_cell"), F.lit(-(1 << 63))))
 
     # curve-order neighborhood, one task per bucket (ghosts make each frame
     # identical to global curve order). r6 (guide §4.2): the former
@@ -253,7 +267,7 @@ def knn_sort_merge(
         if not np.issubdtype(pdf["_cell"].to_numpy().dtype, np.integer):
             raise TypeError(
                 "sort-merge kNN kernel received a non-integer _cell batch "
-                f"({pdf['_cell'].dtype}); a null slipped past the coalesce "
+                f"({pdf['_cell'].dtype}); a null slipped past _finite_points "
                 "and the curve keys would be float64-rounded"
             )
         pdf = pdf.sort_values(["_cell", "_is_q", "_id"])
@@ -302,9 +316,9 @@ def knn_sort_merge(
     )
 
 
-def ring_exactness_bound(cell, ring: int):
-    """Per-cell lower bound (meters) on the distance from any point in the
-    cell to any point OUTSIDE its k-ring coverage.
+def ring_exactness_bound(cells: np.ndarray, ring: int) -> np.ndarray:
+    """Per-cell lower bound (meters) on the distance from any point in each
+    of the h3x ``cells`` to any point OUTSIDE its k-ring coverage.
 
     Derivation: a point outside the ring lies in a cell at hex distance
     ≥ ring+1; center-to-center distance ≥ (ring+1)·d_min where d_min is the
@@ -318,49 +332,62 @@ def ring_exactness_bound(cell, ring: int):
     (tested incl. a face-edge fixture), at the cost of some exact results
     going uncertified near face edges.
     """
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
+    arr = np.asarray(cells, dtype=np.int64)
+    ring1 = h3x.k_ring(arr, 1)  # (n, 7): self + 6 neighbours
+    n = arr.shape[0]
+    all_cells = ring1.ravel()
+    face, u, v = h3x.cell_center_uv(all_cells)
+    # gnomonic (u,v) → unit sphere chord ≈ arc for small cells
+    norm = np.sqrt(1.0 + u * u + v * v)
+    # face-local 3D coords (face axes differ but within one ring the
+    # face is constant, so pairwise angles are valid)
+    x, y, z = 1.0 / norm, u / norm, v / norm
+    xyz = np.stack([x, y, z], axis=1).reshape(n, 7, 3)
+    # the SELF cell sits wherever k_ring's lexicographic delta enumeration
+    # puts (0,0) — locate it by id, never by position (r4 review: assuming
+    # index 0 measured 'neighbour' spacing from a ring cell, halving d_min
+    # and collapsing the bound ~8x — still sound, but almost nothing could
+    # be certified)
+    self_mask = ring1 == arr[:, None]  # (n, 7)
+    center = xyz[np.arange(n), self_mask.argmax(axis=1)][:, None, :]
+    cosang = np.clip((xyz * center).sum(axis=2), -1, 1)
+    d = np.arccos(cosang) * EARTH_RADIUS_M  # (n, 7) incl. self
+    d = np.where(self_mask, np.nan, d)  # drop the zero self-distance
+    d_min, d_max = np.nanmin(d, axis=1), np.nanmax(d, axis=1)
+    ring_b = (1 + ring) * d_min - 1.4 * d_max
+    # face-edge cap: in face-local coords the four edges are the great
+    # circles y=±x, z=±x; the center's arc distance to the nearest is
+    # asin((x - max(|y|,|z|)) / √2). Subtract the circumradius slack so any
+    # cross-face point (which the ring cannot cover) is provably farther
+    # than the capped bound.
+    cx, cy, cz = center[:, 0, 0], center[:, 0, 1], center[:, 0, 2]
+    s = (cx - np.maximum(np.abs(cy), np.abs(cz))) / np.sqrt(2.0)
+    edge_b = np.arcsin(np.clip(s, 0.0, 1.0)) * EARTH_RADIUS_M - 1.4 * d_max
+    return np.maximum(0.0, np.minimum(ring_b, edge_b))
 
-    from cog3pio_spark.cells import h3x
+
+def _cell_among(lat: Column, lng: Column, res: int, cells: np.ndarray) -> Column:
+    """h3x cell at ``res`` of a finite (lat, lng) when it is one of the
+    sorted ``cells``, else NULL: the membership test runs in the same numpy
+    pass as the cell math (a literal ``isin`` costs a py4j call per cell)."""
+
+    @pandas_udf(T.LongType())
+    def _u(la: pd.Series, ln: pd.Series) -> pd.Series:
+        c = h3x.latlng_to_cell(la.to_numpy(np.float64), ln.to_numpy(np.float64), res)
+        pos = np.minimum(np.searchsorted(cells, c), len(cells) - 1)
+        return pd.Series(c).astype("Int64").mask(cells[pos] != c)
+
+    return _u(lat, lng)
+
+
+def _looked_up(table: dict, key: Column) -> Column:
+    """``table[key]`` as a DOUBLE column, from a driver-side dict."""
 
     @pandas_udf(T.DoubleType())
-    def _bound(cells: pd.Series) -> pd.Series:
-        arr = cells.to_numpy(np.int64)
-        ring1 = h3x.k_ring(arr, 1)  # (n, 7): self + 6 neighbours
-        n = arr.shape[0]
-        all_cells = ring1.ravel()
-        face, u, v = h3x.cell_center_uv(all_cells)
-        # gnomonic (u,v) → unit sphere chord ≈ arc for small cells
-        norm = np.sqrt(1.0 + u * u + v * v)
-        # face-local 3D coords (face axes differ but within one ring the
-        # face is constant, so pairwise angles are valid)
-        x, y, z = 1.0 / norm, u / norm, v / norm
-        xyz = np.stack([x, y, z], axis=1).reshape(n, 7, 3)
-        # the SELF cell sits wherever k_ring's lexicographic delta
-        # enumeration puts (0,0) — locate it by id, never by position (r4
-        # review: assuming index 0 measured 'neighbour' spacing from a ring
-        # cell, halving d_min and collapsing the bound ~8x — still sound,
-        # but almost nothing could be certified)
-        self_mask = ring1 == arr[:, None]  # (n, 7)
-        center = xyz[
-            np.arange(n), self_mask.argmax(axis=1)
-        ][:, None, :]
-        cosang = np.clip((xyz * center).sum(axis=2), -1, 1)
-        d = np.arccos(cosang) * EARTH_RADIUS_M  # (n, 7) incl. self
-        d = np.where(self_mask, np.nan, d)  # drop the zero self-distance
-        d_min, d_max = np.nanmin(d, axis=1), np.nanmax(d, axis=1)
-        ring_b = (1 + ring) * d_min - 1.4 * d_max
-        # face-edge cap: in face-local coords the four edges are the great
-        # circles y=±x, z=±x; the center's arc distance to the nearest is
-        # asin((x - max(|y|,|z|)) / √2). Subtract the circumradius slack so
-        # any cross-face point (which the ring cannot cover) is provably
-        # farther than the capped bound.
-        cx, cy, cz = center[:, 0, 0], center[:, 0, 1], center[:, 0, 2]
-        s = (cx - np.maximum(np.abs(cy), np.abs(cz))) / np.sqrt(2.0)
-        edge_b = np.arcsin(np.clip(s, 0.0, 1.0)) * EARTH_RADIUS_M - 1.4 * d_max
-        return pd.Series(np.maximum(0.0, np.minimum(ring_b, edge_b)))
+    def _u(keys: pd.Series) -> pd.Series:
+        return keys.map(table).astype(np.float64)
 
-    return _bound(cell)
+    return _u(key)
 
 
 def knn_join(
@@ -371,153 +398,80 @@ def knn_join(
     ring: int = 2,
     query_id: str = "query_id",
     point_id: str = "point_id",
-    broadcast_queries: bool = True,
     with_certificate: bool = False,
 ) -> DataFrame:
-    """k nearest ``points`` for each query row.
+    """k nearest ``points`` for each query row, by hex k-ring probes.
 
     queries: (query_id, lat, lng); points: (point_id, lat, lng).
     Returns (query_id, rank, point_id, dist_m[, exact]).
 
-    Exactness contract: results are exact when the true k-th neighbour lies
-    inside the k-ring coverage; queries that find fewer than k candidates
-    fall back to brute force and are always exact. With
-    ``with_certificate=True`` every row carries a provable ``exact`` flag
-    (conservative bound from ring_exactness_bound — certified ⇒ truly
-    exact; tests pin no-false-certificates against brute force).
+    The finite queries are collected (at most MAX_QUERIES; bulk query sets
+    belong to knn_sort_merge, and more raise ValueError). Each point's list
+    is its h3x cell at ``res``; one histogram job counts the points in every
+    cell of every query's ring ``3·ring``, and each query gets its tier on
+    the driver:
+
+    * ring ``ring`` when its cells hold ≥ k points;
+    * else ring ``3·ring`` when those hold ≥ k;
+    * else brute force (knn_brute) — sparse regions, and rings truncated at
+      a cube-face edge (cells/h3x.py).
+
+    One list-probe search (operators/probe.py, haversine scorer) serves both
+    ring tiers. Exactness contract: results are exact when the true k-th
+    neighbour lies inside the probed cells; brute-served queries are always
+    exact. With ``with_certificate=True`` every row carries a provable
+    ``exact`` flag: brute-served, or k-th distance ≤ ring_exactness_bound at
+    the base ring (conservative — certified ⇒ truly exact; tests pin
+    no-false-certificates against brute force).
     """
-    # Materialize both cell-annotated projections once: the ring phase, the
-    # escalation phase and the brute tail each re-join these, and without
-    # checkpointing every branch re-runs the h3x pandas_udf over the full
-    # table (~36 ArrowEvalPython stages in the q21 plan — exchange reuse
-    # covered part of it; measured 5.7 s → 5.3 s at sf0.1, and the win grows
-    # with table size since the UDF scan is O(points) per branch). Per-call
-    # materialization — no cross-run cache reuse.
-    from cog3pio_spark.session import spread_small_scan
-
-    # spread first: the h3x pandas_udf otherwise runs single-task on a
-    # single-split input (no-op at real scale; measured 5.3→2.9 s at sf0.1)
-    q_lazy = spread_small_scan(queries).select(
-        query_id,
-        F.col("lat").alias("q_lat"),
-        F.col("lng").alias("q_lng"),
-        C.h3x_cell(F.col("lat"), F.col("lng"), res).alias("q_cell"),
+    rows = _collect_query_batch(
+        _finite_points(queries), [query_id, "lat", "lng"], MAX_QUERIES,
+        "Use knn_sort_merge for bulk query sets.",
     )
-    p_lazy = spread_small_scan(points).select(
-        point_id,
-        F.col("lat").alias("p_lat"),
-        F.col("lng").alias("p_lng"),
-        C.h3x_cell(F.col("lat"), F.col("lng"), res).alias("cell"),
-    )
-    # materialize the two projections CONCURRENTLY (guide §2.6 — actions
-    # are sequential only because driver code calls them sequentially; the
-    # two cell-annotation jobs are independent, so the second no longer
-    # waits out the first's tail). Thread-pool jobs inherit nothing they
-    # need here; each call returns its own checkpointed frame.
-    from concurrent.futures import ThreadPoolExecutor
+    qids = pd.Series([r[0] for r in rows]).to_numpy()
+    lat, lng = np.array([r[1:] for r in rows], dtype=np.float64).reshape(-1, 2).T
+    # spread first: the cell UDF and the brute tier otherwise run
+    # single-task on a single-split input (no-op at real scale)
+    points = _finite_points(spread_small_scan(points))
+    served = np.zeros(len(rows), dtype=bool)
+    if rows:
+        cell = h3x.latlng_to_cell(lat, lng, res)
+        base, wide = h3x.k_ring(cell, ring), h3x.k_ring(cell, 3 * ring)
+        cells = np.unique(wide)
+        ivf_list = _cell_among(F.col("lat"), F.col("lng"), res, cells).alias("ivf_list")
+        encoded = points.select(point_id, ivf_list, "lat", "lng")
+        # lazy: the histogram job fills the blocks and the search reads
+        # them, so the scan, the spread and the cell UDF run once
+        encoded = encoded.filter(F.col("ivf_list").isNotNull()).localCheckpoint(eager=False)
+        hist = np.array(encoded.groupBy("ivf_list").count().collect(), np.int64).reshape(-1, 2)
+        per_cell = np.zeros(len(cells), dtype=np.int64)
+        per_cell[np.searchsorted(cells, hist[:, 0])] = hist[:, 1]
+        n_base, n_wide = (per_cell[np.searchsorted(cells, c)].sum(axis=1) for c in (base, wide))
+        served = n_wide >= k
+    out = None
+    if served.any():
+        qlat, qlng = lat[served], lng[served]
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fq = pool.submit(lambda: q_lazy.localCheckpoint(eager=True))
-        fp = pool.submit(lambda: p_lazy.localCheckpoint(eager=True))
-        q, p = fq.result(), fp.result()
+        def neg_haversine(pdf, row, qi):
+            plat, plng = pdf["lat"].to_numpy()[row], pdf["lng"].to_numpy()[row]
+            return -_haversine_np(qlat[qi], qlng[qi], plat, plng)
 
-    w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(), F.col(point_id).asc())
-
-    def ring_phase(queries_df: DataFrame, ring_k: int) -> DataFrame:
-        expanded = queries_df.withColumn(
-            "cell", F.explode(C.h3x_kring(F.col("q_cell"), ring_k))
+        scorer = Scorer(neg_haversine, ("lat", "lng"), "_neg_m", (-F.col("_neg_m")).alias("dist_m"))
+        probes = [b if n >= k else w for b, w, n in zip(base[served], wide[served], n_base[served])]
+        out = _search(
+            encoded, qids[served], queries.schema[query_id].dataType, probes, scorer, k,
+            id_col=point_id, query_id_col=query_id,
         )
-        probe = F.broadcast(expanded) if broadcast_queries else expanded
-        cand = probe.join(p, "cell")
-        dist = cand.withColumn(
-            "dist_m",
-            haversine_m(F.col("q_lat"), F.col("q_lng"), F.col("p_lat"), F.col("p_lng")),
-        )
-        return (
-            dist.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, "rank", point_id, "dist_m")
-        )
-
-    def shortfall(queries_df: DataFrame, result: DataFrame) -> DataFrame:
-        found = result.groupBy(query_id).agg(F.count("*").alias("n_found"))
-        return (
-            queries_df.join(found, query_id, "left")
-            .filter(F.coalesce(F.col("n_found"), F.lit(0)) < k)
-            .drop("n_found")
-        )
-
-    # phase 1: base ring; phase 2: escalated ring (3×) for the queries that
-    # came up short — at scale this keeps the brute tail (a full points
-    # pass) to the rare truly-isolated queries. Each phase result is tiny
-    # (≤ |queries|·k rows) and consumed by 2-3 downstream branches, so it is
-    # checkpointed rather than recomputed per consumer.
-    # lazy checkpoint (r6): the first consumer (the shortfall probe below)
-    # materializes the phase result as a side effect of its own job, so the
-    # synchronous eager barrier disappears while later consumers still read
-    # the materialized blocks — one fewer scheduling round-trip per phase.
-    ranked = ring_phase(q, ring).localCheckpoint(eager=False)
-    short_q = shortfall(q, ranked)
-    # r5: skip the escalation/brute machinery entirely when NO query came
-    # up short (the common case — ring coverage is sized for it). The
-    # isEmpty probes are one driver aggregate over a checkpointed
-    # ≤|queries|-row frame each; what they skip is stage launches against
-    # the FULL points table (the brute tail is a whole points pass at
-    # scale). Measured ~4.0 → ~2.6 s warm on the sf0.1 ring query.
-    if short_q.isEmpty():
-        out = ranked
-        short = short_q.select(query_id, "q_lat", "q_lng")
-    else:
-        escalated = ring_phase(short_q, ring * 3)
-        ranked = (
-            ranked.join(short_q.select(query_id), query_id, "left_anti")
-            .unionByName(escalated)
-            .localCheckpoint(eager=False)  # materialized by the next probe
-        )
-        short = shortfall(q, ranked).select(query_id, "q_lat", "q_lng")
-        if short.isEmpty():
-            out = ranked
-        else:
-            brute = (
-                F.broadcast(short)
-                .crossJoin(p.select(point_id, "p_lat", "p_lng"))
-                .withColumn(
-                    "dist_m",
-                    haversine_m(
-                        F.col("q_lat"), F.col("q_lng"), F.col("p_lat"), F.col("p_lng")
-                    ),
-                )
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select(query_id, "rank", point_id, "dist_m")
-            )
-            covered = ranked.join(short.select(query_id), query_id, "left_anti")
-            out = covered.unionByName(brute)
-
-    if not with_certificate:
-        return out
-    # out contains the brute crossJoin tail and feeds TWO branches below
-    # (the kth aggregate and the cert base) — checkpoint so the full-points
-    # brute pass executes once, not per consumer (r4 review; same pattern
-    # as the phase results above). Only in the certificate path: the plain
-    # return above has a single consumer.
-    out = out.localCheckpoint(eager=True)
-    # Exactness certificate: brute-forced queries are exact by construction;
-    # ring-served queries are exact when their k-th distance is provably
-    # inside the ring coverage (ring_exactness_bound). Conservative: a
-    # certified row is always truly exact (tests pin this).
-    bounds = q.select(query_id, ring_exactness_bound(F.col("q_cell"), ring).alias("_bound"))
-    brute_ids = short.select(query_id).withColumn("_brute", F.lit(True))
-    kth = out.groupBy(query_id).agg(F.max("dist_m").alias("_kth"))
-    cert = (
-        out.join(bounds, query_id)
-        .join(kth, query_id)
-        .join(brute_ids, query_id, "left")
-        .withColumn(
-            "exact",
-            F.coalesce(F.col("_brute"), F.lit(False))
-            | (F.col("_kth") <= F.col("_bound")),
-        )
-        .select(query_id, "rank", point_id, "dist_m", "exact")
-    )
-    return cert
+        if with_certificate:
+            bound = dict(zip(qids[served].tolist(), ring_exactness_bound(cell[served], ring)))
+            kth = F.max("dist_m").over(Window.partitionBy(query_id))
+            out = out.withColumn("exact", kth <= _looked_up(bound, F.col(query_id)))
+    if out is None or not served.all():
+        brute_q = [r for r, s in zip(rows, served) if not s]
+        schema = queries.select(query_id, "lat", "lng").schema
+        brute = knn_brute(queries.sparkSession.createDataFrame(brute_q, schema), points, k,
+                          query_id, point_id)
+        if with_certificate:
+            brute = brute.withColumn("exact", F.lit(True))
+        out = brute if out is None else out.unionByName(brute)
+    return out

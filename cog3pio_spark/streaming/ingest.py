@@ -9,7 +9,9 @@ ingest timestamp; counts use tumbling windows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -192,6 +194,19 @@ def streaming_flagship(
     q.awaitTermination()
 
 
+def _query_chunks(df: DataFrame, size: int) -> list[DataFrame]:
+    """``df`` as frames of at most ``size`` rows, split in query_id order;
+    none for an empty ``df``."""
+    n = df.count()
+    if n <= size:
+        return [df] if n else []
+    # a micro-batch of queries is small: one window task numbers it, and
+    # the checkpoint fixes the split every chunk reads
+    rn = F.row_number().over(Window.orderBy("query_id"))
+    part = df.withColumn("_part", F.floor((rn - 1) / size)).localCheckpoint()
+    return [part.filter(F.col("_part") == i).drop("_part") for i in range(-(-n // size))]
+
+
 def streaming_knn(
     query_stream: DataFrame,
     points: DataFrame,
@@ -205,8 +220,10 @@ def streaming_knn(
     kNN operator as batch (operators/knn.knn_join) against the static point
     table via foreachBatch — exact stream/batch parity by construction
     (top-k-per-query ranking isn't expressible as a pure streaming agg, so
-    micro-batch enrichment is the idiomatic shape). Resume comes from the
-    stream checkpoint, and the sink is IDEMPOTENT per epoch: results are
+    micro-batch enrichment is the idiomatic shape). knn_join collects its
+    queries to pick their tiers, at most MAX_QUERIES of them, so a larger
+    micro-batch is served in chunks of that size (``_query_chunks``) and
+    written as one epoch. Resume comes from the stream checkpoint, and the sink is IDEMPOTENT per epoch: results are
     partitioned by _epoch and written with dynamic partition overwrite, so a
     batch replayed after a crash-between-write-and-commit overwrites its own
     partition instead of appending duplicates (foreachBatch alone is only
@@ -214,16 +231,20 @@ def streaming_knn(
     """
     from pyspark.sql import functions as F  # noqa: F811 (worker import)
 
-    from cog3pio_spark.operators.knn import knn_join
+    from cog3pio_spark.operators import knn
 
     def _batch(df: DataFrame, epoch_id: int) -> None:
-        if df.isEmpty():
+        chunks = _query_chunks(df, knn.MAX_QUERIES)
+        if not chunks:
             return
+        out = reduce(
+            DataFrame.unionByName,
+            (knn.knn_join(c, points, k=k, res=res, ring=ring) for c in chunks),
+        )
         # overwrite mode scoped to the write (ADVICE r2: a session-level
         # conf mutation would silently change later static overwrites)
         (
-            knn_join(df, points, k=k, res=res, ring=ring)
-            .withColumn("_epoch", F.lit(epoch_id))
+            out.withColumn("_epoch", F.lit(epoch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_epoch")

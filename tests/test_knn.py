@@ -184,12 +184,13 @@ def test_sort_merge_kernel_not_single_partition(clustered):
 
 
 def test_sort_merge_nan_coord_does_not_corrupt_bucket(spark, clustered):
-    """A NaN-coord point gets a NULL curve key (the r5 NaN-cells fix); one
-    such row would make Arrow deliver its whole bucket's _cell batch as
+    """A NaN-coord point would get a NULL curve key (the r5 NaN-cells fix);
+    one such row would make Arrow deliver its whole bucket's _cell batch as
     float64, silently rounding every level-30 carrier in the bucket (and
-    pandas sorts NaN last where the JVM sorts NULLS first). The sentinel
-    coalesce must keep valid queries' neighbors identical; the kernel's
-    integer-dtype guard fails loudly if the coalesce is ever bypassed."""
+    pandas sorts NaN last where the JVM sorts NULLS first). _finite_points
+    drops the row before any curve key exists, so valid queries' neighbors
+    stay identical; the kernel's integer-dtype guard fails loudly if a NULL
+    key ever reaches it."""
     from cog3pio_spark.operators.knn import knn_sort_merge
 
     queries, points = clustered
@@ -280,3 +281,150 @@ def test_sort_merge_face_seam_parity(spark):
     a = {(r["query_id"], r["rank"], r["point_id"]) for r in sm.collect()}
     b = {(r["query_id"], r["rank"], r["point_id"]) for r in bf.collect()}
     assert a == b
+
+
+def test_ring_tiers_mixed_in_one_call(spark, monkeypatch):
+    """One knn_join call serves a dense-cluster query from its base ring, a
+    query whose points sit in a sparse annulus (outside ring 2, inside ring
+    6) from the 3× ring, and an isolated query by brute force — and equals
+    knn_brute. The encoded points hold every ring-6 cell, so the kernel
+    itself drops the ring-6 rows the base-ring queries skip. Ring distances
+    come from numpy and brute ones from the JVM: ids and ranks must match
+    exactly, distances to a relative 1e-12."""
+    from cog3pio_spark.operators import knn
+
+    rng = np.random.RandomState(5)
+    dense = [(i, 10.0 + rng.rand() * 0.05, 20.0 + rng.rand() * 0.05) for i in range(200)]
+    annulus = [
+        (1000 + i, float(30.0 + 0.15 * np.cos(i)), float(40.0 + 0.15 * np.sin(i)))
+        for i in range(8)
+    ]
+    points = spark.createDataFrame(
+        dense + annulus + [(5000, -50.0, -60.0)], ["point_id", "lat", "lng"]
+    )
+    queries = spark.createDataFrame(
+        [(1, 10.02, 20.02), (2, 10.03, 20.01), (3, 30.0, 40.0), (4, -20.0, 150.0)],
+        ["query_id", "lat", "lng"],
+    )
+    widths = {}
+    search = knn._search
+
+    def spy(encoded, qids, qtype, probes, *a, **kw):
+        widths.update(zip(qids.tolist(), [len(p) for p in probes]))
+        return search(encoded, qids, qtype, probes, *a, **kw)
+
+    monkeypatch.setattr(knn, "_search", spy)
+    out = knn.knn_join(queries, points, k=4, res=6, ring=2, with_certificate=True).collect()
+    # ring 2 holds 19 cells, ring 6 holds 127; query 4 never reaches the core
+    assert widths == {1: 19, 2: 19, 3: 127}
+    want = {tuple(r)[:3]: r["dist_m"] for r in knn_brute(queries, points, k=4).collect()}
+    got = {tuple(r)[:3]: r["dist_m"] for r in out}
+    assert got.keys() == want.keys() and len(want) == 16
+    assert all(got[key] == pytest.approx(d, rel=1e-12) for key, d in want.items())
+    assert all(r["exact"] for r in out if r["query_id"] == 4)
+
+
+@pytest.mark.parametrize("op", ["knn_brute", "knn_join", "knn_sort_merge"])
+def test_null_or_nonfinite_coords_never_become_neighbours(spark, clustered, op):
+    """A point with a NULL, NaN or infinite coordinate has no distance to
+    anything, so it is never a neighbour (a NULL distance sorts first: such
+    a point used to come back as rank 1 for every brute-served query), and
+    a query at such a coordinate gets no rows. knn_join's far query (999)
+    is brute-served; the sort-merge frame covers the whole curve."""
+    from cog3pio_spark.operators import knn
+
+    queries, points = clustered
+    kw = {
+        "knn_brute": {},
+        "knn_join": {"res": 6, "ring": 1},
+        "knn_sort_merge": {"scan_width": 1024, "num_buckets": 1},
+    }[op]
+    bad_points = spark.createDataFrame(
+        [(900, None, None), (901, float("nan"), 8.0), (902, 47.0, float("inf"))],
+        "point_id long, lat double, lng double",
+    )
+    far = spark.createDataFrame([(999, -40.0, 100.0)], "query_id long, lat double, lng double")
+    bad_queries = spark.createDataFrame(
+        [(-1, None, None), (-2, float("nan"), float("nan")), (-3, float("-inf"), 8.0)],
+        "query_id long, lat double, lng double",
+    )
+    fn = getattr(knn, op)
+    clean = fn(queries.unionByName(far), points, k=3, **kw).collect()
+    noisy = fn(
+        queries.unionByName(far).unionByName(bad_queries),
+        points.unionByName(bad_points), k=3, **kw,
+    ).collect()
+    assert sorted(map(tuple, noisy)) == sorted(map(tuple, clean))
+    assert len(clean) == 13 * 3 and all(r["dist_m"] is not None for r in clean)
+
+
+def test_knn_join_empty_or_all_null_queries(spark, clustered):
+    """No finite query: an empty frame with the usual schema, no error."""
+    _, points = clustered
+    schema = "query_id long, lat double, lng double"
+    want = "struct<query_id:bigint,rank:int,point_id:bigint,dist_m:double"
+    for queries in (
+        spark.createDataFrame([], schema),
+        spark.createDataFrame([(1, None, None), (2, float("nan"), 0.0)], schema),
+    ):
+        plain = knn_join(queries, points, k=3, res=6, ring=1)
+        cert = knn_join(queries, points, k=3, res=6, ring=1, with_certificate=True)
+        assert plain.collect() == [] and cert.collect() == []
+        assert plain.schema.simpleString() == want + ">"
+        assert cert.schema.simpleString() == want + ",exact:boolean>"
+
+
+def test_knn_join_refuses_bulk_query_sets(clustered, monkeypatch):
+    """knn_join collects its query batch; a set over MAX_QUERIES raises and
+    points to knn_sort_merge, the large-query-side path."""
+    from cog3pio_spark.operators import knn
+
+    queries, points = clustered
+    monkeypatch.setattr(knn, "MAX_QUERIES", 11)
+    with pytest.raises(ValueError, match="knn_sort_merge"):
+        knn.knn_join(queries, points, k=3, res=6, ring=1)
+
+
+def test_sort_merge_explicit_num_buckets_keeps_the_row_floor(clustered, monkeypatch):
+    """The total // _BUCKET_ROWS_TARGET bucket floor bounds the rows one
+    pandas kernel task holds, so it binds an explicit num_buckets too."""
+    from cog3pio_spark.operators import knn
+
+    queries, points = clustered
+    monkeypatch.setattr(knn, "_BUCKET_ROWS_TARGET", 100)  # 612 rows → floor 6, cap 4
+    asked = []
+    orig = type(queries).approxQuantile
+
+    def spy(self, col, probabilities, relative_error):
+        asked.append(len(probabilities))
+        return orig(self, col, probabilities, relative_error)
+
+    monkeypatch.setattr(type(queries), "approxQuantile", spy)
+    out = knn.knn_sort_merge(queries, points, k=5, scan_width=32, num_buckets=1)
+    assert asked == [3]
+    single = knn.knn_sort_merge(queries, points, k=5, scan_width=32, cuts=[])
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, single.collect()))
+
+
+def test_q21_job_budget(spark):
+    """q21 (ring kNN on the sf0.01 customer points) runs at most 9 Spark
+    jobs: the query take, the cell histogram and the brute tier — every
+    query on that near-uniform corpus is short at ring 2 and at ring 6, so
+    the ring search is skipped (the phase-by-phase form ran 26)."""
+    import os
+    import uuid
+
+    import __spark_entry__ as E
+
+    sf = "/root/testdata/sf0.01"
+    if not os.path.isdir(sf):
+        pytest.skip("sf0.01 test data not present")
+    sc = spark.sparkContext
+    tag = f"q21-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(tag, "q21 job budget")
+    try:
+        rows = E.queries()["q21_knn_ring"](spark, sf).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 15 * 5
+    assert len(sc.statusTracker().getJobIdsForGroup(tag)) <= 9

@@ -161,6 +161,37 @@ def test_streaming_knn_matches_batch(spark, tmp_path):
     assert spark.read.parquet(out).count() == 8 * 3
 
 
+def test_streaming_knn_serves_a_bulk_micro_batch_in_chunks(spark, tmp_path, monkeypatch):
+    """knn_join refuses more than MAX_QUERIES queries; a micro-batch over
+    that is served in chunks of MAX_QUERIES and written as one epoch, with
+    exactly the batch rows."""
+    from cog3pio_spark.operators import knn
+    from cog3pio_spark.streaming.ingest import streaming_knn
+
+    rng = np.random.RandomState(37)
+    pts = np.stack([rng.normal(47, 0.05, 300), rng.normal(8, 0.05, 300)], 1)
+    points = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(pts)],
+        ["point_id", "lat", "lng"],
+    )
+    qrows = [(j, float(pts[j * 29][0]), float(pts[j * 29][1])) for j in range(8)]
+    queries = spark.createDataFrame(qrows, "query_id long, lat double, lng double")
+    batch = {tuple(r) for r in knn.knn_join(queries, points, k=3, res=6, ring=2).collect()}
+    qdir = str(tmp_path / "qin")
+    queries.coalesce(1).write.parquet(qdir)  # one file: one micro-batch of 8
+
+    monkeypatch.setattr(knn, "MAX_QUERIES", 3)
+    with pytest.raises(ValueError, match="knn_sort_merge"):
+        knn.knn_join(queries, points, k=3, res=6, ring=2)
+    out = str(tmp_path / "out")
+    stream = spark.readStream.schema("query_id long, lat double, lng double").parquet(qdir)
+    streaming_knn(stream, points, out, str(tmp_path / "ckpt"), k=3, res=6, ring=2)
+
+    written = spark.read.parquet(out)
+    assert {tuple(r) for r in written.drop("_epoch").collect()} == batch
+    assert len(batch) == 8 * 3 and written.select("_epoch").distinct().count() == 1
+
+
 def test_streaming_flagship_matches_batch(spark, fixture_refs, tmp_path):
     """r3: the full flagship pipeline over a doc stream. Two input files →
     two epochs (maxFilesPerTrigger=1); each epoch's per-polygon rollup must

@@ -945,9 +945,9 @@ def test_lossless_ann_equals_brute_force(spark, monkeypatch, api):
     codebook, so every subvector is its own codeword): query, rank and id
     must equal brute force, and scores agree within 1e-6. A small
     PAIR_CHUNK makes the kernel cut every batch into many slices."""
-    from cog3pio_spark.operators import ann
+    from cog3pio_spark.operators import probe
 
-    monkeypatch.setattr(ann, "PAIR_CHUNK", 64)
+    monkeypatch.setattr(probe, "PAIR_CHUNK", 64)
     n, kw = _LOSSLESS_CONFIGS[api]
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     corpus = emb.filter(F.col("vec_id") < n)
@@ -958,6 +958,35 @@ def test_lossless_ann_equals_brute_force(spark, monkeypatch, api):
     want = sorted(tuple(r) for r in _ann_topk("brute", corpus, q).collect())
     assert [r[:3] for r in got] == [r[:3] for r in want] and len(want) == 25
     assert max(abs(a[3] - b[3]) for a, b in zip(got, want)) <= 1e-6
+
+
+def test_search_scores_only_probed_lists(spark):
+    """The list-probe core scores a row only against the queries probing
+    its list: a row of a list no query probes scores nothing, even when
+    ``encoded`` still holds it. Probes are ragged: queries of different
+    widths share one call."""
+    from pyspark.sql import types as T
+
+    from cog3pio_spark.operators import probe
+
+    encoded = spark.createDataFrame(
+        [(i, i % 4, float(i)) for i in range(40)], "id long, ivf_list int, v double"
+    )
+    sign = np.array([1.0, -1.0])  # query 7 wants large v, query 8 small v
+    scorer = probe.Scorer(
+        lambda pdf, row, qi: pdf["v"].to_numpy()[row] * sign[qi], ("v",), "s", F.col("s")
+    )
+    out = probe._search(
+        encoded, np.array([7, 8]), T.LongType(), [np.array([1, 3]), np.array([2])], scorer, 3,
+        id_col="id", query_id_col="query_id",
+    )
+    got = sorted(tuple(r) for r in out.collect())
+    # list 0 (v = 0, 4, …, 36) is probed by no query: its 36 must not
+    # displace query 7's third hit, 35
+    assert got == [
+        (7, 1, 39, 39.0), (7, 2, 37, 37.0), (7, 3, 35, 35.0),
+        (8, 1, 2, -2.0), (8, 2, 6, -6.0), (8, 3, 10, -10.0),
+    ]
 
 
 def test_simhash_blocked_equals_exact_scan(spark):
