@@ -31,10 +31,12 @@ top-k. The callers differ only in ``assign``/``probe`` and codes:
 Embeddings that are NULL or hold a non-finite component are never trained
 on, indexed or scored (``_finite_vectors``); such a query vector raises.
 
-Pair family (LSH-blocked, per-bucket gram matrices):
-top_cosine_pairs_blocked (global top-N pairs), embedding_dupes
-(pairs at cosine ≥ τ, planes sized by dupes_plane_count); cosine_pairs_udf
-scores explicit pairs for top_cosine_pairs.
+Pair family: ``_lsh_blocked_pairs`` blocks by multi-table hyperplane LSH
+through the near-dup pair skeleton (dedupe.py::_capped_blocks) and scores
+each capped block with one BLAS gram matrix. top_cosine_pairs_blocked keeps
+the global top-N pairs, embedding_dupes the pairs at cosine ≥ τ (planes
+sized by dupes_plane_count); cosine_pairs_udf scores explicit pairs for
+top_cosine_pairs.
 """
 
 from __future__ import annotations
@@ -43,11 +45,14 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from cog3pio_spark.operators.dedupe import _capped_blocks
 from cog3pio_spark.operators.probe import (
     MAX_QUERIES,
     Scorer,
@@ -221,12 +226,9 @@ def top_cosine_pairs_blocked(
     scale and never relies on the oversized-bucket cap; small corpora get
     the recall-friendly 2-plane tables the sf0.01 oracle is pinned against.
 
-    Shape: each vector lands in ``n_tables`` independent hyperplane buckets
-    (one UDF emitting all table buckets, exploded); candidates are the
-    equi-join on (table, bucket); each (table, bucket) keeps only its local
-    top-N pairs (window), so the final global top-N is a
-    TakeOrderedAndProject over ≤ n_buckets·top_n rows — no global window, no
-    all-pairs product. Probabilistic recall: a pair at cosine θ is missed by
+    Shape: ``_lsh_blocked_pairs`` keeps each (table, bucket) block's local
+    top-N pairs, so the final global top-N is a TakeOrderedAndProject over
+    ≤ n_buckets·top_n rows — no global window, no all-pairs product. Probabilistic recall: a pair at cosine θ is missed by
     all tables w.p. (1−(1−acos(θ)/π)^planes)^tables. Deterministic for fixed
     seed+data (driver-gate checked equal to the exact oracle at sf0.01).
 
@@ -265,17 +267,16 @@ def _lsh_blocked_pairs(
     per_bucket_top_n: int | None = None,
     threshold: float | None = None,
     bucket_cap: int = 4096,
-    seed: int = 101,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Shared multi-table LSH pair kernel (q47/q51 machinery): every vector
-    lands in ``n_tables`` independent hyperplane buckets; per (table, bucket)
-    group ONE BLAS gram matrix scores all in-bucket pairs via applyInPandas;
-    emitted pairs are deduped on (id_a, id_b). Each vector crosses into
-    Python once per table, never once per candidate pair (a per-pair cosine
-    UDF measured 33 s at sf0.1 from pair-row Arrow fan-out; this shape is
-    sub-second). Oversized buckets are capped at ``bucket_cap`` rows
-    (deterministic id-sorted head) — bounded task memory under hot buckets.
+    lands in ``n_tables`` independent hyperplane buckets; the pair skeleton
+    (dedupe.py::_capped_blocks) blocks on (table, bucket) with the vector as
+    payload, keeping each block's ``bucket_cap`` smallest ids, and one
+    mapInArrow kernel scores each block with ONE BLAS gram matrix; emitted
+    pairs are deduped on (id_a, id_b). Each vector crosses into Python once
+    per table, never once per candidate pair (a per-pair cosine UDF measured
+    33 s at sf0.1 from pair-row Arrow fan-out).
 
     ``per_bucket_top_n`` keeps only each bucket's local top-N pairs (the
     global-top-pairs path); ``threshold`` keeps all pairs at cosine ≥ τ (the
@@ -294,58 +295,46 @@ def _lsh_blocked_pairs(
         if n_rows is None:
             n_rows = vectors.count()
         n_planes = _size_planes(n_rows)
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(dim, n_tables * n_planes)
-    pow2 = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64)).astype(np.float64)
+    planes = _lsh_planes(dim, n_tables * n_planes, seed=101)
 
     @pandas_udf(T.ArrayType(T.LongType()))
-    def _buckets(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-        signs = (mat @ planes > 0).reshape(len(mat), n_tables, n_planes)
-        return pd.Series(list((signs @ pow2).astype(np.int64)))
+    def _table_buckets(vecs: pd.Series) -> pd.Series:
+        margins = np.vstack(vecs.to_numpy()).astype(np.float64) @ planes
+        return pd.Series(list(_buckets(margins.reshape(len(vecs), n_tables, n_planes))))
 
-    v = vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.posexplode(_buckets(F.col(vec_col))).alias("tbl", "bucket"),
-    )
-
+    keyed = vectors.select(
+        id_col, vec_col, F.posexplode(_table_buckets(vec_col)).alias("tbl", "bucket")
+    ).select(id_col, vec_col, F.struct("tbl", "bucket").alias("blk"))
+    blocks = _capped_blocks(keyed, id_col, bucket_cap, "truncate", vec_col)
     id_type = vectors.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
+    out_schema = T.StructType().add("id_a", id_type).add("id_b", id_type).add("cosine", "double")
+    cut = -np.inf if threshold is None else threshold
 
-    def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        if len(pdf) > bucket_cap:  # oversized-bucket guard: deterministic cap
-            pdf = pdf.sort_values(id_col).head(bucket_cap)
-        ids = pdf[id_col].to_numpy()
-        mat = _normalize(np.vstack(pdf[vec_col].to_numpy()))
-        sims = np.round(mat @ mat.T, 6)
-        iu, ju = np.triu_indices(len(ids), 1)
-        swap = ids[iu] > ids[ju]
-        ia = np.where(swap, ids[ju], ids[iu])
-        ib = np.where(swap, ids[iu], ids[ju])
-        sv = sims[iu, ju]
-        if threshold is not None:
-            keep = sv >= threshold
-            ia, ib, sv = ia[keep], ib[keep], sv[keep]
-            order = np.lexsort((ib, ia, -sv))
-        else:
-            order = np.lexsort((ib, ia, -sv))[:per_bucket_top_n]
-        return pd.DataFrame({"id_a": ia[order], "id_b": ib[order], "cosine": sv[order]})
+    def _gram_pairs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            ids, vecs = rb.column(0).flatten().flatten()  # every block's members
+            idv = ids.to_numpy(zero_copy_only=False)
+            mat = _normalize(vecs.flatten().to_numpy().reshape(-1, dim))
+            ends = np.cumsum(pc.list_value_length(rb.column(0)).to_numpy())
+            out = [(np.zeros(0, np.int64),) * 2 + (np.zeros(0),)]
+            for lo, hi in zip(np.r_[0, ends[:-1]], ends):
+                iu, ju = np.triu_indices(hi - lo, 1)
+                sv = np.round(mat[lo:hi] @ mat[lo:hi].T, 6)[iu, ju]
+                keep = np.flatnonzero(sv >= cut)
+                iu, ju, sv = iu[keep] + lo, ju[keep] + lo, sv[keep]
+                ia, ib = np.where(idv[iu] > idv[ju], (ju, iu), (iu, ju))
+                o = np.lexsort((idv[ib], idv[ia], -sv))[:per_bucket_top_n]
+                out.append((ia[o], ib[o], sv[o]))
+            ia, ib, sv = map(np.concatenate, zip(*out))
+            yield pa.RecordBatch.from_arrays(
+                [ids.take(ia), ids.take(ib), pa.array(sv)], names=["id_a", "id_b", "cosine"]
+            )
 
     return (
-        v.groupBy("tbl", "bucket")
-        .applyInPandas(_bucket_pairs, out_schema)
+        blocks.select("ms")
+        .mapInArrow(_gram_pairs, out_schema)
         .dropDuplicates(["id_a", "id_b"])
     )
-
 
 
 def dupes_plane_count(
@@ -381,12 +370,9 @@ def embedding_dupes(
     bucket_cap: int = 4096,
     n_rows: int | None = None,
 ) -> DataFrame:
-    """Near-duplicate vector pairs (cosine ≥ threshold) — the q47 kernel with
-    a threshold cut instead of a top-N cut (VERDICT r2 "What's wrong" #1: the
-    old shape was a single-table bucket SELF-JOIN scoring one fat pair-row
-    per candidate through a per-pair pandas_udf, with no bucket cap —
-    quadratic Arrow fan-out on a hot bucket; this shape is one BLAS gram
-    matrix per (table, bucket), capped at ``bucket_cap``).
+    """Near-duplicate vector pairs (cosine ≥ threshold) — the q47 kernel
+    (``_lsh_blocked_pairs``) with a threshold cut instead of a top-N cut:
+    one BLAS gram matrix per (table, bucket), capped at ``bucket_cap``.
 
     Recall math (honest): a pair at cosine τ shares one table's bucket w.p.
     p^planes with p = 1−acos(τ)/π, and is missed by all tables w.p.
@@ -550,8 +536,8 @@ def _lsh_planes(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
 
 
 def _buckets(margins: np.ndarray) -> np.ndarray:
-    """Hyperplane LSH bucket ids: sign bits of the margins packed into an int."""
-    return ((margins > 0) @ 2.0 ** np.arange(margins.shape[1])).astype(np.int64)
+    """Hyperplane LSH bucket ids: sign bits of the last-axis margins as an int."""
+    return ((margins > 0) @ 2.0 ** np.arange(margins.shape[-1])).astype(np.int64)
 
 
 def _flip_masks(n_planes: int) -> np.ndarray:

@@ -10,12 +10,12 @@
                        large-star/small-star, joins + min aggregates only)
                        → per-doc keep/drop decisions → deduplicated corpus.
 
-Text near-dup family — three thin callers of one candidate-pair skeleton,
-``_candidate_pairs``: a thin (id, blk[, payload]) frame shuffles once on
-its block key, a count window caps each block before any member array is
-built, and pairs stream out of each block's member list (posexplode, then
-explode of the members after each one — never an n²/2-element array). The
-skeleton returns one row per (block, pair); each caller verifies its own way:
+Near-dup pair family — one skeleton for text and vector pairs:
+``_capped_blocks`` shuffles a thin (id, blk[, payload]) frame once on its
+block key and caps each block before any member array is built (ann.py's
+q47/q51 kernel scores each block with one gram matrix); ``_candidate_pairs``
+streams one row per (block, pair) out of each member list, never an
+n²/2-element array. Its three text callers verify their own way:
 
 * minhash_lsh_dupes  — blocks = banded LSH buckets of the minhash signature,
                        cap ``truncate`` (bucket_cap smallest ids, flagged);
@@ -126,17 +126,15 @@ def minhash_signature(text: F.Column, num_hashes: int = 64, shingle: int = 5) ->
 
 
 # -- candidate-pair skeleton ----------------------------------------------------
-def _candidate_pairs(
+def _capped_blocks(
     keyed: DataFrame,
     id_col: str,
     cap: int | None,
     over_cap: str = "truncate",
     payload: str | None = None,
 ) -> DataFrame:
-    """One row per (block, pair) of ids sharing a block key ``blk``: the
-    blocking → cap → pair expansion path of the text near-dup family. Not
-    deduplicated — a pair sharing k blocks appears k times — so each caller
-    aggregates and verifies its own way.
+    """The blocking → cap half of the pair skeleton: one row per block of
+    ≥ 2 members, (blk, ms[, overflow]), ``ms`` an array of (id[, p]) structs.
 
     ``keyed`` is a thin (id_col, blk[, payload]) frame; rows with a NULL id,
     key or payload never pair. It shuffles once, on ``blk``: the count
@@ -144,11 +142,7 @@ def _candidate_pairs(
     collect_list, so member arrays stay ≤ ``cap`` on any corpus. ``truncate``
     keeps a block's ``cap`` smallest ids and flags it ``overflow``; ``drop``
     removes a block of more than ``cap`` members; ``cap=None`` keeps every
-    block whole. Pairs stream out of the member list — posexplode, then
-    explode of the members after each one — so a block's n²/2 pairs are
-    never built as one array value. Returns (id_a, id_b) with id_a < id_b,
-    plus ``overflow`` under a truncating cap and ``pa``/``pb`` (the payloads
-    of id_a/id_b) when ``payload`` is set.
+    block whole.
     """
     keyed = keyed.dropna(subset=[id_col, "blk"] + ([payload] if payload else []))
     flags = []
@@ -165,12 +159,30 @@ def _candidate_pairs(
     member = F.struct(
         F.col(id_col).alias("id"), *([F.col(payload).alias("p")] if payload else [])
     )
-    blocks = (
+    return (
         keyed.groupBy("blk")
         .agg(F.collect_list(member).alias("ms"), *flags)
         .filter(F.size("ms") >= 2)
     )
-    keep = ["overflow"] if flags else []
+
+
+def _candidate_pairs(
+    keyed: DataFrame,
+    id_col: str,
+    cap: int | None,
+    over_cap: str = "truncate",
+    payload: str | None = None,
+) -> DataFrame:
+    """One row per (block, pair) of ``_capped_blocks`` (same arguments),
+    not deduplicated — a pair sharing k blocks appears k times — so each
+    caller aggregates and verifies its own way. Pairs stream out of the
+    member list (posexplode, then explode of the members after each one),
+    so a block's n²/2 pairs are never one array value. Returns (id_a, id_b)
+    with id_a < id_b, plus ``overflow`` under a truncating cap and
+    ``pa``/``pb`` (the payloads of id_a/id_b) when ``payload`` is set.
+    """
+    blocks = _capped_blocks(keyed, id_col, cap, over_cap, payload)
+    keep = ["overflow"] if "overflow" in blocks.columns else []
     xy = (
         blocks.select(*keep, "ms", F.posexplode("ms").alias("_i", "_x"))
         .select(*keep, "_x", F.explode(F.slice("ms", F.col("_i") + 2, F.size("ms"))).alias("_y"))

@@ -84,7 +84,9 @@ def knn_brute(
     Returns (query_id, rank, point_id, dist_m)."""
     q = _finite_points(queries).select(
         query_id, F.col("lat").alias("q_lat"), F.col("lng").alias("q_lng"))
-    p = _finite_points(points).select(
+    # spread first: the cross join scores in as many tasks as the points
+    # have partitions, one for a single-split input (no-op at real scale)
+    p = _finite_points(spread_small_scan(points)).select(
         point_id, F.col("lat").alias("p_lat"), F.col("lng").alias("p_lng"))
     w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(), F.col(point_id).asc())
     return (
@@ -430,16 +432,16 @@ def knn_join(
     )
     qids = pd.Series([r[0] for r in rows]).to_numpy()
     lat, lng = np.array([r[1:] for r in rows], dtype=np.float64).reshape(-1, 2).T
-    # spread first: the cell UDF and the brute tier otherwise run
-    # single-task on a single-split input (no-op at real scale)
-    points = _finite_points(spread_small_scan(points))
     served = np.zeros(len(rows), dtype=bool)
     if rows:
         cell = h3x.latlng_to_cell(lat, lng, res)
         base, wide = h3x.k_ring(cell, ring), h3x.k_ring(cell, 3 * ring)
         cells = np.unique(wide)
         ivf_list = _cell_among(F.col("lat"), F.col("lng"), res, cells).alias("ivf_list")
-        encoded = points.select(point_id, ivf_list, "lat", "lng")
+        # spread first: the cell UDF otherwise runs single-task on a
+        # single-split input (no-op at real scale)
+        encoded = _finite_points(spread_small_scan(points)).select(
+            point_id, ivf_list, "lat", "lng")
         # lazy: the histogram job fills the blocks and the search reads
         # them, so the scan, the spread and the cell UDF run once
         encoded = encoded.filter(F.col("ivf_list").isNotNull()).localCheckpoint(eager=False)
@@ -469,6 +471,8 @@ def knn_join(
     if out is None or not served.all():
         brute_q = [r for r, s in zip(rows, served) if not s]
         schema = queries.select(query_id, "lat", "lng").schema
+        # the caller's points, not the spread ones: under AQE, reading the
+        # partition count of a plan that holds an exchange runs it
         brute = knn_brute(queries.sparkSession.createDataFrame(brute_q, schema), points, k,
                           query_id, point_id)
         if with_certificate:

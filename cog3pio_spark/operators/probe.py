@@ -47,10 +47,13 @@ def _collect_query_batch(
     """Bounded driver-side collection of a *serving-sized* query batch.
 
     Every list-probe search computes its queries' probes on the driver, so
-    the batch must be small. ``take(max+1)`` is the guarded collect itself —
-    one job, no O(n) scan of the set it refuses — so an oversized query set
-    errors loudly instead of OOMing the driver."""
-    rows = queries.select(*cols).take(max_queries + 1)
+    the batch must be small. ``limit(max+1)`` collected as Arrow is the
+    guarded collect itself — no O(n) scan of the set it refuses — so an
+    oversized query set errors loudly instead of OOMing the driver. The
+    collect is one job whatever the partition layout (``take`` runs a
+    scale-up series of jobs when the first partitions hold few rows)."""
+    got = queries.select(*cols).limit(max_queries + 1).toArrow()
+    rows = list(zip(*(c.to_pylist() for c in got.columns)))
     if len(rows) > max_queries:
         raise ValueError(f"query set exceeds max_queries={max_queries}: the search collects "
                          f"the query batch to the driver to compute its probes. {bulk_hint}")

@@ -39,26 +39,27 @@ def curate(
     the 10¹²-doc design point). Dedupe is a groupBy + min/min_by aggregate,
     never a full-row window (r5 review: the window shape shuffled + sorted
     every surviving text row; the aggregate ships ≤1 candidate per key per
-    map task — ids are unique, so min_by is deterministic)."""
-    # r6 review: withColumns would silently REPLACE caller columns named
-    # like the working columns (and a caller 'fp' would vanish from the
-    # output entirely) — refuse loudly instead of losing data
-    reserved = {"quality", "lang_pred", "n_tokens", "fp"}
-    clash = sorted(reserved & set(docs.columns))
+    map task — ids are unique, so min_by is deterministic).
+
+    Raises ValueError when ``docs`` already has a column named like one of
+    the working columns (quality, lang_pred, n_tokens, fp)."""
+    t = F.col(text_col)
+    working = {
+        "quality": quality_score(t),
+        "lang_pred": lang_id(t),
+        "n_tokens": token_count(t),
+        "fp": fingerprint(t),
+    }
+    # withColumns would silently REPLACE caller columns named like the
+    # working columns (and a caller 'fp' would vanish from the output
+    # entirely) — refuse loudly instead of losing data
+    clash = sorted(working.keys() & set(docs.columns))
     if clash:
         raise ValueError(
-            f"curate() computes working columns {sorted(reserved)}; the "
+            f"curate() computes working columns {sorted(working)}; the "
             f"input already has {clash} — rename or drop them first"
         )
-    t = F.col(text_col)
-    feat = docs.withColumns(
-        {
-            "quality": quality_score(t),
-            "lang_pred": lang_id(t),
-            "n_tokens": token_count(t),
-            "fp": fingerprint(t),
-        }
-    ).filter(F.col("quality") >= min_quality)
+    feat = docs.withColumns(working).filter(F.col("quality") >= min_quality)
     out_cols = [c for c in feat.columns if c != "fp"]
     dedup = feat.groupBy("fp").agg(
         F.min(id_col).alias(id_col),

@@ -385,6 +385,51 @@ def test_knn_join_refuses_bulk_query_sets(clustered, monkeypatch):
         knn.knn_join(queries, points, k=3, res=6, ring=1)
 
 
+def _in_job_group(spark, fn):
+    """(fn(), its Spark job ids): ``fn`` runs in a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(tag, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(tag)
+
+
+def test_query_batch_collect_is_one_job(spark):
+    """The guarded query collect is one Spark job on a multi-partition query
+    set (``take`` ran a scale-up series: 2 jobs for these 15 rows in 4
+    partitions) and still refuses a set over the limit."""
+    from cog3pio_spark.operators.probe import _collect_query_batch
+
+    q = spark.createDataFrame([(i, float(i)) for i in range(15)], "query_id long, lat double")
+    assert q.rdd.getNumPartitions() == 4
+    rows, jobs = _in_job_group(spark, lambda: _collect_query_batch(q, ["query_id", "lat"], 15, ""))
+    assert sorted(rows) == [(i, float(i)) for i in range(15)]
+    assert len(jobs) == 1
+    with pytest.raises(ValueError, match="max_queries=14"):
+        _collect_query_batch(q, ["query_id", "lat"], 14, "")
+
+
+def test_knn_brute_spreads_a_single_split_points_input(spark, clustered, tmp_path):
+    """knn_brute scores its cross join in defaultParallelism tasks when the
+    points arrive as one file in one partition (q20's customer table); the
+    whole product used to run in a single task."""
+    queries, points = clustered
+    points.coalesce(1).write.parquet(str(tmp_path / "points"))
+    one = spark.read.parquet(str(tmp_path / "points"))
+    assert one.rdd.getNumPartitions() == 1
+    rows, jobs = _in_job_group(spark, lambda: knn_brute(queries.coalesce(1), one, k=3).collect())
+    want = knn_brute(queries, points, k=3).collect()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, want))
+    st = spark.sparkContext.statusTracker()
+    tasks = [st.getStageInfo(s).numTasks for j in jobs for s in st.getJobInfo(j).stageIds]
+    assert max(tasks) == spark.sparkContext.defaultParallelism
+
+
 def test_sort_merge_explicit_num_buckets_keeps_the_row_floor(clustered, monkeypatch):
     """The total // _BUCKET_ROWS_TARGET bucket floor bounds the rows one
     pandas kernel task holds, so it binds an explicit num_buckets too."""
@@ -412,19 +457,12 @@ def test_q21_job_budget(spark):
     query on that near-uniform corpus is short at ring 2 and at ring 6, so
     the ring search is skipped (the phase-by-phase form ran 26)."""
     import os
-    import uuid
 
     import __spark_entry__ as E
 
     sf = "/root/testdata/sf0.01"
     if not os.path.isdir(sf):
         pytest.skip("sf0.01 test data not present")
-    sc = spark.sparkContext
-    tag = f"q21-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(tag, "q21 job budget")
-    try:
-        rows = E.queries()["q21_knn_ring"](spark, sf).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    rows, jobs = _in_job_group(spark, lambda: E.queries()["q21_knn_ring"](spark, sf).collect())
     assert len(rows) == 15 * 5
-    assert len(sc.statusTracker().getJobIdsForGroup(tag)) <= 9
+    assert len(jobs) <= 9

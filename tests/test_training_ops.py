@@ -395,6 +395,27 @@ def test_embedding_dupes_hot_bucket_bounded(spark):
     assert max(max(r.id_a, r.id_b) for r in out) < 64
 
 
+@pytest.mark.parametrize("query", ["q47_top_pairs_blocked", "q51_embedding_dupes"])
+def test_lsh_pairs_block_through_the_pair_skeleton(spark, query):
+    """q47/q51 block through the pair skeleton (dedupe._capped_blocks): no
+    grouped pandas kernel, and exactly one exchange — hash on the block key —
+    between the table-bucket UDF and the gram-matrix kernel."""
+    import os
+
+    import __spark_entry__ as E
+
+    sf = "/root/testdata/sf0.01"
+    if not os.path.isdir(sf):
+        pytest.skip("sf0.01 test data not present")
+    plan = E.queries()[query](spark, sf)._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    lines = plan.splitlines()
+    kernel = next(i for i, ln in enumerate(lines) if "MapInArrow _gram_pairs" in ln)
+    udf = next(i for i, ln in enumerate(lines) if "ArrowEvalPython [_table_buckets" in ln)
+    exchanges = [ln for ln in lines[kernel:udf] if "Exchange" in ln]
+    assert len(exchanges) == 1 and "Exchange hashpartitioning(blk#" in exchanges[0], plan
+
+
 def test_doc_table_fallback_partition_pruning(spark, tmp_path):
     """VERDICT r1 #9 contract test: the parquet fallback must deliver the
     partition pruning the Iceberg path promises — a bucket-key lookup scans
