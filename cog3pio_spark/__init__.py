@@ -11,8 +11,9 @@ Design notes
   semantics (dtype dispatch src/io/geotiff.rs:50-60, (band,h,w) reshape :183-199,
   affine :117-143, pixel-center half-open coords :155-178) become the
   tile-resolution kernel inside ``operators.decode`` (vectorized mapInArrow).
-* Zero per-row Python: only ``mapInArrow`` / ``pandas_udf`` cross the JVM↔Python
-  boundary, in Arrow batches (BASELINE.json input_hint).
+* Zero per-row Python: only ``mapInArrow`` and vectorized UDFs (``arrow_udf``
+  for cell ids, ``pandas_udf`` elsewhere) cross the JVM↔Python boundary, in
+  Arrow batches (BASELINE.json input_hint).
 * Pixel payloads travel as BinaryType blobs + (dtype, bands, height, width)
   metadata columns — never per-pixel arrays.
 """

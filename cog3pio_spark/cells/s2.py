@@ -6,7 +6,7 @@ plus parent / range_min / range_max / level math used by the engine's
 range-partitioning and prefix range joins.
 
 All functions take/return numpy arrays (uint64 for ids); they are called from
-``pandas_udf``s so the JVM↔Python boundary stays Arrow-batched (input_hint:
+``arrow_udf``s so the JVM↔Python boundary stays Arrow-batched (input_hint:
 zero per-row Python).
 
 Algorithm source: public S2 geometry library design docs (s2geometry.io);

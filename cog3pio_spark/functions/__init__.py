@@ -1,7 +1,7 @@
 """Column-level scalar functions: affine math, CRS mapping, cell udfs.
 
 Everything here is either pure Catalyst column arithmetic (JVM-side,
-whole-stage-codegen) or a vectorized ``pandas_udf`` (Arrow-batched numpy) —
+whole-stage-codegen) or a vectorized ``arrow_udf`` (Arrow-batched numpy) —
 never per-row Python (input_hint).
 """
 

@@ -29,7 +29,7 @@ top-k. The callers differ only in ``assign``/``probe`` and codes:
 * pq_topk    — ivfpq_topk with one list and raw (non-residual) codes.
 
 Embeddings that are NULL or hold a non-finite component are never trained
-on, indexed or scored (``_finite_vectors``); such a query vector raises.
+on, indexed or scored (``probe._finite_rows``); such a query vector raises.
 
 Pair family: ``_lsh_blocked_pairs`` blocks by multi-table hyperplane LSH
 through the near-dup pair skeleton (dedupe.py::_capped_blocks) and scores
@@ -57,6 +57,7 @@ from cog3pio_spark.operators.probe import (
     MAX_QUERIES,
     Scorer,
     _collect_query_batch,
+    _finite_rows,
     _rank_topk,
     _search,
 )
@@ -65,15 +66,6 @@ from cog3pio_spark.operators.probe import (
 # shared default sample size for all codebook/centroid trainers (hoisted so
 # composed operators like ivfpq_topk can never drift from the trainers)
 TRAIN_SAMPLE = 4096
-
-
-def _finite_vectors(df: DataFrame, vec_col: str) -> DataFrame:
-    """Rows whose embedding is non-NULL with every component finite. A NULL
-    or NaN component makes ``forall`` NULL or false, so the row is dropped."""
-    return df.filter(
-        F.col(vec_col).isNotNull()
-        & F.forall(vec_col, lambda x: ~F.isnan(x) & (F.abs(x) != float("inf")))
-    )
 
 
 def _size_planes(n_rows: int) -> int:
@@ -151,7 +143,7 @@ def brute_force_topk(
                 out["cosine"].extend(sims[qi][order].tolist())
             yield pd.DataFrame(out)
 
-    v = _finite_vectors(vectors, vec_col).select(id_col, vec_col)
+    v = _finite_rows(vectors, vec_col).select(id_col, vec_col)
     return _rank_topk(
         v.mapInPandas(_partial_topk, part_schema), k, "query_id", id_col, "cosine",
         _rounded("cosine"),
@@ -193,7 +185,7 @@ def top_cosine_pairs(
             f"> max_rows={max_rows} rows. Use top_cosine_pairs_blocked "
             f"(the scale path) or pass max_rows= explicitly to force."
         )
-    vectors = _finite_vectors(vectors, vec_col)
+    vectors = _finite_rows(vectors, vec_col)
     cosine = cosine_pairs_udf()
     left = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     right = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
@@ -287,7 +279,7 @@ def _lsh_blocked_pairs(
     """
     if (per_bucket_top_n is None) == (threshold is None):
         raise ValueError("set exactly one of per_bucket_top_n / threshold")
-    vectors = _finite_vectors(vectors, vec_col)
+    vectors = _finite_rows(vectors, vec_col)
     if n_planes is None:
         # n_rows stat hint skips the implicit O(n) count (r4 review: same
         # contract embedding_dupes gained in ADVICE r3 — order-of-magnitude
@@ -448,7 +440,7 @@ def _encode(
                 out["pq"] = list(_pq_codes(res, books))
             yield pd.DataFrame(out)
 
-    v = _finite_vectors(vectors, vec_col).select(id_col, vec_col)
+    v = _finite_rows(vectors, vec_col).select(id_col, vec_col)
     return v.mapInPandas(_enc, schema)
 
 
@@ -637,7 +629,7 @@ def _deterministic_sample(
     AQE / cluster re-reads, breaking the determinism contract). orderBy +
     limit plans as TakeOrderedAndProject — parallel per-partition partial
     top-k merged on the driver, never a full sort."""
-    v = _finite_vectors(vectors, vec_col).select(id_col, vec_col)
+    v = _finite_rows(vectors, vec_col).select(id_col, vec_col)
     return v.orderBy(id_col).limit(sample).select(vec_col).collect()
 
 

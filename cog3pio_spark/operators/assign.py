@@ -22,10 +22,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from cog3pio_spark.cells import h3x
 from cog3pio_spark.functions import cells as C
@@ -98,34 +99,33 @@ def compact_cells(
 
 
 def uncompact_cells(cells: DataFrame, target_res: int, cell_col: str = "cell") -> DataFrame:
-    """Expand a compacted set back to uniform ``target_res``."""
+    """Expand a compacted set back to uniform ``target_res``. A NULL cell
+    expands to no children (the cell functions' NULL mask)."""
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def expand(c: pd.Series) -> pd.Series:
-        arr = c.to_numpy(np.int64)
-        res = h3x.resolution(arr)
-        out: list = [None] * len(arr)
+    def expand(c: pa.Array) -> pa.Array:
+        (arr,), nulls = C._valid_rows(c)
+        res = np.where(nulls, target_res, h3x.resolution(arr))
+        if res.max(initial=0) > target_res:
+            # r4 review: silently passing finer cells through would mix
+            # resolutions in the 'uniform target_res' output contract
+            raise ValueError(f"uncompact_cells: input cell at res {res.max()} is finer "
+                             f"than target_res {target_res}")
+        # one list row of 7^(target_res - res) children per cell, none per NULL
+        offsets = np.r_[0, np.cumsum(np.where(nulls, 0, 7 ** (target_res - res)))]
+        kids = np.zeros(offsets[-1], dtype=np.int64)
         # vectorized per resolution group: expand all same-res cells together
-        for r in np.unique(res):
-            if int(r) > int(target_res):
-                # r4 review: silently passing finer cells through would mix
-                # resolutions in the 'uniform target_res' output contract
-                raise ValueError(
-                    f"uncompact_cells: input cell at res {int(r)} is finer "
-                    f"than target_res {int(target_res)}"
-                )
-            idx = np.nonzero(res == r)[0]
-            cur = arr[idx].reshape(len(idx), 1)
-            for _ in range(int(target_res) - int(r)):
-                cur = h3x.children(cur.ravel()).reshape(len(idx), -1)
-            for j, i in enumerate(idx.tolist()):
-                out[i] = cur[j]
-        return pd.Series(out)
+        for r in np.unique(res[~nulls]):
+            idx = np.nonzero((res == r) & ~nulls)[0]
+            cur = arr[idx]
+            for _ in range(target_res - r):
+                cur = h3x.children(cur.ravel())
+            cur = cur.reshape(len(idx), -1)
+            kids[offsets[idx][:, None] + np.arange(cur.shape[1])] = cur
+        offsets = pa.array(offsets, pa.int32())  # a checked cast: raises past 2^31 children
+        return pa.ListArray.from_arrays(offsets, pa.array(kids), mask=pa.array(nulls))
 
-    return (
-        cells.select(expand(F.col(cell_col)).alias("kids"))
-        .select(F.explode("kids").alias(cell_col))
-    )
+    kids = arrow_udf(expand, T.ArrayType(T.LongType()))(F.col(cell_col))
+    return cells.select(F.explode(kids).alias(cell_col))
 
 
 def tile_covering(
@@ -146,7 +146,7 @@ def tile_covering(
     """
     from cog3pio_spark.functions.geo import EARTH_RADIUS_M
 
-    @pandas_udf(
+    @arrow_udf(
         T.StructType(
             [
                 T.StructField("cells", T.ArrayType(T.LongType())),
@@ -154,33 +154,25 @@ def tile_covering(
             ]
         )
     )
-    def cover(
-        c: pd.Series, f: pd.Series, a: pd.Series, e: pd.Series,
-        w: pd.Series, hgt: pd.Series,
-    ) -> pd.DataFrame:
-        out_cells: list = []
-        out_res: list = []
-        for ci, fi, ai, ei, wi, hi in zip(c, f, a, e, w, hgt):
-            # pd.isna, not `is None`: Arrow delivers nulls in double/long
-            # Series as NaN (r4 review — the old guard never fired, so null
-            # affine rows produced garbage single-cell coverings via the
-            # NaN→int cast in the degenerate fallback)
-            if any(pd.isna(x) for x in (ci, fi, ai, ei, wi, hi)):
-                out_cells.append(None)
-                out_res.append(None)
-                continue
-            x0, x1 = float(ci), float(ci) + float(ai) * int(wi)
-            y0, y1 = float(f_ := fi) + float(ei) * int(hi), float(f_)
-            lat0, lat1 = np.degrees(np.array([y0, y1]) / EARTH_RADIUS_M)
-            lng0, lng1 = np.degrees(np.array([x0, x1]) / EARTH_RADIUS_M)
-            cells, base_res = h3x.cover_bbox_compact(
-                min(lat0, lat1), min(lng0, lng1),
-                max(lat0, lat1), max(lng0, lng1), target_cells,
-                return_res=True,
+    def cover(*cols: pa.Array) -> pa.Array:
+        (c, f, a, e, w, hgt), nulls = C._valid_rows(*cols)
+        # bbox corners in degrees; a NULL or non-finite affine field (the
+        # cell functions' NULL mask) or corner gets a NULL covering, never a
+        # garbage single cell from a NaN→int cast
+        lat = np.degrees(np.stack([f + e * hgt, f]) / EARTH_RADIUS_M)
+        lng = np.degrees(np.stack([c, c + a * w]) / EARTH_RADIUS_M)
+        nulls |= ~np.isfinite(np.r_[lat, lng]).all(axis=0)
+        out_cells: list = [None] * len(nulls)
+        out_res: list = [None] * len(nulls)
+        for i in np.nonzero(~nulls)[0]:
+            out_cells[i], out_res[i] = h3x.cover_bbox_compact(
+                lat[:, i].min(), lng[:, i].min(), lat[:, i].max(), lng[:, i].max(),
+                target_cells, return_res=True,
             )
-            out_cells.append(cells.tolist())
-            out_res.append(int(base_res))
-        return pd.DataFrame({"cells": out_cells, "res": out_res})
+        return pa.StructArray.from_arrays(
+            [pa.array(out_cells, pa.list_(pa.int64())), pa.array(out_res, pa.int32())],
+            names=["cells", "res"],
+        )
 
     covered = tiles.withColumn(
         "_cov",

@@ -13,7 +13,7 @@
   ``scan_width``).
 
 Queries and points with a NULL or non-finite coordinate take part in none
-of them (``_finite_points``): such a point has no distance to anything, and
+of them (``probe._finite_rows``): such a point has no distance to anything, and
 a query at one has no neighbours.
 
 Used with points = tile centroids and queries = arbitrary lat/lng rows.
@@ -25,14 +25,16 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from cog3pio_spark.cells import h3x
 from cog3pio_spark.functions import cells as C
-from cog3pio_spark.operators.probe import MAX_QUERIES, Scorer, _collect_query_batch, _search
+from cog3pio_spark.operators.probe import (
+    MAX_QUERIES, Scorer, _collect_query_batch, _finite_rows, _search)
 from cog3pio_spark.session import spread_small_scan
 
 EARTH_RADIUS_M = 6378137.0
@@ -63,15 +65,6 @@ def _haversine_np(lat1, lng1, lat2, lng2):
     return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(a))
 
 
-def _finite_points(df: DataFrame) -> DataFrame:
-    """Rows whose lat and lng are both non-NULL and finite (the twin of
-    ann._finite_vectors). A point without both has no distance to anything,
-    and a NULL distance sorts first: kept, it would rank as every query's
-    nearest neighbour."""
-    lat, lng = (F.col(c).isNotNull() & ~F.isnan(c) & (F.abs(c) != np.inf) for c in ("lat", "lng"))
-    return df.filter(lat & lng)
-
-
 def knn_brute(
     queries: DataFrame,
     points: DataFrame,
@@ -82,11 +75,11 @@ def knn_brute(
     """Exact kNN by broadcast cross product — knn_join's brute tier and the
     correctness oracle for the ring join (q20 checks it against DuckDB).
     Returns (query_id, rank, point_id, dist_m)."""
-    q = _finite_points(queries).select(
+    q = _finite_rows(queries, "lat", "lng").select(
         query_id, F.col("lat").alias("q_lat"), F.col("lng").alias("q_lng"))
     # spread first: the cross join scores in as many tasks as the points
     # have partitions, one for a single-split input (no-op at real scale)
-    p = _finite_points(spread_small_scan(points)).select(
+    p = _finite_rows(spread_small_scan(points), "lat", "lng").select(
         point_id, F.col("lat").alias("p_lat"), F.col("lng").alias("p_lng"))
     w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(), F.col(point_id).asc())
     return (
@@ -150,7 +143,7 @@ def knn_sort_merge(
     sign_flip = F.lit(-(1 << 63))
     cell = C.s2_cell(F.col("lat"), F.col("lng"), 30).bitwiseXOR(sign_flip).alias("_cell")
     q, p = (
-        _finite_points(df).select(
+        _finite_rows(df, "lat", "lng").select(
             F.col(c).alias("_id"), F.lit(is_q).alias("_is_q"), "lat", "lng", cell)
         for df, c, is_q in ((queries, query_id, True), (points, point_id, False))
     )
@@ -232,7 +225,7 @@ def knn_sort_merge(
             .withColumn("_ghost", F.lit(True))
         )
         rows = rows.unionByName(lo_ghosts).unionByName(hi_ghosts)
-    # _cell is never NULL: _finite_points drops the NaN/NULL coordinates
+    # _cell is never NULL: _finite_rows drops the NaN/NULL coordinates
     # whose s2_cell would be NULL (and would make Arrow deliver the whole
     # bucket's _cell batch as float64, rounding every level-30 carrier)
     rows = rows.drop("_rn", "_n")
@@ -269,7 +262,7 @@ def knn_sort_merge(
         if not np.issubdtype(pdf["_cell"].to_numpy().dtype, np.integer):
             raise TypeError(
                 "sort-merge kNN kernel received a non-integer _cell batch "
-                f"({pdf['_cell'].dtype}); a null slipped past _finite_points "
+                f"({pdf['_cell'].dtype}); a null slipped past _finite_rows "
                 "and the curve keys would be float64-rounded"
             )
         pdf = pdf.sort_values(["_cell", "_is_q", "_id"])
@@ -370,16 +363,17 @@ def ring_exactness_bound(cells: np.ndarray, ring: int) -> np.ndarray:
 
 def _cell_among(lat: Column, lng: Column, res: int, cells: np.ndarray) -> Column:
     """h3x cell at ``res`` of a finite (lat, lng) when it is one of the
-    sorted ``cells``, else NULL: the membership test runs in the same numpy
-    pass as the cell math (a literal ``isin`` costs a py4j call per cell)."""
+    sorted ``cells``, else NULL: non-members join the cell functions' NULL
+    mask in the same numpy pass as the cell math (a literal ``isin`` costs
+    a py4j call per cell)."""
 
-    @pandas_udf(T.LongType())
-    def _u(la: pd.Series, ln: pd.Series) -> pd.Series:
-        c = h3x.latlng_to_cell(la.to_numpy(np.float64), ln.to_numpy(np.float64), res)
+    def _u(la: pa.Array, ln: pa.Array) -> pa.Array:
+        (la, ln), nulls = C._valid_rows(la, ln)
+        c = h3x.latlng_to_cell(la, ln, res)
         pos = np.minimum(np.searchsorted(cells, c), len(cells) - 1)
-        return pd.Series(c).astype("Int64").mask(cells[pos] != c)
+        return C._masked(c, nulls | (cells[pos] != c))
 
-    return _u(lat, lng)
+    return arrow_udf(_u, T.LongType())(lat, lng)
 
 
 def _looked_up(table: dict, key: Column) -> Column:
@@ -426,8 +420,11 @@ def knn_join(
     the base ring (conservative — certified ⇒ truly exact; tests pin
     no-false-certificates against brute force).
     """
+    # spread first: the cell UDF and the brute tier's cross join otherwise
+    # run single-task on a single-split input (no-op at real scale)
+    points = spread_small_scan(points)
     rows = _collect_query_batch(
-        _finite_points(queries), [query_id, "lat", "lng"], MAX_QUERIES,
+        _finite_rows(queries, "lat", "lng"), [query_id, "lat", "lng"], MAX_QUERIES,
         "Use knn_sort_merge for bulk query sets.",
     )
     qids = pd.Series([r[0] for r in rows]).to_numpy()
@@ -438,9 +435,7 @@ def knn_join(
         base, wide = h3x.k_ring(cell, ring), h3x.k_ring(cell, 3 * ring)
         cells = np.unique(wide)
         ivf_list = _cell_among(F.col("lat"), F.col("lng"), res, cells).alias("ivf_list")
-        # spread first: the cell UDF otherwise runs single-task on a
-        # single-split input (no-op at real scale)
-        encoded = _finite_points(spread_small_scan(points)).select(
+        encoded = _finite_rows(points, "lat", "lng").select(
             point_id, ivf_list, "lat", "lng")
         # lazy: the histogram job fills the blocks and the search reads
         # them, so the scan, the spread and the cell UDF run once
@@ -471,8 +466,6 @@ def knn_join(
     if out is None or not served.all():
         brute_q = [r for r, s in zip(rows, served) if not s]
         schema = queries.select(query_id, "lat", "lng").schema
-        # the caller's points, not the spread ones: under AQE, reading the
-        # partition count of a plan that holds an exchange runs it
         brute = knn_brute(queries.sparkSession.createDataFrame(brute_q, schema), points, k,
                           query_id, point_id)
         if with_certificate:

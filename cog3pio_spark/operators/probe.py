@@ -41,6 +41,21 @@ PAIR_CHUNK = 1 << 16
 Scorer = namedtuple("Scorer", "fn payload col out")
 
 
+def _finite_rows(df: DataFrame, *cols: str) -> DataFrame:
+    """Rows whose every named column is non-NULL and finite: a number, or an
+    array whose every component is (a NULL or NaN component makes ``forall``
+    NULL or false). A NaN score or a NULL distance would rank as a
+    valid-looking top hit, so such rows are never indexed or scored."""
+
+    def finite(x):
+        return ~F.isnan(x) & (F.abs(x) != float("inf"))
+
+    for c in cols:
+        is_array = isinstance(df.schema[c].dataType, T.ArrayType)
+        df = df.filter(F.col(c).isNotNull() & (F.forall(c, finite) if is_array else finite(c)))
+    return df
+
+
 def _collect_query_batch(
     queries: DataFrame, cols: list, max_queries: int, bulk_hint: str
 ) -> list:

@@ -6,7 +6,8 @@ cell and polygon rows. It runs the whole raster⋈vector branch as a single
 assigned an S2 cell and hex cells res lo..hi, and it is probed against the
 broadcast polygon pack. ``decode_tiles``, ``assign_cells`` and ``pip_join``
 stay as separate public operators over the same helpers (``_decode_one``,
-``_coords_or_null``, ``_pip_candidates``), not as a second tile path.
+the cell functions' NULL mask ``_valid_rows``/``_masked``,
+``_pip_candidates``), not as a second tile path.
 
 Passthrough contract: every input column is carried to the output (Arrow
 ``take``), so callers can pipe pre-aggregated per-ref statistics (counts,
@@ -63,11 +64,11 @@ def fused_decode_assign_pip(
     in_schema = refs.schema
     out_schema = T.StructType(list(in_schema.fields) + COMPUTED_FIELDS)
     ref_idx = in_schema.fieldNames().index(ref_col)
-    n_res = hex_hi - hex_lo + 1
+    hex_res = list(range(hex_lo, hex_hi + 1))
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from cog3pio_spark.cells import h3x, s2
-        from cog3pio_spark.functions.cells import _coords_or_null
+        from cog3pio_spark.functions.cells import _masked, _valid_rows
         from cog3pio_spark.functions.geo import EARTH_RADIUS_M
         from cog3pio_spark.operators.decode import _decode_one
         from cog3pio_spark.operators.pip_join import _pip_candidates
@@ -85,24 +86,14 @@ def fused_decode_assign_pip(
                 ],
                 schema=_DECODED,
             )
-            # error rows carry NULL centroids, which arrive here as NaN
-            cx = decoded.column("centroid_x").to_numpy(zero_copy_only=False)
-            cy = decoded.column("centroid_y").to_numpy(zero_copy_only=False)
-            lat, lng, nulls = _coords_or_null(
-                np.degrees(cy / EARTH_RADIUS_M), np.degrees(cx / EARTH_RADIUS_M)
+            # error rows carry NULL centroids; those and non-finite ones
+            # get NULL cells and no polygon
+            (cy, cx), nulls = _valid_rows(
+                decoded.column("centroid_y"), decoded.column("centroid_x")
             )
-            s2c = pa.array(
-                s2.to_signed(s2.latlng_to_cell(lat, lng, s2_level)), mask=nulls
-            )
-            hexes = pa.ListArray.from_arrays(
-                pa.array(np.arange(0, (n + 1) * n_res, n_res, dtype=np.int32)),
-                pa.array(
-                    h3x.latlng_to_cells_multi(
-                        lat, lng, list(range(hex_lo, hex_hi + 1))
-                    ).ravel()
-                ),
-                mask=pa.array(nulls),
-            )
+            lat, lng = np.degrees(cy / EARTH_RADIUS_M), np.degrees(cx / EARTH_RADIUS_M)
+            s2c = _masked(s2.to_signed(s2.latlng_to_cell(lat, lng, s2_level)), nulls)
+            hexes = _masked(h3x.latlng_to_cells_multi(lat, lng, hex_res), nulls)
             pt_idx, pg_idx = _pip_candidates(
                 np.where(nulls, np.nan, cx), np.where(nulls, np.nan, cy), pack
             )

@@ -74,12 +74,18 @@ def get_spark(
 def spread_small_scan(df):
     """Repartition ONLY when the upstream has fewer partitions than cores.
 
-    Per-row Python-kernel stages (pandas_udf cell math, interpreted HOF
+    Per-row Python-kernel stages (Arrow cell UDFs, interpreted HOF
     transforms) serialize on one task when the input is a single small file
     (measured r3 at sf0.1: ngram 7.9→1.5 s, simhash 8.8→1.8 s, ring kNN
     5.3→2.9 s). At web scale the scan already has thousands of splits and
     this is a no-op — never an extra shuffle on a big table.
+
+    Decided from the plan without running it: under AQE, reading the
+    partition count of a plan that holds an exchange runs the stages below
+    it, so such a (shuffled) frame is returned as it is.
     """
+    if df._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return df
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 
 from cog3pio_spark.cells import h3x, s2
+from cog3pio_spark.functions import cells as C
 
 RNG = np.random.RandomState(99)
 LAT = RNG.uniform(-85, 85, 3000)
@@ -136,34 +137,6 @@ def test_cover_bbox_face_straddling_clips_to_center_face():
     assert len(faces) == 1
 
 
-def test_null_coords_yield_null_cells(spark):
-    """r4 review: NaN lat/lng used to cast to a VALID-LOOKING cell id
-    (platform-dependent face-corner cell), silently joining null-coordinate
-    rows into real spatial cells. Null coords now produce null cells across
-    all three assignment UDFs."""
-    from pyspark.sql import functions as F
-
-    from cog3pio_spark.functions import cells as C
-
-    df = spark.createDataFrame(
-        [(1, 10.0, 20.0), (2, None, 20.0), (3, 10.0, None), (4, None, None)],
-        "id long, lat double, lng double",
-    )
-    out = df.select(
-        "id",
-        C.s2_cell(F.col("lat"), F.col("lng"), 12).alias("s2"),
-        C.h3x_cell(F.col("lat"), F.col("lng"), 8).alias("hx"),
-        C.h3x_multi_res(F.col("lat"), F.col("lng"), 5, 7).alias("multi"),
-    ).collect()
-    by_id = {r["id"]: r for r in out}
-    assert by_id[1]["s2"] is not None and by_id[1]["hx"] is not None
-    assert len(by_id[1]["multi"]) == 3
-    for i in (2, 3, 4):
-        assert by_id[i]["s2"] is None, i
-        assert by_id[i]["hx"] is None, i
-        assert by_id[i]["multi"] is None, i
-
-
 def test_uncompact_rejects_finer_than_target(spark):
     """r4 review: cells finer than target_res used to pass through
     unchanged, silently mixing resolutions in the uniform-res contract."""
@@ -179,23 +152,46 @@ def test_uncompact_rejects_finer_than_target(spark):
         uncompact_cells(df, target_res=8).collect()
 
 
+def test_uncompact_null_cell_expands_to_nothing(spark):
+    """A NULL cell in the batch expands to no children; it used to kill the
+    job with a bare AssertionError from h3x.center_child."""
+    from cog3pio_spark.operators.assign import uncompact_cells
+
+    hex8 = int(h3x.latlng_to_cell(np.array([10.0]), np.array([20.0]), 8)[0])
+    hex7 = int(h3x.parent(np.array([hex8]), 7)[0])
+    df = spark.createDataFrame([(hex8,), (None,), (hex7,)], "cell bigint").coalesce(1)
+    got = sorted(r["cell"] for r in uncompact_cells(df, 9).collect())
+    kids7 = h3x.children(h3x.children(np.array([hex7])).ravel()).ravel()
+    want = sorted(h3x.children(np.array([hex8])).ravel().tolist() + kids7.tolist())
+    assert got == want
+
+
 def test_tile_covering_null_affine_rows(spark):
     """r4 review: Arrow delivers null doubles as NaN, so the old `is None`
     guard never fired and null-affine rows got garbage single-cell
-    coverings; they now produce null coverings."""
+    coverings; they now produce null coverings. A ±inf or NaN affine field
+    (which the later `pd.isna` guard let through as one garbage res-12
+    cell) and a NULL width do too."""
     from cog3pio_spark.operators.assign import tile_covering
 
+    inf = float("inf")
     df = spark.createDataFrame(
         [
             ("ok", 100.0, 60.0, 0.5, -0.5, 16, 16),
             ("no_geo", None, None, None, None, 16, 16),
+            ("inf_c", inf, 60.0, 0.5, -0.5, 16, 16),
+            ("neginf_f", 100.0, -inf, 0.5, -0.5, 16, 16),
+            ("nan_a", 100.0, 60.0, float("nan"), -0.5, 16, 16),
+            ("no_width", 100.0, 60.0, 0.5, -0.5, None, 16),
         ],
         "media_ref string, c double, f double, a double, e double, "
         "width int, height int",
-    )
-    rows = {r["media_ref"]: r["covering_cells"] for r in tile_covering(df).collect()}
-    assert rows["ok"] is not None and len(rows["ok"]) > 0
-    assert rows["no_geo"] is None
+    ).coalesce(1)
+    rows = {r["media_ref"]: r for r in tile_covering(df).collect()}
+    assert rows["ok"]["covering_cells"] is not None and len(rows["ok"]["covering_cells"]) > 0
+    assert rows["ok"]["covering_res"] == 12
+    for bad in ("no_geo", "inf_c", "neginf_f", "nan_a", "no_width"):
+        assert rows[bad]["covering_cells"] is None and rows[bad]["covering_res"] is None, bad
 
 
 def test_x_coords_zero_width(spark):
@@ -287,59 +283,147 @@ def test_cover_bbox_is_true_covering():
         assert covered.all(), (lat0, lng0, lat1, lng1, int((~covered).sum()))
 
 
-def test_null_bearing_cell_batch_keeps_ids_bit_exact(spark):
-    """ADVICE r5 (high): one NULL cell in an Arrow batch used to flip the
-    whole LongType batch to float64, silently rounding EVERY non-null hex id
-    (low bits carry q/r — a res-8 id came back ~230 lattice steps away).
-    The null-masked wrappers must return bit-exact ids alongside NULLs."""
-    import numpy as np
+# name → (input columns, the cell function, its numpy kernel)
+CELL_FUNCTIONS = {
+    "s2_cell": (
+        ("lat", "lng"),
+        lambda la, ln: C.s2_cell(la, ln, 12),
+        lambda la, ln: s2.to_signed(s2.latlng_to_cell(la, ln, 12)),
+    ),
+    "s2_range_min": (
+        ("s2",), C.s2_range_min, lambda a: s2.to_signed(s2.range_min(s2.from_signed(a)))
+    ),
+    "s2_range_max": (
+        ("s2",), C.s2_range_max, lambda a: s2.to_signed(s2.range_max(s2.from_signed(a)))
+    ),
+    "s2_parent": (
+        ("s2",),
+        lambda c: C.s2_parent(c, 8),
+        lambda a: s2.to_signed(s2.parent(s2.from_signed(a), 8)),
+    ),
+    "h3x_cell": (
+        ("lat", "lng"),
+        lambda la, ln: C.h3x_cell(la, ln, 12),
+        lambda la, ln: h3x.latlng_to_cell(la, ln, 12),
+    ),
+    "h3x_parent": (("hx",), lambda c: C.h3x_parent(c, 5), lambda a: h3x.parent(a, 5)),
+    "h3x_resolution": (("hx",), C.h3x_resolution, h3x.resolution),
+    "h3x_kring": (("hx",), lambda c: C.h3x_kring(c, 1), lambda a: h3x.k_ring(a, 1)),
+    "h3x_multi_res": (
+        ("lat", "lng"),
+        lambda la, ln: C.h3x_multi_res(la, ln, 5, 12),
+        lambda la, ln: h3x.latlng_to_cells_multi(la, ln, list(range(5, 13))),
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def null_mixed_batch(spark):
+    """(one-partition frame, valid inputs): valid points on all six S2
+    faces, with their level-12 S2 ids (faces 4-5 set bit 63 of the int64
+    carrier) and res-12 hex ids (data in the low bits), shuffled among rows
+    whose lat or lng is NULL, NaN, +inf or -inf and whose ids are NULL."""
+    rng = np.random.RandomState(12)
+    lat = np.r_[rng.uniform(-89, 89, 64), 0.0, -89.0]
+    lng = np.r_[rng.uniform(-180, 180, 64), -90.0, 0.0]
+    s2ids = s2.to_signed(s2.latlng_to_cell(lat, lng, 12))
+    hxids = h3x.latlng_to_cell(lat, lng, 12)
+    assert (s2ids < 0).any() and (s2ids > 0).any()
+    assert len(np.unique(s2.from_signed(s2ids) >> np.uint64(61))) == 6
+    rows = [(float(a), float(b), int(c), int(d)) for a, b, c, d in zip(lat, lng, s2ids, hxids)]
+    for bad in (None, float("nan"), float("inf"), float("-inf")):
+        rows += [(bad, 10.0, None, None), (10.0, bad, None, None)]
+    rows.append((None, None, None, None))
+    order = rng.permutation(len(rows))
+    df = spark.createDataFrame(
+        [(int(i), *rows[i]) for i in order],
+        "id int, lat double, lng double, s2 bigint, hx bigint",
+    ).coalesce(1)
+    return df, {"lat": lat, "lng": lng, "s2": s2ids, "hx": hxids}
+
+
+@pytest.mark.parametrize("name", list(CELL_FUNCTIONS))
+def test_null_bearing_cell_batch_keeps_ids_bit_exact(null_mixed_batch, name):
+    """Every cell function on one Arrow batch mixing valid rows with NULL,
+    NaN and ±inf inputs: valid rows are bit-exact against the numpy kernel,
+    bad rows are NULL (r4: a NaN through the int casts made a valid-looking
+    corner cell; ADVICE r5: one NULL id flipped a pandas batch to float64
+    and rounded every other id). Column names work as well as Columns."""
     from pyspark.sql import functions as F
 
-    from cog3pio_spark.cells import h3x
-    from cog3pio_spark.functions import cells as C
-
-    lat = np.linspace(-60, 60, 64)
-    lng = np.linspace(-170, 170, 64)
-    ids = h3x.latlng_to_cell(lat, lng, 8).astype(np.int64)
-    rows = [(int(c),) for c in ids] + [(None,)]
-    df = spark.createDataFrame(rows, ["cell"]).coalesce(1)  # ONE batch
-
+    df, valid = null_mixed_batch
+    cols, fn, kernel = CELL_FUNCTIONS[name]
     got = df.select(
-        "cell",
-        C.h3x_parent(F.col("cell"), 5).alias("p5"),
-        C.h3x_resolution(F.col("cell")).alias("res"),
-        C.h3x_kring(F.col("cell"), 1).alias("ring"),
+        "id", fn(*(F.col(c) for c in cols)).alias("by_col"), fn(*cols).alias("by_name")
     ).collect()
-    by_cell = {r["cell"]: r for r in got}
-    assert by_cell[None]["p5"] is None
-    assert by_cell[None]["res"] is None
-    assert by_cell[None]["ring"] is None
-    exp_p5 = h3x.parent(ids, 5)
-    exp_ring = h3x.k_ring(ids, 1)
-    for i, c in enumerate(ids):
-        r = by_cell[int(c)]
-        assert r["p5"] == int(exp_p5[i]), f"parent id rounded for {c}"
-        assert r["res"] == 8
-        assert sorted(r["ring"]) == sorted(int(x) for x in exp_ring[i])
+    want = kernel(*(valid[c] for c in cols))
+    n_valid = len(want)
+    assert len(got) == n_valid + 9
+    for r in got:
+        assert r["by_col"] == r["by_name"], r
+        if r["id"] >= n_valid:
+            assert r["by_col"] is None, r
+        elif want.ndim == 2:
+            assert r["by_col"] == [int(x) for x in want[r["id"]]], r
+        else:
+            assert r["by_col"] == int(want[r["id"]]), r
 
-    # s2 wrappers: same contract on the signed carrier
-    from cog3pio_spark.cells import s2
 
-    s2ids = s2.to_signed(s2.latlng_to_cell(lat, lng, 12)).astype(np.int64)
-    rows = [(int(c),) for c in s2ids] + [(None,)]
-    df2 = spark.createDataFrame(rows, ["cell"]).coalesce(1)
-    got2 = {r["cell"]: r for r in df2.select(
-        "cell",
-        C.s2_parent(F.col("cell"), 8).alias("p8"),
-        C.s2_range_min(F.col("cell")).alias("lo"),
-        C.s2_range_max(F.col("cell")).alias("hi"),
-    ).collect()}
-    assert got2[None]["p8"] is None and got2[None]["lo"] is None
-    exp_p8 = s2.to_signed(s2.parent(s2.from_signed(s2ids), 8))
-    exp_lo = s2.to_signed(s2.range_min(s2.from_signed(s2ids)))
-    for i, c in enumerate(s2ids):
-        assert got2[int(c)]["p8"] == int(exp_p8[i])
-        assert got2[int(c)]["lo"] == int(exp_lo[i])
+def test_assign_cells_and_fused_kernel_share_one_null_mask(spark, tmp_path):
+    """assign_cells and the fused tile kernel give the same cells on one
+    centroid batch: bit-exact against the numpy kernels for finite
+    centroids (faces 4 and 5 included), NULL for NaN/±inf affine tags and
+    for a missing file's NULL centroid."""
+    from pyspark.sql import functions as F
+
+    from cog3pio_spark.fixtures.polygons import polygons_df
+    from cog3pio_spark.functions.geo import EARTH_RADIUS_M
+    from cog3pio_spark.operators.assign import assign_cells
+    from cog3pio_spark.operators.decode import decode_tiles
+    from cog3pio_spark.operators.tile_kernel import fused_decode_assign_pip
+    from cog3pio_spark.tiff.writer import write_tiff
+
+    def world(deg):
+        return float(np.radians(deg) * EARTH_RADIUS_M)
+
+    tiepoints = {
+        "face0": (world(10.0), world(40.0)),
+        "face4": (world(-90.0), world(2.0)),
+        "face5": (world(30.0), world(-80.0)),
+        "nan": (float("nan"), float("nan")),
+        "inf": (float("inf"), world(10.0)),
+        "neginf": (world(10.0), float("-inf")),
+    }
+    refs = []
+    for name, (x, y) in tiepoints.items():
+        p = str(tmp_path / f"{name}.tif")
+        write_tiff(
+            p, np.arange(64, dtype=np.uint8).reshape(1, 8, 8),
+            pixel_scale=(1.0, 1.0), tiepoint=(0, 0, 0, x, y, 0),
+        )
+        refs.append(("file://" + p,))
+    refs.append(("file:///nonexistent/missing.tif",))
+    df = spark.createDataFrame(refs, ["media_ref"]).coalesce(1)
+    fused = {r["media_ref"]: r for r in fused_decode_assign_pip(df, polygons_df(spark, 4)).collect()}
+    assigned = {
+        r["media_ref"]: r
+        for r in assign_cells(decode_tiles(df).filter(F.col("status") == "ok")).collect()
+    }
+    assert len(fused) == len(refs) and len(assigned) == len(refs) - 1
+    for ref, r in fused.items():
+        name = ref.rsplit("/", 1)[1][:-4]
+        if name.startswith("face"):
+            lat = np.degrees(np.array([r["centroid_y"]]) / EARTH_RADIUS_M)
+            lng = np.degrees(np.array([r["centroid_x"]]) / EARTH_RADIUS_M)
+            s2id = int(s2.to_signed(s2.latlng_to_cell(lat, lng, 12))[0])
+            hexes = [int(c) for c in h3x.latlng_to_cells_multi(lat, lng, list(range(5, 13)))[0]]
+            assert int(s2.from_signed(np.array([s2id]))[0] >> np.uint64(61)) == int(name[-1])
+            assert (r["s2_cell"], r["hex_cells"]) == (s2id, hexes), name
+        else:
+            assert r["s2_cell"] is None and r["hex_cells"] is None, name
+        if name != "missing":
+            a = assigned[ref]
+            assert (a["s2_cell"], a["hex_cells"]) == (r["s2_cell"], r["hex_cells"]), name
 
 
 def test_native_s2_parent_matches_numpy_all_levels(spark):

@@ -187,7 +187,7 @@ def test_sort_merge_nan_coord_does_not_corrupt_bucket(spark, clustered):
     """A NaN-coord point would get a NULL curve key (the r5 NaN-cells fix);
     one such row would make Arrow deliver its whole bucket's _cell batch as
     float64, silently rounding every level-30 carrier in the bucket (and
-    pandas sorts NaN last where the JVM sorts NULLS first). _finite_points
+    pandas sorts NaN last where the JVM sorts NULLS first). _finite_rows
     drops the row before any curve key exists, so valid queries' neighbors
     stay identical; the kernel's integer-dtype guard fails loudly if a NULL
     key ever reaches it."""
@@ -428,6 +428,23 @@ def test_knn_brute_spreads_a_single_split_points_input(spark, clustered, tmp_pat
     st = spark.sparkContext.statusTracker()
     tasks = [st.getStageInfo(s).numTasks for j in jobs for s in st.getJobInfo(j).stageIds]
     assert max(tasks) == spark.sparkContext.defaultParallelism
+
+
+def test_spread_small_scan_decides_from_the_plan(spark):
+    """spread_small_scan runs no Spark job: a frame that already holds an
+    exchange comes back unchanged (reading its partition count ran the
+    exchange's map stage under AQE), and a one-split scan is spread to
+    defaultParallelism partitions."""
+    from cog3pio_spark.session import spread_small_scan
+
+    shuffled = spark.range(0, 1000, 1, 1).repartition(4)
+    out, jobs = _in_job_group(spark, lambda: spread_small_scan(shuffled))
+    assert out is shuffled and len(jobs) == 0
+    one = spark.range(0, 1000, 1, 1)
+    out, jobs = _in_job_group(spark, lambda: spread_small_scan(one))
+    par = spark.sparkContext.defaultParallelism
+    assert len(jobs) == 0
+    assert f"RoundRobinPartitioning({par})" in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_sort_merge_explicit_num_buckets_keeps_the_row_floor(clustered, monkeypatch):

@@ -12,7 +12,10 @@ typed value-hash failed. Both sides are now materialized as Arrow tables
 (duckdb .arrow() vs Spark .toArrow()) and their types must agree up to a
 small canonicalization (string==large_string, timestamp units → us).
 
-Usage: python tools/check_oracle.py [sf_dir] [only_query_prefix]
+Usage: python tools/check_oracle.py [sf_dir] [query_prefixes]
+
+query_prefixes is a comma-separated list (``q21,q22,q30``); every query
+whose name starts with one of them runs, all in one Spark session.
 """
 
 from __future__ import annotations
@@ -124,7 +127,7 @@ def driver_canon_smoke(tbl: pa.Table):
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = sys.argv[2] if len(sys.argv) > 2 else ""
+    only = tuple(p for p in (sys.argv[2] if len(sys.argv) > 2 else "").split(",") if p)
 
     from cog3pio_spark.session import get_spark
 
