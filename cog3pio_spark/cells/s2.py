@@ -263,8 +263,8 @@ def compact_np(cell_ids: np.ndarray) -> np.ndarray:
 
     Input: distinct cell ids (any mix of levels). Exact bit math — a cell's
     4 children at level l+1 share the parent id, so grouping by parent and
-    counting 4 is sufficient. Used to shrink coverings before range joins
-    (fewer [range_min, range_max] build rows)."""
+    counting 4 is sufficient. No operator calls it, range joins included;
+    tests/test_cells.py pins its roundtrip."""
     cur = np.unique(np.asarray(cell_ids, dtype=np.uint64))
     out: list[np.ndarray] = []
     for lvl in range(MAX_LEVEL, 0, -1):

@@ -10,9 +10,12 @@ NULL contract, one mask for every cell kernel (``_valid_rows`` →
 ``_masked``, shared with the fused tile kernel, knn_join, uncompact_cells
 and tile_covering): a row whose input is NULL, NaN or ±inf gets a NULL
 output, never a valid-looking id (a NaN through the kernels' int casts
-lands in a face corner). Cell ids never pass through a pandas batch, which
-turns a NULL-bearing long column into float64 and rounds every id in it; an
-Arrow ``Int64Array`` keeps them bit-exact beside its validity bitmap.
+lands in a face corner). A latitude past a pole (``_past_pole``) is NULL
+too wherever a point becomes a cell: the kernels fold (95, 10) and
+(-265, 10) onto the id of (85, 190). Cell ids never pass through a pandas
+batch, which turns a NULL-bearing long column into float64 and rounds every
+id in it; an Arrow ``Int64Array`` keeps them bit-exact beside its validity
+bitmap.
 
 Id carrier: Spark LongType via the uint64→int64 bit view. Faces 4 and 5 set
 bit 63, so signed ordering permutes the *face blocks* (4,5 sort before 0..3)
@@ -59,6 +62,12 @@ def _valid_rows(*cols: pa.Array) -> tuple[list[np.ndarray], np.ndarray]:
     return values, nulls
 
 
+def _past_pole(lat: np.ndarray) -> np.ndarray:
+    """Row mask of latitudes (degrees) past a pole, |lat| > 90: no point
+    lies there, so its cell is NULL, never the wrapped point's id."""
+    return np.abs(lat) > 90.0
+
+
 def _masked(values: np.ndarray, nulls: np.ndarray) -> pa.Array:
     """``values`` (one per row) as an Arrow column, NULL where ``nulls``: a
     scalar column, or a ``ListArray`` of the rows of a (rows, width) array."""
@@ -71,15 +80,19 @@ def _masked(values: np.ndarray, nulls: np.ndarray) -> pa.Array:
     )
 
 
-def _cell_udf(out_type: T.DataType, kernel, *cols) -> Column:
+def _cell_udf(out_type: T.DataType, kernel, *cols, latlng: bool = False) -> Column:
     """``kernel`` (numpy arrays → one value or one fixed-width row per input
     row) over the valid rows of each Arrow batch of ``cols``, NULL elsewhere.
     Only valid rows reach the kernel: some assert properties of their whole
-    input (``h3x.parent``: one resolution) that a zeroed row would break."""
+    input (``h3x.parent``: one resolution) that a zeroed row would break.
+    With ``latlng``, ``cols`` are (lat, lng) and a row past a pole is
+    invalid too."""
     arrow_type = to_arrow_type(out_type)
 
     def _u(*arrays: pa.Array) -> pa.Array:
         values, nulls = _valid_rows(*arrays)
+        if latlng:
+            nulls |= _past_pole(values[0])
         if nulls.all():
             return pa.nulls(len(nulls), arrow_type)
         if not nulls.any():
@@ -93,7 +106,8 @@ def _cell_udf(out_type: T.DataType, kernel, *cols) -> Column:
 
 
 def s2_cell(lat: Column, lng: Column, level: int) -> Column:
-    return _cell_udf(_ID, lambda la, ln: _s2.to_signed(_s2.latlng_to_cell(la, ln, level)), lat, lng)
+    return _cell_udf(_ID, lambda la, ln: _s2.to_signed(_s2.latlng_to_cell(la, ln, level)), lat, lng,
+                     latlng=True)
 
 
 def s2_range_min(cell: Column) -> Column:
@@ -121,7 +135,7 @@ def s2_parent(cell: Column, level: int) -> Column:
 
 
 def h3x_cell(lat: Column, lng: Column, res: int) -> Column:
-    return _cell_udf(_ID, lambda la, ln: _h3x.latlng_to_cell(la, ln, res), lat, lng)
+    return _cell_udf(_ID, lambda la, ln: _h3x.latlng_to_cell(la, ln, res), lat, lng, latlng=True)
 
 
 def h3x_parent(cell: Column, res: int) -> Column:
@@ -146,4 +160,5 @@ def h3x_multi_res(lat: Column, lng: Column, res_lo: int = 5, res_hi: int = 12) -
     projection serves all resolutions: face/(u,v) are resolution-invariant,
     so only the per-res lattice transform repeats."""
     res = list(range(res_lo, res_hi + 1))
-    return _cell_udf(_CELLS, lambda la, ln: _h3x.latlng_to_cells_multi(la, ln, res), lat, lng)
+    return _cell_udf(_CELLS, lambda la, ln: _h3x.latlng_to_cells_multi(la, ln, res), lat, lng,
+                     latlng=True)

@@ -21,12 +21,11 @@ cell ranges hits parquet row-group stats.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from cog3pio_spark.cells import h3x
 from cog3pio_spark.functions import cells as C
@@ -157,11 +156,12 @@ def tile_covering(
     def cover(*cols: pa.Array) -> pa.Array:
         (c, f, a, e, w, hgt), nulls = C._valid_rows(*cols)
         # bbox corners in degrees; a NULL or non-finite affine field (the
-        # cell functions' NULL mask) or corner gets a NULL covering, never a
-        # garbage single cell from a NaN→int cast
+        # cell functions' NULL mask), a non-finite corner or one past a pole
+        # gets a NULL covering, never a garbage single cell from a NaN→int
+        # cast or a wrapped latitude
         lat = np.degrees(np.stack([f + e * hgt, f]) / EARTH_RADIUS_M)
         lng = np.degrees(np.stack([c, c + a * w]) / EARTH_RADIUS_M)
-        nulls |= ~np.isfinite(np.r_[lat, lng]).all(axis=0)
+        nulls |= ~np.isfinite(np.r_[lat, lng]).all(axis=0) | C._past_pole(lat).any(axis=0)
         out_cells: list = [None] * len(nulls)
         out_res: list = [None] * len(nulls)
         for i in np.nonzero(~nulls)[0]:
@@ -195,11 +195,11 @@ _COVERING_CHECK_SCHEMA = T.StructType(
 )
 
 
-@pandas_udf(_COVERING_CHECK_SCHEMA)
+@arrow_udf(_COVERING_CHECK_SCHEMA)
 def _covering_check(
-    cells: pd.Series, base_res: pd.Series, c: pd.Series, f: pd.Series,
-    a: pd.Series, e: pd.Series, w: pd.Series, hgt: pd.Series,
-) -> pd.DataFrame:
+    cells: pa.Array, base_res: pa.Array, c: pa.Array, f: pa.Array,
+    a: pa.Array, e: pa.Array, w: pa.Array, hgt: pa.Array,
+) -> pa.Array:
     """Per-tile structural invariants of a compacted bbox covering (r5,
     q39 oracle conversion — the q33 recipe applied to tile_covering):
 
@@ -215,25 +215,19 @@ def _covering_check(
       (aperture-7 parents are not geometric unions of children) is a
       sound substitute;
     * non-empty: a valid decode must produce ≥1 cell.
+
+    A row whose covering, base res or affine field is NULL or non-finite
+    (the cell functions' NULL mask) counts as an empty covering.
     """
     from cog3pio_spark.functions.geo import EARTH_RADIUS_M
 
-    out = {"antichain_violations": [], "coverage_gaps": [], "empty_covering": []}
-    for cl, br, ci, fi, ai, ei, wi, hi in zip(cells, base_res, c, f, a, e, w, hgt):
-        if (
-            cl is None
-            or pd.isna(br)
-            or any(pd.isna(x) for x in (ci, fi, ai, ei, wi, hi))
-        ):
-            out["antichain_violations"].append(0)
-            out["coverage_gaps"].append(0)
-            out["empty_covering"].append(1)
-            continue
-        arr = np.asarray(cl, dtype=np.int64)
+    (br, ci, fi, ai, ei, wi, hi), nulls = C._valid_rows(base_res, c, f, a, e, w, hgt)
+    nulls |= cells.is_null().to_numpy(zero_copy_only=False)
+    anti_out, gaps_out = np.zeros((2, len(nulls)), np.int64)
+    empty_out = np.ones(len(nulls), np.int64)
+    for i in np.nonzero(~nulls)[0]:
+        arr = np.asarray(cells[i].values, dtype=np.int64)
         if arr.size == 0:
-            out["antichain_violations"].append(0)
-            out["coverage_gaps"].append(0)
-            out["empty_covering"].append(1)
             continue
         cellset = set(arr.tolist())
         res = h3x.resolution(arr)
@@ -250,12 +244,12 @@ def _covering_check(
                     anti += int(sum(1 for x in anc.tolist() if x in cellset))
         # coverage: 7x7 grid incl. corners; direct assignment at the BASE
         # res, then ancestor-walk membership (see docstring)
-        x0, x1 = float(ci), float(ci) + float(ai) * int(wi)
-        y1, y0 = float(fi), float(fi) + float(ei) * int(hi)
+        x0, x1 = float(ci[i]), float(ci[i]) + float(ai[i]) * int(wi[i])
+        y1, y0 = float(fi[i]), float(fi[i]) + float(ei[i]) * int(hi[i])
         la = np.degrees(np.linspace(min(y0, y1), max(y0, y1), 7) / EARTH_RADIUS_M)
         ln = np.degrees(np.linspace(min(x0, x1), max(x0, x1), 7) / EARTH_RADIUS_M)
         gl, gn = np.meshgrid(la, ln)
-        R = int(br)
+        R = int(br[i])
         cur = h3x.latlng_to_cell(gl.ravel(), gn.ravel(), R)
         covered = np.zeros(cur.shape, dtype=bool)
         for r in range(R, lo - 1, -1):
@@ -264,11 +258,11 @@ def _covering_check(
                 covered |= np.isin(cur, sel)
             if r > lo:
                 cur = h3x.parent(cur, r - 1)
-        gaps = int((~covered).sum())
-        out["antichain_violations"].append(anti)
-        out["coverage_gaps"].append(gaps)
-        out["empty_covering"].append(0)
-    return pd.DataFrame(out)
+        anti_out[i], gaps_out[i], empty_out[i] = anti, int((~covered).sum()), 0
+    return pa.StructArray.from_arrays(
+        [pa.array(anti_out), pa.array(gaps_out), pa.array(empty_out)],
+        names=_COVERING_CHECK_SCHEMA.names,
+    )
 
 
 def covering_invariants(covered: DataFrame) -> DataFrame:

@@ -77,9 +77,9 @@ def _decode_one(
     """Decode one object. ``overview`` selects the COG pyramid level (0 =
     full res, reference parity; clamped to the deepest available level) —
     the predicate-pushdown hook: a query that only needs coarse statistics
-    decodes 4^k× fewer pixels. ``fetchers`` extends the scheme registry for
-    this call (rides the UDF closure to executors — driver-side
-    register_fetcher mutations do NOT propagate to workers).
+    decodes 4^k× fewer pixels. ``fetchers`` extends the scheme registry
+    (``tiff.reader._FETCHERS``) for this call; it rides the UDF closure to
+    executors, the only way a new scheme reaches them.
 
     ``range_read=True`` (r3, beyond-reference) opens the object through a
     range fetcher instead of a whole-object GET: header/IFD blocks only at

@@ -33,11 +33,10 @@ from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from cog3pio_spark.cells import h3x
 from cog3pio_spark.functions import cells as C
+from cog3pio_spark.functions.geo import EARTH_RADIUS_M
 from cog3pio_spark.operators.probe import (
     MAX_QUERIES, Scorer, _collect_query_batch, _finite_rows, _search)
 from cog3pio_spark.session import spread_small_scan
-
-EARTH_RADIUS_M = 6378137.0
 
 # target rows per sort-merge bucket once the corpus outgrows the shuffle
 # partition count — bounds the pandas frame one kernel task materializes

@@ -122,13 +122,6 @@ def quality_score(text: Column) -> Column:
     return _once(feats, _decode)
 
 
-def _marker_hits(lowered: Column, marks: list[str]) -> Column:
-    # regexp_count over the lowered text, not an interpreted HOF filter over
-    # the split array (r6 — see stopword_ratio; token-equivalence pinned by
-    # test_text_regexp_hits_equal_hof_filter)
-    return F.regexp_count(lowered, F.lit(_token_hit_pattern(marks)))
-
-
 def _once(col: Column, fn) -> Column:
     """Evaluate ``col`` exactly once per row and feed the VALUE to ``fn``.
 

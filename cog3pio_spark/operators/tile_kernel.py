@@ -18,7 +18,8 @@ exactly one shuffle over the span table.
 Output: one row per (input row, containing polygon); rows whose tile is in
 no polygon get polygon_id NULL (so decode/assign results are never lost);
 decode errors get status='error', the decode taxonomy's error_msg and NULL
-geometry. Non-finite centroids get NULL cells and no polygon.
+geometry. Non-finite centroids get NULL cells and no polygon; a centroid
+past a pole (``_past_pole``) gets NULL cells, as in ``assign_cells``.
 """
 
 from __future__ import annotations
@@ -68,7 +69,7 @@ def fused_decode_assign_pip(
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from cog3pio_spark.cells import h3x, s2
-        from cog3pio_spark.functions.cells import _masked, _valid_rows
+        from cog3pio_spark.functions.cells import _masked, _past_pole, _valid_rows
         from cog3pio_spark.functions.geo import EARTH_RADIUS_M
         from cog3pio_spark.operators.decode import _decode_one
         from cog3pio_spark.operators.pip_join import _pip_candidates
@@ -87,13 +88,14 @@ def fused_decode_assign_pip(
                 schema=_DECODED,
             )
             # error rows carry NULL centroids; those and non-finite ones
-            # get NULL cells and no polygon
+            # get NULL cells and no polygon, and one past a pole NULL cells
             (cy, cx), nulls = _valid_rows(
                 decoded.column("centroid_y"), decoded.column("centroid_x")
             )
             lat, lng = np.degrees(cy / EARTH_RADIUS_M), np.degrees(cx / EARTH_RADIUS_M)
-            s2c = _masked(s2.to_signed(s2.latlng_to_cell(lat, lng, s2_level)), nulls)
-            hexes = _masked(h3x.latlng_to_cells_multi(lat, lng, hex_res), nulls)
+            no_cell = nulls | _past_pole(lat)
+            s2c = _masked(s2.to_signed(s2.latlng_to_cell(lat, lng, s2_level)), no_cell)
+            hexes = _masked(h3x.latlng_to_cells_multi(lat, lng, hex_res), no_cell)
             pt_idx, pg_idx = _pip_candidates(
                 np.where(nulls, np.nan, cx), np.where(nulls, np.nan, cy), pack
             )

@@ -6,9 +6,12 @@ Mirrors the behavior cog3pio asserts (citations into /root/reference):
 * dtype = SampleFormat × BitsPerSample dispatch  — src/io/geotiff.rs:50-60
 * band count from color type: Gray→1, RGB→3,
   Multiband→n, palette → error                   — src/io/geotiff.rs:67-83
-* flat buffer reshaped directly to (band,h,w)    — src/io/geotiff.rs:183-199
-  (NOTE: chunky multi-band data is NOT de-interleaved, exactly like the
-  reference — multi-band goldens are shape/mean/checksum, see SURVEY §1.2)
+* decoded pixels shaped to (band,h,w), with the
+  reference's reshape error on a size mismatch   — src/io/geotiff.rs:183-199
+  (DELIBERATE divergence: chunky multi-band data IS de-interleaved to
+  band-major, where the reference scrambles bands; its multi-band goldens
+  are shape/mean only and hold either way, see SURVEY §1.2 and
+  CogReader._to_numpy)
 * affine from ModelPixelScale + ModelTiepoint, e = -y_scale;
   ModelTransformation present → unsupported      — src/io/geotiff.rs:117-143
 * xy_coords: pixel-center, half-open length-n    — src/io/geotiff.rs:155-178
@@ -448,12 +451,13 @@ class CogReader:
 
     # -- pixel decode ------------------------------------------------------
     def _chunk(self, off: int, n: int, out_size: int) -> bytes:
-        """Decompress one tile/strip. ``out_size`` is the decoded byte count
-        known from the chunk geometry (dims × samples × itemsize; a final
-        strip may hold less) — required so ZSTD frames without an embedded
-        content size don't make the decompressor pre-allocate a worst-case
-        buffer per chunk, and the bound that stops a deflate or LZW bomb
-        before its output is allocated."""
+        """Decompress one tile or strip. ``out_size`` is the chunk's exact
+        decoded byte count from the grid (rows × width × samples × itemsize;
+        a final strip holds only the image's remaining rows) — required so
+        ZSTD frames without an embedded content size don't make the
+        decompressor pre-allocate a worst-case buffer per chunk, and the
+        bound that stops a deflate or LZW bomb before its output is
+        allocated. The caller checks the result's length against it."""
         raw = self._read(off, n)
         if self.compression == 8:
             try:
@@ -509,19 +513,30 @@ class CogReader:
             wide &= np.uint64((1 << bits) - 1)
         return wide.astype(chunk.dtype)
 
-    def _tiled(self, offs, counts, tw: int, th: int, tiles_x: int, window) -> np.ndarray:
-        """Decode the tiles that ``window=(x0, y0, x1, y1)`` (clipped,
-        non-empty) intersects into a (samples, y1-y0, x1-x0) tensor, one
-        tile row at a time: a row's chunks are decompressed, joined, viewed
-        as one (tiles, th, tw, samples) array, un-predicted and written
-        band-major by ``_place`` — a fixed number of numpy calls per row
-        instead of one round per tile, whose Python overhead was a quarter
-        of the decode of a 256-px image cut into 16-px tiles.
+    def _tiled(self, offs, counts, tw: int, th: int, grid_h: int, window) -> np.ndarray:
+        """Decode the chunks that ``window=(x0, y0, x1, y1)`` (clipped,
+        non-empty) intersects into a (samples, y1-y0, x1-x0) tensor. The
+        chunks are a row-major grid of ``tw``-wide, ``th``-row cells over
+        ``grid_h`` rows: a tiled image pads its last tile row to ``th``
+        (``grid_h`` a multiple of ``th``); a striped image is a one-column
+        grid of ``width``-wide strips whose last strip holds only the rows
+        left (``grid_h`` = height).
 
-        The join copies the row once; tiles of ``_JOIN_MAX_BYTES`` or more
-        skip it and are placed one at a time straight from their chunk
-        buffer, where a tile's own bytes dwarf the per-call overhead
-        (one process, min of 3, 4-core x86 VM):
+        A batch of chunks is decompressed, joined, viewed as one (chunks,
+        rows, tw, samples) array, un-predicted and written band-major by
+        ``_place`` — a fixed number of numpy calls per batch instead of one
+        round per chunk, whose Python overhead was a quarter of the decode
+        of a 256-px image cut into 16-px tiles. A batch is the window's
+        part of one chunk row; where the window spans a single chunk column
+        (every striped decode), it is instead as many consecutive chunk
+        rows as fit in ``_JOIN_MAX_BYTES``, which join into one taller
+        chunk for free.
+
+        The join copies the batch once; chunks of ``_JOIN_MAX_BYTES`` or
+        more skip it and are placed one at a time straight from their
+        buffer, where a chunk's own bytes dwarf the per-call overhead
+        (one process, min of 3, 4-core x86 VM; per-tile is the former
+        one-tile-at-a-time loop):
 
         ==================================  ========  ========
         image, tiles, compression           per-tile  tile-row
@@ -540,45 +555,56 @@ class CogReader:
         cache; below 64 KiB (1-32 KiB tiles, raw and deflate) the join won
         in every case measured.
 
-        Every chunk must decode to exactly one tile's bytes (short, long
-        or missing chunks raise); tiles outside the window are never
-        decompressed, and the output is allocated only after the first
-        batch of tiles has decoded.
+        Every chunk must decode to exactly its cell's bytes (short, long
+        or missing chunks raise, with the reference's reshape message);
+        chunks outside the window are never decompressed, and the output
+        is allocated only after the first batch has decoded.
         """
         wx0, wy0, wx1, wy1 = window
-        tile_bytes = th * tw * self.samples * self.dtype.itemsize
+        row_bytes = tw * self.samples * self.dtype.itemsize
+        tiles_x = (self.width + tw - 1) // tw
         tx0, tx1 = wx0 // tw, (wx1 - 1) // tw + 1
-        per = tx1 - tx0 if tile_bytes < _JOIN_MAX_BYTES else 1
+        ty1 = (wy1 - 1) // th + 1
+        per = down = 1  # chunk columns, chunk rows per batch
+        if th * row_bytes < _JOIN_MAX_BYTES:
+            if tx1 - tx0 > 1:
+                per = tx1 - tx0
+            else:
+                down = _JOIN_MAX_BYTES // (th * row_bytes)
         out = None
-        for ty in range(wy0 // th, (wy1 - 1) // th + 1):
-            ya, yb = max(wy0, ty * th), min(wy1, (ty + 1) * th)
+        for ty in range(wy0 // th, ty1, down):
+            rows = range(ty, min(ty1, ty + down))
+            y0, y1 = ty * th, min(grid_h, rows[-1] * th + th)
+            ya, yb = max(wy0, y0), min(wy1, y1)
             for bx in range(tx0, tx1, per):
-                first = ty * tiles_x + bx
                 n = min(per, tx1 - bx)
-                chunks = [
-                    self._chunk(offs[i], counts[i], tile_bytes)
-                    for i in range(first, first + n)
-                ]
-                for i, c in enumerate(chunks):
-                    if len(c) != tile_bytes:
-                        raise TiffDecodeError(
-                            f"Cannot decode TIFF: truncated or corrupt (tile "
-                            f"{first + i} holds {len(c)} of {tile_bytes} bytes)"
-                        )
-                tiles = (
-                    np.frombuffer(chunks[0] if n == 1 else b"".join(chunks),
+                chunks = []
+                for r in rows:
+                    want = (min(grid_h, r * th + th) - r * th) * row_bytes
+                    for i in range(r * tiles_x + bx, r * tiles_x + bx + n):
+                        c = self._chunk(offs[i], counts[i], want)
+                        if len(c) != want:
+                            raise TiffDecodeError(
+                                f"failed to convert vector of size "
+                                f"{len(c) // self.dtype.itemsize} to shape "
+                                f"[{self.samples}, {want // row_bytes}, {tw}] "
+                                f"(chunk {i} holds {len(c)} of {want} bytes)"
+                            )
+                        chunks.append(c)
+                cells = (
+                    np.frombuffer(chunks[0] if len(chunks) == 1 else b"".join(chunks),
                                   self._stored_dtype)
                     .astype(self.dtype, copy=False)
-                    .reshape(n, th, tw, self.samples)
+                    .reshape(n, y1 - y0, tw, self.samples)
                 )
-                tiles = self._unpredict(tiles)[:, ya - ty * th : yb - ty * th]
+                cells = self._unpredict(cells[:, ya - y0 : yb - y0])
                 if out is None:
-                    # allocated once real tiles back the header's geometry:
+                    # allocated once real chunks back the header's geometry:
                     # a corrupt SamplesPerPixel on a small file raises above
                     # instead of reserving samples × h × w first. Every
-                    # output pixel lies in exactly one decoded tile.
+                    # output pixel lies in exactly one decoded chunk.
                     out = np.empty((self.samples, wy1 - wy0, wx1 - wx0), self.dtype)
-                _place(out[:, ya - wy0 : yb - wy0], tiles, bx * tw - wx0)
+                _place(out[:, ya - wy0 : yb - wy0], cells, bx * tw - wx0)
         return out
 
     def to_numpy(self, window: tuple[int, int, int, int] | None = None) -> np.ndarray:
@@ -600,112 +626,55 @@ class CogReader:
         """Decode the selected IFD → (band, h, w) tensor.
 
         ``window=(x0, y0, x1, y1)`` (pixel coords, half-open) crops the
-        decode: for tiled layouts only the intersecting tiles are
-        decompressed (true COG partial decode — the reference always decodes
-        the full image, src/io/geotiff.rs:39-64; this is the north_star
-        window extension). Striped layouts decode only intersecting strips.
+        decode: only the intersecting tiles or strips are decompressed
+        (true COG partial decode — the reference always decodes the full
+        image, src/io/geotiff.rs:39-64; this is the north_star window
+        extension). Tiles and strips are one chunk grid, assembled by
+        :meth:`_tiled`; a chunk that does not decode to exactly its cell
+        raises the reference-shaped reshape message
+        (src/io/geotiff.rs:336-339).
 
-        Full-image reshape is applied to the flat decode buffer exactly like
-        ``shape_vec_to_tensor`` (src/io/geotiff.rs:183-199); a size mismatch
-        raises the reference-shaped message (src/io/geotiff.rs:336-339).
+        DELIBERATE divergence from the reference: chunky multi-band data
+        is de-interleaved to band-major. The reference reshapes the flat
+        buffer directly (src/io/geotiff.rs:48), which scrambles bands; it
+        only ever asserts multi-band SHAPE and order-insensitive MEAN
+        (src/io/geotiff.rs:283-297 — SURVEY §1.2), both of which are
+        preserved here, while per-band statistics become true per-band.
         """
         t = self.tags
-        if window is not None:
-            wx0, wy0, wx1, wy1 = window
-            wx0, wy0 = max(0, wx0), max(0, wy0)
-            wx1, wy1 = min(self.width, wx1), min(self.height, wy1)
-            if wx0 >= wx1 or wy0 >= wy1:
-                raise TiffDecodeError(f"Empty decode window: {window}")
+        if window is None:
+            if self.width * self.height == 0:  # no chunk to decode
+                return np.empty((self.bands, self.height, self.width), self.dtype)
+            window = (0, 0, self.width, self.height)
+        wx0, wy0, wx1, wy1 = window
+        wx0, wy0 = max(0, wx0), max(0, wy0)
+        wx1, wy1 = min(self.width, wx1), min(self.height, wy1)
+        if wx0 >= wx1 or wy0 >= wy1:
+            raise TiffDecodeError(f"Empty decode window: {window}")
         if W.TILE_OFFSETS in t:
-            tw = int(t[W.TILE_WIDTH][0])
-            th = int(t[W.TILE_LENGTH][0])
-            offs, counts = t[W.TILE_OFFSETS], t[W.TILE_BYTE_COUNTS]
-            tiles_x = (self.width + tw - 1) // tw
-            tiles_y = (self.height + th - 1) // th
-            # completeness check (r5 review): a corrupt tag count shorter
-            # than the grid would leave the tail tiles as silent zeros in a
-            # status='ok' result (zip truncates to the shorter list) — the
-            # tiled analogue of the strip path's flat.size check
-            if len(offs) < tiles_x * tiles_y or len(counts) < tiles_x * tiles_y:
-                raise TiffDecodeError(
-                    f"Cannot decode TIFF: {tiles_x * tiles_y} tiles expected "
-                    f"but only {min(len(offs), len(counts))} offset/count "
-                    f"entries present"
-                )
-            if self.bands != self.samples:  # corrupt band/sample mismatch
-                raise TiffDecodeError(
-                    f"failed to convert vector of size "
-                    f"{self.samples * self.height * self.width} to shape "
-                    f"[{self.bands}, {self.height}, {self.width}]"
-                )
-            if window is None:
-                wx0, wy0, wx1, wy1 = 0, 0, self.width, self.height
-            return self._tiled(offs, counts, tw, th, tiles_x, (wx0, wy0, wx1, wy1))
-        else:
-            offs, counts = t[W.STRIP_OFFSETS], t[W.STRIP_BYTE_COUNTS]
-            rows_per_strip = int(t.get(W.ROWS_PER_STRIP, [self.height])[0])
-            if window is not None:
-                if self.bands != self.samples:
-                    # same guard as the tiled/full paths (r4 review: the
-                    # windowed strip branch returned a (samples, h, w)
-                    # tensor for files every other path rejects)
-                    raise TiffDecodeError(
-                        f"failed to convert vector of size "
-                        f"{self.samples * self.height * self.width} to shape "
-                        f"[{self.bands}, {self.height}, {self.width}]"
-                    )
-                s_lo = wy0 // rows_per_strip
-                s_hi = (wy1 - 1) // rows_per_strip
-                strip_bytes = rows_per_strip * self.width * self.samples * self.dtype.itemsize
-                raw = b"".join(
-                    self._chunk(offs[s], counts[s], strip_bytes)
-                    for s in range(s_lo, s_hi + 1)
-                )
-                dec = self._unpredict(
-                    np.frombuffer(raw, self._stored_dtype)
-                    .astype(self.dtype, copy=False)
-                    .reshape(
-                        -1, self.width, self.samples
-                    )
-                )
-                crop = dec[wy0 - s_lo * rows_per_strip : wy1 - s_lo * rows_per_strip,
-                           wx0:wx1, :]
-                # size check (r5 review): a short final strip silently
-                # truncated the window (or emptied it into a downstream
-                # zero-size crash) with status='ok' — the windowed analogue
-                # of the full path's flat.size check
-                if crop.shape[0] != wy1 - wy0 or crop.shape[1] != wx1 - wx0:
-                    raise TiffDecodeError(
-                        f"Cannot decode TIFF: window ({wy1 - wy0}, "
-                        f"{wx1 - wx0}) rows/cols requested but strips "
-                        f"yielded ({crop.shape[0]}, {crop.shape[1]})"
-                    )
-                return np.ascontiguousarray(np.moveaxis(crop, -1, 0))
-            strip_bytes = rows_per_strip * self.width * self.samples * self.dtype.itemsize
-            raw = b"".join(self._chunk(o, c, strip_bytes) for o, c in zip(offs, counts))
-            flat = np.frombuffer(raw, self._stored_dtype).astype(self.dtype, copy=False)
-            if self.predictor == 2:
-                flat = self._unpredict(
-                    flat.reshape(-1, self.width, self.samples)
-                ).ravel()
-
-        shape = (self.bands, self.height, self.width)
-        if flat.size != shape[0] * shape[1] * shape[2]:
+            tw, th = int(t[W.TILE_WIDTH][0]), int(t[W.TILE_LENGTH][0])
+            offs, counts, unit = t[W.TILE_OFFSETS], t[W.TILE_BYTE_COUNTS], "tiles"
+            grid_h = (self.height + th - 1) // th * th
+        else:  # strips: a one-column grid whose last strip is not padded
+            tw, grid_h = self.width, self.height
+            th = min(self.height, int(t.get(W.ROWS_PER_STRIP, [self.height])[0]))
+            offs, counts, unit = t[W.STRIP_OFFSETS], t[W.STRIP_BYTE_COUNTS], "strips"
+        n = (self.width + tw - 1) // tw * ((self.height + th - 1) // th)
+        # completeness check (r5 review): a corrupt tag count shorter than
+        # the grid would leave the tail chunks as silent zeros in a
+        # status='ok' result
+        if len(offs) < n or len(counts) < n:
             raise TiffDecodeError(
-                f"failed to convert vector of size {flat.size} to shape "
-                f"[{shape[0]}, {shape[1]}, {shape[2]}]"
+                f"Cannot decode TIFF: {n} {unit} expected but only "
+                f"{min(len(offs), len(counts))} offset/count entries present"
             )
-        if self.bands == 1:
-            return flat.reshape(shape)
-        # DELIBERATE divergence from the reference: chunky data is properly
-        # de-interleaved to band-major. The reference reshapes the flat
-        # buffer directly (src/io/geotiff.rs:48), which scrambles bands; it
-        # only ever asserts multi-band SHAPE and order-insensitive MEAN
-        # (src/io/geotiff.rs:283-297 — SURVEY §1.2), both of which are
-        # preserved here, while per-band statistics become true per-band.
-        return np.ascontiguousarray(
-            np.moveaxis(flat.reshape(self.height, self.width, self.bands), -1, 0)
-        )
+        if self.bands != self.samples:  # corrupt band/sample mismatch
+            raise TiffDecodeError(
+                f"failed to convert vector of size "
+                f"{self.samples * self.height * self.width} to shape "
+                f"[{self.bands}, {self.height}, {self.width}]"
+            )
+        return self._tiled(offs, counts, tw, th, grid_h, (wx0, wy0, wx1, wy1))
 
     # -- georeferencing ----------------------------------------------------
     def transform(self) -> AffineTransform:
@@ -771,28 +740,20 @@ def _fetch_http(url: str) -> bytes:
         raise TiffDecodeError(f"Cannot fetch url: {url} ({exc.reason})") from exc
 
 
-# scheme → fetcher; extend via register_fetcher (e.g. s3 through a client
-# created lazily per executor). Every fetcher is whole-object (R1 parity).
-_FETCHERS: dict[str, object] = {
+# scheme → whole-object fetcher (R1 parity). A constant: executors import
+# their own copy of this module, so a driver-side mutation would never reach
+# them; per-call schemes ride operators/decode.py's ``fetchers=`` instead.
+_FETCHERS = {
     "file": _fetch_file,
     "http": _fetch_http,
     "https": _fetch_http,
 }
 
 
-def register_fetcher(scheme: str, fn) -> None:
-    """Plug a media_ref scheme resolver: ``fn(ref: str) -> bytes``.
-
-    Called inside the decode UDF on executors — ``fn`` must be picklable
-    (module-level function or functools.partial over picklable state).
-    """
-    _FETCHERS[scheme] = fn
-
-
 def _path_to_bytes(path: str) -> bytes:
     """Resolve a media_ref to bytes (reference: whole-object GET, no range
-    reads — src/python/adapters.rs:158-168). Scheme-dispatched through the
-    pluggable fetcher registry; error taxonomy mirrors adapters.rs:147-162
+    reads — src/python/adapters.rs:158-168). Scheme-dispatched through
+    ``_FETCHERS``; error taxonomy mirrors adapters.rs:147-162
     ("Cannot parse url:" for unknown schemes, "Cannot find file:" for
     missing local paths)."""
     if "://" in path:

@@ -171,8 +171,9 @@ def test_tile_covering_null_affine_rows(spark):
     guard never fired and null-affine rows got garbage single-cell
     coverings; they now produce null coverings. A ±inf or NaN affine field
     (which the later `pd.isna` guard let through as one garbage res-12
-    cell) and a NULL width do too."""
-    from cog3pio_spark.operators.assign import tile_covering
+    cell) and a NULL width do too, as does a corner past a pole (f = 1e8 m
+    is latitude ~898°); q39's checker counts each as an empty covering."""
+    from cog3pio_spark.operators.assign import covering_invariants, tile_covering
 
     inf = float("inf")
     df = spark.createDataFrame(
@@ -183,6 +184,7 @@ def test_tile_covering_null_affine_rows(spark):
             ("neginf_f", 100.0, -inf, 0.5, -0.5, 16, 16),
             ("nan_a", 100.0, 60.0, float("nan"), -0.5, 16, 16),
             ("no_width", 100.0, 60.0, 0.5, -0.5, None, 16),
+            ("past_pole", 100.0, 1e8, 0.5, -0.5, 16, 16),
         ],
         "media_ref string, c double, f double, a double, e double, "
         "width int, height int",
@@ -190,8 +192,12 @@ def test_tile_covering_null_affine_rows(spark):
     rows = {r["media_ref"]: r for r in tile_covering(df).collect()}
     assert rows["ok"]["covering_cells"] is not None and len(rows["ok"]["covering_cells"]) > 0
     assert rows["ok"]["covering_res"] == 12
-    for bad in ("no_geo", "inf_c", "neginf_f", "nan_a", "no_width"):
+    for bad in ("no_geo", "inf_c", "neginf_f", "nan_a", "no_width", "past_pole"):
         assert rows[bad]["covering_cells"] is None and rows[bad]["covering_res"] is None, bad
+    # q39's checker over the same rows: the bad ones count as empty
+    checked = {r["invariant"]: r["val"] for r in covering_invariants(tile_covering(df)).collect()}
+    assert checked == {"antichain_violations": 0, "coverage_gaps": 0,
+                       "empty_coverings": 6, "n_valid_tiles": 7}, checked
 
 
 def test_x_coords_zero_width(spark):
@@ -322,7 +328,9 @@ def null_mixed_batch(spark):
     """(one-partition frame, valid inputs): valid points on all six S2
     faces, with their level-12 S2 ids (faces 4-5 set bit 63 of the int64
     carrier) and res-12 hex ids (data in the low bits), shuffled among rows
-    whose lat or lng is NULL, NaN, +inf or -inf and whose ids are NULL."""
+    whose lat or lng is NULL, NaN, +inf or -inf, or whose lat lies past a
+    pole (±95°, -265°: the kernels wrap them onto (85, 190)'s cell), and
+    whose ids are NULL."""
     rng = np.random.RandomState(12)
     lat = np.r_[rng.uniform(-89, 89, 64), 0.0, -89.0]
     lng = np.r_[rng.uniform(-180, 180, 64), -90.0, 0.0]
@@ -334,6 +342,7 @@ def null_mixed_batch(spark):
     for bad in (None, float("nan"), float("inf"), float("-inf")):
         rows += [(bad, 10.0, None, None), (10.0, bad, None, None)]
     rows.append((None, None, None, None))
+    rows += [(95.0, 10.0, None, None), (-95.0, 10.0, None, None), (-265.0, 10.0, None, None)]
     order = rng.permutation(len(rows))
     df = spark.createDataFrame(
         [(int(i), *rows[i]) for i in order],
@@ -345,10 +354,11 @@ def null_mixed_batch(spark):
 @pytest.mark.parametrize("name", list(CELL_FUNCTIONS))
 def test_null_bearing_cell_batch_keeps_ids_bit_exact(null_mixed_batch, name):
     """Every cell function on one Arrow batch mixing valid rows with NULL,
-    NaN and ±inf inputs: valid rows are bit-exact against the numpy kernel,
-    bad rows are NULL (r4: a NaN through the int casts made a valid-looking
-    corner cell; ADVICE r5: one NULL id flipped a pandas batch to float64
-    and rounded every other id). Column names work as well as Columns."""
+    NaN and ±inf inputs and latitudes past a pole: valid rows are bit-exact
+    against the numpy kernel, bad rows are NULL (r4: a NaN through the int
+    casts made a valid-looking corner cell; ADVICE r5: one NULL id flipped a
+    pandas batch to float64 and rounded every other id). Column names work
+    as well as Columns."""
     from pyspark.sql import functions as F
 
     df, valid = null_mixed_batch
@@ -358,7 +368,7 @@ def test_null_bearing_cell_batch_keeps_ids_bit_exact(null_mixed_batch, name):
     ).collect()
     want = kernel(*(valid[c] for c in cols))
     n_valid = len(want)
-    assert len(got) == n_valid + 9
+    assert len(got) == n_valid + 12
     for r in got:
         assert r["by_col"] == r["by_name"], r
         if r["id"] >= n_valid:
@@ -372,8 +382,8 @@ def test_null_bearing_cell_batch_keeps_ids_bit_exact(null_mixed_batch, name):
 def test_assign_cells_and_fused_kernel_share_one_null_mask(spark, tmp_path):
     """assign_cells and the fused tile kernel give the same cells on one
     centroid batch: bit-exact against the numpy kernels for finite
-    centroids (faces 4 and 5 included), NULL for NaN/±inf affine tags and
-    for a missing file's NULL centroid."""
+    centroids (faces 4 and 5 included), NULL for NaN/±inf affine tags, for
+    a centroid past the pole and for a missing file's NULL centroid."""
     from pyspark.sql import functions as F
 
     from cog3pio_spark.fixtures.polygons import polygons_df
@@ -393,6 +403,7 @@ def test_assign_cells_and_fused_kernel_share_one_null_mask(spark, tmp_path):
         "nan": (float("nan"), float("nan")),
         "inf": (float("inf"), world(10.0)),
         "neginf": (world(10.0), float("-inf")),
+        "past_pole": (world(10.0), world(95.0)),
     }
     refs = []
     for name, (x, y) in tiepoints.items():

@@ -205,10 +205,15 @@ def _built_tiffs():
 
     ramp = np.arange(64, dtype=np.uint8).reshape(1, 8, 8)
     rgb = np.arange(3 * 40 * 40, dtype=np.uint16).reshape(3, 40, 40)
+    # five 8-row strips, the last holding 5 rows: strip-table mutations
+    # reach a multi-strip assembly (writer_8x8.tif is one strip)
+    strips = np.arange(3 * 37 * 29, dtype=np.uint16).reshape(3, 37, 29)
     for name, arr, kw in (
         ("writer_8x8.tif", ramp, {}),
         ("writer_tiled_deflate.tif", rgb,
          {"tiled": True, "tile_size": 16, "compression": "deflate"}),
+        ("writer_strips_deflate_pred2.tif", strips,
+         {"compression": "deflate", "predictor": 2}),
     ):
         buf = BytesIO()
         write_tiff(buf, arr, **kw)

@@ -165,6 +165,8 @@ def test_flagship_enriched_null_media_ref_is_error_row(enriched_with_bad_refs):
             id="nan",
         ),
         pytest.param((1.0, 1.0), (0, 0, 0, float("inf"), 5_300_000.0, 0), id="inf"),
+        # y = 10.5e6 m is latitude ~94.3°, past the north pole
+        pytest.param((1.0, 1.0), (0, 0, 0, 10.0, 10_500_000.0, 0), id="past_pole"),
     ],
 )
 def test_nonfinite_centroid_yields_null_cells(spark, tmp_path, pixel_scale, tiepoint):
@@ -172,7 +174,8 @@ def test_nonfinite_centroid_yields_null_cells(spark, tmp_path, pixel_scale, tiep
     that went through int cell casts to VALID-LOOKING s2/hex ids; ±inf did
     the same in assign_cells, collapsing every inf row into one cell. Both
     the fused kernel and assign_cells must emit NULL cells for non-finite
-    centroids."""
+    centroids, and for a centroid past a pole, which the kernels wrap onto
+    a valid-looking cell."""
     import numpy as np
 
     from cog3pio_spark.operators.assign import assign_cells
