@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf, pandas_udf
 
-from cog3pio_spark.cells import h3x
+from cog3pio_spark.cells import h3x, s2
 from cog3pio_spark.functions import cells as C
 from cog3pio_spark.functions.geo import EARTH_RADIUS_M
 from cog3pio_spark.operators.probe import (
@@ -139,8 +139,14 @@ def knn_sort_merge(
     # relies on curve adjacency). XOR with the sign bit maps signed order to
     # uint order. ``cuts=`` hints are in this same flipped keyspace (any
     # monotone cut set is CORRECT regardless — cuts only shape buckets).
+    # The key is the raw level-30 kernel's cell, without s2_cell's pole
+    # rule: _finite_rows keeps a finite latitude past a pole, and a NULL
+    # key would break the "_cell is never NULL" invariant below.
     sign_flip = F.lit(-(1 << 63))
-    cell = C.s2_cell(F.col("lat"), F.col("lng"), 30).bitwiseXOR(sign_flip).alias("_cell")
+    cell = C._cell_udf(
+        T.LongType(), lambda la, ln: s2.to_signed(s2.latlng_to_cell(la, ln, 30)),
+        F.col("lat"), F.col("lng"),
+    ).bitwiseXOR(sign_flip).alias("_cell")
     q, p = (
         _finite_rows(df, "lat", "lng").select(
             F.col(c).alias("_id"), F.lit(is_q).alias("_is_q"), "lat", "lng", cell)
@@ -148,7 +154,7 @@ def knn_sort_merge(
     )
     # Materialize the (id, is_q, lat, lng, cell) union ONCE: the bucket
     # count, the quantile cuts, the ghost branches and the window otherwise
-    # each recompute the s2_cell pandas_udf scan (measured 11.8 s → 4 s at
+    # each recompute the curve-key UDF scan (measured 11.8 s → 4 s at
     # sf0.1). localCheckpoint is per-call (no cross-run plan-cache reuse —
     # the CLAUDE.md persist() honesty concern doesn't apply) and truncates
     # lineage so all consumers read the materialized blocks.
@@ -225,8 +231,9 @@ def knn_sort_merge(
         )
         rows = rows.unionByName(lo_ghosts).unionByName(hi_ghosts)
     # _cell is never NULL: _finite_rows drops the NaN/NULL coordinates
-    # whose s2_cell would be NULL (and would make Arrow deliver the whole
-    # bucket's _cell batch as float64, rounding every level-30 carrier)
+    # whose key would be NULL, and the key has no pole rule (a NULL would
+    # make Arrow deliver the whole bucket's _cell batch as float64,
+    # rounding every level-30 carrier)
     rows = rows.drop("_rn", "_n")
 
     # curve-order neighborhood, one task per bucket (ghosts make each frame

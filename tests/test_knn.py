@@ -208,6 +208,29 @@ def test_sort_merge_nan_coord_does_not_corrupt_bucket(spark, clustered):
     assert a == b
 
 
+def test_sort_merge_past_pole_rows_keep_a_curve_key(spark, clustered):
+    """A finite latitude past a pole is kept by _finite_rows, so its curve
+    key must not be NULL: the cell functions' pole rule would make it NULL,
+    and one NULL key turns its bucket's _cell batch into float64, which the
+    kernel refuses. The key is the raw kernel's (wrapped) cell, so the job
+    finishes, the valid queries' neighbors stay the same and the past-pole
+    query finds its own point first."""
+    from cog3pio_spark.operators.knn import knn_sort_merge
+
+    queries, points = clustered
+    clean = knn_sort_merge(queries, points, k=5, scan_width=32, num_buckets=4)
+    a = {(r["query_id"], r["rank"], r["point_id"]) for r in clean.collect()}
+    pole_q = queries.unionByName(
+        spark.createDataFrame([(999, 95.0, 10.0)], ["query_id", "lat", "lng"]))
+    pole_p = points.unionByName(
+        spark.createDataFrame([(99999, 95.0, 10.0)], ["point_id", "lat", "lng"]))
+    out = knn_sort_merge(pole_q, pole_p, k=5, scan_width=32, num_buckets=4).collect()
+    b = {(r["query_id"], r["rank"], r["point_id"]) for r in out if r["query_id"] != 999}
+    assert a == b
+    pole = sorted((r["rank"], r["point_id"]) for r in out if r["query_id"] == 999)
+    assert len(pole) == 5 and pole[0] == (1, 99999)
+
+
 def test_sparse_queries_fall_back(spark, clustered):
     _, points = clustered
     # a query far from every cluster → phase-1 ring finds nothing → fallback

@@ -259,6 +259,7 @@ def _check_bad_chunks(dtype: str, comp: str, tiled: bool) -> None:
     )
     n_chunks = len(CogReader(raw).tags[o_tag])
     assert n_chunks == (12 if tiled else 5)
+    mid = 5 if tiled else 2  # tile 5: second tile row, second column
     row = (TILE if tiled else w) * 3 * np.dtype(dtype).itemsize  # one chunk row
     # bytes after a deflate stream's end are not part of the stream
     raw_long = comp != "deflate"
@@ -280,7 +281,7 @@ def _check_bad_chunks(dtype: str, comp: str, tiled: bool) -> None:
             _assert_same(reader, window, refuses)
 
     for name, (mutate, must_raise, diverges) in mutations.items():
-        for bad in (0, n_chunks // 2, n_chunks - 1):
+        for bad in (0, mid, n_chunks - 1):
             reader = CogReader(raw)
             offs, counts = list(reader.tags[o_tag]), list(reader.tags[c_tag])
             offs[bad], counts[bad] = mutate(offs[bad], counts[bad])
@@ -292,10 +293,10 @@ def _check_bad_chunks(dtype: str, comp: str, tiled: bool) -> None:
     # a short chunk beside a long one: together they hold two chunks' bytes
     reader = CogReader(raw)
     counts = list(reader.tags[c_tag])
-    counts[n_chunks // 2 - 1] -= 6
-    counts[n_chunks // 2] += 6
+    counts[mid - 1] -= 6
+    counts[mid] += 6
     reader.tags[c_tag] = counts
-    check(reader, {n_chunks // 2 - 1, n_chunks // 2}, raw_long)
+    check(reader, {mid - 1, mid}, raw_long)
     with pytest.raises(TiffDecodeError):
         reader.to_numpy()
 
