@@ -157,23 +157,16 @@ def _bbox_pairs_grid(px, py, pack):
     """Grid-index candidate generation: O(points × avg bucket) instead of
     O(points × polys). Ragged CSR gather fully vectorized (repeat + cumsum)."""
     gx, gy, x0, y0, sx, sy, x1, y1 = pack["grid"]
-    cx = ((px - x0) / sx).astype(np.int64)
-    cy = ((py - y0) / sy).astype(np.int64)
+    # only points inside the layer's TRUE extent (r4 float-edge fix) get a
+    # cell: NaN and ±inf fail these comparisons, so the int64 cast never
+    # sees them (the fused kernel passes error rows' centroids in as NaN)
+    pt = np.nonzero((px >= x0) & (px <= x1) & (py >= y0) & (py <= y1))[0]
     # points exactly on the layer's max extent belong to the last cell (the
     # PIP contract is boundary-inclusive; strict cx < gx would drop them and
-    # diverge from the dense path — ADVICE r1). Out-of-extent stays
-    # rejected. Compare against the TRUE extent (r4 float-edge fix).
-    cx = np.where((px <= x1) & (cx >= gx), gx - 1, cx)
-    cy = np.where((py <= y1) & (cy >= gy), gy - 1, cy)
-    # both axes finite (r5 review: only px was guarded — NaN py reached the
-    # int64 cast whose result is undefined, surviving only via accidental
-    # NaN-comparison fallthrough + a RuntimeWarning flood per batch)
-    inside = (
-        (cx >= 0) & (cx < gx) & (cy >= 0) & (cy < gy)
-        & np.isfinite(px) & np.isfinite(py)
-    )
-    pt = np.nonzero(inside)[0]
-    cell = cx[pt] * gy + cy[pt]
+    # diverge from the dense path — ADVICE r1)
+    cx = np.minimum(((px[pt] - x0) / sx).astype(np.int64), gx - 1)
+    cy = np.minimum(((py[pt] - y0) / sy).astype(np.int64), gy - 1)
+    cell = cx * gy + cy
     start = pack["grid_start"][cell]
     cnt = pack["grid_start"][cell + 1] - start
     if cnt.sum() == 0:

@@ -32,80 +32,34 @@ from pyspark.sql import functions as F
 from cog3pio_spark.operators.tile_kernel import fused_decode_assign_pip
 
 
-def media_spans(docs: DataFrame) -> DataFrame:
-    """posexplode preserving span order: (doc_id, pos, kind, text, media_ref, offset)."""
-    return docs.select(
-        "doc_id", F.posexplode("spans").alias("pos", "span")
-    ).select(
-        "doc_id",
-        "pos",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
+def media_spans(docs: DataFrame, carry: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+    """posexplode preserving span order: ``(*carry, pos, kind, text,
+    media_ref, offset)``, ``carry`` being the doc columns kept on each span.
 
-
-def doc_media_refs(docs: DataFrame, prune_text: bool = False) -> DataFrame:
-    """(doc_id, media_ref) — one row per media span. Two plan shapes, same
-    output (pinned by test_plans.py::test_doc_media_refs_pruned_scan_equal):
-
-    ``prune_text=False`` (default): posexplode + subfield projection.
-    Catalyst's nested-schema pruning does NOT fire through posexplode — the
-    text subfield IS read and decoded from parquet. Generate is codegen'd
-    while HOF lambdas are interpreted (2.25s vs 9.6s on 72M spans for the
-    filter/transform formulation — do not "fix" this with F.transform: it
-    measured 7.6s AND still read text).
-
-    ``prune_text=True``: GetArrayStructFields extraction (``spans.kind``,
-    ``spans.media_ref`` — direct ExtractValue, no lambda) zipped with
-    arrays_zip, then exploded. Pruning FIRES: ReadSchema drops text+offset
-    (81% of the bench table's compressed bytes). Cost is one zipped array
-    materialization per doc, so the winner depends on text bytes per span
-    (measured, 32 cores, page-cached):
-
-      * thin spans (bench table, ~12 compressed B/span): default 1.9s vs
-        pruned 2.8s — per-span zip overhead beats the free cached IO;
-      * fat spans (~450 B/span, 0.7 GB): default 0.99s vs pruned 0.45s.
-
-    At 100 TB the data is NOT in page cache and real web spans are KBs, so
-    prune_text=True is the cluster shape: it turns an 81%-of-bytes column
-    into zero IO. The local default stays False only because the sandbox
-    bench corpus has 40-char spans and fully cached files.
+    The package's one span explode: batch (``doc_media_refs``) and
+    streaming (streaming/ingest.py) consumers both select from it, and
+    Catalyst prunes the fields a consumer drops. Nested-schema pruning does
+    NOT fire through posexplode, so the text subfield is still read and
+    decoded from parquet. Generate is codegen'd while HOF lambdas are
+    interpreted (2.25s vs 9.6s on 72M spans for the filter/transform
+    formulation — do not "fix" this with F.transform: it measured 7.6s AND
+    still read text). A GetArrayStructFields + arrays_zip + explode shape
+    does prune text, but pays a zipped array per doc and measured slower on
+    thin spans, the only span corpus the benchmark has (BENCH/BASELINE.md
+    "Span-scan nested pruning").
     """
-    if prune_text:
-        slim = docs.select(
-            "doc_id",
-            F.arrays_zip(
-                F.col("spans.kind").alias("kind"),
-                F.col("spans.media_ref").alias("media_ref"),
-            ).alias("sp"),
-        )
-        return (
-            slim.select("doc_id", F.explode("sp").alias("s"))
-            .select(
-                "doc_id",
-                F.col("s.kind").alias("kind"),
-                F.col("s.media_ref").alias("media_ref"),
-            )
-            .filter(F.col("kind") == "media")
-            .drop("kind")
-        )
-    return (
-        docs.select("doc_id", F.posexplode("spans").alias("pos", "span"))
-        .select(
-            "doc_id",
-            F.col("span.kind").alias("kind"),
-            F.col("span.media_ref").alias("media_ref"),
-        )
-        .filter(F.col("kind") == "media")
-        .drop("kind")
+    fields = ("kind", "text", "media_ref", "offset")
+    return docs.select(*carry, F.posexplode("spans").alias("pos", "span")).select(
+        *carry, "pos", *(F.col(f"span.{f}").alias(f) for f in fields)
     )
 
 
-def flagship_enriched(
-    docs: DataFrame, polygons: DataFrame, prune_text: bool = False
-) -> DataFrame:
+def doc_media_refs(docs: DataFrame) -> DataFrame:
+    """(doc_id, media_ref) — one row per media span."""
+    return media_spans(docs).filter(F.col("kind") == "media").select("doc_id", "media_ref")
+
+
+def flagship_enriched(docs: DataFrame, polygons: DataFrame) -> DataFrame:
     """The flagship's enriched intermediate: one row per (media_ref,
     polygon) carrying decode stats + cell assignments + pre-aggregated span
     stats (ref_spans, doc_sketch). Exposed (r5) so jobs needing BOTH the
@@ -113,8 +67,7 @@ def flagship_enriched(
     decode+assign+PIP kernel ONCE (localCheckpoint and derive both) instead
     of once per consumer — run_flagship.py previously decoded every tile
     twice per submission."""
-    span_refs = doc_media_refs(docs, prune_text=prune_text)
-    per_ref = span_refs.groupBy("media_ref").agg(
+    per_ref = doc_media_refs(docs).groupBy("media_ref").agg(
         F.count("*").alias("ref_spans"),
         F.hll_sketch_agg(F.xxhash64("doc_id"), F.lit(10)).alias("doc_sketch"),
     )
@@ -137,15 +90,12 @@ def flagship_aggregate(enriched: DataFrame) -> DataFrame:
     )
 
 
-def flagship_pipeline(
-    docs: DataFrame, polygons: DataFrame, prune_text: bool = False
-) -> DataFrame:
+def flagship_pipeline(docs: DataFrame, polygons: DataFrame) -> DataFrame:
     """Docs → per-polygon tile/doc counts, the end-to-end spine (SURVEY M1).
 
     Plan shape (scale rationale in the module docstring):
-      * span side: ONE pass over (doc_id, spans) — with ``prune_text=True``
-        the parquet scan reads only the kind/media_ref subfields (the
-        cluster shape; see doc_media_refs for the measured trade);
+      * span side: ONE pass over (doc_id, spans), one posexplode
+        (``media_spans``; the scan reads every span subfield);
       * ref side: per-ref span count + HLL sketch (one shuffle on one
         narrow key) → repartition (AQE would coalesce the tiny ref set to 1
         partition and serialize the decode — Amdahl) → fused
@@ -167,4 +117,4 @@ def flagship_pipeline(
     # sketches (±3.3% doc-count error), 4× less shuffle than default.
     # no orderBy: global sort adds a range-sampling job per run; callers
     # that need canonical order (golden tests) sort the tiny result.
-    return flagship_aggregate(flagship_enriched(docs, polygons, prune_text))
+    return flagship_aggregate(flagship_enriched(docs, polygons))

@@ -1,19 +1,26 @@
 """AvailableNow streaming ingest over the interleaved-doc table.
 
-Batch/stream parity: the transformation body is the same media-span explode
-used by plans/flagship.py, so a row that flows through the stream and the
-same row processed in batch produce identical span rows (tested in
-tests/test_streaming.py). Late data is handled with a watermark on the
-ingest timestamp; counts use tumbling windows.
+Batch/stream parity by construction: every span consumer here selects from
+plans/flagship.py::media_spans, the one span explode batch uses too, so a
+row that flows through the stream and the same row processed in batch
+produce identical span rows (checked against independent inline explodes
+in tests/test_streaming.py). Late data is handled with a watermark on the
+ingest timestamp; counts use tumbling windows. Every query drains with
+``Trigger.AvailableNow`` (``_drain``); the foreachBatch pipelines write one
+idempotent partition per epoch (``_epoch_sink``).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+
+from cog3pio_spark.plans.flagship import flagship_pipeline, media_spans
 
 
 def doc_stream_schema() -> T.StructType:
@@ -34,6 +41,44 @@ def doc_stream_schema() -> T.StructType:
     )
 
 
+def _drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """Start ``writer`` with ``Trigger.AvailableNow``: process every file
+    available now, exactly once per checkpoint, and return when drained."""
+    writer.option("checkpointLocation", checkpoint_dir).trigger(
+        availableNow=True
+    ).start().awaitTermination()
+
+
+def _epoch_sink(
+    stream: DataFrame,
+    build: Callable[[DataFrame], DataFrame | None],
+    out_dir: str,
+    checkpoint_dir: str,
+) -> None:
+    """Drain ``stream`` through foreachBatch, writing ``build(micro_batch)``
+    (``None``: nothing to write) as partition ``_epoch=<epoch id>`` of
+    ``out_dir``. The sink is IDEMPOTENT per epoch: dynamic partition
+    overwrite makes a batch replayed after a crash-between-write-and-commit
+    overwrite its own partition instead of appending duplicates
+    (foreachBatch alone is only at-least-once)."""
+
+    def _batch(df: DataFrame, epoch_id: int) -> None:
+        out = build(df)
+        if out is None:
+            return
+        # overwrite mode scoped to the write (ADVICE r2: a session-level
+        # conf mutation would silently change later static overwrites)
+        (
+            out.withColumn("_epoch", F.lit(epoch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_epoch")
+            .parquet(out_dir)
+        )
+
+    _drain(stream.writeStream.foreachBatch(_batch), checkpoint_dir)
+
+
 def available_now_ingest(
     spark: SparkSession, input_dir: str, checkpoint_dir: str, out_dir: str
 ) -> None:
@@ -52,28 +97,11 @@ def available_now_ingest(
         .load(input_dir)
     )
     spans = (
-        stream.select("doc_id", "ingest_ts", F.posexplode("spans").alias("pos", "span"))
-        .select(
-            "doc_id",
-            "ingest_ts",
-            "pos",
-            F.col("span.kind").alias("kind"),
-            F.col("span.media_ref").alias("media_ref"),
-        )
+        media_spans(stream, carry=("doc_id", "ingest_ts"))
         .filter(F.col("kind") == "media")
-        # r5 review: after the filter 'kind' is the constant 'media' on
-        # every row — drop it from the sink (doc_media_refs in
-        # plans/flagship.py drops it too; batch/stream schema parity)
-        .drop("kind")
+        .select("doc_id", "ingest_ts", "pos", "media_ref")
     )
-    q = (
-        spans.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spans.writeStream.format("parquet").option("path", out_dir), checkpoint_dir)
 
 
 def first_seen_media_refs(
@@ -91,9 +119,9 @@ def first_seen_media_refs(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     spans = (
-        docs_stream.select(F.explode("spans").alias("span"))
-        .filter(F.col("span.kind") == "media")
-        .select(F.col("span.media_ref").alias("media_ref"))
+        media_spans(docs_stream, carry=())
+        .filter(F.col("kind") == "media")
+        .select("media_ref")
     )
 
     out_schema = T.StructType(
@@ -120,25 +148,18 @@ def first_seen_media_refs(
     deduped = spans.groupBy("media_ref").applyInPandasWithState(
         handler, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        deduped.writeStream.format("parquet").option("path", out_dir).outputMode("append"),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def windowed_media_counts(docs_stream: DataFrame, window: str = "10 minutes") -> DataFrame:
     """Watermarked tumbling-window media-span counts (late data ≤ 1 window)."""
-    spans = docs_stream.select(
-        "ingest_ts", F.explode("spans").alias("span")
-    ).filter(F.col("span.kind") == "media")
+    spans = media_spans(docs_stream, carry=("ingest_ts",)).filter(F.col("kind") == "media")
     return (
         spans.withWatermark("ingest_ts", window)
-        .groupBy(F.window("ingest_ts", window).alias("win"), F.col("span.media_ref").alias("media_ref"))
+        .groupBy(F.window("ingest_ts", window).alias("win"), "media_ref")
         .agg(F.count("*").alias("n_spans"))
     )
 
@@ -148,18 +169,16 @@ def streaming_flagship(
     polygons: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    prune_text: bool = False,
 ) -> None:
     """Continuous ingest of the FLAGSHIP pipeline (r3): each micro-batch of
     interleaved docs runs the exact batch operator chain — span explode →
     media_ref pre-agg + HLL doc sketches → fused decode/assign/PIP kernel →
     per-polygon rollup — via foreachBatch against the static polygon layer.
 
-    Output is one per-polygon aggregate row set PER EPOCH, partitioned by
-    ``_epoch`` with dynamic partition overwrite, so a replayed batch
-    overwrites its own partition (idempotent, same contract as
-    streaming_knn). Epoch rows are incremental rollups: exactly what the
-    batch pipeline produces on that epoch's documents (parity pinned in
+    Output is one per-polygon aggregate row set PER EPOCH, written by
+    ``_epoch_sink`` (idempotent per epoch, as streaming_knn). Epoch rows
+    are incremental rollups: exactly what the batch pipeline produces on
+    that epoch's documents (parity pinned in
     tests/test_streaming.py::test_streaming_flagship_matches_batch).
     Cross-epoch totals are a plain second-stage groupBy for the additive
     columns (n_spans, sum_tile_mean — per-span quantities partition across
@@ -171,27 +190,12 @@ def streaming_flagship(
     needing global distinct docs or tiles run the batch pipeline over the
     drained table.
     """
-    from cog3pio_spark.plans.flagship import flagship_pipeline
-
-    def _batch(df: DataFrame, epoch_id: int) -> None:
-        if df.isEmpty():
-            return
-        (
-            flagship_pipeline(df, polygons, prune_text=prune_text)
-            .withColumn("_epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(out_dir)
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _epoch_sink(
+        docs_stream,
+        lambda df: None if df.isEmpty() else flagship_pipeline(df, polygons),
+        out_dir,
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def _query_chunks(df: DataFrame, size: int) -> list[DataFrame]:
@@ -223,38 +227,18 @@ def streaming_knn(
     micro-batch enrichment is the idiomatic shape). knn_join collects its
     queries to pick their tiers, at most MAX_QUERIES of them, so a larger
     micro-batch is served in chunks of that size (``_query_chunks``) and
-    written as one epoch. Resume comes from the stream checkpoint, and the sink is IDEMPOTENT per epoch: results are
-    partitioned by _epoch and written with dynamic partition overwrite, so a
-    batch replayed after a crash-between-write-and-commit overwrites its own
-    partition instead of appending duplicates (foreachBatch alone is only
-    at-least-once).
+    written as one epoch. Resume comes from the stream checkpoint, and
+    ``_epoch_sink`` makes the sink idempotent per epoch.
     """
-    from pyspark.sql import functions as F  # noqa: F811 (worker import)
-
     from cog3pio_spark.operators import knn
 
-    def _batch(df: DataFrame, epoch_id: int) -> None:
+    def _build(df: DataFrame) -> DataFrame | None:
         chunks = _query_chunks(df, knn.MAX_QUERIES)
         if not chunks:
-            return
-        out = reduce(
+            return None
+        return reduce(
             DataFrame.unionByName,
             (knn.knn_join(c, points, k=k, res=res, ring=ring) for c in chunks),
         )
-        # overwrite mode scoped to the write (ADVICE r2: a session-level
-        # conf mutation would silently change later static overwrites)
-        (
-            out.withColumn("_epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(out_dir)
-        )
 
-    q = (
-        query_stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _epoch_sink(query_stream, _build, out_dir, checkpoint_dir)

@@ -455,6 +455,50 @@ def test_pip_grid_max_extent_matches_dense(spark):
     assert nan_got == {("ok", "p165")}
 
 
+def test_pip_grid_non_finite_points_cast_nothing(spark):
+    """The grid path computes cells only for points inside the layer
+    extent: NaN/±inf coordinates (the fused kernel's error rows) reach no
+    float→int64 cast, so no RuntimeWarning, and the pairs equal those of
+    the finite points alone."""
+    import warnings
+
+    from cog3pio_spark.fixtures.polygons import polygon_schema
+    from cog3pio_spark.operators.pip_join import (
+        GRID_THRESHOLD,
+        _pip_candidates,
+        pack_polygons,
+    )
+
+    def square(i):
+        x, y = float(i % 30), float(i // 30)
+        ring = [(x, y), (x + 1, y), (x + 1, y + 1), (x, y + 1), (x, y)]
+        bbox = {"xmin": x, "ymin": y, "xmax": x + 1, "ymax": y + 1}
+        return f"p{i:03d}", [{"x": u, "y": v} for u, v in ring], bbox
+
+    # 300 unit squares tiling [0,30]x[0,10]: above GRID_THRESHOLD → grid
+    polys = [square(i) for i in range(GRID_THRESHOLD + 44)]
+    pack = pack_polygons(spark.createDataFrame(polys, polygon_schema()))
+    assert "grid" in pack
+
+    rng = np.random.RandomState(3)
+    # finite points in, on the edge of and around the layer extent
+    fx = np.concatenate([rng.uniform(-2, 32, 400), [0.0, 30.0, -1e-9, 30.0 + 1e-9]])
+    fy = np.concatenate([rng.uniform(-2, 12, 400), [0.0, 10.0, 5.0, 5.0]])
+    inf = np.inf
+    bad = [(np.nan, 5.5), (inf, 5.5), (-inf, 5.5), (5.5, np.nan), (5.5, inf),
+           (5.5, -inf), (np.nan, np.nan), (inf, -inf), (-inf, inf)]
+    bx, by = np.array(bad).T
+    px = np.concatenate([bx[:6], fx, bx[6:]])
+    py = np.concatenate([by[:6], fy, by[6:]])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got_pt, got_pg = _pip_candidates(px, py, pack)
+        want_pt, want_pg = _pip_candidates(fx, fy, pack)
+    assert len(want_pt) > 200
+    np.testing.assert_array_equal(got_pt, want_pt + 6)  # finite rows start at 6
+    np.testing.assert_array_equal(got_pg, want_pg)
+
+
 def test_pip_join_polygon_with_holes(spark):
     """Donut polygon: points in the hole are NOT contained; points in the
     ring body are; points exactly on the hole boundary are (inclusive)."""

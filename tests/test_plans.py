@@ -49,30 +49,31 @@ def test_filter_pushdown_reaches_scan(spark):
     assert "ReadSchema: struct<l_orderkey:bigint,l_quantity:double>" in plan
 
 
-def test_doc_media_refs_pruned_scan_equal(spark, tmp_path):
-    """prune_text=True must (a) produce exactly the default variant's output
-    and (b) drop the text/offset subfields from the parquet ReadSchema —
-    VERDICT r2 #5 ('explain() shows spans.text absent from ReadSchema with
-    identical pipeline output'). text is 81% of the bench table's compressed
-    bytes; uncached cluster scans skip it entirely."""
+def test_flagship_shuffle_inventory(spark, tmp_path):
+    """flagship_pipeline's initial physical plan holds exactly the module
+    docstring's inventory: three exchanges — hashpartitioning(media_ref),
+    round-robin, hashpartitioning(polygon_id) — one posexplode over spans
+    and one Python stage, the fused tile kernel's MapInArrow."""
+    import re
+
     from cog3pio_spark.fixtures.docs import interleaved_docs
-    from cog3pio_spark.plans.flagship import doc_media_refs
+    from cog3pio_spark.fixtures.polygons import polygons_df
+    from cog3pio_spark.plans.flagship import flagship_pipeline
 
     p = str(tmp_path / "docs")
-    interleaved_docs(spark, 500, ["file:///a.tif", "file:///b.tif"]).write.parquet(p)
-    docs = spark.read.parquet(p)
+    interleaved_docs(spark, 200, ["file:///a.tif", "file:///b.tif"]).write.parquet(p)
+    plan = _plan(flagship_pipeline(spark.read.parquet(p), polygons_df(spark, 4)))
 
-    base = doc_media_refs(docs)
-    pruned = doc_media_refs(docs, prune_text=True)
-    a = sorted((r["doc_id"], r["media_ref"]) for r in base.collect())
-    b = sorted((r["doc_id"], r["media_ref"]) for r in pruned.collect())
-    assert a == b and len(a) > 0
-
-    plan = _plan(pruned)
-    read = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert read and "text" not in read[0] and "offset" not in read[0], read
-    base_read = [ln for ln in _plan(base).splitlines() if "ReadSchema" in ln]
-    assert "text" in base_read[0]  # the default shape really does read it
+    assert plan.count("Exchange ") == 3, plan
+    # printed top-down: the polygon rollup's shuffle first
+    assert re.findall(r"Exchange (hashpartitioning\(\w+|RoundRobinPartitioning)", plan) == [
+        "hashpartitioning(polygon_id",
+        "RoundRobinPartitioning",
+        "hashpartitioning(media_ref",
+    ], plan
+    assert re.findall(r"Generate (\w+)\((\w+)", plan) == [("posexplode", "spans")], plan
+    python_nodes = re.findall(r"\b(\w*(?:Python|InPandas|InArrow)\w*)\b", plan)
+    assert python_nodes == ["MapInArrow"], plan
 
 
 @pytest.mark.parametrize(

@@ -121,6 +121,22 @@ def test_available_now_drains_and_resumes(spark, doc_files, tmp_path):
     assert diff == 0
 
 
+def test_available_now_sink_schema(spark, doc_files, tmp_path):
+    """The sink's columns — names, types and order — are its resume
+    contract: a run resuming into an existing sink dir must write the same
+    schema (see available_now_ingest's SINK SCHEMA NOTE)."""
+    input_dir, _ = doc_files
+    out = str(tmp_path / "out")
+    available_now_ingest(spark, input_dir, str(tmp_path / "ckpt"), out)
+    got = [(f.name, f.dataType.simpleString()) for f in spark.read.parquet(out).schema]
+    assert got == [
+        ("doc_id", "string"),
+        ("ingest_ts", "timestamp"),
+        ("pos", "int"),
+        ("media_ref", "string"),
+    ]
+
+
 def test_streaming_knn_matches_batch(spark, tmp_path):
     """foreachBatch kNN: streamed queries produce EXACTLY the batch ring-kNN
     rows; a checkpoint-resumed second run reprocesses nothing."""
