@@ -7,6 +7,14 @@ progressive) decode to (bands, h, w) uint8 tensors. Arithmetic-coded,
 lossless and hierarchical streams raise an honest ``unsupported error`` —
 never a faked decode.
 
+There is one scan decoder. A sequential frame's single scan is a first scan
+(Ah=0) over the full band Ss=0..Se=63 (ITU-T T.81 §G.1.2), so it runs the
+same path as a progressive scan: every scan fills a per-component zigzag
+coefficient store, and one vectorized dequantize + IDCT runs after the
+last. A scan's component count picks its block order (§A.2.2): several
+components interleave in MCU order, one component runs over its own raster
+grid.
+
 Correctness is pinned the same way as the TIFF codecs: a second independent
 implementation (Java ImageIO via the Spark JVM) encodes fixtures and
 provides reference decodes; tests compare per-pixel within a small IDCT
@@ -27,6 +35,7 @@ contract (the Spark operators only see the contract).
 
 from __future__ import annotations
 
+import itertools
 import struct
 
 import numpy as np
@@ -256,7 +265,7 @@ def _decode_jpeg_stream(raw: bytes) -> np.ndarray:
                     "ri": restart_interval,
                 }
             )
-            if frame is not None and not frame.get("progressive"):
+            if frame is not None and not frame["progressive"]:
                 break  # single-scan sequential: decode below
         elif marker == 0xEE:  # APP14 'Adobe': color-transform declaration
             if seg[:5] == b"Adobe" and len(seg) >= 12:
@@ -270,92 +279,9 @@ def _decode_jpeg_stream(raw: bytes) -> np.ndarray:
     # ids) stores RGB directly and was silently garbled by the matrix.
     ids = [c["id"] for c in frame["comps"]]
     frame["rgb_direct"] = adobe_transform == 0 or ids == [0x52, 0x47, 0x42]
-    if frame.get("progressive"):
-        planes, comps, max_h, max_v = _decode_progressive_scans(
-            frame, scans, qtables
-        )
-        return _assemble_output(planes, comps, frame, max_h, max_v)
-    scan = scans[0]
-    comps = frame["comps"]
-    by_id = {c["id"]: c for c in comps}
-    for sc in scan["comps"]:
-        if sc["id"] not in by_id:
-            raise JpegDecodeError("Cannot parse JPEG: scan component mismatch")
-        by_id[sc["id"]]["dc_t"] = sc["dc"]
-        by_id[sc["id"]]["ac_t"] = sc["ac"]
-    if len(scan["comps"]) < len(comps):
-        # spec-legal but rare: one SOS per component; the interleaved-MCU
-        # loop below cannot decode it — refuse honestly (r3 review)
-        raise JpegDecodeError(
-            "unsupported error: non-interleaved JPEG scan is unsupported"
-        )
-
-    h, w = frame["h"], frame["w"]
-    max_h = max(c["h"] for c in comps)
-    max_v = max(c["v"] for c in comps)
-    mcus_x = -(-w // (8 * max_h))
-    mcus_y = -(-h // (8 * max_v))
-    _check_blocks_vs_entropy(
-        mcus_x * mcus_y * sum(c["h"] * c["v"] for c in comps),
-        sum(len(s) for s in scan["segments"]),
-    )
-    planes = {
-        c["id"]: np.zeros((mcus_y * c["v"] * 8, mcus_x * c["h"] * 8), dtype=np.float64)
-        for c in comps
-    }
-
-    seg_iter = iter(scan["segments"])
-    reader = _BitReader(next(seg_iter))
-    pred = {c["id"]: 0 for c in comps}
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                try:
-                    reader = _BitReader(next(seg_iter))  # RST: new segment,
-                except StopIteration:
-                    raise JpegDecodeError(
-                        "Cannot decode JPEG: entropy data truncated "
-                        "(missing restart segment)"
-                    ) from None
-                pred = {c["id"]: 0 for c in comps}  # predictors reset
-            for c in comps:
-                dc_t = htables.get((0, c["dc_t"]))
-                ac_t = htables.get((1, c["ac_t"]))
-                q = qtables.get(c["tq"])
-                if dc_t is None or ac_t is None or q is None:
-                    raise JpegDecodeError("Cannot parse JPEG: missing table")
-                for v in range(c["v"]):
-                    for hh in range(c["h"]):
-                        zz = np.zeros(64, dtype=np.int32)
-                        t = reader.read_huffman(dc_t)
-                        diff = _extend(reader.read_bits(t), t)
-                        pred[c["id"]] += diff
-                        zz[0] = pred[c["id"]]
-                        k = 1
-                        while k < 64:
-                            rs = reader.read_huffman(ac_t)
-                            r, s = rs >> 4, rs & 0x0F
-                            if s == 0:
-                                if r == 15:  # ZRL: 16 zeros
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise JpegDecodeError(
-                                    "Cannot decode JPEG: AC index overflow"
-                                )
-                            zz[k] = _extend(reader.read_bits(s), s)
-                            k += 1
-                        block = np.zeros(64, dtype=np.float64)
-                        block[_ZIGZAG] = zz * q
-                        spatial = _C.T @ block.reshape(8, 8) @ _C
-                        y0 = (my * c["v"] + v) * 8
-                        x0 = (mx * c["h"] + hh) * 8
-                        planes[c["id"]][y0 : y0 + 8, x0 : x0 + 8] = spatial
-            mcu_count += 1
-
+    if not frame["progressive"]:
+        scans = scans[:1]  # a sequential frame decodes its first scan only
+    planes, comps, max_h, max_v = _decode_scans(frame, scans, qtables)
     return _assemble_output(planes, comps, frame, max_h, max_v)
 
 
@@ -425,11 +351,12 @@ def _assemble_output(
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
 
-# -- progressive (SOF2): spectral selection + successive approximation -------
+# -- scans: spectral selection + successive approximation --------------------
 # Algorithms follow ITU-T T.81 §G.1.2 (and match libjpeg's
 # decode_mcu_DC_first/DC_refine/AC_first/AC_refine structure, re-derived from
 # the spec): coefficients accumulate across scans in zigzag order; IDCT and
-# dequantization happen once, after every scan has contributed.
+# dequantization happen once, after every scan has contributed. A sequential
+# scan is the one-scan case: a DC and AC first scan over the full band.
 
 
 def _dc_unit(reader, tbl, zz, ah, al, state, cid):
@@ -448,8 +375,8 @@ def _dc_unit(reader, tbl, zz, ah, al, state, cid):
 
 
 def _ac_first_unit(reader, tbl, zz, ss, se, al, state):
-    """First AC scan of a band (Ah=0): like baseline AC decoding restricted
-    to [Ss, Se], plus EOBn run-length codes spanning whole blocks."""
+    """First AC scan of a band (Ah=0): AC decoding restricted to [Ss, Se];
+    progressive scans add EOBn run-length codes spanning whole blocks."""
     if state["eobrun"] > 0:
         state["eobrun"] -= 1
         return
@@ -463,10 +390,12 @@ def _ac_first_unit(reader, tbl, zz, ss, se, al, state):
             if r == 15:  # ZRL: 16 zeros
                 k += 16
                 continue
-            # EOBn: this block ends; (1<<r)+bits−1 further blocks end too
-            state["eobrun"] = (1 << r) - 1
-            if r:
-                state["eobrun"] += reader.read_bits(r)
+            # EOBn: this block ends; (1<<r)+bits−1 further blocks end too.
+            # A sequential scan has no EOBn: every r/0 just ends the block.
+            if state["eobn"]:
+                state["eobrun"] = (1 << r) - 1
+                if r:
+                    state["eobrun"] += reader.read_bits(r)
             break
         k += r
         if k > se:
@@ -527,88 +456,95 @@ def _ac_refine_unit(reader, tbl, zz, ss, se, al, state):
         state["eobrun"] -= 1
 
 
-def _decode_one_progressive_scan(
-    scan, frame, by_id, coefs, mcus_x, mcus_y, max_h, max_v
-):
-    ss, se, ah, al = scan["ss"], scan["se"], scan["ah"], scan["al"]
+def _decode_scan(scan, frame, by_id, coefs, mcus_x, mcus_y, max_h, max_v):
+    """Decode one scan into the coefficient store. Each block takes its DC
+    (Ss=0), then, in every scan but a DC-only one, its AC band
+    [max(Ss,1), Se] — as a first scan (Ah=0) or a refinement."""
     htables, ri = scan["htables"], scan["ri"]
     h, w = frame["h"], frame["w"]
+    progressive = frame["progressive"]
     scomps = scan["comps"]
     for sc in scomps:
         if sc["id"] not in by_id:
             raise JpegDecodeError("Cannot parse JPEG: scan component mismatch")
-    dc_scan = ss == 0
-    if dc_scan and se != 0:
-        raise JpegDecodeError(
-            "Cannot decode JPEG: progressive DC scan must have Se=0"
-        )
-    if not dc_scan and len(scomps) != 1:
-        raise JpegDecodeError(
-            "Cannot decode JPEG: progressive AC scan must be single-component"
-        )
+    if progressive:
+        ss, se, ah, al = scan["ss"], scan["se"], scan["ah"], scan["al"]
+        if ss == 0 and se != 0:
+            raise JpegDecodeError(
+                "Cannot decode JPEG: progressive DC scan must have Se=0"
+            )
+        if ss != 0 and len(scomps) != 1:
+            raise JpegDecodeError(
+                "Cannot decode JPEG: progressive AC scan must be single-component"
+            )
+    else:
+        # a sequential scan is one first scan over the full band (T.81
+        # §G.1.2), whatever its Ss/Se/Ah/Al bytes hold, and codes every
+        # frame component in frame order
+        ss, se, ah, al = 0, 63, 0, 0
+        if len(scomps) < len(frame["comps"]):
+            # spec-legal but rare: one SOS per component — refuse honestly
+            # (r3 review)
+            raise JpegDecodeError(
+                "unsupported error: non-interleaved JPEG scan is unsupported"
+            )
+        sel = {sc["id"]: sc for sc in scomps}
+        scomps = [sel[c["id"]] for c in frame["comps"]]
 
+    # block layout of one unit: (cid, dc table, ac table, unit→block scale
+    # y/x, offset y/x) per coded block
+    if len(scomps) > 1:
+        # interleaved: MCU order over every scan component's blocks
+        grid = (mcus_y, mcus_x)
+        layout = [
+            (sc["id"], htables.get((0, sc["dc"])), htables.get((1, sc["ac"])),
+             c["v"], c["h"], v, hh)
+            for sc in scomps
+            for c in (by_id[sc["id"]],)
+            for v in range(c["v"])
+            for hh in range(c["h"])
+        ]
+    else:
+        # one component: its own raster grid (ceil(comp_dim/8)), not MCU
+        # order — MCU-padding blocks are not coded (T.81 §A.2.2)
+        sc = scomps[0]
+        c = by_id[sc["id"]]
+        comp_h, comp_w = -(-h * c["v"] // max_v), -(-w * c["h"] // max_h)
+        grid = (-(-comp_h // 8), -(-comp_w // 8))
+        layout = [
+            (sc["id"], htables.get((0, sc["dc"])), htables.get((1, sc["ac"])),
+             1, 1, 0, 0)
+        ]
+
+    ac_unit = _ac_refine_unit if ah else _ac_first_unit
     seg_iter = iter(scan["segments"])
     reader = _BitReader(next(seg_iter))
-    state = {"eobrun": 0, "pred": {sc["id"]: 0 for sc in scomps}}
-
-    def restart():
-        nonlocal reader
-        try:
-            reader = _BitReader(next(seg_iter))
-        except StopIteration:
-            raise JpegDecodeError(
-                "Cannot decode JPEG: entropy data truncated "
-                "(missing restart segment)"
-            ) from None
-        state["eobrun"] = 0
-        state["pred"] = {sc["id"]: 0 for sc in scomps}
-
-    if dc_scan and len(scomps) > 1:
-        # interleaved DC scan: MCU order over every scan component's blocks
-        mcu_count = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if ri and mcu_count and mcu_count % ri == 0:
-                    restart()
-                for sc in scomps:
-                    c = by_id[sc["id"]]
-                    tbl = htables.get((0, sc["dc"]))
-                    for v in range(c["v"]):
-                        for hh in range(c["h"]):
-                            zz = coefs[c["id"]][my * c["v"] + v, mx * c["h"] + hh]
-                            _dc_unit(reader, tbl, zz, ah, al, state, sc["id"])
-                mcu_count += 1
-        return
-
-    # single-component scan (all AC scans; DC scans with ns=1): block order
-    # is the COMPONENT's own raster grid (ceil(comp_dim/8)), not MCU order —
-    # MCU-padding blocks are not coded (T.81 §A.2.2)
-    sc = scomps[0]
-    c = by_id[sc["id"]]
-    comp_w = -(-w * c["h"] // max_h)
-    comp_h = -(-h * c["v"] // max_v)
-    bw = -(-comp_w // 8)
-    bh = -(-comp_h // 8)
-    tbl = htables.get((0, sc["dc"]) if dc_scan else (1, sc["ac"]))
-    arr = coefs[c["id"]]
-    unit_count = 0
-    for byi in range(bh):
-        for bxi in range(bw):
-            if ri and unit_count and unit_count % ri == 0:
-                restart()
-            zz = arr[byi, bxi]
-            if dc_scan:
-                _dc_unit(reader, tbl, zz, ah, al, state, sc["id"])
-            elif ah == 0:
-                _ac_first_unit(reader, tbl, zz, ss, se, al, state)
-            else:
-                _ac_refine_unit(reader, tbl, zz, ss, se, al, state)
-            unit_count += 1
+    state = {
+        "eobrun": 0, "eobn": progressive, "pred": {sc["id"]: 0 for sc in scomps}
+    }
+    for n, (uy, ux) in enumerate(itertools.product(*map(range, grid))):
+        if ri and n and n % ri == 0:
+            # RST: a new entropy segment; the EOB run and predictors reset
+            try:
+                reader = _BitReader(next(seg_iter))
+            except StopIteration:
+                raise JpegDecodeError(
+                    "Cannot decode JPEG: entropy data truncated "
+                    "(missing restart segment)"
+                ) from None
+            state["eobrun"] = 0
+            state["pred"] = {sc["id"]: 0 for sc in scomps}
+        for cid, dc_t, ac_t, sy, sx, dy, dx in layout:
+            zz = coefs[cid][uy * sy + dy, ux * sx + dx]
+            if ss == 0:
+                _dc_unit(reader, dc_t, zz, ah, al, state, cid)
+            if ss or se:  # every scan but a DC-only one carries an AC band
+                ac_unit(reader, ac_t, zz, max(ss, 1), se, al, state)
 
 
-def _decode_progressive_scans(frame, scans, qtables):
+def _decode_scans(frame, scans, qtables):
     """Run every scan into a per-component zigzag coefficient store, then
-    dequantize + IDCT all blocks at once (vectorized einsum — progressive
+    dequantize + IDCT all blocks at once (vectorized einsum — the decoder
     pays the bit-serial cost only in entropy decoding)."""
     comps = frame["comps"]
     h, w = frame["h"], frame["w"]
@@ -636,9 +572,7 @@ def _decode_progressive_scans(frame, scans, qtables):
                 q0 = scan.get("qtables", {}).get(by_id[cid]["tq"])
                 if q0 is not None:
                     latched[cid] = q0
-        _decode_one_progressive_scan(
-            scan, frame, by_id, coefs, mcus_x, mcus_y, max_h, max_v
-        )
+        _decode_scan(scan, frame, by_id, coefs, mcus_x, mcus_y, max_h, max_v)
     planes = {}
     for c in comps:
         q = latched.get(c["id"], qtables.get(c["tq"]))

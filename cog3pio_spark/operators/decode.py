@@ -72,7 +72,6 @@ def _decode_one(
     fetchers: dict | None = None,
     window: tuple[int, int, int, int] | None = None,
     range_read: bool = False,
-    range_fetchers: dict | None = None,
 ) -> dict:
     """Decode one object. ``overview`` selects the COG pyramid level (0 =
     full res, reference parity; clamped to the deepest available level) —
@@ -86,11 +85,11 @@ def _decode_one(
     open, then exactly the tile ranges the (optional) ``window`` decode
     touches — the cloud-optimized read the reference skips
     (src/python/adapters.rs:158-168 GETs the entire file).
-    ``range_fetchers`` maps schemes to ``fn(ref) -> fetch_range`` factories
-    (file:// built in); refs whose scheme has no range factory fall back to
-    whole-object fetch with the same window semantics. ``fetched_bytes``
-    reports actual IO on the range path (None on the whole-object path —
-    there it is simply the object size)."""
+    file/http/https have range factories; refs of any other scheme, or of
+    a scheme ``fetchers`` supplies, fall back to whole-object fetch with the
+    same window semantics. ``fetched_bytes`` reports actual IO on the range
+    path (None on the whole-object path — there it is simply the object
+    size)."""
     # imports inside the worker function: keeps the closure import-light
     from cog3pio_spark.tiff import reader as R
     from cog3pio_spark.tiff.reader import (
@@ -114,24 +113,15 @@ def _decode_one(
         scheme = ref.split("://", 1)[0] if "://" in ref else "file"
         cache = None
         range_factory = None
-        if range_read:
-            factories = {
+        if range_read and scheme not in (fetchers or {}):
+            # a caller-supplied WHOLE-OBJECT fetcher for this scheme
+            # (decrypting/rewriting refs) is never shadowed by the built-in
+            # range factory (r3 review finding)
+            range_factory = {
                 "file": file_range_fetcher,
                 "http": http_range_fetcher,
                 "https": http_range_fetcher,
-                **(range_fetchers or {}),
-            }
-            range_factory = factories.get(scheme)
-            if (
-                fetchers
-                and scheme in fetchers
-                and scheme not in (range_fetchers or {})
-            ):
-                # a caller-supplied WHOLE-OBJECT fetcher for this scheme
-                # (decrypting/rewriting refs) must not be shadowed by the
-                # built-in range factory (r3 review finding): fall back to
-                # it unless the caller also supplied a range factory
-                range_factory = None
+            }.get(scheme)
         if range_factory is not None:
             probe = CogReader.from_fetcher(range_factory(ref))
             cache = probe.range_cache
@@ -212,7 +202,6 @@ def decode_tiles(
     fetchers: dict | None = None,
     window: tuple[int, int, int, int] | None = None,
     range_read: bool = False,
-    range_fetchers: dict | None = None,
 ) -> DataFrame:
     """Decode each distinct media_ref into a tile-stats row.
 
@@ -221,7 +210,7 @@ def decode_tiles(
     pushed into the UDF (COG pyramid level selection). ``fetchers`` maps
     extra url schemes to ``fn(ref) -> bytes`` resolvers (picklable; shipped
     to executors in the UDF closure — file/http/https are built in).
-    ``window``/``range_read``/``range_fetchers``: decode only a pixel window
+    ``window``/``range_read``: decode only a pixel window
     and, on the range path, fetch only the header + intersecting tile byte
     ranges (see _decode_one; per-row ``fetched_bytes`` reports actual IO).
     """
@@ -234,7 +223,6 @@ def decode_tiles(
                 _decode_one(
                     r, include_pixels, overview, fetchers,
                     window=window, range_read=range_read,
-                    range_fetchers=range_fetchers,
                 )
                 for r in col
             ]

@@ -54,6 +54,8 @@ from pyspark.sql import types as T
 
 from cog3pio_spark.gif import decode_gif
 from cog3pio_spark.jpeg import decode_jpeg
+from cog3pio_spark.png import _CHANNELS as _PNG_BANDS
+from cog3pio_spark.png import _SIG as _PNG_SIG
 from cog3pio_spark.png import decode_png
 from cog3pio_spark.tiff.reader import CogReader
 from cog3pio_spark.tiff.writer import write_tiff
@@ -149,8 +151,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("features", T.ArrayType(T.DoubleType())),
     ]
 )
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def _decode_pixels(raw: bytes) -> tuple[np.ndarray, str] | None:
@@ -594,7 +594,6 @@ IMAGE_META_SCHEMA = T.StructType(
     ]
 )
 
-_PNG_BANDS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 _JPEG_SOFS = {
     0xC0: "baseline", 0xC1: "extended-sequential", 0xC2: "progressive",
     0xC3: "lossless", 0xC5: "sequential-dht", 0xC6: "progressive-dht",

@@ -10,6 +10,7 @@ filter phase differ."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import numpy as np
@@ -206,7 +207,7 @@ def test_progressive_restart_interval_segments():
 
     from cog3pio_spark.jpeg import (
         _build_huffman,
-        _decode_one_progressive_scan,
+        _decode_scan,
     )
 
     # Huffman table: symbol 2 with the single 1-bit code '0' (t=2 bits of
@@ -223,7 +224,7 @@ def test_progressive_restart_interval_segments():
         "ss": 0, "se": 0, "ah": 0, "al": 0,
         "htables": {(0, 0): tbl}, "ri": 1,
     }
-    _decode_one_progressive_scan(scan, frame, by_id, coefs, 2, 1, 1, 1)
+    _decode_scan(scan, frame, by_id, coefs, 2, 1, 1, 1)
     # predictor RESET at the restart: both blocks hold DC=3, not 3 then 6
     assert coefs[1][0, 0, 0] == 3 and coefs[1][0, 1, 0] == 3
 
@@ -234,12 +235,12 @@ def test_progressive_restart_interval_segments():
     coefs2 = {1: np.zeros((1, 2, 64), dtype=np.int32)}
     scan2 = dict(scan, segments=[bytes([0b01100000])])
     with _pytest.raises(JpegDecodeError, match="missing restart segment"):
-        _decode_one_progressive_scan(scan2, frame, by_id, coefs2, 2, 1, 1, 1)
+        _decode_scan(scan2, frame, by_id, coefs2, 2, 1, 1, 1)
 
     # same scan WITHOUT restarts accumulates the predictor (3 then 6)
     coefs3 = {1: np.zeros((1, 2, 64), dtype=np.int32)}
     scan3 = dict(scan, ri=0, segments=[bytes([0b01101100])])  # two units
-    _decode_one_progressive_scan(scan3, frame, by_id, coefs3, 2, 1, 1, 1)
+    _decode_scan(scan3, frame, by_id, coefs3, 2, 1, 1, 1)
     assert coefs3[1][0, 0, 0] == 3 and coefs3[1][0, 1, 0] == 6
 
 
@@ -312,3 +313,78 @@ def test_progressive_qtable_latched_at_first_scan():
     garbage_dqt = b"\xff\xdb" + (67).to_bytes(2, "big") + bytes([0]) + b"\xff" * 64
     patched = raw[:last_sos] + garbage_dqt + raw[last_sos:]
     np.testing.assert_array_equal(decode_jpeg(patched), decode_jpeg(raw))
+
+
+# sha256 of decode_jpeg(fixture).tobytes(): the ImageIO tests allow ±2/±3,
+# so these pins are what catches a one-LSB drift of the shared IDCT
+FIXTURE_SHA256 = {
+    "java_gray.jpg": "33c713c54363c89d58b2c23b1a885408b937deeb579e144915e0131c19029377",
+    "java_rgb420.jpg": "9c4d61913e69ec4c7737982e0c366ad9b9872583ee8acb2a67b5e7e99e60f2bf",
+    "java_gray_prog.jpg": "33c713c54363c89d58b2c23b1a885408b937deeb579e144915e0131c19029377",
+    "java_rgb_prog.jpg": "6908b599a669bc22d54e903ba5bcb4c1356bc8444926b63462c68f8517a69845",
+}
+
+
+@pytest.mark.parametrize("name", sorted(FIXTURE_SHA256))
+def test_fixture_decode_is_pinned(name):
+    raw = open(os.path.join(DATA, name), "rb").read()
+    out = decode_jpeg(raw)
+    assert hashlib.sha256(out.tobytes()).hexdigest() == FIXTURE_SHA256[name]
+
+
+def _seg(marker: int, body: bytes) -> bytes:
+    return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
+
+
+def _one_code_dht(tc: int, symbol: int) -> bytes:
+    """Huffman table 0 of class ``tc`` with the single 1-bit code '0'."""
+    return _seg(0xC4, bytes([tc << 4, 1] + [0] * 15 + [symbol]))
+
+
+def _gray_baseline(w: int, h: int, sampling: int, dc_size: int, dri: int,
+                   entropy: bytes) -> bytes:
+    """Hand-built one-component SOF0 stream: DQT all 16; a DC table whose
+    one code '0' means a diff of ``dc_size`` bits; an AC table whose one
+    code '0' is EOB; an optional DRI; then ``entropy`` as the scan data."""
+    return (
+        b"\xff\xd8"
+        + _seg(0xDB, bytes([0]) + bytes([16]) * 64)
+        + _seg(0xC0, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
+               + bytes([1, 1, sampling, 0]))
+        + _one_code_dht(0, dc_size)
+        + _one_code_dht(1, 0x00)
+        + (_seg(0xDD, dri.to_bytes(2, "big")) if dri else b"")
+        + _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
+        + entropy
+        + b"\xff\xd9"
+    )
+
+
+def _block_values(out: np.ndarray) -> list[int]:
+    """Per-8x8-block value of a flat (DC-only) decode, in raster order."""
+    blocks = out[0].reshape(out.shape[1] // 8, 8, out.shape[2] // 8, 8)
+    assert (blocks == blocks[:, :1, :, :1]).all()  # DC-only: flat blocks
+    return [int(v) for v in blocks[:, 0, :, 0].ravel()]
+
+
+def test_sequential_restart_interval_segments():
+    """The sequential restart branch: gray 16x8, two blocks each coded
+    '0' '11' '0' (DC diff 3 → 3·16/8 = +6, then EOB), padded with 1 bits
+    to 0x6F. With DRI=1 the blocks sit in two RST-separated segments and
+    the DC predictor resets (134, 134); the same bits in one segment
+    without DRI accumulate it (134, 140); a missing segment is refused."""
+    seq = _gray_baseline(16, 8, 0x11, 2, 1, b"\x6f\xff\xd0\x6f")
+    assert _block_values(decode_jpeg(seq)) == [134, 134]
+    acc = _gray_baseline(16, 8, 0x11, 2, 0, b"\x66")
+    assert _block_values(decode_jpeg(acc)) == [134, 140]
+    with pytest.raises(JpegDecodeError, match="missing restart segment"):
+        decode_jpeg(_gray_baseline(16, 8, 0x11, 2, 1, b"\x6f"))
+
+
+def test_one_component_frame_ignores_declared_sampling():
+    """A one-component scan codes its blocks in the component's own raster
+    order whatever sampling the frame declares (T.81 §A.2.2; jpegtran
+    -grayscale writes 2x2). Gray 32x8 at 2x2: four blocks '0' '1' '0'
+    (DC diff +1 each, EOB) = 0x49 0x2F decode to 130, 132, 134, 136."""
+    raw = _gray_baseline(32, 8, 0x22, 1, 0, b"\x49\x2f")
+    assert _block_values(decode_jpeg(raw)) == [130, 132, 134, 136]
