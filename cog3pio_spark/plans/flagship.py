@@ -1,6 +1,7 @@
 """Flagship spatial-join + tile-assignment pipeline.
 
-    docs → posexplode(spans) → filter(kind='media')          doc_media_refs
+    docs → posexplode(arrays_zip(spans.kind, spans.media_ref))
+         → filter(kind='media')                               doc_media_refs
          → groupBy(media_ref): span count + HLL doc sketch
          → repartition → fused decode + cell assign + PIP     flagship_enriched
            (ONE mapInArrow, operators/tile_kernel.py; the
@@ -22,6 +23,12 @@ and its span statistics arrive pre-aggregated. The Python/Arrow boundary
 carries O(tiles) narrow rows, and no verdict is joined back to the span
 table. Only the polygon pack is broadcast; at 10^12 docs with ~10^7
 distinct refs the ref side still streams through map tasks.
+
+Span-side bytes: the scan reads only ``doc_id``, ``spans.kind`` and
+``spans.media_ref`` (``media_spans``' ``fields`` projection lets nested
+pruning drop ``text`` and ``offset`` from the parquet ReadSchema), and the
+per-ref aggregate hashes each doc id once, before the explode, instead of
+once per media span inside the typed HLL aggregate.
 """
 
 from __future__ import annotations
@@ -32,47 +39,77 @@ from pyspark.sql import functions as F
 from cog3pio_spark.operators.tile_kernel import fused_decode_assign_pip
 
 
-def media_spans(docs: DataFrame, carry: tuple[str, ...] = ("doc_id",)) -> DataFrame:
-    """posexplode preserving span order: ``(*carry, pos, kind, text,
-    media_ref, offset)``, ``carry`` being the doc columns kept on each span.
+SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
+# what every media-span consumer reads: the scan skips text and offset
+MEDIA_FIELDS = ("kind", "media_ref")
 
-    The package's one span explode: batch (``doc_media_refs``) and
-    streaming (streaming/ingest.py) consumers both select from it, and
-    Catalyst prunes the fields a consumer drops. Nested-schema pruning does
-    NOT fire through posexplode, so the text subfield is still read and
-    decoded from parquet. Generate is codegen'd while HOF lambdas are
-    interpreted (2.25s vs 9.6s on 72M spans for the filter/transform
-    formulation — do not "fix" this with F.transform: it measured 7.6s AND
-    still read text). A GetArrayStructFields + arrays_zip + explode shape
-    does prune text, but pays a zipped array per doc and measured slower on
-    thin spans, the only span corpus the benchmark has (BENCH/BASELINE.md
-    "Span-scan nested pruning").
+
+def media_spans(
+    docs: DataFrame,
+    carry: tuple[str, ...] = ("doc_id",),
+    fields: tuple[str, ...] = SPAN_FIELDS,
+) -> DataFrame:
+    """posexplode preserving span order: ``(*carry, pos, *fields)``,
+    ``carry`` being the doc columns kept on each span and ``fields`` the
+    span subfields the caller reads (default: all four).
+
+    The package's one span explode: batch (``doc_media_refs``, and through
+    it ``ref_span_stats``) and streaming (streaming/ingest.py) consumers
+    all select from it. It explodes ``arrays_zip`` of one
+    ``GetArrayStructFields`` per named field (``spans.kind``, ...), because
+    that is the shape Catalyst's nested-schema pruning sees through: the
+    parquet ReadSchema keeps only ``fields``. A posexplode of the whole
+    ``spans`` struct cannot be pruned here — Spark prunes a Generate's
+    input only when a single nested field is read, and the media consumers
+    read two — so it would read and decode ``text`` on every span.
+    Generate is codegen'd while HOF lambdas are interpreted (2.25s vs 9.6s
+    on 72M spans for the filter/transform formulation — do not "fix" this
+    with F.transform: it measured 7.6s AND still read text). Row-for-row
+    the zip equals the struct explode: a NULL or empty ``spans`` gives no
+    row, a NULL span gives one row of NULL fields (tests/test_pipeline.py
+    pins both against an inline posexplode oracle).
     """
-    fields = ("kind", "text", "media_ref", "offset")
-    return docs.select(*carry, F.posexplode("spans").alias("pos", "span")).select(
+    zipped = F.arrays_zip(*(F.col(f"spans.{f}").alias(f) for f in fields))
+    return docs.select(*carry, F.posexplode(zipped).alias("pos", "span")).select(
         *carry, "pos", *(F.col(f"span.{f}").alias(f) for f in fields)
     )
 
 
-def doc_media_refs(docs: DataFrame) -> DataFrame:
-    """(doc_id, media_ref) — one row per media span."""
-    return media_spans(docs).filter(F.col("kind") == "media").select("doc_id", "media_ref")
+def doc_media_refs(docs: DataFrame, carry: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+    """``(*carry, media_ref)`` — one row per media span, read through the
+    pruned two-field explode; ``(doc_id, media_ref)`` by default."""
+    return (
+        media_spans(docs, carry, fields=MEDIA_FIELDS)
+        .filter(F.col("kind") == "media")
+        .select(*carry, "media_ref")
+    )
+
+
+def ref_span_stats(docs: DataFrame) -> DataFrame:
+    """``(media_ref, ref_spans, doc_sketch)`` — per media ref, its span
+    count and an lgK=10 HLL sketch of the docs citing it.
+
+    The doc id is hashed once per doc, ahead of the explode, and the span
+    rows carry that long instead of the id string. The sketch input is the
+    same ``xxhash64(doc_id)`` a per-span hash would give, so the sketch
+    bytes equal that shape's (pinned in tests/test_pipeline.py)."""
+    hashed = docs.select(F.xxhash64("doc_id").alias("doc_hash"), "spans")
+    return doc_media_refs(hashed, ("doc_hash",)).groupBy("media_ref").agg(
+        F.count("*").alias("ref_spans"),
+        F.hll_sketch_agg("doc_hash", F.lit(10)).alias("doc_sketch"),
+    )
 
 
 def flagship_enriched(docs: DataFrame, polygons: DataFrame) -> DataFrame:
     """The flagship's enriched intermediate: one row per (media_ref,
     polygon) carrying decode stats + cell assignments + pre-aggregated span
-    stats (ref_spans, doc_sketch). Exposed (r5) so jobs needing BOTH the
+    stats (``ref_span_stats``). Exposed (r5) so jobs needing BOTH the
     per-polygon aggregate and the per-tile sink run the expensive
     decode+assign+PIP kernel ONCE (localCheckpoint and derive both) instead
     of once per consumer — run_flagship.py previously decoded every tile
     twice per submission."""
-    per_ref = doc_media_refs(docs).groupBy("media_ref").agg(
-        F.count("*").alias("ref_spans"),
-        F.hll_sketch_agg(F.xxhash64("doc_id"), F.lit(10)).alias("doc_sketch"),
-    )
     par = docs.sparkSession.sparkContext.defaultParallelism
-    return fused_decode_assign_pip(per_ref.repartition(par), polygons)
+    return fused_decode_assign_pip(ref_span_stats(docs).repartition(par), polygons)
 
 
 def flagship_aggregate(enriched: DataFrame) -> DataFrame:
@@ -94,8 +131,9 @@ def flagship_pipeline(docs: DataFrame, polygons: DataFrame) -> DataFrame:
     """Docs → per-polygon tile/doc counts, the end-to-end spine (SURVEY M1).
 
     Plan shape (scale rationale in the module docstring):
-      * span side: ONE pass over (doc_id, spans), one posexplode
-        (``media_spans``; the scan reads every span subfield);
+      * span side: ONE pass over (doc_id, spans.kind, spans.media_ref),
+        one posexplode (``media_spans``; text and offset are pruned from
+        the scan), the doc id hashed once per doc;
       * ref side: per-ref span count + HLL sketch (one shuffle on one
         narrow key) → repartition (AQE would coalesce the tiny ref set to 1
         partition and serialize the decode — Amdahl) → fused

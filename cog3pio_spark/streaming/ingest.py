@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
-from cog3pio_spark.plans.flagship import flagship_pipeline, media_spans
+from cog3pio_spark.plans.flagship import MEDIA_FIELDS, flagship_pipeline, media_spans
 
 
 def doc_stream_schema() -> T.StructType:
@@ -97,7 +97,7 @@ def available_now_ingest(
         .load(input_dir)
     )
     spans = (
-        media_spans(stream, carry=("doc_id", "ingest_ts"))
+        media_spans(stream, carry=("doc_id", "ingest_ts"), fields=MEDIA_FIELDS)
         .filter(F.col("kind") == "media")
         .select("doc_id", "ingest_ts", "pos", "media_ref")
     )
@@ -119,7 +119,7 @@ def first_seen_media_refs(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     spans = (
-        media_spans(docs_stream, carry=())
+        media_spans(docs_stream, carry=(), fields=MEDIA_FIELDS)
         .filter(F.col("kind") == "media")
         .select("media_ref")
     )
@@ -156,7 +156,9 @@ def first_seen_media_refs(
 
 def windowed_media_counts(docs_stream: DataFrame, window: str = "10 minutes") -> DataFrame:
     """Watermarked tumbling-window media-span counts (late data ≤ 1 window)."""
-    spans = media_spans(docs_stream, carry=("ingest_ts",)).filter(F.col("kind") == "media")
+    spans = media_spans(docs_stream, carry=("ingest_ts",), fields=MEDIA_FIELDS).filter(
+        F.col("kind") == "media"
+    )
     return (
         spans.withWatermark("ingest_ts", window)
         .groupBy(F.window("ingest_ts", window).alias("win"), "media_ref")

@@ -64,6 +64,65 @@ def test_span_sequence_invariant(spark, docs):
     assert before.count() == rebuilt.count()
 
 
+def test_pruned_span_explode_matches_struct_posexplode(spark, fixture_refs):
+    """media_spans' two-field zip explode gives the rows of a posexplode of
+    the whole span struct on every edge: a NULL and an empty ``spans``, a
+    NULL span, a media span without a ref, a text span with one, and a
+    NULL doc_id; flagship_enriched's per-ref stats equal a count and an
+    ``hll_sketch_agg(xxhash64(doc_id), 10)`` over the oracle's media rows."""
+    from pyspark.sql import Row
+
+    a, b = fixture_refs[:2]
+
+    def span(kind, ref, offset):
+        return Row(kind=kind, text=None if kind == "media" else "t", media_ref=ref, offset=offset)
+
+    docs = spark.createDataFrame(
+        [
+            Row(doc_id="null_spans", spans=None),
+            Row(doc_id="empty", spans=[]),
+            Row(doc_id="edges", spans=[
+                span("media", a, 0), None, span("media", None, 2), span("text", b, 3),
+                span("media", b, 4),
+            ]),
+            Row(doc_id=None, spans=[span("media", a, 0), span("text", None, 1)]),
+            Row(doc_id="plain", spans=[span("text", None, 0), span("media", a, 1)]),
+        ],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    oracle = docs.select("doc_id", F.posexplode("spans").alias("pos", "s")).select(
+        "doc_id", "pos", F.col("s.kind").alias("kind"), F.col("s.media_ref").alias("media_ref")
+    )
+    got = media_spans(docs, fields=("kind", "media_ref"))
+    assert got.columns == oracle.columns
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    assert rows(got) == rows(oracle)
+    assert len(rows(oracle)) == 9
+
+    want = (
+        oracle.filter(F.col("kind") == "media")
+        .groupBy("media_ref")
+        .agg(
+            F.count("*").alias("ref_spans"),
+            F.hll_sketch_agg(F.xxhash64("doc_id"), F.lit(10)).alias("doc_sketch"),
+        )
+    )
+    enriched = flagship_enriched(docs, polygons_df(spark, 4))
+
+    def stats(df):
+        return sorted(
+            {(r["media_ref"], r["ref_spans"], bytes(r["doc_sketch"])) for r in df.collect()},
+            key=repr,
+        )
+
+    assert stats(enriched) == stats(want)
+    assert {r[0] for r in stats(want)} == {a, b, None}
+
+
 MISSING_REF = "file:///nonexistent/xx.tif"
 
 

@@ -52,8 +52,9 @@ def test_filter_pushdown_reaches_scan(spark):
 def test_flagship_shuffle_inventory(spark, tmp_path):
     """flagship_pipeline's initial physical plan holds exactly the module
     docstring's inventory: three exchanges — hashpartitioning(media_ref),
-    round-robin, hashpartitioning(polygon_id) — one posexplode over spans
-    and one Python stage, the fused tile kernel's MapInArrow."""
+    round-robin, hashpartitioning(polygon_id) — one posexplode over the
+    zip of the two span subfields it reads, a scan pruned to them, and one
+    Python stage, the fused tile kernel's MapInArrow."""
     import re
 
     from cog3pio_spark.fixtures.docs import interleaved_docs
@@ -71,9 +72,60 @@ def test_flagship_shuffle_inventory(spark, tmp_path):
         "RoundRobinPartitioning",
         "hashpartitioning(media_ref",
     ], plan
-    assert re.findall(r"Generate (\w+)\((\w+)", plan) == [("posexplode", "spans")], plan
+    assert re.findall(r"Generate (\w+)\((\w+)", plan) == [("posexplode", "arrays_zip")], plan
+    # nested-schema pruning: text and offset never leave the parquet file
+    assert re.findall(r"ReadSchema: (\S+)", plan) == [
+        "struct<doc_id:string,spans:array<struct<kind:string,media_ref:string>>>"
+    ], plan
     python_nodes = re.findall(r"\b(\w*(?:Python|InPandas|InArrow)\w*)\b", plan)
     assert python_nodes == ["MapInArrow"], plan
+
+
+def _node_metrics(df, node: str, metric: str) -> list[int]:
+    """``metric`` of every ``node`` in the executed plan of ``df`` (call
+    after ``df`` itself was collected), walking into AQE query stages."""
+    out = []
+
+    def walk(p):
+        if p.nodeName() == node:
+            out.append(p.metrics().apply(metric).value())
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            kids = [p.executedPlan()]
+        elif cls.endswith("QueryStageExec"):
+            kids = [p.plan()]
+        else:
+            ch = p.children()
+            kids = [ch.apply(i) for i in range(ch.size())]
+        for k in kids:
+            walk(k)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_ref_span_stats_hash_aggregate_never_sorts(spark):
+    """The per-ref aggregate of flagship_enriched is an ObjectHashAggregate
+    (hll_sketch_agg is a typed aggregate). At Spark's default threshold it
+    falls back to a sort-based aggregate past 128 keys in a task; the
+    session raises that threshold, so one task over 300 distinct refs
+    keeps hashing: no node reports a fallback task."""
+    from cog3pio_spark.plans.flagship import ref_span_stats
+
+    n_refs = 300
+    rows = [
+        (f"d{i:04d}", [("media", None, f"file:///r{(i * 7 + j) % n_refs}.tif", j)
+                       for j in range(3)])
+        for i in range(n_refs)
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>"
+    ).coalesce(1)  # every span in one map task
+    stats = ref_span_stats(docs)
+    assert len(stats.collect()) == n_refs
+    fell_back = _node_metrics(stats, "ObjectHashAggregate", "numTasksFallBacked")
+    assert fell_back == [0, 0], fell_back  # final and partial (map side)
 
 
 @pytest.mark.parametrize(
