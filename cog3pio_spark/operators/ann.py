@@ -19,8 +19,8 @@ probed lists, and the core scores every probed (vector, query) pair with
 the scorer built here — exact cosine, or ADC over PQ codes — and cuts the
 top-k. The callers differ only in ``assign``/``probe`` and codes:
 
-* lsh_topk   — random-hyperplane buckets; query-directed
-  (query_directed_probes) or Hamming-ball multi-probe.
+* lsh_topk   — random-hyperplane buckets, query-directed multi-probe
+  (``_directed_probes``).
 * ivf_topk   — nearest spherical k-means centroid (train_ivf_centroids).
 * ivf2_topk  — flat coarse·n_fine + fine list of a two-level codebook
   (train_ivf2_centroids).
@@ -33,9 +33,11 @@ on, indexed or scored (``probe._finite_rows``); such a query vector raises.
 
 Pair family: ``_lsh_blocked_pairs`` blocks by multi-table hyperplane LSH
 through the near-dup pair skeleton (dedupe.py::_capped_blocks) and scores
-each capped block with one BLAS gram matrix. top_cosine_pairs_blocked keeps
-the global top-N pairs, embedding_dupes the pairs at cosine ≥ τ (planes
-sized by dupes_plane_count); cosine_pairs_udf scores explicit pairs for
+each capped block with one BLAS gram matrix. Both callers use
+``PAIR_TABLES`` tables and size their planes from the corpus row count:
+top_cosine_pairs_blocked keeps the global top-N pairs (``_size_planes``),
+embedding_dupes the pairs at cosine ≥ τ (``dupes_plane_count`` at a 0.95
+recall target); cosine_pairs_udf scores explicit pairs for
 top_cosine_pairs.
 """
 
@@ -63,9 +65,11 @@ from cog3pio_spark.operators.probe import (
 )
 
 
-# shared default sample size for all codebook/centroid trainers (hoisted so
-# composed operators like ivfpq_topk can never drift from the trainers)
+# sample size of every codebook/centroid trainer (ivfpq_topk collects one
+# sample of this size for both of its trainers)
 TRAIN_SAMPLE = 4096
+# hash tables of the LSH pair family (top_cosine_pairs_blocked, embedding_dupes)
+PAIR_TABLES = 16
 
 
 def _size_planes(n_rows: int) -> int:
@@ -202,46 +206,36 @@ def top_cosine_pairs_blocked(
     vectors: DataFrame,
     dim: int,
     top_n: int = 20,
-    n_tables: int = 16,
-    n_planes: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Globally top-N most-similar pairs via multi-table LSH blocking — the
     scale path for ``top_cosine_pairs`` (VERDICT r1 #6: the exact variant is
     an O(n²) theta join, fatal beyond test scale).
 
-    ``n_planes=None`` (default) sizes the tables from the corpus: planes =
-    max(2, ceil(log2(n/256))) targets ~256-row buckets, which keeps
-    2^planes ≫ n_tables (the subquadratic condition below) at any real
-    scale and never relies on the oversized-bucket cap; small corpora get
-    the recall-friendly 2-plane tables the sf0.01 oracle is pinned against.
+    ``PAIR_TABLES`` tables of max(2, ceil(log2(n/256))) planes each, n the
+    count of finite rows: ~256-row buckets, which keeps 2^planes ≫ tables
+    (the subquadratic condition below) at any real scale and never relies
+    on the oversized-bucket cap; small corpora get the recall-friendly
+    2-plane tables the sf0.01 oracle is pinned against.
 
     Shape: ``_lsh_blocked_pairs`` keeps each (table, bucket) block's local
     top-N pairs, so the final global top-N is a TakeOrderedAndProject over
-    ≤ n_buckets·top_n rows — no global window, no all-pairs product. Probabilistic recall: a pair at cosine θ is missed by
-    all tables w.p. (1−(1−acos(θ)/π)^planes)^tables. Deterministic for fixed
-    seed+data (driver-gate checked equal to the exact oracle at sf0.01).
+    ≤ n_buckets·top_n rows — no global window, no all-pairs product.
+    Probabilistic recall: a pair at cosine θ is missed by all tables w.p.
+    (1−(1−acos(θ)/π)^planes)^tables. Deterministic for fixed seed+data
+    (driver-gate checked equal to the exact oracle at sf0.01).
 
-    Honest scale note: expected pair work is n_tables·n²/2^planes, so the
-    blocking only beats all-pairs when 2^planes > n_tables — i.e. when the
+    Honest scale note: expected pair work is tables·n²/2^planes, so the
+    blocking only beats all-pairs when 2^planes > tables — i.e. when the
     corpus's top pairs are genuinely similar (near-dups, cosine ≥ ~0.7), so
     planes can be raised while recall holds. On near-random corpora whose
     top pairs sit barely above noise, NO subquadratic method retains them
-    reliably; raise n_planes with log2(n) and accept probabilistic recall,
-    or fall back to the exact variant.
+    reliably; planes grow with log2(n) and recall is probabilistic, or fall
+    back to the exact variant.
     """
-    pruned = _lsh_blocked_pairs(
-        vectors,
-        dim,
-        n_tables=n_tables,
-        n_planes=n_planes,
-        id_col=id_col,
-        vec_col=vec_col,
-        per_bucket_top_n=top_n,
-        n_rows=n_rows,
-    )
+    n_planes = _size_planes(_finite_rows(vectors, vec_col).count())
+    pruned = _lsh_blocked_pairs(vectors, dim, n_planes, id_col, vec_col, per_bucket_top_n=top_n)
     # global cut: orderBy().limit() plans as TakeOrderedAndProject (parallel
     # partial top-N per partition + driver merge), never a 1-task window
     top = pruned.orderBy(F.desc("cosine"), "id_a", "id_b").limit(top_n)
@@ -252,47 +246,37 @@ def top_cosine_pairs_blocked(
 def _lsh_blocked_pairs(
     vectors: DataFrame,
     dim: int,
-    n_tables: int,
-    n_planes: int | None,
+    n_planes: int,
     id_col: str,
     vec_col: str,
     per_bucket_top_n: int | None = None,
     threshold: float | None = None,
     bucket_cap: int = 4096,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Shared multi-table LSH pair kernel (q47/q51 machinery): every vector
-    lands in ``n_tables`` independent hyperplane buckets; the pair skeleton
-    (dedupe.py::_capped_blocks) blocks on (table, bucket) with the vector as
-    payload, keeping each block's ``bucket_cap`` smallest ids, and one
-    mapInArrow kernel scores each block with ONE BLAS gram matrix; emitted
-    pairs are deduped on (id_a, id_b). Each vector crosses into Python once
-    per table, never once per candidate pair (a per-pair cosine UDF measured
-    33 s at sf0.1 from pair-row Arrow fan-out).
+    lands in ``PAIR_TABLES`` independent hyperplane buckets of ``n_planes``
+    planes; the pair skeleton (dedupe.py::_capped_blocks) blocks on
+    (table, bucket) with the vector as payload, keeping each block's
+    ``bucket_cap`` smallest ids, and one mapInArrow kernel scores each block
+    with ONE BLAS gram matrix; emitted pairs are deduped on (id_a, id_b).
+    Each vector crosses into Python once per table, never once per candidate
+    pair (a per-pair cosine UDF measured 33 s at sf0.1 from pair-row Arrow
+    fan-out).
 
     ``per_bucket_top_n`` keeps only each bucket's local top-N pairs (the
     global-top-pairs path); ``threshold`` keeps all pairs at cosine ≥ τ (the
-    near-dup path). Exactly one must be set. ``n_planes=None`` sizes tables
-    from the corpus: planes = max(2, ceil(log2(n/256))) targets ~256-row
-    buckets, keeping 2^planes ≫ n_tables (subquadratic) at any real scale.
-    Returns (id_a, id_b, cosine) with cosine rounded to 6.
+    near-dup path). Exactly one must be set. The caller sizes ``n_planes``
+    from its corpus. Returns (id_a, id_b, cosine) with cosine rounded to 6.
     """
     if (per_bucket_top_n is None) == (threshold is None):
         raise ValueError("set exactly one of per_bucket_top_n / threshold")
     vectors = _finite_rows(vectors, vec_col)
-    if n_planes is None:
-        # n_rows stat hint skips the implicit O(n) count (r4 review: same
-        # contract embedding_dupes gained in ADVICE r3 — order-of-magnitude
-        # accuracy suffices for a plane count)
-        if n_rows is None:
-            n_rows = vectors.count()
-        n_planes = _size_planes(n_rows)
-    planes = _lsh_planes(dim, n_tables * n_planes, seed=101)
+    planes = _lsh_planes(dim, PAIR_TABLES * n_planes, seed=101)
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def _table_buckets(vecs: pd.Series) -> pd.Series:
         margins = np.vstack(vecs.to_numpy()).astype(np.float64) @ planes
-        return pd.Series(list(_buckets(margins.reshape(len(vecs), n_tables, n_planes))))
+        return pd.Series(list(_buckets(margins.reshape(len(vecs), PAIR_TABLES, n_planes))))
 
     keyed = vectors.select(
         id_col, vec_col, F.posexplode(_table_buckets(vec_col)).alias("tbl", "bucket")
@@ -345,7 +329,7 @@ def dupes_plane_count(
     per_table_min = 1.0 - (1.0 - recall_target) ** (1.0 / n_tables)
     # floor of 1: if even a single plane misses the target (very low τ with
     # few tables), 1 plane is the best LSH can do — the residual shortfall
-    # is table-count-limited; raise n_tables, not trust this floor
+    # is table-count-limited; more tables fix it, not this floor
     k_max = max(1, int(np.floor(np.log(per_table_min) / np.log(p))))
     return min(size_based, k_max)
 
@@ -354,13 +338,9 @@ def embedding_dupes(
     vectors: DataFrame,
     dim: int,
     threshold: float = 0.95,
-    n_tables: int = 16,
-    n_planes: int | None = None,
-    recall_target: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     bucket_cap: int = 4096,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Near-duplicate vector pairs (cosine ≥ threshold) — the q47 kernel
     (``_lsh_blocked_pairs``) with a threshold cut instead of a top-N cut:
@@ -371,38 +351,20 @@ def embedding_dupes(
     (1−p^planes)^tables. The corpus-size auto-plane rule alone targets
     ~256-row buckets — at 10⁹ rows that is 22 planes, where even τ=0.95
     pairs (p≈0.9) survive one table only 10% of the time and 16 tables miss
-    ~20% of true dups. ``n_planes=None`` therefore clamps the size-based
-    plane count to the largest k with (1−p^k)^tables ≤ 1−recall_target, so
-    stated recall holds at ANY corpus size; the price of the smaller k is
+    ~20% of true dups. The plane count (``dupes_plane_count``, over the
+    input's row count) therefore clamps the size-based rule to the largest
+    k with (1−p^k)^tables ≤ 1−0.95 at ``PAIR_TABLES`` tables, so the 0.95
+    recall holds at ANY corpus size; the price of the smaller k is
     bigger buckets, which the deterministic ``bucket_cap`` bounds (capped
     buckets = dense near-dup clusters; pairs beyond the cap are dropped —
     lower-bound semantics, same contract as the n-gram df cap).
     Deterministic for fixed seed + data. Returns (id_a, id_b, cosine),
     cosine rounded to 6.
-
-    ``n_rows``: corpus size for the auto plane rule, for callers holding
-    catalog/table stats (ADVICE r3: the implicit ``vectors.count()`` is an
-    extra O(n) scan on exactly the huge inputs this operator targets — the
-    same stat-hint contract as knn_sort_merge's total_rows). The plane
-    count only needs order-of-magnitude accuracy, so a slightly stale stat
-    is fine; with ``n_planes`` given neither is consulted.
     """
-    if n_planes is None:
-        n_planes = dupes_plane_count(
-            n_rows if n_rows is not None else vectors.count(),
-            threshold, n_tables, recall_target,
-        )
+    n_planes = dupes_plane_count(vectors.count(), threshold, PAIR_TABLES, recall_target=0.95)
     return _lsh_blocked_pairs(
-        vectors,
-        dim,
-        n_tables=n_tables,
-        n_planes=n_planes,
-        id_col=id_col,
-        vec_col=vec_col,
-        threshold=threshold,
-        bucket_cap=bucket_cap,
+        vectors, dim, n_planes, id_col, vec_col, threshold=threshold, bucket_cap=bucket_cap
     )
-
 
 
 def _encode(
@@ -454,7 +416,6 @@ def _indexed_topk(
     id_col: str,
     vec_col: str,
     query_id_col: str,
-    max_queries: int = MAX_QUERIES,
     books: np.ndarray | None = None,
     centroids: np.ndarray | None = None,
     encoded: DataFrame | None = None,
@@ -462,7 +423,7 @@ def _indexed_topk(
 ) -> DataFrame:
     """Every indexed top-k, on the list-probe core (operators/probe.py).
 
-    The query batch is collected (bounded by ``max_queries``) and
+    The query batch is collected (at most MAX_QUERIES) and
     ``probe(qmat)`` gives an (n_queries, P) array of DISTINCT list ids per
     query. Without ``books`` the probed vectors are scored by exact cosine;
     with ``books`` by ADC over their codes, plus ⟨q, c_list⟩ for residual
@@ -470,9 +431,8 @@ def _indexed_topk(
     (id, ivf_list, payload) index.
     Returns (query_id_col, rank, id_col, cosine | pq_score)."""
     rows = _collect_query_batch(
-        queries, [query_id_col, vec_col], max_queries,
-        f"Split bulk query sets into batches of at most {max_queries} "
-        f"(pq_topk/ivfpq_topk also take max_queries=).",
+        queries, [query_id_col, vec_col], MAX_QUERIES,
+        f"Split bulk query sets into batches of at most {MAX_QUERIES}.",
     )
     if not rows:
         # an empty set used to crash downstream in _normalize (numpy
@@ -532,44 +492,25 @@ def _buckets(margins: np.ndarray) -> np.ndarray:
     return ((margins > 0) @ 2.0 ** np.arange(margins.shape[-1])).astype(np.int64)
 
 
-def _flip_masks(n_planes: int) -> np.ndarray:
-    """Sign-flip masks: every single plane, then every plane pair (i < j)."""
-    single = np.int64(1) << np.arange(n_planes, dtype=np.int64)
-    iu, ju = np.triu_indices(n_planes, 1)
-    return np.concatenate([single, single[iu] | single[ju]])
-
-
 def _directed_probes(mat: np.ndarray, planes: np.ndarray, n_probes: int) -> np.ndarray:
-    """(n, n_probes) buckets: the home bucket, then the cheapest single and
-    pair flips ranked by cost = sum of |hyperplane margins| flipped."""
+    """(n, n_probes) LSH buckets per row (multi-probe LSH, query-directed,
+    after Lv et al., VLDB 2007): the home bucket first, then sign-flip
+    perturbations ranked by cost = sum of |hyperplane margins| flipped — a
+    plane whose margin is near zero is the one a true neighbor most likely
+    sits across. Candidate flips are all singles and pairs, so the ranked
+    pool is p + C(p,2); only the cheapest ``n_probes − 1`` are kept, so the
+    fan-out is bounded at any plane count."""
+    if n_probes < 1:
+        raise ValueError(f"n_probes={n_probes}: every query probes at least its home bucket")
     margins = mat @ planes
     home = _buckets(margins)[:, None]
     a = np.abs(margins)
     iu, ju = np.triu_indices(planes.shape[1], 1)
+    single = np.int64(1) << np.arange(planes.shape[1], dtype=np.int64)
+    flips = np.concatenate([single, single[iu] | single[ju]])  # singles, then pairs i < j
     costs = np.concatenate([a, a[:, iu] + a[:, ju]], axis=1)  # (n, p+C(p,2))
     top = np.argsort(costs, axis=1)[:, : n_probes - 1]  # cheapest flips first
-    return np.concatenate([home, home ^ _flip_masks(planes.shape[1])[top]], axis=1)
-
-
-def query_directed_probes(
-    vec: F.Column, dim: int, n_planes: int, n_probes: int, seed: int = 7
-) -> F.Column:
-    """ARRAY<LONG> of the ``n_probes`` most promising LSH buckets per query
-    (multi-probe LSH, query-directed): the home bucket first, then sign-flip
-    perturbations ranked by cost = sum of |hyperplane margins| flipped — a
-    plane whose margin is near zero is the one a true neighbor most likely
-    sits across. Candidate flips are all singles and pairs, so the ranked
-    pool is p + C(p,2); only the cheapest ``n_probes − 1`` are emitted.
-    Bounded fan-out at ANY n_planes (Hamming-ball probing grows as C(p,2)).
-    These are the probes lsh_topk(n_probes=...) computes for its queries."""
-    planes = _lsh_planes(dim, n_planes, seed)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _probes(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-        return pd.Series(list(_directed_probes(mat, planes, n_probes)))
-
-    return _probes(vec)
+    return np.concatenate([home, home ^ flips[top]], axis=1)
 
 
 def lsh_topk(
@@ -578,66 +519,43 @@ def lsh_topk(
     dim: int,
     k: int = 10,
     n_planes: int = 12,
-    probe_bits: int = 0,
-    n_probes: int | None = None,
+    n_probes: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate cosine top-k via random-hyperplane LSH buckets.
 
-    Each vector lands in ONE bucket (its list); each query probes buckets.
-    Recall is tuned by n_planes (fewer planes → bigger buckets → higher
-    recall/cost) plus one of two probing modes:
-
-    * ``n_probes=T`` (preferred): query-directed multi-probe — each query
-      probes its home bucket plus the T−1 cheapest sign-flip perturbations
-      ranked by |margin| (see query_directed_probes). Probe fan-out is
-      exactly T per query at any n_planes.
-    * ``probe_bits``: the full Hamming ball — probe_bits=1 → n_planes+1
-      probes, =2 adds all C(n_planes, 2) two-flip buckets; capped at 2,
-      beyond which the fan-out exceeds simply using fewer planes.
-
-    The query batch is collected to the driver (at most MAX_QUERIES).
+    Each vector lands in ONE bucket (its list); each query probes its home
+    bucket plus the ``n_probes − 1`` cheapest sign-flip perturbations ranked
+    by |margin| (``_directed_probes``), so the fan-out is exactly
+    ``n_probes`` per query at any n_planes (at most 1 + p + C(p,2) distinct
+    buckets). Recall is tuned by n_planes (fewer planes → bigger buckets →
+    higher recall/cost) and n_probes. The query batch is collected to the
+    driver (at most MAX_QUERIES).
     """
-    if probe_bits > 2:
-        raise ValueError("probe_bits > 2 unsupported: use n_probes= instead")
-    if n_probes is not None and probe_bits:
-        raise ValueError("set either n_probes or probe_bits, not both")
     planes = _lsh_planes(dim, n_planes)
-    if n_probes is not None and n_probes > 1:
-        def probe(qmat):
-            return _directed_probes(qmat, planes, n_probes)
-    else:
-        ball = np.r_[0, _flip_masks(n_planes)[: [0, n_planes, None][probe_bits]]]
-
-        def probe(qmat):
-            return _buckets(qmat @ planes)[:, None] ^ ball
-
     return _indexed_topk(
-        vectors, queries, lambda mat: _buckets(mat @ planes), probe, k,
+        vectors, queries, lambda mat: _buckets(mat @ planes),
+        lambda qmat: _directed_probes(qmat, planes, n_probes), k,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
         list_type=T.LongType(),
     )
 
 
-def _deterministic_sample(
-    vectors: DataFrame, vec_col: str, id_col: str, sample: int
-) -> list:
-    """First ``sample`` finite rows by id (limit() without sort is
+def _deterministic_sample(vectors: DataFrame, vec_col: str, id_col: str) -> list:
+    """First ``TRAIN_SAMPLE`` finite rows by id (limit() without sort is
     partition-order dependent, so codebooks could change across runs under
     AQE / cluster re-reads, breaking the determinism contract). orderBy +
     limit plans as TakeOrderedAndProject — parallel per-partition partial
     top-k merged on the driver, never a full sort."""
     v = _finite_rows(vectors, vec_col).select(id_col, vec_col)
-    return v.orderBy(id_col).limit(sample).select(vec_col).collect()
+    return v.orderBy(id_col).limit(TRAIN_SAMPLE).select(vec_col).collect()
 
 
-def _sample_matrix(
-    vectors: DataFrame, vec_col: str, id_col: str, sample: int, rows: list | None
-) -> np.ndarray:
+def _sample_matrix(vectors: DataFrame, vec_col: str, id_col: str, rows: list | None) -> np.ndarray:
     if rows is None:
-        rows = _deterministic_sample(vectors, vec_col, id_col, sample)
+        rows = _deterministic_sample(vectors, vec_col, id_col)
     return _normalize(np.array([list(r[0]) for r in rows], dtype=np.float64))
 
 
@@ -659,14 +577,12 @@ def train_ivf_centroids(
     vectors: DataFrame,
     dim: int,
     n_centroids: int = 32,
-    sample: int = TRAIN_SAMPLE,
-    iters: int = 8,
-    seed: int = 77,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     sample_rows: list | None = None,
 ) -> np.ndarray:
-    """Deterministic mini-KMeans on a fixed-size sample (driver-side numpy).
+    """Deterministic mini-KMeans on the first TRAIN_SAMPLE rows by id
+    (driver-side numpy): seed-77 init, 8 Lloyd iterations.
 
     Centroid training is O(sample × dim × iters) — independent of table
     size; the expensive part (assignment) stays distributed. Seeded init +
@@ -674,10 +590,10 @@ def train_ivf_centroids(
     and physical layouts (resume/goldens). ``sample_rows``: pre-collected
     sample (one collection shared across trainers, e.g. ivfpq_topk).
     """
-    mat = _sample_matrix(vectors, vec_col, id_col, sample, sample_rows)
-    rng = np.random.RandomState(seed)
+    mat = _sample_matrix(vectors, vec_col, id_col, sample_rows)
+    rng = np.random.RandomState(77)
     cents = mat[rng.choice(len(mat), size=min(n_centroids, len(mat)), replace=False)]
-    return _spherical_kmeans(mat, cents, iters)
+    return _spherical_kmeans(mat, cents, 8)
 
 
 def ivf_topk(
@@ -712,20 +628,18 @@ def train_ivf2_centroids(
     dim: int,
     n_coarse: int = 8,
     n_fine: int = 8,
-    sample: int = TRAIN_SAMPLE,
-    iters: int = 8,
-    seed: int = 177,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> tuple[np.ndarray, np.ndarray]:
     """Two-level IVF codebook: coarse k-means, then per-coarse-cell fine
     k-means over that cell's sample members. Returns (coarse[n_coarse,dim],
     fine[n_coarse,n_fine,dim]). Same determinism contract as the one-level
-    trainer (fixed id-ordered sample, seeds, iteration count)."""
-    mat = _sample_matrix(vectors, vec_col, id_col, sample, None)
-    rng = np.random.RandomState(seed)
+    trainer (id-ordered TRAIN_SAMPLE rows, seed 177, 8 iterations per
+    level)."""
+    mat = _sample_matrix(vectors, vec_col, id_col, None)
+    rng = np.random.RandomState(177)
     coarse = mat[rng.choice(len(mat), size=min(n_coarse, len(mat)), replace=False)]
-    coarse = _spherical_kmeans(mat, coarse, iters)
+    coarse = _spherical_kmeans(mat, coarse, 8)
     assign = (mat @ coarse.T).argmax(axis=1)
     fine = np.zeros((len(coarse), n_fine, dim))
     for c in range(len(coarse)):
@@ -736,7 +650,7 @@ def train_ivf2_centroids(
         fc = members[sel]
         if len(fc) < n_fine:  # pad by repeating (stable ids)
             fc = np.vstack([fc] * (n_fine // len(fc) + 1))[:n_fine]
-        fine[c] = _spherical_kmeans(members, fc, iters)
+        fine[c] = _spherical_kmeans(members, fc, 8)
     return coarse, fine
 
 
@@ -797,21 +711,17 @@ def train_pq_codebooks(
     vectors: DataFrame,
     dim: int,
     m: int = 8,
-    k: int = 256,
-    sample: int = TRAIN_SAMPLE,
-    iters: int = 10,
-    seed: int = 277,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     centroids: np.ndarray | None = None,
     sample_rows: list | None = None,
 ) -> np.ndarray:
     """Product-quantization codebooks: split the (normalized) vector into
-    ``m`` contiguous subspaces of dim/m and k-means each on a fixed
-    id-ordered sample. Returns (m, k, dim/m). Deterministic (seeded, fixed
-    iterations) like the IVF trainers. At 100 TB this is the storage story:
-    a 64-float embedding becomes m uint8 codes (32x smaller), scored without
-    decompression.
+    ``m`` contiguous subspaces of dim/m and k-means each into 256 codewords
+    on the id-ordered TRAIN_SAMPLE rows. Returns (m, 256, dim/m).
+    Deterministic (seed 277, 10 iterations) like the IVF trainers. At 100 TB
+    this is the storage story: a 64-float embedding becomes m uint8 codes
+    (32x smaller), scored without decompression.
 
     ``centroids``: train on RESIDUALS v − c(v) against these IVF centroids
     (classic IVFADC) — residuals have far smaller spread than raw vectors,
@@ -822,17 +732,17 @@ def train_pq_codebooks(
         # the tail dims are silently DROPPED from training, encoding and
         # scoring
         raise ValueError(f"dim={dim} must be divisible by m={m}")
-    sub = dim // m
-    mat = _sample_matrix(vectors, vec_col, id_col, sample, sample_rows)
+    sub, k = dim // m, 256
+    mat = _sample_matrix(vectors, vec_col, id_col, sample_rows)
     if centroids is not None:
         mat = mat - centroids[(mat @ centroids.T).argmax(axis=1)]
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(277)
     books = np.zeros((m, k, sub))
     for j in range(m):
         part = mat[:, j * sub : (j + 1) * sub]
         kk = min(k, len(part))
         cents = part[rng.choice(len(part), size=kk, replace=False)]
-        for _ in range(iters):
+        for _ in range(10):
             assign = _sq_dists(part, cents).argmin(axis=1)
             for c in range(kk):
                 members = part[assign == c]
@@ -889,7 +799,6 @@ def ivfpq_topk(
     centroids: np.ndarray | None = None,
     books: np.ndarray | None = None,
     residual: bool = True,
-    max_queries: int = MAX_QUERIES,
 ) -> DataFrame:
     """IVF-PQ: inverted-list pruning × product-quantized ADC scoring — the
     10⁹-vector serving shape. Each vector is stored once as
@@ -909,14 +818,14 @@ def ivfpq_topk(
     ``encoded``/``centroids``/``books`` to reuse a persisted index (resume
     path); by default they are trained and encoded in-line (deterministic:
     seeded, id-ordered samples). Query ids keep their input dtype and
-    column name; the query batch is bounded by ``max_queries``.
+    column name; the query batch is collected to the driver (at most
+    MAX_QUERIES).
     """
     shared_sample = None
     if centroids is None or books is None:
-        # ONE sample collection feeds both trainers; size comes from the
-        # trainers' shared default so the composed path can never drift
-        # from direct trainer calls (bit-reproducibility contract)
-        shared_sample = _deterministic_sample(vectors, vec_col, id_col, TRAIN_SAMPLE)
+        # ONE sample collection feeds both trainers: the same rows each
+        # trainer would collect alone (bit-reproducibility contract)
+        shared_sample = _deterministic_sample(vectors, vec_col, id_col)
     if centroids is None:
         centroids = train_ivf_centroids(
             vectors, dim, n_centroids, vec_col=vec_col, id_col=id_col,
@@ -932,8 +841,7 @@ def ivfpq_topk(
         vectors, queries, _nearest(centroids),
         lambda qmat: _top_lists(qmat @ centroids.T, nprobe), k,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
-        max_queries=max_queries, books=books,
-        centroids=centroids if residual else None, encoded=encoded,
+        books=books, centroids=centroids if residual else None, encoded=encoded,
     )
 
 
@@ -946,7 +854,6 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    max_queries: int = MAX_QUERIES,
 ) -> DataFrame:
     """Approximate cosine top-k over PQ-compressed vectors (asymmetric
     distance computation): each query builds an (m, 256) inner-product
@@ -957,5 +864,5 @@ def pq_topk(
     return ivfpq_topk(
         vectors, queries, dim, k=k, m=m, n_centroids=1, nprobe=1,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
-        residual=False, max_queries=max_queries,
+        residual=False,
     )

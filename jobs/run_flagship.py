@@ -72,10 +72,15 @@ def main() -> None:
     # excluded from the spatially-keyed sink explicitly (disclosed below):
     # s2_parent keeps NULL as NULL (r5 review: it once NaN→int-cast one into
     # a garbage valid-looking part_key), and a NULL part_key would make the
-    # sink raise, since NULL keys cannot be resume-tracked.
+    # sink raise, since NULL keys cannot be resume-tracked. One aggregate
+    # over the ok rows counts them and takes the cell range (min/max skip
+    # NULLs), before the range shuffle rather than after it.
     par = args.s2_partitions or spark.sparkContext.defaultParallelism
     tiles = enriched.filter(F.col("status") == "ok")
-    n_no_cell = tiles.filter(F.col("s2_cell").isNull()).count()
+    rng = tiles.agg(
+        F.count(F.when(F.col("s2_cell").isNull(), 1)).alias("no_cell"),
+        F.min("s2_cell").alias("lo"), F.max("s2_cell").alias("hi"),
+    ).collect()[0]
     tiles = tiles.filter(F.col("s2_cell").isNotNull())
     tiles = range_partition_by_cell(tiles, par, cell_col="s2_cell")
     # part_key = S2 PARENT prefix, not a hash (r4 review: pmod(xxhash64)
@@ -91,9 +96,6 @@ def main() -> None:
     # spans the observed [min, max] id range in ≤ ~2·par parents.
     from cog3pio_spark.functions import cells as C
 
-    rng = tiles.agg(
-        F.min("s2_cell").alias("lo"), F.max("s2_cell").alias("hi")
-    ).collect()[0]
     level = 0
     if rng["lo"] is not None:
         span = max(1, int(rng["hi"]) - int(rng["lo"]))
@@ -113,7 +115,7 @@ def main() -> None:
         "polygons_with_tiles": len(agg_rows),
         "checkpoint": ckpt,
         "part_key_level": level,
-        "ok_rows_without_cell": int(n_no_cell),
+        "ok_rows_without_cell": int(rng["no_cell"]),
         "wall_sec": round(dt, 2),
     }))
 

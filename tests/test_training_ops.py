@@ -466,8 +466,9 @@ def test_ivf2_topk_recall(spark):
 
 
 def test_lsh_multiprobe_improves_recall(spark):
-    """probe_bits=1 recall ⊇ single-bucket recall on planted near-dups, and
-    the single-bucket path (probe_bits=0) is unchanged."""
+    """Multi-probe recall (n_probes=11, the fan-out of the Hamming-1 ball
+    at 10 planes) ⊇ single-bucket recall (the n_probes=1 default) on
+    planted near-dups."""
     rng = np.random.RandomState(41)
     mat = rng.randn(400, 16)
     qv = rng.randn(16)
@@ -480,7 +481,7 @@ def test_lsh_multiprobe_improves_recall(spark):
     base = {r["vec_id"] for r in lsh_topk(df, qdf, dim=16, k=8, n_planes=10).collect()}
     multi = {
         r["vec_id"]
-        for r in lsh_topk(df, qdf, dim=16, k=8, n_planes=10, probe_bits=1).collect()
+        for r in lsh_topk(df, qdf, dim=16, k=8, n_planes=10, n_probes=11).collect()
     }
     planted = set(range(8))
     assert len(multi & planted) >= len(base & planted)
@@ -489,11 +490,14 @@ def test_lsh_multiprobe_improves_recall(spark):
 
 def test_lsh_query_directed_probes_bounded_and_effective(spark):
     """r3 multi-probe upgrade: query-directed probing (n_probes=T, flips
-    ranked by |margin|) must (a) emit exactly T probes per query at any
-    n_planes — the Hamming-ball mode explodes as C(p,2) — and (b) recover
-    at least as many planted near-dups as the full Hamming-1 ball while
-    probing FEWER buckets."""
-    from cog3pio_spark.operators.ann import lsh_topk, query_directed_probes
+    ranked by |margin|) must (a) emit exactly T distinct probes per query at
+    any n_planes — a Hamming ball grows as C(p,2) — and (b) recover at least
+    as many planted near-dups as the full Hamming-1 ball (probed here by a
+    test-local ball through the same indexed core) while probing FEWER
+    buckets."""
+    from pyspark.sql import types as T
+
+    from cog3pio_spark.operators.ann import _buckets, _directed_probes, _indexed_topk, _lsh_planes
 
     rng = np.random.RandomState(43)
     mat = rng.randn(400, 16)
@@ -505,15 +509,20 @@ def test_lsh_query_directed_probes_bounded_and_effective(spark):
     )
     qdf = spark.createDataFrame([(5, [float(x) for x in qv])], ["query_id", "embedding"])
 
-    probes = qdf.select(
-        query_directed_probes(F.col("embedding"), 16, 10, 6).alias("p")
-    ).collect()[0]["p"]
+    planes = _lsh_planes(16, 10)  # lsh_topk's planes at dim=16, n_planes=10
+    probes = _directed_probes(qv[None, :], planes, 6)[0]
     assert len(probes) == 6 and len(set(probes)) == 6  # bounded, distinct
 
     planted = set(range(8))
-    ham1 = {  # full Hamming-1 ball: 11 probes/query
+    ball = np.r_[0, np.int64(1) << np.arange(10)]  # full Hamming-1 ball: 11 probes/query
+    ham1 = {
         r["vec_id"]
-        for r in lsh_topk(df, qdf, dim=16, k=8, n_planes=10, probe_bits=1).collect()
+        for r in _indexed_topk(
+            df, qdf, lambda mat: _buckets(mat @ planes),
+            lambda qmat: _buckets(qmat @ planes)[:, None] ^ ball, 8,
+            id_col="vec_id", vec_col="embedding", query_id_col="query_id",
+            list_type=T.LongType(),
+        ).collect()
     }
     directed = {  # 6 directed probes/query — nearly half the fan-out
         r["vec_id"]
@@ -521,6 +530,19 @@ def test_lsh_query_directed_probes_bounded_and_effective(spark):
     }
     assert len(directed & planted) >= len(ham1 & planted)
     assert len(directed & planted) >= 6
+
+
+def test_lsh_single_probe_is_the_home_bucket():
+    """n_probes=1 (lsh_topk's default) probes exactly each query's home
+    bucket; n_probes < 1 is refused (a slice to n_probes − 1 = −1 would
+    otherwise keep every flip but one)."""
+    from cog3pio_spark.operators.ann import _buckets, _directed_probes, _lsh_planes
+
+    planes = _lsh_planes(16, 10)
+    q = np.random.RandomState(47).randn(50, 16)
+    np.testing.assert_array_equal(_directed_probes(q, planes, 1), _buckets(q @ planes)[:, None])
+    with pytest.raises(ValueError, match="n_probes=0"):
+        _directed_probes(q, planes, 0)
 
 
 def test_resize_media_real_tiff(spark, tmp_path):
@@ -668,6 +690,51 @@ def test_ivfpq_scan_prunes_lists(spark, tmp_path):
     )
 
 
+def test_trainers_are_pinned(spark):
+    """The codebook and centroid trainers are bit-reproducible: their
+    sample size, seeds and iteration counts are fixed, so their output on
+    one seeded frame is pinned by sha256. (The registry's indexed top-ks
+    run at lossless configurations, where centroid drift cannot show.)"""
+    import hashlib
+
+    from cog3pio_spark.operators.ann import (
+        train_ivf2_centroids,
+        train_ivf_centroids,
+        train_pq_codebooks,
+    )
+
+    rng = np.random.RandomState(97)
+    centers = rng.randn(6, 16) * 3
+    mat = np.vstack([centers[i % 6] + rng.randn(16) for i in range(500)])
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in mat[i]]) for i in range(500)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = train_ivf_centroids(df, 16, n_centroids=8)
+    coarse, fine = train_ivf2_centroids(df, 16, n_coarse=4, n_fine=4)
+    got = {
+        "ivf": cents,
+        "ivf2_coarse": coarse,
+        "ivf2_fine": fine,
+        "pq_raw": train_pq_codebooks(df, 16, m=4),
+        "pq_residual": train_pq_codebooks(df, 16, m=4, centroids=cents),
+    }
+    shapes = {k: a.shape for k, a in got.items()}
+    assert shapes == {"ivf": (8, 16), "ivf2_coarse": (4, 16), "ivf2_fine": (4, 4, 16),
+                      "pq_raw": (4, 256, 4), "pq_residual": (4, 256, 4)}
+    digests = {
+        k: hashlib.sha256(np.ascontiguousarray(a, dtype=np.float64).tobytes()).hexdigest()
+        for k, a in got.items()
+    }
+    assert digests == {
+        "ivf": "8475f3c4b071fe9da545407932c7e41fe36b00e710e03bafed924013d633ddc5",
+        "ivf2_coarse": "30a4a8d8c6c09a22ccb504ff93ab0750f92b4e6cd23af235156d959dc7525f3b",
+        "ivf2_fine": "304ada4ddbef88ba2d9fe19a022e213c425ee4f408be6fb89fb9a4c9e1738486",
+        "pq_raw": "32203695219896f49aa56805413e8cc758512e5ab348d24ab34688fa2830e987",
+        "pq_residual": "97d8aa41938668df40989719af3f291d4af751f6a7e9934133ba745f87b4131b",
+    }
+
+
 def test_top_cosine_pairs_guard_refuses_large_corpus(spark):
     """The exact all-pairs variant is the oracle anchor, not a scale API: it
     must refuse oversized corpora unless max_rows is raised explicitly."""
@@ -808,12 +875,15 @@ def test_video_mp4_container_metadata(spark):
     assert types["v0"] == "video/mp4" and types["junk"] == "application/octet-stream"
 
 
-def test_pq_query_guard_raises_before_collect(spark):
+def test_pq_query_guard_raises_before_collect(spark, monkeypatch):
     """VERDICT r3 #2: the PQ/IVFPQ LUT paths collect the query set to the
-    driver (serving shape) — an oversized query set must raise loudly
-    BEFORE any collect, via a bounded limit(max+1).count() probe, never
-    OOM the driver."""
+    driver (serving shape) — a query set over MAX_QUERIES must raise loudly
+    BEFORE any collect, via a bounded limit(max+1) probe, never OOM the
+    driver."""
+    from cog3pio_spark.operators import ann
     from cog3pio_spark.operators.ann import ivfpq_topk, pq_topk
+
+    monkeypatch.setattr(ann, "MAX_QUERIES", 10)
 
     rng = np.random.RandomState(5)
     mat = rng.randn(40, 8)
@@ -821,13 +891,13 @@ def test_pq_query_guard_raises_before_collect(spark):
         [(i, [float(x) for x in mat[i]]) for i in range(40)], ["vec_id", "embedding"]
     )
     qdf = df.withColumnRenamed("vec_id", "query_id")
-    with pytest.raises(ValueError, match="max_queries"):
-        pq_topk(df, qdf, dim=8, k=3, m=4, max_queries=10)
-    with pytest.raises(ValueError, match="max_queries"):
-        ivfpq_topk(df, qdf, dim=8, k=3, m=4, n_centroids=4, nprobe=2, max_queries=10)
+    with pytest.raises(ValueError, match="max_queries=10"):
+        pq_topk(df, qdf, dim=8, k=3, m=4)
+    with pytest.raises(ValueError, match="max_queries=10"):
+        ivfpq_topk(df, qdf, dim=8, k=3, m=4, n_centroids=4, nprobe=2)
     # at/below the bound both run fine
     small = qdf.filter(F.col("query_id") < 3)
-    assert pq_topk(df, small, dim=8, k=3, m=4, max_queries=10).count() == 9
+    assert pq_topk(df, small, dim=8, k=3, m=4).count() == 9
 
 
 def test_pq_ivfpq_string_query_ids_and_column_name(spark):
