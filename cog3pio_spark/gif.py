@@ -10,7 +10,8 @@ Supported: GIF87a/89a, global and local color tables, interlaced images
 (pass reordering), extensions skipped; the FIRST frame of animated GIFs is
 decoded and composited onto the logical screen (r5: sub-rectangle first
 frames — partial updates — are placed at their descriptor offsets over the
-background color instead of being returned mispositioned).
+background color instead of being returned mispositioned). ``header(raw)``
+reads the logical screen the decoder starts from.
 
 Work is bounded by the header before any pixel is produced: a logical
 screen of more than ``MAX_SCREEN_PIXELS`` pixels is refused (the
@@ -75,6 +76,24 @@ def _deinterlace(idx: np.ndarray) -> np.ndarray:
     return out
 
 
+def _screen(raw: bytes) -> tuple[int, int, int, int]:
+    """Signature + logical screen descriptor → (width, height, packed
+    fields, background color index). The length is checked before the
+    unpack, so the only error is :class:`GifDecodeError`."""
+    if len(raw) < 13 or raw[:6] not in (b"GIF87a", b"GIF89a"):
+        raise GifDecodeError("Cannot parse GIF: bad signature")
+    return struct.unpack_from("<HHBB", raw, 6)
+
+
+def header(raw: bytes) -> dict:
+    """Logical screen → ``{width, height, bands, detail}``: ``bands`` is the
+    3 RGB bands ``decode_gif`` returns, ``detail`` the version signature.
+    The screen-size refusal is the decoder's, so an oversized screen still
+    reports its dimensions here."""
+    sw, sh, _, _ = _screen(raw)
+    return {"width": sw, "height": sh, "bands": 3, "detail": raw[:6].decode("ascii")}
+
+
 def decode_gif(raw: bytes) -> np.ndarray:
     """Decode the first frame of a GIF to a (3, h, w) uint8 RGB tensor.
 
@@ -94,9 +113,7 @@ def decode_gif(raw: bytes) -> np.ndarray:
 
 
 def _decode_gif(raw: bytes) -> np.ndarray:
-    if len(raw) < 13 or raw[:6] not in (b"GIF87a", b"GIF89a"):
-        raise GifDecodeError("Cannot parse GIF: bad signature")
-    sw, sh, packed, _bg, _ar = struct.unpack_from("<HHBBB", raw, 6)
+    sw, sh, packed, _bg = _screen(raw)
     if sw * sh > MAX_SCREEN_PIXELS:
         raise GifDecodeError(
             f"Cannot decode GIF: logical screen {sw}x{sh} exceeds "

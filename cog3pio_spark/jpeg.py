@@ -5,7 +5,9 @@ WAV parser): baseline DCT JPEGs (SOF0/SOF1) and progressive JPEGs (SOF2 —
 spectral selection + successive approximation, r4: most large web JPEGs are
 progressive) decode to (bands, h, w) uint8 tensors. Arithmetic-coded,
 lossless and hierarchical streams raise an honest ``unsupported error`` —
-never a faked decode.
+never a faked decode. ``header(raw)`` reads the frame header alone (every
+SOF kind); it and the decoder share one marker-segment walk and one SOF
+table.
 
 There is one scan decoder. A sequential frame's single scan is a first scan
 (Ah=0) over the full band Ss=0..Se=63 (ITU-T T.81 §G.1.2), so it runs the
@@ -35,7 +37,9 @@ contract (the Spark operators only see the contract).
 
 from __future__ import annotations
 
+import functools
 import itertools
+import re
 import struct
 
 import numpy as np
@@ -44,6 +48,17 @@ import numpy as np
 class JpegDecodeError(ValueError):
     """Parse/decode failure with an honest message."""
 
+
+# SOF marker -> frame kind, the ``detail`` of ``header``; the decoder reads
+# the first three (SOF0/1 sequential and SOF2 progressive, Huffman-coded)
+_SOF_KINDS = {
+    0xC0: "baseline", 0xC1: "extended-sequential", 0xC2: "progressive",
+    0xC3: "lossless", 0xC5: "sequential-dht", 0xC6: "progressive-dht",
+    0xC7: "lossless-dht", 0xC9: "arithmetic-sequential",
+    0xCA: "arithmetic-progressive", 0xCB: "arithmetic-lossless",
+    0xCD: "arithmetic-sequential-dht", 0xCE: "arithmetic-progressive-dht",
+    0xCF: "arithmetic-lossless-dht",
+}
 
 _ZIGZAG = np.array(
     [
@@ -120,41 +135,42 @@ def _extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
-def decode_jpeg(raw: bytes) -> np.ndarray:
-    """Decode a baseline or progressive JPEG byte stream to a (bands, h, w)
-    uint8 tensor (bands = 1 gray, 3 YCbCr→RGB per the JFIF matrix).
+def _typed(fn):
+    """Every failure of ``fn(raw)`` surfaces as :class:`JpegDecodeError` —
+    truncated segments and malformed tables raise struct/index errors
+    internally, wrapped here so the documented taxonomy holds (r4 review: a
+    short SOF segment raised a bare IndexError, which the operators'
+    narrowed corrupt-input catches correctly refuse to treat as data)."""
 
-    Every failure surfaces as :class:`JpegDecodeError` — truncated segments
-    and malformed tables raise struct/index errors internally, wrapped here
-    so the documented taxonomy holds (r4 review: a short SOF segment raised
-    a bare IndexError, which the operators' narrowed corrupt-input catches
-    correctly refuse to treat as data)."""
-    try:
-        return _decode_jpeg_stream(raw)
-    except JpegDecodeError:
-        raise
-    # OverflowError: corrupt entropy data can walk the DC predictor past
-    # int64 before any length check trips (r5 byte-flip fuzz finding)
-    except (
-        struct.error, ValueError, IndexError, ZeroDivisionError, KeyError,
-        OverflowError,
-    ) as exc:
-        raise JpegDecodeError(
-            f"Cannot parse JPEG: truncated or corrupt ({type(exc).__name__})"
-        ) from exc
+    @functools.wraps(fn)
+    def typed(raw: bytes):
+        try:
+            return fn(raw)
+        except JpegDecodeError:
+            raise
+        # OverflowError: corrupt entropy data can walk the DC predictor past
+        # int64 before any length check trips (r5 byte-flip fuzz finding)
+        except (
+            struct.error, ValueError, IndexError, ZeroDivisionError, KeyError,
+            OverflowError,
+        ) as exc:
+            raise JpegDecodeError(
+                f"Cannot parse JPEG: truncated or corrupt ({type(exc).__name__})"
+            ) from exc
+
+    return typed
 
 
-def _decode_jpeg_stream(raw: bytes) -> np.ndarray:
+def _segments(raw: bytes):
+    """The one marker-segment walk (T.81 §B.1.1), from SOI to EOI or the end
+    of the data: yields ``(marker, body, entropy)`` per segment. ``entropy``
+    is None except after an SOS, where it holds the scan's entropy-coded
+    data de-stuffed and split at RSTn markers. The data after an SOS is
+    read only when the walk is resumed past it, so a reader that stops at
+    the SOF reads no entropy data."""
     if len(raw) < 4 or raw[:2] != b"\xff\xd8":
         raise JpegDecodeError("Cannot parse JPEG: missing SOI marker")
     pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    htables: dict[tuple[int, int], dict] = {}
-    frame = None
-    scans: list[dict] = []
-    restart_interval = 0
-    adobe_transform = None
-
     while pos < len(raw):
         if raw[pos] != 0xFF:
             raise JpegDecodeError("Cannot parse JPEG: marker expected")
@@ -165,14 +181,74 @@ def _decode_jpeg_stream(raw: bytes) -> np.ndarray:
         marker = raw[pos]
         pos += 1
         if marker == 0xD9:  # EOI
-            break
+            return
         if marker == 0x01 or 0xD0 <= marker <= 0xD7:
             continue  # standalone markers
         if pos + 2 > len(raw):
             raise JpegDecodeError("Cannot parse JPEG: truncated segment")
         (seg_len,) = struct.unpack_from(">H", raw, pos)
-        seg = raw[pos + 2 : pos + seg_len]
+        body = raw[pos + 2 : pos + seg_len]
         pos += seg_len
+        if marker != 0xDA:
+            yield marker, body, None
+            continue
+        # the scan's data runs to the first 0xFF that is neither a stuffed
+        # 0xFF00 nor an RSTn (a 0xFF ending the data counts as a marker)
+        end = pos
+        while (end := raw.find(b"\xff", end)) >= 0:
+            nxt = raw[end + 1] if end + 1 < len(raw) else 0xD9
+            if nxt != 0 and not 0xD0 <= nxt <= 0xD7:
+                break
+            end += 2
+        else:
+            end = len(raw)
+        parts = re.split(rb"\xff[\xd0-\xd7]", raw[pos:end])
+        yield marker, body, [p.replace(b"\xff\x00", b"\xff") for p in parts]
+        pos = end
+
+
+def _frame(marker: int, body: bytes) -> dict:
+    """One SOF segment → the frame: sample precision, dimensions and the
+    component specs (id, sampling factors, quant table)."""
+    precision, h, w, ncomp = body[0], *struct.unpack_from(">HH", body, 1), body[5]
+    comps = []
+    for c in range(ncomp):
+        cid, samp, tq = body[6 + 3 * c : 9 + 3 * c]
+        comps.append({"id": cid, "h": samp >> 4, "v": samp & 0x0F, "tq": tq})
+    return {"precision": precision, "h": h, "w": w, "comps": comps,
+            "progressive": marker == 0xC2}
+
+
+@_typed
+def header(raw: bytes) -> dict:
+    """Frame header → ``{width, height, bands, detail}``: ``bands`` is the
+    component count (the bands ``decode_jpeg`` returns), ``detail`` the SOF
+    kind — lossless and arithmetic frames included, which the decoder
+    refuses. Walks the marker segments to the first SOF and reads nothing
+    after it."""
+    for marker, body, _ in _segments(raw):
+        if marker in _SOF_KINDS:
+            frame = _frame(marker, body)
+            return {"width": frame["w"], "height": frame["h"],
+                    "bands": len(frame["comps"]), "detail": _SOF_KINDS[marker]}
+        if marker == 0xDA:
+            break
+    raise JpegDecodeError("Cannot parse JPEG: missing SOF")
+
+
+@_typed
+def decode_jpeg(raw: bytes) -> np.ndarray:
+    """Decode a baseline or progressive JPEG byte stream to a (bands, h, w)
+    uint8 tensor (bands = 1 gray, 3 YCbCr→RGB per the JFIF matrix). Every
+    failure surfaces as :class:`JpegDecodeError`."""
+    qtables: dict[int, np.ndarray] = {}
+    htables: dict[tuple[int, int], dict] = {}
+    frame = None
+    scans: list[dict] = []
+    restart_interval = 0
+    adobe_transform = None
+
+    for marker, seg, entropy in _segments(raw):
         if marker == 0xDB:  # DQT
             i = 0
             while i < len(seg):
@@ -185,26 +261,23 @@ def _decode_jpeg_stream(raw: bytes) -> np.ndarray:
                     vals = np.frombuffer(seg[i : i + 64], dtype=np.uint8).astype(np.int32)
                     i += 64
                 qtables[tq] = vals
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 progressive
-            precision, h, w, ncomp = seg[0], *struct.unpack_from(">HH", seg, 1), seg[5]
-            if precision != 8:
+        elif marker in _SOF_KINDS:
+            if marker > 0xC2:  # past SOF0/1 sequential and SOF2 progressive
+                kind = _SOF_KINDS[marker]
+                if kind.endswith("-dht"):
+                    kind = f"SOF{marker - 0xC0}"
+                elif kind.startswith("arithmetic"):
+                    kind = "arithmetic-coded"
                 raise JpegDecodeError(
-                    f"unsupported error: {precision}-bit JPEG precision is unsupported"
+                    f"unsupported error: {kind} JPEG is unsupported "
+                    f"(baseline + progressive Huffman only)"
                 )
-            comps = []
-            for c in range(ncomp):
-                cid, samp, tq = seg[6 + 3 * c : 9 + 3 * c]
-                comps.append({"id": cid, "h": samp >> 4, "v": samp & 0x0F, "tq": tq})
-            frame = {"h": h, "w": w, "comps": comps, "progressive": marker == 0xC2}
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            kind = {
-                0xC3: "lossless", 0xC9: "arithmetic-coded", 0xCA: "arithmetic-coded",
-                0xCB: "arithmetic-coded",
-            }.get(marker, f"SOF{marker - 0xC0}")
-            raise JpegDecodeError(
-                f"unsupported error: {kind} JPEG is unsupported "
-                f"(baseline + progressive Huffman only)"
-            )
+            frame = _frame(marker, seg)
+            if frame["precision"] != 8:
+                raise JpegDecodeError(
+                    f"unsupported error: {frame['precision']}-bit JPEG precision "
+                    "is unsupported"
+                )
         elif marker == 0xC4:  # DHT
             i = 0
             while i < len(seg):
@@ -225,31 +298,10 @@ def _decode_jpeg_stream(raw: bytes) -> np.ndarray:
             # spectral selection + successive approximation (baseline streams
             # carry the fixed 0/63/0/0 here)
             ss, se, ahal = seg[1 + 2 * ns], seg[2 + 2 * ns], seg[3 + 2 * ns]
-            # entropy-coded data follows until a non-RST marker; de-stuff,
-            # split at restart markers
-            segments: list[bytes] = []
-            cur = bytearray()
-            while pos < len(raw):
-                b = raw[pos]
-                if b == 0xFF:
-                    nxt = raw[pos + 1] if pos + 1 < len(raw) else 0xD9
-                    if nxt == 0x00:
-                        cur.append(0xFF)
-                        pos += 2
-                        continue
-                    if 0xD0 <= nxt <= 0xD7:  # RSTn: segment boundary
-                        segments.append(bytes(cur))
-                        cur = bytearray()
-                        pos += 2
-                        continue
-                    break  # real marker: end of scan
-                cur.append(b)
-                pos += 1
-            segments.append(bytes(cur))
             scans.append(
                 {
                     "comps": scan_comps,
-                    "segments": segments,
+                    "segments": entropy,
                     "ss": ss,
                     "se": se,
                     "ah": ahal >> 4,

@@ -352,7 +352,7 @@ def embedding_dupes(
     ~256-row buckets — at 10⁹ rows that is 22 planes, where even τ=0.95
     pairs (p≈0.9) survive one table only 10% of the time and 16 tables miss
     ~20% of true dups. The plane count (``dupes_plane_count``, over the
-    input's row count) therefore clamps the size-based rule to the largest
+    count of finite rows — the rows indexed) therefore clamps the size-based rule to the largest
     k with (1−p^k)^tables ≤ 1−0.95 at ``PAIR_TABLES`` tables, so the 0.95
     recall holds at ANY corpus size; the price of the smaller k is
     bigger buckets, which the deterministic ``bucket_cap`` bounds (capped
@@ -361,7 +361,8 @@ def embedding_dupes(
     Deterministic for fixed seed + data. Returns (id_a, id_b, cosine),
     cosine rounded to 6.
     """
-    n_planes = dupes_plane_count(vectors.count(), threshold, PAIR_TABLES, recall_target=0.95)
+    n_rows = _finite_rows(vectors, vec_col).count()
+    n_planes = dupes_plane_count(n_rows, threshold, PAIR_TABLES, recall_target=0.95)
     return _lsh_blocked_pairs(
         vectors, dim, n_planes, id_col, vec_col, threshold=threshold, bucket_cap=bucket_cap
     )

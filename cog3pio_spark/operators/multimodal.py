@@ -16,8 +16,15 @@ rows of its output schema and what a bad blob becomes. A blob is bad when
 its parse raises one of ``MEDIA_ERRORS`` — the codecs' typed errors (all
 ``ValueError`` subclasses) plus the struct/zlib/EOF errors truncated
 containers raise. Any other exception is a programming error and fails
-the task. Pixel operators share one magic-byte dispatch,
-``_decode_pixels`` (TIFF/JPEG/PNG/GIF).
+the task.
+
+``extract_features``, ``resize_media`` and ``image_meta`` share one
+magic-byte dispatch table, ``_CODECS``: one ``(magic, media_type, header,
+decode)`` entry per image format (``attach_media_meta``'s JVM-side sniff is
+a separate SQL layer). Each codec has one header parse, its ``header(raw)
+-> {width, height, bands, detail}``, which its decoder starts from, so
+``image_meta`` reports the bands the decoder returns. TIFF reads through
+``CogReader``; WebP is a header-only entry.
 
 * ``attach_media_meta``  — parse magic bytes → (media_type, byte_len) columns.
 * ``extract_features``   — fixed-size feature vector per blob: PIXEL
@@ -32,7 +39,8 @@ the task. Pixel operators share one magic-byte dispatch,
   A bad blob gets no ``audio_features`` rows.
 * ``video_meta``         — REAL MP4/ISO-BMFF container parse: brand,
   duration, track count, video dimensions; frame DECODE stays stubbed.
-* ``image_meta``         — header-only dims/bands/format detail.
+* ``image_meta``         — header-only dims/bands/format detail: each
+  codec's ``header``, no pixel decode.
 
 ``resize_media``, ``audio_meta``, ``video_meta`` and ``image_meta`` turn a
 bad blob into one error row: ``status='error'``, ``error_msg`` = the
@@ -42,9 +50,11 @@ exception text, every other field NULL.
 from __future__ import annotations
 
 import io
+import re
 import struct
 import zlib
 from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -52,11 +62,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cog3pio_spark.gif import decode_gif
-from cog3pio_spark.jpeg import decode_jpeg
-from cog3pio_spark.png import _CHANNELS as _PNG_BANDS
-from cog3pio_spark.png import _SIG as _PNG_SIG
-from cog3pio_spark.png import decode_png
+from cog3pio_spark import gif, jpeg, png
 from cog3pio_spark.tiff.reader import CogReader
 from cog3pio_spark.tiff.writer import write_tiff
 
@@ -153,18 +159,75 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
+def _tiff_header(raw: bytes) -> dict:
+    r = CogReader(raw)  # tag parse only; decode stays lazy
+    return {"width": r.width, "height": r.height, "bands": r.bands, "detail": str(r.dtype)}
+
+
+def _webp_header(raw: bytes) -> dict:
+    """WebP dims from the VP8/VP8L/VP8X chunk headers per the public
+    container spec; webp PIXELS stay undecodable in-sandbox."""
+    pos = 12
+    while pos + 8 <= len(raw):
+        fourcc = raw[pos : pos + 4]
+        (csize,) = struct.unpack_from("<I", raw, pos + 4)
+        body = pos + 8
+        if fourcc == b"VP8 " and body + 10 <= len(raw):
+            if raw[body + 3 : body + 6] != b"\x9d\x01\x2a":
+                raise ValueError("Cannot parse image: bad VP8 start code")
+            (w,) = struct.unpack_from("<H", raw, body + 6)
+            (h,) = struct.unpack_from("<H", raw, body + 8)
+            return {"width": w & 0x3FFF, "height": h & 0x3FFF, "bands": 3,
+                    "detail": "vp8-lossy"}
+        if fourcc == b"VP8L" and body + 5 <= len(raw):
+            if raw[body] != 0x2F:
+                raise ValueError("Cannot parse image: bad VP8L signature")
+            (bits,) = struct.unpack_from("<I", raw, body + 1)
+            alpha = (bits >> 28) & 1
+            return {
+                "width": (bits & 0x3FFF) + 1,
+                "height": ((bits >> 14) & 0x3FFF) + 1,
+                "bands": 4 if alpha else 3, "detail": "vp8l-lossless",
+            }
+        if fourcc == b"VP8X" and body + 10 <= len(raw):
+            w = 1 + int.from_bytes(raw[body + 4 : body + 7], "little")
+            h = 1 + int.from_bytes(raw[body + 7 : body + 10], "little")
+            alpha = bool(raw[body] & 0x10)
+            return {"width": w, "height": h, "bands": 4 if alpha else 3,
+                    "detail": "vp8x-extended"}
+        pos = body + csize + (csize & 1)  # chunks are 2-byte aligned
+    raise ValueError("Cannot parse image: no VP8/VP8L/VP8X chunk")
+
+
+class _Codec(NamedTuple):
+    magic: re.Pattern  # matched at the start of the blob
+    media_type: str
+    header: Callable[[bytes], dict]  # -> {width, height, bands, detail}
+    decode: Callable[[bytes], np.ndarray] | None  # -> (bands, h, w); None: header only
+
+
+# the one magic-byte dispatch of the image operators
+_CODECS = (
+    _Codec(re.compile(rb"II|MM"), "image/tiff", _tiff_header,
+           lambda raw: CogReader(raw).to_numpy()),
+    _Codec(re.compile(rb"\xff\xd8"), "image/jpeg", jpeg.header, jpeg.decode_jpeg),
+    _Codec(re.compile(rb"\x89PNG\r\n\x1a\n"), "image/png", png.header, png.decode_png),
+    _Codec(re.compile(rb"GIF8"), "image/gif", gif.header, gif.decode_gif),
+    _Codec(re.compile(rb"RIFF.{4}WEBP", re.S), "image/webp", _webp_header, None),
+)
+
+
+def _codec(raw: bytes) -> _Codec | None:
+    return next((c for c in _CODECS if c.magic.match(raw)), None)
+
+
 def _decode_pixels(raw: bytes) -> tuple[np.ndarray, str] | None:
-    """Magic-byte dispatch to the in-repo pixel codecs → ((band, h, w)
-    array, media type), or None when no codec reads the format."""
-    if raw[:2] in (b"II", b"MM"):
-        return CogReader(raw).to_numpy(), "image/tiff"
-    if raw[:2] == b"\xff\xd8":
-        return decode_jpeg(raw), "image/jpeg"
-    if raw[:8] == _PNG_SIG:
-        return decode_png(raw), "image/png"
-    if raw[:4] == b"GIF8":
-        return decode_gif(raw), "image/gif"
-    return None
+    """((band, h, w) array, media type) from the blob's codec, or None when
+    no in-repo codec decodes its format."""
+    codec = _codec(raw)
+    if codec is None or codec.decode is None:
+        return None
+    return codec.decode(raw), codec.media_type
 
 
 def _feature_vec(px: np.ndarray) -> list[float]:
@@ -254,6 +317,11 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
+_UNSUPPORTED = "resize: only {} decodable in-sandbox (no PIL/ffmpeg)".format(
+    "/".join(c.media_type.split("/")[1].upper() for c in _CODECS if c.decode)
+)
+
+
 def resize_media(
     df: DataFrame,
     target_w: int,
@@ -275,11 +343,7 @@ def resize_media(
     def resized(raw: bytes) -> Rows:
         decoded = _decode_pixels(raw)
         if decoded is None:
-            return [{
-                "status": "unsupported",
-                "error_msg": "resize: only TIFF/baseline-JPEG/PNG/GIF decodable"
-                " in-sandbox (no PIL/ffmpeg)",
-            }]
+            return [{"status": "unsupported", "error_msg": _UNSUPPORTED}]
         arr = decoded[0]  # (bands, h, w)
         _, h, w = arr.shape
         if h == 0 or w == 0:
@@ -594,110 +658,6 @@ IMAGE_META_SCHEMA = T.StructType(
     ]
 )
 
-_JPEG_SOFS = {
-    0xC0: "baseline", 0xC1: "extended-sequential", 0xC2: "progressive",
-    0xC3: "lossless", 0xC5: "sequential-dht", 0xC6: "progressive-dht",
-    0xC7: "lossless-dht", 0xC9: "arithmetic-sequential",
-    0xCA: "arithmetic-progressive", 0xCB: "arithmetic-lossless",
-    0xCD: "arithmetic-sequential-dht", 0xCE: "arithmetic-progressive-dht",
-    0xCF: "arithmetic-lossless-dht",
-}
-
-
-def _image_header_meta(raw: bytes) -> dict:
-    """Dimensions/bands from HEADERS ONLY — no pixel decode. This is the
-    filter a 100 TB curation pass runs before paying for any decode
-    ("drop images under 64px"), so it also covers formats whose pixel
-    codecs are absent in-sandbox: WebP dims parse from the VP8/VP8L/VP8X
-    chunk headers per the public container spec even though webp PIXELS
-    stay honestly undecodable here."""
-    if len(raw) < 12:
-        raise ValueError("Cannot parse image: truncated header")
-    if raw[:2] == b"\xff\xd8":  # JPEG: walk markers to the SOF
-        pos = 2
-        while pos + 4 <= len(raw):
-            if raw[pos] != 0xFF:
-                raise ValueError("Cannot parse image: JPEG marker expected")
-            while pos < len(raw) and raw[pos] == 0xFF:
-                pos += 1
-            if pos >= len(raw):  # r4 review: fill bytes ran to EOF
-                break
-            m = raw[pos]
-            pos += 1
-            if m == 0x01 or 0xD0 <= m <= 0xD9:
-                continue
-            if pos + 2 > len(raw):
-                break
-            (seglen,) = struct.unpack_from(">H", raw, pos)
-            if m in _JPEG_SOFS:
-                if pos + 8 > len(raw):
-                    # r5 review: raw[pos + 7] on a blob truncated mid-SOF
-                    # raised IndexError, which the caller's catch tuple
-                    # does not include — one truncated blob killed the task
-                    raise ValueError("Cannot parse image: truncated JPEG SOF")
-                h, w = struct.unpack_from(">HH", raw, pos + 3)
-                ncomp = raw[pos + 7]
-                return {
-                    "media_type": "image/jpeg", "width": int(w),
-                    "height": int(h), "bands": int(ncomp),
-                    "detail": _JPEG_SOFS[m],
-                }
-            pos += seglen
-        raise ValueError("Cannot parse image: JPEG SOF not found")
-    if raw[:8] == _PNG_SIG:
-        if len(raw) < 26 or raw[12:16] != b"IHDR":
-            raise ValueError("Cannot parse image: PNG IHDR missing")
-        w, h = struct.unpack_from(">II", raw, 16)
-        depth, color = raw[24], raw[25]
-        return {
-            "media_type": "image/png", "width": int(w), "height": int(h),
-            "bands": _PNG_BANDS.get(color, 0), "detail": f"{depth}-bit-ct{color}",
-        }
-    if raw[:4] == b"GIF8":
-        w, h = struct.unpack_from("<HH", raw, 6)
-        return {"media_type": "image/gif", "width": int(w), "height": int(h),
-                "bands": 3, "detail": raw[:6].decode("ascii", "replace")}
-    if raw[:2] in (b"II", b"MM"):
-        r = CogReader(raw)  # tag parse only; decode stays lazy
-        return {"media_type": "image/tiff", "width": r.width,
-                "height": r.height, "bands": r.bands, "detail": str(r.dtype)}
-    if raw[:4] == b"RIFF" and raw[8:12] == b"WEBP":
-        pos = 12
-        while pos + 8 <= len(raw):
-            fourcc = raw[pos : pos + 4]
-            (csize,) = struct.unpack_from("<I", raw, pos + 4)
-            body = pos + 8
-            if fourcc == b"VP8 " and body + 10 <= len(raw):
-                if raw[body + 3 : body + 6] != b"\x9d\x01\x2a":
-                    raise ValueError("Cannot parse image: bad VP8 start code")
-                (w,) = struct.unpack_from("<H", raw, body + 6)
-                (h,) = struct.unpack_from("<H", raw, body + 8)
-                return {"media_type": "image/webp", "width": w & 0x3FFF,
-                        "height": h & 0x3FFF, "bands": 3, "detail": "vp8-lossy"}
-            if fourcc == b"VP8L" and body + 5 <= len(raw):
-                if raw[body] != 0x2F:
-                    raise ValueError("Cannot parse image: bad VP8L signature")
-                (bits,) = struct.unpack_from("<I", raw, body + 1)
-                alpha = (bits >> 28) & 1
-                return {
-                    "media_type": "image/webp",
-                    "width": (bits & 0x3FFF) + 1,
-                    "height": ((bits >> 14) & 0x3FFF) + 1,
-                    "bands": 4 if alpha else 3, "detail": "vp8l-lossless",
-                }
-            if fourcc == b"VP8X" and body + 10 <= len(raw):
-                w = 1 + int.from_bytes(raw[body + 4 : body + 7], "little")
-                h = 1 + int.from_bytes(raw[body + 7 : body + 10], "little")
-                alpha = bool(raw[body] & 0x10)
-                return {
-                    "media_type": "image/webp", "width": w, "height": h,
-                    "bands": 4 if alpha else 3, "detail": "vp8x-extended",
-                }
-            pos = body + csize + (csize & 1)  # chunks are 2-byte aligned
-        raise ValueError("Cannot parse image: no VP8/VP8L/VP8X chunk")
-    raise ValueError("Cannot parse image: unknown format")
-
-
 def image_meta(df: DataFrame, id_col: str = "media_id", blob_col: str = "blob") -> DataFrame:
     """Header-only image metadata per blob (dims/bands/format detail
     WITHOUT pixel decode — JPEG incl. every SOF variant, PNG, GIF, TIFF,
@@ -706,6 +666,9 @@ def image_meta(df: DataFrame, id_col: str = "media_id", blob_col: str = "blob") 
     unparseable blobs (decode operator contract)."""
 
     def meta(raw: bytes) -> Rows:
-        return [{"status": "ok", **_image_header_meta(raw)}]
+        codec = _codec(raw)
+        if codec is None:
+            raise ValueError("Cannot parse image: unknown format")
+        return [{"status": "ok", "media_type": codec.media_type, **codec.header(raw)}]
 
     return _per_blob(df, id_col, blob_col, IMAGE_META_SCHEMA, meta, _error_row)

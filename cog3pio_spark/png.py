@@ -11,7 +11,8 @@ IDAT chunks, Adam7 interlace (r5, VERDICT r4 #7 — interlaced PNGs are
 common in older web crawls; each of the 7 passes is an independently
 filtered sub-image whose samples scatter into the full grid), and tRNS
 transparency (r5: palette alpha LUT → RGBA output, gray/RGB exact-match
-colorkey → appended alpha band).
+colorkey → appended alpha band). ``header(raw)`` reads IHDR, PLTE and tRNS
+without inflating any image data; the decoder starts from it.
 
 Performance note (honest): Sub/Average/Paeth unfiltering carries a
 left-to-right data dependency, implemented as a per-byte Python loop per
@@ -21,6 +22,7 @@ jpeg.py); Up/None rows are fully vectorized.
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
 
@@ -103,66 +105,103 @@ def _samples_from_recon(
     )
 
 
-def decode_png(raw: bytes) -> np.ndarray:
-    """Decode a PNG byte stream to a (bands, h, w) uint8/uint16 tensor
-    (bands: 1 gray, 2 gray+alpha, 3 RGB, 4 RGBA; palette expands to RGB).
+def _typed(fn):
+    """Every failure of ``fn(raw)`` surfaces as :class:`PngDecodeError` (r4:
+    struct/index/zlib errors from truncated chunks wrapped here, same
+    contract as the GIF and JPEG codecs)."""
 
-    Every failure surfaces as :class:`PngDecodeError` (r4: struct/index/
-    zlib errors from truncated chunks wrapped here, same contract as
-    decode_gif/decode_jpeg)."""
-    try:
-        return _decode_png_stream(raw)
-    except PngDecodeError:
-        raise
-    except (
-        struct.error, ValueError, IndexError, ZeroDivisionError, KeyError,
-        zlib.error, OverflowError,
-    ) as exc:
-        raise PngDecodeError(
-            f"Cannot parse PNG: truncated or corrupt ({type(exc).__name__})"
-        ) from exc
+    @functools.wraps(fn)
+    def typed(raw: bytes):
+        try:
+            return fn(raw)
+        except PngDecodeError:
+            raise
+        except (
+            struct.error, ValueError, IndexError, ZeroDivisionError, KeyError,
+            zlib.error, OverflowError,
+        ) as exc:
+            raise PngDecodeError(
+                f"Cannot parse PNG: truncated or corrupt ({type(exc).__name__})"
+            ) from exc
+
+    return typed
 
 
-def _decode_png_stream(raw: bytes) -> np.ndarray:
-    if len(raw) < 8 or raw[:8] != _SIG:
-        raise PngDecodeError("Cannot parse PNG: bad signature")
+def _chunks(raw: bytes):
+    """``(type, body)`` per chunk after the signature, up to IEND or the end
+    of the data."""
     pos = 8
-    ihdr = None
-    idat = bytearray()
-    palette = None
-    trns = None
     while pos + 8 <= len(raw):
         length, ctype = struct.unpack_from(">I4s", raw, pos)
-        body = raw[pos + 8 : pos + 8 + length]
+        if ctype == b"IEND":
+            return
+        yield ctype, raw[pos + 8 : pos + 8 + length]
         pos += 12 + length  # length + type + data + crc
-        if ctype == b"IHDR":
-            w, h, depth, color, comp, filt, interlace = struct.unpack(">IIBBBBB", body)
-            if comp != 0 or filt != 0:
-                raise PngDecodeError("Cannot parse PNG: unknown compression/filter method")
-            if interlace not in (0, 1):
-                raise PngDecodeError(
-                    f"Cannot parse PNG: bad interlace method {interlace}"
-                )
-            if color not in _CHANNELS:
-                raise PngDecodeError(f"Cannot parse PNG: bad color type {color}")
-            if color == 3 and depth not in (1, 2, 4, 8):
-                raise PngDecodeError(f"Cannot parse PNG: bad palette depth {depth}")
-            if color != 3 and depth not in (8, 16):
-                raise PngDecodeError(
-                    f"unsupported error: {depth}-bit color type {color} is unsupported"
-                )
-            ihdr = (w, h, depth, color, interlace)
-        elif ctype == b"PLTE":
+
+
+def _header(raw: bytes) -> tuple[dict, tuple]:
+    """The signature, an IHDR first chunk (PNG spec §5.6), then PLTE and
+    tRNS up to the first IDAT, whose data is not read → (``header``'s dict,
+    (depth, color type, interlace, palette, tRNS body))."""
+    if len(raw) < 8 or raw[:8] != _SIG:
+        raise PngDecodeError("Cannot parse PNG: bad signature")
+    chunks = _chunks(raw)
+    ctype, body = next(chunks, (None, b""))
+    if ctype != b"IHDR":
+        raise PngDecodeError("Cannot parse PNG: first chunk is not IHDR")
+    w, h, depth, color, comp, filt, interlace = struct.unpack(">IIBBBBB", body)
+    if comp != 0 or filt != 0:
+        raise PngDecodeError("Cannot parse PNG: unknown compression/filter method")
+    if interlace not in (0, 1):
+        raise PngDecodeError(f"Cannot parse PNG: bad interlace method {interlace}")
+    if color not in _CHANNELS:
+        raise PngDecodeError(f"Cannot parse PNG: bad color type {color}")
+    if color == 3 and depth not in (1, 2, 4, 8):
+        raise PngDecodeError(f"Cannot parse PNG: bad palette depth {depth}")
+    if color != 3 and depth not in (8, 16):
+        raise PngDecodeError(
+            f"unsupported error: {depth}-bit color type {color} is unsupported"
+        )
+    palette = trns = None
+    for ctype, body in chunks:
+        if ctype == b"PLTE":
             palette = np.frombuffer(body, dtype=np.uint8).reshape(-1, 3)
         elif ctype == b"tRNS":
             trns = body
         elif ctype == b"IDAT":
-            idat.extend(body)
-        elif ctype == b"IEND":
             break
-    if ihdr is None or not idat:
-        raise PngDecodeError("Cannot parse PNG: missing IHDR/IDAT")
-    w, h, depth, color, interlace = ihdr
+    # decoded bands: palette expands to RGB; tRNS adds alpha to a palette,
+    # and to gray/RGB when it holds one 16-bit colorkey sample per channel
+    channels = _CHANNELS[color]
+    if color == 3:
+        if palette is None:
+            raise PngDecodeError("Cannot parse PNG: palette image without PLTE")
+        bands = 3 + (trns is not None)
+    else:
+        colorkey = color in (0, 2) and trns is not None and len(trns) >= 2 * channels
+        bands = channels + colorkey
+    hdr = {"width": w, "height": h, "bands": bands, "detail": f"{depth}-bit-ct{color}"}
+    return hdr, (depth, color, interlace, palette, trns)
+
+
+@_typed
+def header(raw: bytes) -> dict:
+    """IHDR, PLTE and tRNS → ``{width, height, bands, detail}``: ``bands`` is
+    the band count ``decode_png`` returns, ``detail`` the bit depth and
+    color type. No image data is inflated."""
+    return _header(raw)[0]
+
+
+@_typed
+def decode_png(raw: bytes) -> np.ndarray:
+    """Decode a PNG byte stream to a (bands, h, w) uint8/uint16 tensor
+    (bands: 1 gray, 2 gray+alpha, 3 RGB, 4 RGBA; palette expands to RGB).
+    Every failure surfaces as :class:`PngDecodeError`."""
+    hdr, (depth, color, interlace, palette, trns) = _header(raw)
+    w, h = hdr["width"], hdr["height"]
+    idat = b"".join(body for ctype, body in _chunks(raw) if ctype == b"IDAT")
+    if not idat:
+        raise PngDecodeError("Cannot parse PNG: missing IDAT")
     channels = _CHANNELS[color]
     bits_per_px = depth * channels
     bpp = max(1, bits_per_px // 8)  # filter unit in bytes
@@ -182,7 +221,7 @@ def _decode_png_stream(raw: bytes) -> np.ndarray:
     )
     # a deflate bomb is refused without allocating its output
     try:
-        data = inflate(bytes(idat), expected)
+        data = inflate(idat, expected)
     except zlib.error as exc:
         raise PngDecodeError(f"Cannot decode PNG: corrupt IDAT ({exc})") from exc
     except InflateLimitError:
@@ -217,31 +256,23 @@ def _decode_png_stream(raw: bytes) -> np.ndarray:
     # back opaque with alpha dropped): palette → per-entry alpha LUT
     # (RGBA out); gray/RGB → exact-match colorkey alpha band appended.
     if color == 3:  # palette: expand indices via PLTE
-        if palette is None:
-            raise PngDecodeError("Cannot parse PNG: palette image without PLTE")
         idx = samples[:, :, 0]
         if int(idx.max(initial=0)) >= len(palette):
             raise PngDecodeError(
                 f"Cannot decode PNG: palette index {int(idx.max())} out of "
                 f"range for {len(palette)}-entry PLTE"
             )
-        rgb = palette[idx]  # (h, w, 3)
-        out = np.moveaxis(rgb, -1, 0).copy()
-        if trns is not None:
-            alut = np.full(len(palette), 255, dtype=np.uint8)
-            t = np.frombuffer(trns, dtype=np.uint8)[: len(palette)]
-            alut[: len(t)] = t
-            return np.concatenate([out, alut[idx][None, :, :]])
-        return out
+        if trns is not None:  # per-entry alpha: an RGBA palette
+            alpha = np.full(len(palette), 255, dtype=np.uint8)
+            alpha[: len(trns)] = np.frombuffer(trns, dtype=np.uint8)[: len(palette)]
+            palette = np.column_stack([palette, alpha])
+        return np.moveaxis(palette[idx], -1, 0).copy()  # (bands, h, w)
 
     out = np.moveaxis(samples, -1, 0).copy()
-    if trns is not None and color in (0, 2):
+    if hdr["bands"] > channels:  # tRNS colorkey
         maxval = np.uint16(65535) if depth == 16 else np.uint8(255)
         keys = np.frombuffer(trns[: 2 * channels], dtype=">u2").astype(out.dtype)
-        if len(keys) == channels:
-            match = np.all(
-                out == keys[:, None, None], axis=0
-            )
-            alpha = np.where(match, 0, maxval).astype(out.dtype)
-            return np.concatenate([out, alpha[None, :, :]])
+        match = np.all(out == keys[:, None, None], axis=0)
+        alpha = np.where(match, 0, maxval).astype(out.dtype)
+        return np.concatenate([out, alpha[None, :, :]])
     return out

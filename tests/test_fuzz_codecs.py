@@ -12,8 +12,10 @@ accounting, tRNS, progressive scan state, GIF LZW tables, TIFF IFD walk.
 Random flips almost never land on a count field, so a second sweep is
 structure-aware: it rewrites the count, offset, size and dimension fields
 of TIFF IFDs, GIF screen/frame descriptors, PNG IHDR and chunk headers,
-WAV chunks and MP4 boxes to boundary values, and runs every case in one
-subprocess under an address-space cap with a per-case time bound. Work
+JPEG SOF/DHT/DQT/SOS/DRI segments, WAV chunks and MP4 boxes to boundary
+values, drives each decoder and each codec's header parse, and runs every
+case in one subprocess under an address-space cap with a per-case time
+bound. Work
 must be sized by the bytes present, never by a header's claim: each case
 ends in a decode or in the codec's typed error — never MemoryError or a
 timeout.
@@ -167,6 +169,59 @@ def _png_mutants(raw: bytes):
         pos += 12 + length
 
 
+def _jpeg_mutants(raw: bytes):
+    """DRI segments inserted after SOI; every segment's length (0, 1, an
+    empty body, one byte short, past EOF); SOF height, width, Nf and each
+    component's sampling factors and Tq; DHT code counts summing past the
+    segment; DQT Pq/Tq; SOS Ns, Ss, Se and Ah/Al."""
+    for v in (0, 1, 0xFFFF):
+        yield f"dri={v:#x}", raw[:2] + b"\xff\xdd\x00\x04" + struct.pack(">H", v) + raw[2:]
+    yield "dri.length=2", raw[:2] + b"\xff\xdd\x00\x02" + raw[2:]
+    pos = 2
+    while raw[pos + 1] != 0xD9:  # the fixtures carry no fill bytes
+        marker, (n,) = raw[pos + 1], struct.unpack_from(">H", raw, pos + 2)
+        at, body, end = f"{marker:#x}@{pos}", pos + 4, pos + 2 + n
+        for v in (0, 1, 2, n - 1, len(raw) - pos):
+            yield f"{at}.length={v}", _put(raw, pos + 2, ">H", v)
+        if marker in (0xC0, 0xC2):
+            for name, off in (("height", 1), ("width", 3)):
+                for v in _U16:
+                    yield f"{at}.{name}={v:#x}", _put(raw, body + off, ">H", v)
+            for v in (0, 2, 4, 0xFF):
+                yield f"{at}.nf={v}", _put(raw, body + 5, "B", v)
+            for c in range(raw[body + 5]):
+                comp = body + 6 + 3 * c
+                for v in (0x00, 0x01, 0x10, 0x44, 0xFF):
+                    yield f"{at}.comp{c}.sampling={v:#x}", _put(raw, comp + 1, "B", v)
+                for v in (3, 4, 0xFF):
+                    yield f"{at}.comp{c}.tq={v}", _put(raw, comp + 2, "B", v)
+        elif marker == 0xC4:  # DHT: Tc/Th, 16 code counts, symbols
+            i = body
+            while i < end:
+                yield f"{at}.table@{i}.counts=255", raw[: i + 1] + bytes([255] * 16) + raw[i + 17 :]
+                i += 17 + sum(raw[i + 1 : i + 17])
+        elif marker == 0xDB:  # DQT: Pq/Tq, 64 values
+            i = body
+            while i < end:
+                for v in (0x10, 0x04, 0xFF):
+                    yield f"{at}.table@{i}.pq_tq={v:#x}", _put(raw, i, "B", v)
+                i += 1 + (128 if raw[i] >> 4 else 64)
+        elif marker == 0xDA:  # SOS: Ns, Ns selectors, Ss, Se, Ah/Al
+            ns = raw[body]
+            for v in (0, 4, 0xFF):
+                yield f"{at}.ns={v}", _put(raw, body, "B", v)
+            for name, off in (("ss", 1), ("se", 2)):
+                for v in (0, 1, 63, 64, 0xFF):
+                    yield f"{at}.{name}={v}", _put(raw, body + 2 * ns + off, "B", v)
+            for v in (0x01, 0x10, 0x0D, 0xD0, 0xFF):
+                yield f"{at}.ah_al={v:#x}", _put(raw, body + 2 * ns + 3, "B", v)
+            # the entropy-coded data runs to the next non-stuffed, non-RST 0xFF
+            end = raw.index(b"\xff", end)
+            while raw[end + 1] == 0 or 0xD0 <= raw[end + 1] <= 0xD7:
+                end = raw.index(b"\xff", end + 2)
+        pos = end
+
+
 def _riff_mutants(raw: bytes):
     """RIFF size, every chunk size, and the fmt chunk's channel/rate/bits."""
     for v in _U32:
@@ -254,11 +309,8 @@ def _built_mp4() -> bytes:
 
 def _sweep_cases(tmpdir: str):
     """(case name, blob, [(surface, decode, typed error), ...])."""
-    from cog3pio_spark.operators.multimodal import (
-        _image_header_meta,
-        _parse_mp4,
-        _parse_wav,
-    )
+    from cog3pio_spark import gif, jpeg, png
+    from cog3pio_spark.operators.multimodal import _parse_mp4, _parse_wav, _tiff_header
     from cog3pio_spark.tiff.reader import file_range_fetcher
 
     def tiff_ranged(blob):
@@ -267,20 +319,25 @@ def _sweep_cases(tmpdir: str):
             f.write(blob)
         return CogReader.from_fetcher(file_range_fetcher(path)).to_numpy()
 
-    header = ("_image_header_meta", _image_header_meta, ValueError)
     tiff = [
         ("CogReader", lambda b: CogReader(b).to_numpy(), TiffDecodeError),
         ("CogReader.from_fetcher", tiff_ranged, TiffDecodeError),
-        header,
+        ("_tiff_header", _tiff_header, TiffDecodeError),
     ]
-    gif = [("decode_gif", decode_gif, GifDecodeError), header]
-    png = [("decode_png", decode_png, PngDecodeError), header]
+    gifs = [("decode_gif", decode_gif, GifDecodeError), ("gif.header", gif.header, GifDecodeError)]
+    pngs = [("decode_png", decode_png, PngDecodeError), ("png.header", png.header, PngDecodeError)]
+    jpegs = [
+        ("decode_jpeg", decode_jpeg, JpegDecodeError),
+        ("jpeg.header", jpeg.header, JpegDecodeError),
+    ]
     fixture = lambda name: open(os.path.join(DATA, name), "rb").read()  # noqa: E731
     sources = [
         *[(n, fixture(n), _tiff_mutants, tiff) for n in ("java_lzw.tif", "java_pb.tif")],
         *[(n, b, _tiff_mutants, tiff) for n, b in _built_tiffs()],
-        ("java_indexed.gif", fixture("java_indexed.gif"), _gif_mutants, gif),
-        *[(n, fixture(n), _png_mutants, png) for n in ("java_gray.png", "java_rgba_ilace.png")],
+        ("java_indexed.gif", fixture("java_indexed.gif"), _gif_mutants, gifs),
+        *[(n, fixture(n), _png_mutants, pngs) for n in ("java_gray.png", "java_rgba_ilace.png")],
+        *[(n, fixture(n), _jpeg_mutants, jpegs) for n in (
+            "java_gray.jpg", "java_rgb420.jpg", "java_gray_prog.jpg", "java_rgb_prog.jpg")],
         ("built.wav", _built_wav(), _riff_mutants, [("_parse_wav", _parse_wav, ValueError)]),
         ("built.mp4", _built_mp4(), _mp4_mutants, [("_parse_mp4", _parse_mp4, ValueError)]),
     ]

@@ -313,13 +313,10 @@ _MAGICS = [
     junk=st.binary(min_size=0, max_size=160),
 )
 def test_binary_parsers_error_taxonomy_fuzz(prefix, junk):
+    from cog3pio_spark import gif, jpeg, png
     from cog3pio_spark.gif import GifDecodeError, decode_gif
     from cog3pio_spark.jpeg import JpegDecodeError, decode_jpeg
-    from cog3pio_spark.operators.multimodal import (
-        _image_header_meta,
-        _parse_mp4,
-        _parse_wav,
-    )
+    from cog3pio_spark.operators.multimodal import _parse_mp4, _parse_wav, _webp_header
     from cog3pio_spark.png import PngDecodeError, decode_png
     from cog3pio_spark.tiff.reader import CogReader, TiffDecodeError
 
@@ -328,7 +325,10 @@ def test_binary_parsers_error_taxonomy_fuzz(prefix, junk):
         (decode_jpeg, (JpegDecodeError,)),
         (decode_png, (PngDecodeError,)),
         (decode_gif, (GifDecodeError,)),
-        (_image_header_meta, (ValueError,)),
+        (jpeg.header, (JpegDecodeError,)),
+        (png.header, (PngDecodeError,)),
+        (gif.header, (GifDecodeError,)),
+        (_webp_header, (ValueError,)),
         (_parse_wav, (ValueError,)),
         (_parse_mp4, (ValueError,)),
     ):

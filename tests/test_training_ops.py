@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import functools
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -1019,6 +1022,26 @@ def test_ann_pair_family_nonfinite_embeddings_ignored(spark, api):
     assert got == want and len(want) >= 10
 
 
+def test_embedding_dupes_planes_sized_by_finite_rows(spark):
+    """embedding_dupes sizes its planes from the rows it indexes: 1,000
+    clean vectors (2 planes) plus 100 NULL/NaN rows (1,100 raw rows, which
+    the size rule gives 3 planes) find exactly the clean corpus's pairs.
+    All 16 tables miss a cosine-0.4 pair w.p. ~1% at 3 planes and ~0.03% at
+    2, so over the corpus's 28,011 such pairs a count of the raw input
+    shows."""
+    from cog3pio_spark.operators import ann
+
+    assert ann.dupes_plane_count(1000, 0.4, ann.PAIR_TABLES, 0.95) == 2
+    assert ann.dupes_plane_count(1100, 0.4, ann.PAIR_TABLES, 0.95) == 3
+    rng = np.random.RandomState(37)
+    schema = "vec_id long, embedding array<double>"
+    clean = [(i, [float(x) for x in v]) for i, v in enumerate(rng.randn(1000, 16))]
+    bad = [(2000 + i, None if i % 2 else [float("nan")] * 16) for i in range(100)]
+    want = sorted(ann.embedding_dupes(spark.createDataFrame(clean, schema), 16, 0.4).collect())
+    got = sorted(ann.embedding_dupes(spark.createDataFrame(clean + bad, schema), 16, 0.4).collect())
+    assert got == want and len(want) > 1000
+
+
 # the registry's provably lossless configurations (q32, q36, q48, q50, q52)
 _LOSSLESS_CONFIGS = {
     "lsh": (500, {"n_planes": 2, "n_probes": 4}),
@@ -1404,6 +1427,95 @@ def test_image_meta_header_only(spark):
     assert sniff["wl"] == "image/webp" and sniff["wz"] == "image/webp"
 
 
+_DATA = os.path.join(os.path.dirname(__file__), "data")
+_COMMITTED_IMAGES = sorted(n for n in os.listdir(_DATA) if not n.endswith(".npy"))
+_BUILT_IMAGES = ("built_palette.png", "built_palette_trns.png", "built_gray_trns.png",
+                 "built.tif")
+
+
+@functools.lru_cache(maxsize=None)
+def _agreement_blobs() -> dict:
+    """Every committed test image plus built palette, palette+tRNS and
+    gray+tRNS PNGs (the drift cases: their tRNS/PLTE change the decoded
+    band count) and a built TIFF."""
+    import io
+    import struct
+    import zlib
+
+    from cog3pio_spark.tiff.writer import write_tiff
+
+    def chunk(ctype, body):
+        return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", zlib.crc32(ctype + body))
+
+    def build_png(w, h, color, rows, *chunks):
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
+        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + b"".join(chunks)
+                + chunk(b"IDAT", zlib.compress(rows)) + chunk(b"IEND", b""))
+
+    plte = chunk(b"PLTE", bytes(range(9)))
+    pal_rows = b"\x00\x00\x01\x00\x02\x01"  # 2x2 indices, filter 0
+    buf = io.BytesIO()
+    write_tiff(buf, np.arange(3 * 10 * 12, dtype=np.uint16).reshape(3, 10, 12))
+    built = [
+        build_png(2, 2, 3, pal_rows, plte),
+        build_png(2, 2, 3, pal_rows, plte, chunk(b"tRNS", b"\x00\x80")),
+        build_png(3, 1, 0, b"\x00\x07\x09\x07", chunk(b"tRNS", b"\x00\x07")),
+        buf.getvalue(),
+    ]
+    blobs = {n: open(os.path.join(_DATA, n), "rb").read() for n in _COMMITTED_IMAGES}
+    return {**blobs, **dict(zip(_BUILT_IMAGES, built))}
+
+
+def _header_end(raw: bytes) -> int | None:
+    """Offset right after the header bytes: the JPEG SOF segment, the PNG
+    chunks before the first IDAT (IHDR, PLTE, tRNS), the GIF logical
+    screen; None for TIFF, whose IFD may sit anywhere in the file."""
+    seg_len = lambda pos: int.from_bytes(raw[pos + 2 : pos + 4], "big")  # noqa: E731
+    if raw[:2] == b"\xff\xd8":  # the fixtures carry no fill bytes
+        pos = 2
+        while raw[pos + 1] not in (0xC0, 0xC2):
+            pos += 2 + seg_len(pos)
+        return pos + 2 + seg_len(pos)
+    if raw[:4] == b"\x89PNG":
+        pos = 8
+        while raw[pos + 4 : pos + 8] != b"IDAT":
+            pos += 12 + int.from_bytes(raw[pos : pos + 4], "big")
+        return pos
+    return 13 if raw[:4] == b"GIF8" else None
+
+
+@pytest.fixture(scope="module")
+def header_rows(spark):
+    """image_meta rows of every agreement input, whole and cut right after
+    its header (``<name>:cut``), in one job."""
+    from cog3pio_spark.operators.multimodal import image_meta
+
+    rows = []
+    for name, raw in _agreement_blobs().items():
+        rows.append((name, raw))
+        if _header_end(raw) is not None:
+            rows.append((name + ":cut", raw[: _header_end(raw)]))
+    df = spark.createDataFrame(rows, ["media_id", "blob"])
+    return {r["media_id"]: r.asDict() for r in image_meta(df).collect()}
+
+
+@pytest.mark.parametrize("name", _COMMITTED_IMAGES + list(_BUILT_IMAGES))
+def test_image_meta_agrees_with_decode(header_rows, name):
+    """The header and the decoder read one parse: image_meta's (bands,
+    height, width) is the shape the pixel dispatch decodes — palette and
+    tRNS PNGs included — and the blob cut right after its header gives the
+    same header row, so image_meta reads no image data."""
+    from cog3pio_spark.operators.multimodal import _decode_pixels
+
+    raw = _agreement_blobs()[name]
+    px, _ = _decode_pixels(raw)
+    row = header_rows[name]
+    assert row["status"] == "ok", row["error_msg"]
+    assert (row["bands"], row["height"], row["width"]) == px.shape
+    if _header_end(raw) is not None:
+        assert header_rows[name + ":cut"] == {**row, "media_id": name + ":cut"}
+
+
 def _union_find_components(edges, nodes):
     """Pure-python union-find — the independent oracle for the distributed
     large-star/small-star implementation."""
@@ -1513,10 +1625,10 @@ def test_corrupt_blobs_surface_as_error_rows_not_crashes(spark):
     import os
     import struct
 
+    from cog3pio_spark import jpeg
     from cog3pio_spark.gif import GifDecodeError, decode_gif  # noqa: F401
     from cog3pio_spark.jpeg import JpegDecodeError, decode_jpeg
     from cog3pio_spark.operators.multimodal import (
-        _image_header_meta,
         _parse_wav,
         audio_features,
         audio_meta,
@@ -1542,8 +1654,8 @@ def test_corrupt_blobs_surface_as_error_rows_not_crashes(spark):
     )
     with pytest.raises(ValueError, match="invalid fmt"):
         _parse_wav(bad_wav)
-    with pytest.raises(ValueError, match="Cannot parse image"):
-        _image_header_meta(b"\xff\xd8" + b"\xff" * 10)  # fill bytes to EOF
+    with pytest.raises(JpegDecodeError, match="Cannot parse JPEG: truncated in marker"):
+        jpeg.header(b"\xff\xd8" + b"\xff" * 10)  # fill bytes to EOF
 
     buf = io.BytesIO()
     write_tiff(buf, np.arange(64, dtype=np.uint8).reshape(1, 8, 8))
