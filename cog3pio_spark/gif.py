@@ -31,6 +31,7 @@ import struct
 import numpy as np
 
 from cog3pio_spark import lzw
+from cog3pio_spark.codec_errors import typed
 
 # largest logical screen decoded (PIL's Image.MAX_IMAGE_PIXELS)
 MAX_SCREEN_PIXELS = 1024 * 1024 * 1024 // 4 // 3
@@ -94,25 +95,13 @@ def header(raw: bytes) -> dict:
     return {"width": sw, "height": sh, "bands": 3, "detail": raw[:6].decode("ascii")}
 
 
+@typed(GifDecodeError, "Cannot parse GIF")
 def decode_gif(raw: bytes) -> np.ndarray:
     """Decode the first frame of a GIF to a (3, h, w) uint8 RGB tensor.
 
-    Every failure surfaces as :class:`GifDecodeError` — truncated headers,
-    short color tables, and malformed LZW parameters raise struct/numpy
-    errors internally, wrapped here so the documented taxonomy holds for
-    direct callers too (r3 review: struct.error is not even a ValueError)."""
-    try:
-        return _decode_gif(raw)
-    except GifDecodeError:
-        raise
-    except (
-        struct.error, ValueError, IndexError, KeyError, ZeroDivisionError,
-        OverflowError,
-    ) as exc:
-        raise GifDecodeError(f"Cannot parse GIF: truncated or corrupt ({exc})") from exc
-
-
-def _decode_gif(raw: bytes) -> np.ndarray:
+    Every failure surfaces as :class:`GifDecodeError`: truncated headers,
+    short color tables and malformed LZW parameters raise struct/numpy
+    errors, which the shared corrupt-input boundary wraps."""
     sw, sh, packed, _bg = _screen(raw)
     if sw * sh > MAX_SCREEN_PIXELS:
         raise GifDecodeError(

@@ -37,12 +37,13 @@ contract (the Spark operators only see the contract).
 
 from __future__ import annotations
 
-import functools
 import itertools
 import re
 import struct
 
 import numpy as np
+
+from cog3pio_spark.codec_errors import typed
 
 
 class JpegDecodeError(ValueError):
@@ -135,32 +136,6 @@ def _extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
-def _typed(fn):
-    """Every failure of ``fn(raw)`` surfaces as :class:`JpegDecodeError` —
-    truncated segments and malformed tables raise struct/index errors
-    internally, wrapped here so the documented taxonomy holds (r4 review: a
-    short SOF segment raised a bare IndexError, which the operators'
-    narrowed corrupt-input catches correctly refuse to treat as data)."""
-
-    @functools.wraps(fn)
-    def typed(raw: bytes):
-        try:
-            return fn(raw)
-        except JpegDecodeError:
-            raise
-        # OverflowError: corrupt entropy data can walk the DC predictor past
-        # int64 before any length check trips (r5 byte-flip fuzz finding)
-        except (
-            struct.error, ValueError, IndexError, ZeroDivisionError, KeyError,
-            OverflowError,
-        ) as exc:
-            raise JpegDecodeError(
-                f"Cannot parse JPEG: truncated or corrupt ({type(exc).__name__})"
-            ) from exc
-
-    return typed
-
-
 def _segments(raw: bytes):
     """The one marker-segment walk (T.81 §B.1.1), from SOI to EOI or the end
     of the data: yields ``(marker, body, entropy)`` per segment. ``entropy``
@@ -209,8 +184,12 @@ def _segments(raw: bytes):
 
 def _frame(marker: int, body: bytes) -> dict:
     """One SOF segment → the frame: sample precision, dimensions and the
-    component specs (id, sampling factors, quant table)."""
+    component specs (id, sampling factors, quant table). A height or width
+    of 0 is refused: T.81 lets height 0 defer to a DNL marker, which the
+    decoder does not read."""
     precision, h, w, ncomp = body[0], *struct.unpack_from(">HH", body, 1), body[5]
+    if h == 0 or w == 0:
+        raise JpegDecodeError(f"Cannot parse JPEG: zero frame dimension ({w}x{h})")
     comps = []
     for c in range(ncomp):
         cid, samp, tq = body[6 + 3 * c : 9 + 3 * c]
@@ -219,7 +198,7 @@ def _frame(marker: int, body: bytes) -> dict:
             "progressive": marker == 0xC2}
 
 
-@_typed
+@typed(JpegDecodeError, "Cannot parse JPEG")
 def header(raw: bytes) -> dict:
     """Frame header → ``{width, height, bands, detail}``: ``bands`` is the
     component count (the bands ``decode_jpeg`` returns), ``detail`` the SOF
@@ -236,7 +215,7 @@ def header(raw: bytes) -> dict:
     raise JpegDecodeError("Cannot parse JPEG: missing SOF")
 
 
-@_typed
+@typed(JpegDecodeError, "Cannot parse JPEG")
 def decode_jpeg(raw: bytes) -> np.ndarray:
     """Decode a baseline or progressive JPEG byte stream to a (bands, h, w)
     uint8 tensor (bands = 1 gray, 3 YCbCr→RGB per the JFIF matrix). Every

@@ -183,11 +183,11 @@ def _decode_one(
         # (pixel-center contract; b=d=0 — transform() rejects rotation)
         row["centroid_x"] = c0 + tr.a * (arr.shape[2] / 2.0)
         row["centroid_y"] = f0 + tr.e * (arr.shape[1] / 2.0)
-    except (R.TiffDecodeError, KeyError, IndexError):
+    except R.TiffDecodeError:
         # non-geo tiff (missing/short geo tags): stats-only row. Narrowed
         # (r5 review): a bare except here would swallow PROGRAMMING errors
-        # in transform()/the window arithmetic and silently null the geo
-        # columns on every row — all geo joins would drop with status='ok'.
+        # in the window arithmetic and silently null the geo columns on
+        # every row — all geo joins would drop with status='ok'.
         pass
     if include_pixels:
         row["pixels"] = buf

@@ -13,10 +13,13 @@ Every per-blob operator runs one path, ``_per_blob``: one
 ``mapInPandas`` over ``(media_id, blob)`` Arrow batches, where the
 operator supplies only a parser that turns one blob into zero or more
 rows of its output schema and what a bad blob becomes. A blob is bad when
-its parse raises one of ``MEDIA_ERRORS`` — the codecs' typed errors (all
-``ValueError`` subclasses) plus the struct/zlib/EOF errors truncated
-containers raise. Any other exception is a programming error and fails
-the task.
+its parse raises ``ValueError``: every parser — the codecs and the WAV,
+MP4 and WebP parsers here — sits behind the one corrupt-input boundary,
+``cog3pio_spark/codec_errors.py::typed``, which turns the crash classes
+of a truncated or corrupt stream into the parser's own ``ValueError``
+subclass. Any other exception is a programming error and fails the task.
+WAV and WebP read RIFF through one chunk walk, ``_riff_chunks``; MP4 is one
+walk of the ISO-BMFF box tree, ``_box_tree``.
 
 ``extract_features``, ``resize_media`` and ``image_meta`` share one
 magic-byte dispatch table, ``_CODECS``: one ``(magic, media_type, header,
@@ -30,8 +33,6 @@ a separate SQL layer). Each codec has one header parse, its ``header(raw)
 * ``extract_features``   — fixed-size feature vector per blob: PIXEL
   statistics for TIFF/JPEG/PNG/GIF (tagged ';decoded'), byte-histogram
   stand-in otherwise. Bad blob → the byte-histogram row ('raw-bytes').
-* ``frame_sample``       — deterministic byte-range sampler standing in for
-  video frame extraction (one row per frame). Cannot fail.
 * ``resize_media``       — REAL for TIFF/JPEG/PNG/GIF (decode → resample →
   re-encode as TIFF); ``status='unsupported'`` for other formats.
 * ``audio_meta`` / ``audio_features`` — REAL for WAV: typed stream
@@ -52,7 +53,6 @@ from __future__ import annotations
 import io
 import re
 import struct
-import zlib
 from collections.abc import Callable, Iterator
 from typing import NamedTuple
 
@@ -63,15 +63,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cog3pio_spark import gif, jpeg, png
+from cog3pio_spark.codec_errors import typed
 from cog3pio_spark.tiff.reader import CogReader
 from cog3pio_spark.tiff.writer import write_tiff
 
 N_FEATURES = 16
-
-# corrupt-input classes: the codec errors subclass ValueError; struct, zlib
-# and EOF errors are what truncated containers raise before a parser can
-# classify them. Anything else (TypeError, a numpy shape bug...) propagates.
-MEDIA_ERRORS = (ValueError, EOFError, struct.error, zlib.error)
 
 Rows = list[dict]
 
@@ -86,8 +82,8 @@ def _per_blob(
 ) -> DataFrame:
     """Map every blob (NULL reads as ``b""``) to ``rows(raw)`` — row dicts
     keyed by ``schema`` names without ``media_id``, absent keys NULL — or,
-    when that raises one of MEDIA_ERRORS, to ``on_error(raw, exc)``. One
-    pandas frame per Arrow batch."""
+    when that raises a ``ValueError`` (every parser's corrupt-input error),
+    to ``on_error(raw, exc)``. One pandas frame per Arrow batch."""
     sel = df.select(
         F.col(id_col).cast("string").alias("media_id"), F.col(blob_col).alias("blob")
     )
@@ -100,7 +96,7 @@ def _per_blob(
                 raw = bytes(blob or b"")
                 try:
                     got = rows(raw)
-                except MEDIA_ERRORS as exc:
+                except ValueError as exc:
                     got = on_error(raw, exc)
                 ids += [mid] * len(got)
                 out += got
@@ -164,38 +160,43 @@ def _tiff_header(raw: bytes) -> dict:
     return {"width": r.width, "height": r.height, "bands": r.bands, "detail": str(r.dtype)}
 
 
-def _webp_header(raw: bytes) -> dict:
-    """WebP dims from the VP8/VP8L/VP8X chunk headers per the public
-    container spec; webp PIXELS stay undecodable in-sandbox."""
+def _riff_chunks(raw: bytes) -> Iterator[tuple[bytes, bytes]]:
+    """The one RIFF chunk walk (WAV and WebP): ``(fourcc, body)`` per chunk
+    after the 12-byte RIFF header, to the end of the data. A body is its
+    declared size, cut at the end of the data; chunks are 2-byte aligned."""
     pos = 12
     while pos + 8 <= len(raw):
-        fourcc = raw[pos : pos + 4]
-        (csize,) = struct.unpack_from("<I", raw, pos + 4)
-        body = pos + 8
-        if fourcc == b"VP8 " and body + 10 <= len(raw):
-            if raw[body + 3 : body + 6] != b"\x9d\x01\x2a":
+        fourcc, size = struct.unpack_from("<4sI", raw, pos)
+        yield fourcc, raw[pos + 8 : pos + 8 + size]
+        pos += 8 + size + (size & 1)
+
+
+@typed(ValueError, "Cannot parse image")
+def _webp_header(raw: bytes) -> dict:
+    """WebP dims from the first VP8/VP8L/VP8X chunk header per the public
+    container spec; a chunk too short for its header is corrupt. WebP
+    PIXELS stay undecodable in-sandbox."""
+    for fourcc, body in _riff_chunks(raw):
+        if fourcc == b"VP8 ":
+            if body[3:6] != b"\x9d\x01\x2a":
                 raise ValueError("Cannot parse image: bad VP8 start code")
-            (w,) = struct.unpack_from("<H", raw, body + 6)
-            (h,) = struct.unpack_from("<H", raw, body + 8)
+            w, h = struct.unpack_from("<HH", body, 6)
             return {"width": w & 0x3FFF, "height": h & 0x3FFF, "bands": 3,
                     "detail": "vp8-lossy"}
-        if fourcc == b"VP8L" and body + 5 <= len(raw):
-            if raw[body] != 0x2F:
+        if fourcc == b"VP8L":
+            if body[0] != 0x2F:
                 raise ValueError("Cannot parse image: bad VP8L signature")
-            (bits,) = struct.unpack_from("<I", raw, body + 1)
-            alpha = (bits >> 28) & 1
+            (bits,) = struct.unpack_from("<I", body, 1)
             return {
                 "width": (bits & 0x3FFF) + 1,
                 "height": ((bits >> 14) & 0x3FFF) + 1,
-                "bands": 4 if alpha else 3, "detail": "vp8l-lossless",
+                "bands": 4 if (bits >> 28) & 1 else 3, "detail": "vp8l-lossless",
             }
-        if fourcc == b"VP8X" and body + 10 <= len(raw):
-            w = 1 + int.from_bytes(raw[body + 4 : body + 7], "little")
-            h = 1 + int.from_bytes(raw[body + 7 : body + 10], "little")
-            alpha = bool(raw[body] & 0x10)
-            return {"width": w, "height": h, "bands": 4 if alpha else 3,
-                    "detail": "vp8x-extended"}
-        pos = body + csize + (csize & 1)  # chunks are 2-byte aligned
+        if fourcc == b"VP8X":
+            flags, w, h = struct.unpack_from("<B3x3s3s", body)
+            return {"width": 1 + int.from_bytes(w, "little"),
+                    "height": 1 + int.from_bytes(h, "little"),
+                    "bands": 4 if flags & 0x10 else 3, "detail": "vp8x-extended"}
     raise ValueError("Cannot parse image: no VP8/VP8L/VP8X chunk")
 
 
@@ -276,35 +277,6 @@ def extract_features(df: DataFrame, id_col: str = "media_id", blob_col: str = "b
     return _per_blob(df, id_col, blob_col, FEATURE_SCHEMA, features, _byte_row)
 
 
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
-def frame_sample(
-    df: DataFrame, n_frames: int = 4, id_col: str = "media_id", blob_col: str = "blob"
-) -> DataFrame:
-    """One row per sampled 'frame' (deterministic byte slices — stub for
-    video frame extraction; row-explosion contract is the real thing)."""
-    if n_frames < 1:
-        # r5 review: n_frames=0 reached len(raw)//0 inside the executor
-        # UDF — fail at the call site instead
-        raise ValueError(f"n_frames must be >= 1: {n_frames}")
-
-    def frames(raw: bytes) -> Rows:
-        step = max(1, len(raw) // n_frames)
-        return [
-            {"frame_idx": i, "frame": raw[i * step : (i + 1) * step]}
-            for i in range(n_frames)
-        ]
-
-    return _per_blob(df, id_col, blob_col, FRAME_SCHEMA, frames, _no_rows)
-
-
 RESIZE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType()),
@@ -381,29 +353,24 @@ AUDIO_META_SCHEMA = T.StructType(
 )
 
 
+@typed(ValueError, "Cannot parse audio")
 def _parse_wav(raw: bytes):
     """RIFF/WAVE parse → (meta dict, float64 samples (n, channels)).
 
     REAL decode, second media family after TIFF: PCM-int (format 1,
     8/16/32-bit) and IEEE-float (format 3, 32/64-bit) supported; anything
     else raises with an honest message. Pure struct/numpy — the audio
-    analogue of the in-repo TIFF reader (no external codec libraries)."""
+    analogue of the in-repo TIFF reader (no external codec libraries).
+    The last fmt and data chunks count."""
     if len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
         raise ValueError("Cannot parse audio: not a RIFF/WAVE stream")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(raw):
-        cid, size = raw[pos : pos + 4], struct.unpack_from("<I", raw, pos + 4)[0]
-        body = raw[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            if len(body) < 16:  # short chunk: struct.error is not taxonomy
-                raise ValueError("Cannot parse audio: truncated fmt chunk")
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
+    chunks = dict(_riff_chunks(raw))
+    if b"fmt " not in chunks or b"data" not in chunks:
         raise ValueError("Cannot parse audio: missing fmt/data chunk")
-    audio_format, channels, sample_rate, _, _, bits = fmt
+    audio_format, channels, sample_rate, _, _, bits = struct.unpack_from(
+        "<HHIIHH", chunks[b"fmt "]
+    )
+    data = chunks[b"data"]
     if channels < 1 or sample_rate < 1:
         # r4 review: a fmt chunk declaring channels=0 reached the
         # len(arr)//channels reshape as a ZeroDivisionError — corrupt input
@@ -530,105 +497,88 @@ VIDEO_META_SCHEMA = T.StructType(
 )
 
 
+# the box paths the metadata is read from, and every container on the way
+_MVHD, _TRAK, _TKHD = (b"moov", b"mvhd"), (b"moov", b"trak"), (b"moov", b"trak", b"tkhd")
+_HDLR = (*_TRAK, b"mdia", b"hdlr")
+_STSD = (*_TRAK, b"mdia", b"minf", b"stbl", b"stsd")
+_CONTAINERS = {_STSD[:k] for k in range(1, len(_STSD))}
+
+
+def _box_tree(raw: bytes, pos: int, end: int, path: tuple = ()):
+    """The one ISO-BMFF box walk: ``(path, body, end)`` per box in file
+    order, depth first, descending only into the containers on a metadata
+    path. A box must fit inside its parent."""
+    while pos + 8 <= end:
+        size, btype = struct.unpack_from(">I4s", raw, pos)
+        hdr = 8
+        if size == 1:  # 64-bit largesize
+            size = struct.unpack_from(">Q", raw, pos + 8)[0]
+            hdr = 16
+        elif size == 0:  # to end of enclosing box
+            size = end - pos
+        if size < hdr or pos + size > end:
+            raise ValueError("Cannot parse video: corrupt box size")
+        box = (*path, btype)
+        yield box, pos + hdr, pos + size
+        if box in _CONTAINERS:
+            yield from _box_tree(raw, pos + hdr, pos + size, box)
+        pos += size
+
+
+@typed(ValueError, "Cannot parse video")
 def _parse_mp4(raw: bytes) -> dict:
     """ISO-BMFF (MP4/MOV) box walk → container metadata. REAL parse of the
-    box tree (ftyp brand, mvhd timescale/duration, tkhd track dimensions)
+    box tree (ftyp brand, mvhd timescale/duration, tkhd track dimensions,
+    per track the mdia/hdlr handler and stbl/stsd's first sample entry)
     with struct only — the video analogue of the WAV/TIFF in-repo codecs.
     Frame/sample DECODE stays out of scope (codec libraries absent); this
     is the metadata a 100 TB curation pass filters on before any decode.
-
-    Every malformed stream surfaces as ValueError (r4 fuzz: a box whose
-    declared size admits it but whose payload is too short for its fixed
-    fields raised struct.error — wrapped into the taxonomy here)."""
-    try:
-        return _parse_mp4_impl(raw)
-    except (struct.error, IndexError, KeyError, ZeroDivisionError) as exc:
-        raise ValueError(
-            f"Cannot parse video: truncated or corrupt ({type(exc).__name__})"
-        ) from exc
-
-
-def _parse_mp4_impl(raw: bytes) -> dict:
-    def boxes(buf, pos, end):
-        while pos + 8 <= end:
-            size, btype = struct.unpack_from(">I4s", buf, pos)
-            hdr = 8
-            if size == 1:  # 64-bit largesize
-                size = struct.unpack_from(">Q", buf, pos + 8)[0]
-                hdr = 16
-            elif size == 0:  # to end of enclosing box
-                size = end - pos
-            if size < hdr or pos + size > end:
-                raise ValueError("Cannot parse video: corrupt box size")
-            yield btype, pos + hdr, pos + size
-            pos += size
-
+    A sample entry's dimensions are read only once the track's handler is
+    known to be 'vide'."""
     if len(raw) < 12:
         raise ValueError("Cannot parse video: not an ISO-BMFF stream")
-    def parse_track(tbody, tend):
-        """One trak box → (handler, codec, width, height) from mdia/hdlr and
-        stbl/stsd's first sample entry (r4: per-track codec ids). hdlr is
-        resolved in a first pass so the video-entry dimension parse never
-        guesses from entry sizes."""
-        track = {"handler": None, "codec": None, "width": None, "height": None}
-        mdia = [
-            (mb, me) for mt, mb, me in boxes(raw, tbody, tend) if mt == b"mdia"
-        ]
-        for mbody, mend in mdia:
-            for mtype, bb, be in boxes(raw, mbody, mend):
-                if mtype == b"hdlr" and be - bb >= 12:
-                    track["handler"] = raw[bb + 8 : bb + 12].decode("ascii", "replace")
-        for mbody, mend in mdia:
-            for mtype, nb, ne in boxes(raw, mbody, mend):
-                if mtype != b"minf":
-                    continue
-                for ntype, sb, se in boxes(raw, nb, ne):
-                    if ntype != b"stbl":
-                        continue
-                    for stype, db, de in boxes(raw, sb, se):
-                        if stype != b"stsd" or de - db < 16:
-                            continue
-                        # ver/flags(4) + entry_count(4), then sample entries
-                        p = db + 8
-                        esize, fmt = struct.unpack_from(">I4s", raw, p)
-                        track["codec"] = fmt.decode("ascii", "replace")
-                        # visual sample entry: +8 fourcc/size, +8 resv/
-                        # dataref, +16 pre_defined/resv, then width/height
-                        if track["handler"] == "vide" and esize >= 36 and p + 36 <= de:
-                            vw, vh = struct.unpack_from(">HH", raw, p + 32)
-                            track["width"], track["height"] = int(vw), int(vh)
-        return track
-
     meta = {"brand": None, "duration_s": None, "n_tracks": 0,
             "width": None, "height": None, "tracks": []}
-    saw_ftyp = False
-    for btype, body, bend in boxes(raw, 0, len(raw)):
-        if btype == b"ftyp":
+    saw_ftyp, entry_dims = False, []
+    for path, body, end in _box_tree(raw, 0, len(raw)):
+        if path == (b"ftyp",):
             saw_ftyp = True
             meta["brand"] = raw[body : body + 4].decode("ascii", "replace")
-        elif btype == b"moov":
-            for ctype, cbody, cend in boxes(raw, body, bend):
-                if ctype == b"mvhd":
-                    ver = raw[cbody]
-                    if ver == 1:
-                        ts, dur = struct.unpack_from(">IQ", raw, cbody + 20)
-                    else:
-                        ts, dur = struct.unpack_from(">II", raw, cbody + 12)
-                    meta["duration_s"] = float(dur) / ts if ts else 0.0
-                elif ctype == b"trak":
-                    meta["n_tracks"] += 1
-                    meta["tracks"].append(parse_track(cbody, cend))
-                    for ttype, tbody, tend in boxes(raw, cbody, cend):
-                        if ttype == b"tkhd":
-                            ver = raw[tbody]
-                            off = tbody + (96 if ver == 1 else 84) - 8
-                            w, h = struct.unpack_from(">II", raw, off)
-                            w, h = w >> 16, h >> 16  # 16.16 fixed point
-                            if w and h:  # video track (audio tracks are 0x0)
-                                meta["width"] = meta["width"] or int(w)
-                                meta["height"] = meta["height"] or int(h)
+        elif path == _MVHD:
+            if raw[body] == 1:
+                ts, dur = struct.unpack_from(">IQ", raw, body + 20)
+            else:
+                ts, dur = struct.unpack_from(">II", raw, body + 12)
+            meta["duration_s"] = float(dur) / ts if ts else 0.0
+        elif path == _TRAK:
+            meta["n_tracks"] += 1
+            meta["tracks"].append({"handler": None, "codec": None, "width": None,
+                                   "height": None})
+            entry_dims.append(None)
+        elif path == _TKHD:
+            off = body + (96 if raw[body] == 1 else 84) - 8
+            w, h = struct.unpack_from(">II", raw, off)
+            w, h = w >> 16, h >> 16  # 16.16 fixed point
+            if w and h:  # video track (audio tracks are 0x0)
+                meta["width"] = meta["width"] or int(w)
+                meta["height"] = meta["height"] or int(h)
+        elif path == _HDLR and end - body >= 12:
+            handler = raw[body + 8 : body + 12]
+            meta["tracks"][-1]["handler"] = handler.decode("ascii", "replace")
+        elif path == _STSD and end - body >= 16:
+            # ver/flags(4) + entry_count(4), then sample entries
+            p = body + 8
+            esize, fmt = struct.unpack_from(">I4s", raw, p)
+            meta["tracks"][-1]["codec"] = fmt.decode("ascii", "replace")
+            # visual sample entry: +8 fourcc/size, +8 resv/dataref, +16
+            # pre_defined/resv, then width/height
+            if esize >= 36 and p + 36 <= end:
+                entry_dims[-1] = struct.unpack_from(">HH", raw, p + 32)
     if not saw_ftyp:
         raise ValueError("Cannot parse video: not an ISO-BMFF stream")
+    for track, dims in zip(meta["tracks"], entry_dims):
+        if track["handler"] == "vide" and dims:
+            track["width"], track["height"] = int(dims[0]), int(dims[1])
     return meta
 
 

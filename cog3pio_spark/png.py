@@ -22,12 +22,12 @@ jpeg.py); Up/None rows are fully vectorized.
 
 from __future__ import annotations
 
-import functools
 import struct
 import zlib
 
 import numpy as np
 
+from cog3pio_spark.codec_errors import typed
 from cog3pio_spark.inflate import InflateLimitError, inflate
 
 
@@ -105,28 +105,6 @@ def _samples_from_recon(
     )
 
 
-def _typed(fn):
-    """Every failure of ``fn(raw)`` surfaces as :class:`PngDecodeError` (r4:
-    struct/index/zlib errors from truncated chunks wrapped here, same
-    contract as the GIF and JPEG codecs)."""
-
-    @functools.wraps(fn)
-    def typed(raw: bytes):
-        try:
-            return fn(raw)
-        except PngDecodeError:
-            raise
-        except (
-            struct.error, ValueError, IndexError, ZeroDivisionError, KeyError,
-            zlib.error, OverflowError,
-        ) as exc:
-            raise PngDecodeError(
-                f"Cannot parse PNG: truncated or corrupt ({type(exc).__name__})"
-            ) from exc
-
-    return typed
-
-
 def _chunks(raw: bytes):
     """``(type, body)`` per chunk after the signature, up to IEND or the end
     of the data."""
@@ -184,7 +162,7 @@ def _header(raw: bytes) -> tuple[dict, tuple]:
     return hdr, (depth, color, interlace, palette, trns)
 
 
-@_typed
+@typed(PngDecodeError, "Cannot parse PNG")
 def header(raw: bytes) -> dict:
     """IHDR, PLTE and tRNS → ``{width, height, bands, detail}``: ``bands`` is
     the band count ``decode_png`` returns, ``detail`` the bit depth and
@@ -192,7 +170,7 @@ def header(raw: bytes) -> dict:
     return _header(raw)[0]
 
 
-@_typed
+@typed(PngDecodeError, "Cannot parse PNG")
 def decode_png(raw: bytes) -> np.ndarray:
     """Decode a PNG byte stream to a (bands, h, w) uint8/uint16 tensor
     (bands: 1 gray, 2 gray+alpha, 3 RGB, 4 RGBA; palette expands to RGB).

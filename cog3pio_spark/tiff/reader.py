@@ -11,7 +11,7 @@ Mirrors the behavior cog3pio asserts (citations into /root/reference):
   (DELIBERATE divergence: chunky multi-band data IS de-interleaved to
   band-major, where the reference scrambles bands; its multi-band goldens
   are shape/mean only and hold either way, see SURVEY §1.2 and
-  CogReader._to_numpy)
+  CogReader.to_numpy)
 * affine from ModelPixelScale + ModelTiepoint, e = -y_scale;
   ModelTransformation present → unsupported      — src/io/geotiff.rs:117-143
 * xy_coords: pixel-center, half-open length-n    — src/io/geotiff.rs:155-178
@@ -24,22 +24,14 @@ from __future__ import annotations
 
 import os
 import struct
-import zlib
 from dataclasses import dataclass
 
 import numpy as np
 
 from cog3pio_spark import lzw
+from cog3pio_spark.codec_errors import typed
 from cog3pio_spark.inflate import InflateLimitError, inflate
 from cog3pio_spark.tiff import writer as W
-
-
-# crash classes corrupt inputs can reach before any length/contract check;
-# every public decode surface wraps these as TiffDecodeError (r5 fuzz)
-_CRASH_CLASSES = (
-    struct.error, IndexError, KeyError, ZeroDivisionError, OverflowError,
-    zlib.error, ValueError,
-)
 
 
 class TiffDecodeError(ValueError):
@@ -264,6 +256,7 @@ def http_range_fetcher(url: str, max_cached_body: int = 256 * 1024 * 1024):
     return fetch
 
 
+@typed(TiffDecodeError, "Cannot parse TIFF")
 def _read_ifds(rd) -> tuple[list[dict[int, list]], str]:
     """Parse the full IFD chain (image 0 = full resolution, 1.. = overviews)
     through a ``rd(offset, length) -> bytes`` accessor, so the same walk
@@ -281,42 +274,39 @@ def _read_ifds(rd) -> tuple[list[dict[int, list]], str]:
     if len(head) < 8 or head[:2] not in (b"II", b"MM"):
         raise TiffDecodeError("Cannot parse TIFF header: bad byte-order mark")
     bo = "<" if head[:2] == b"II" else ">"
-    try:
-        magic, ifd_offset = struct.unpack_from(bo + "HI", head, 2)
-        if magic != 42:
-            raise TiffDecodeError(f"Cannot parse TIFF header: bad magic {magic}")
-        ifds: list[dict[int, list]] = []
-        while ifd_offset != 0 and len(ifds) < 32:  # 32 = runaway-chain guard
-            tags: dict[int, list] = {}
-            (n_entries,) = struct.unpack(bo + "H", rd(ifd_offset, 2))
-            # one read covers every 12-byte entry plus the next-IFD pointer
-            entries = rd(ifd_offset + 2, n_entries * 12 + 4)
-            for i in range(n_entries):
-                pos = i * 12
-                tag, typ, count = struct.unpack_from(bo + "HHI", entries, pos)
-                size = W._TYPE_SIZES.get(typ)
-                if size is None:  # unknown entry type: skip
-                    continue
-                total = size * count
-                if total <= 4:
-                    payload = entries[pos + 8 : pos + 8 + total]
-                else:
-                    (off,) = struct.unpack_from(bo + "I", entries, pos + 8)
-                    payload = rd(off, total)
-                # checked before any format is built, so work is sized by
-                # the bytes present, never by the declared count
-                if len(payload) < total:
-                    raise TiffDecodeError(
-                        f"Cannot parse TIFF: truncated or corrupt (tag {tag} "
-                        f"declares {count} values, {len(payload)} of {total} "
-                        f"bytes present)"
-                    )
-                fmt = f"{bo}{count}{W._TYPE_FMT[typ]}"
-                tags[tag] = list(struct.unpack(fmt, payload))
-            ifds.append(tags)
-            (ifd_offset,) = struct.unpack_from(bo + "I", entries, n_entries * 12)
-    except struct.error as exc:
-        raise TiffDecodeError(f"Cannot parse TIFF: truncated or corrupt ({exc})") from exc
+    magic, ifd_offset = struct.unpack_from(bo + "HI", head, 2)
+    if magic != 42:
+        raise TiffDecodeError(f"Cannot parse TIFF header: bad magic {magic}")
+    ifds: list[dict[int, list]] = []
+    while ifd_offset != 0 and len(ifds) < 32:  # 32 = runaway-chain guard
+        tags: dict[int, list] = {}
+        (n_entries,) = struct.unpack(bo + "H", rd(ifd_offset, 2))
+        # one read covers every 12-byte entry plus the next-IFD pointer
+        entries = rd(ifd_offset + 2, n_entries * 12 + 4)
+        for i in range(n_entries):
+            pos = i * 12
+            tag, typ, count = struct.unpack_from(bo + "HHI", entries, pos)
+            size = W._TYPE_SIZES.get(typ)
+            if size is None:  # unknown entry type: skip
+                continue
+            total = size * count
+            if total <= 4:
+                payload = entries[pos + 8 : pos + 8 + total]
+            else:
+                (off,) = struct.unpack_from(bo + "I", entries, pos + 8)
+                payload = rd(off, total)
+            # checked before any format is built, so work is sized by the
+            # bytes present, never by the declared count
+            if len(payload) < total:
+                raise TiffDecodeError(
+                    f"Cannot parse TIFF: truncated or corrupt (tag {tag} "
+                    f"declares {count} values, {len(payload)} of {total} "
+                    f"bytes present)"
+                )
+            fmt = f"{bo}{count}{W._TYPE_FMT[typ]}"
+            tags[tag] = list(struct.unpack(fmt, payload))
+        ifds.append(tags)
+        (ifd_offset,) = struct.unpack_from(bo + "I", entries, n_entries * 12)
     if not ifds:
         raise TiffDecodeError("Cannot parse TIFF: no IFDs")
     return ifds, bo
@@ -341,18 +331,8 @@ class CogReader:
             self._read = lambda off, n: bytes(data[off : off + n])
         else:
             self._read = data.read
-        try:
-            self.ifds, self.byte_order = _read_ifds(self._read)
-            self._bind_image(image_index)
-        except TiffDecodeError:
-            raise
-        except _CRASH_CLASSES as exc:
-            # r5 byte-flip fuzz: corrupt tag tables reached raw KeyError/
-            # struct.error/... — wrap the whole parse like the other codecs
-            raise TiffDecodeError(
-                f"Cannot parse TIFF: truncated or corrupt "
-                f"({type(exc).__name__}: {exc})"
-            ) from exc
+        self.ifds, self.byte_order = _read_ifds(self._read)
+        self._bind_image(image_index)
 
     def select_image(self, image_index: int) -> "CogReader":
         """Same underlying source, different IFD — reuses the already-parsed
@@ -368,6 +348,7 @@ class CogReader:
         r._bind_image(image_index)
         return r
 
+    @typed(TiffDecodeError, "Cannot parse TIFF")
     def _bind_image(self, image_index: int) -> None:
         # both bounds: a negative index would silently bind the DEEPEST
         # pyramid level via Python list indexing (r4 review: overview=-1
@@ -607,22 +588,8 @@ class CogReader:
                 _place(out[:, ya - wy0 : yb - wy0], cells, bx * tw - wx0)
         return out
 
+    @typed(TiffDecodeError, "Cannot decode TIFF")
     def to_numpy(self, window: tuple[int, int, int, int] | None = None) -> np.ndarray:
-        """Decode the selected IFD → (band, h, w) tensor (full contract on
-        :meth:`_to_numpy`). Crash classes from corrupt chunk tables/streams
-        surface as :class:`TiffDecodeError` (r5 byte-flip fuzz — same
-        self-wrap contract as decode_jpeg/png/gif)."""
-        try:
-            return self._to_numpy(window)
-        except TiffDecodeError:
-            raise
-        except _CRASH_CLASSES as exc:
-            raise TiffDecodeError(
-                f"Cannot decode TIFF: truncated or corrupt "
-                f"({type(exc).__name__}: {exc})"
-            ) from exc
-
-    def _to_numpy(self, window: tuple[int, int, int, int] | None = None) -> np.ndarray:
         """Decode the selected IFD → (band, h, w) tensor.
 
         ``window=(x0, y0, x1, y1)`` (pixel coords, half-open) crops the
@@ -640,6 +607,10 @@ class CogReader:
         only ever asserts multi-band SHAPE and order-insensitive MEAN
         (src/io/geotiff.rs:283-297 — SURVEY §1.2), both of which are
         preserved here, while per-band statistics become true per-band.
+
+        Crash classes from corrupt chunk tables or streams surface as
+        :class:`TiffDecodeError` (the shared boundary of
+        ``cog3pio_spark/codec_errors.py``).
         """
         t = self.tags
         if window is None:
@@ -677,8 +648,10 @@ class CogReader:
         return self._tiled(offs, counts, tw, th, grid_h, (wx0, wy0, wx1, wy1))
 
     # -- georeferencing ----------------------------------------------------
+    @typed(TiffDecodeError, "Cannot parse TIFF")
     def transform(self) -> AffineTransform:
-        """Affine from ModelPixelScale + ModelTiepoint (src/io/geotiff.rs:117-143)."""
+        """Affine from ModelPixelScale + ModelTiepoint (src/io/geotiff.rs:117-143);
+        short geo tags raise :class:`TiffDecodeError`."""
         t = self.tags
         if W.MODEL_TRANSFORMATION in t:
             raise TiffDecodeError(

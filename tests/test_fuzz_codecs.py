@@ -12,13 +12,12 @@ accounting, tRNS, progressive scan state, GIF LZW tables, TIFF IFD walk.
 Random flips almost never land on a count field, so a second sweep is
 structure-aware: it rewrites the count, offset, size and dimension fields
 of TIFF IFDs, GIF screen/frame descriptors, PNG IHDR and chunk headers,
-JPEG SOF/DHT/DQT/SOS/DRI segments, WAV chunks and MP4 boxes to boundary
-values, drives each decoder and each codec's header parse, and runs every
-case in one subprocess under an address-space cap with a per-case time
-bound. Work
-must be sized by the bytes present, never by a header's claim: each case
-ends in a decode or in the codec's typed error — never MemoryError or a
-timeout.
+JPEG SOF/DHT/DQT/SOS/DRI segments, WAV and WebP chunks and MP4 boxes to
+boundary values, drives each decoder and each codec's header parse, and
+runs every case in one subprocess under an address-space cap with a
+per-case time bound. Work must be sized by the bytes present, never by a
+header's claim: each case ends in a decode or in the codec's typed error —
+never MemoryError or a timeout.
 """
 
 from __future__ import annotations
@@ -289,6 +288,27 @@ def _built_wav() -> bytes:
     return buf.getvalue()
 
 
+def _built_webps():
+    """One RIFF/WEBP blob per chunk kind ``_webp_header`` reads: lossy VP8
+    (frame tag, start code, 14-bit dims), lossless VP8L (signature, packed
+    dims and alpha bit), and extended VP8X (flags, 24-bit canvas dims)
+    followed by the VP8 chunk it describes. Odd-sized chunks carry a pad
+    byte."""
+    def chunk(fourcc, body):
+        return fourcc + struct.pack("<I", len(body)) + body + bytes(len(body) & 1)
+
+    def riff(*chunks):
+        body = b"WEBP" + b"".join(chunks)
+        return b"RIFF" + struct.pack("<I", len(body)) + body
+
+    vp8 = chunk(b"VP8 ", b"\x10\x02\x00\x9d\x01\x2a" + struct.pack("<HH", 64, 48) + bytes(9))
+    bits = 63 | (47 << 14) | (1 << 28)  # 64x48 with alpha
+    yield "built_vp8.webp", riff(vp8)
+    yield "built_vp8l.webp", riff(chunk(b"VP8L", b"\x2f" + struct.pack("<I", bits) + bytes(6)))
+    vp8x = b"\x10" + bytes(3) + (63).to_bytes(3, "little") + (47).to_bytes(3, "little")
+    yield "built_vp8x.webp", riff(chunk(b"VP8X", vp8x), vp8)
+
+
 def _built_mp4() -> bytes:
     def box(btype, payload):
         return struct.pack(">I4s", 8 + len(payload), btype) + payload
@@ -310,7 +330,12 @@ def _built_mp4() -> bytes:
 def _sweep_cases(tmpdir: str):
     """(case name, blob, [(surface, decode, typed error), ...])."""
     from cog3pio_spark import gif, jpeg, png
-    from cog3pio_spark.operators.multimodal import _parse_mp4, _parse_wav, _tiff_header
+    from cog3pio_spark.operators.multimodal import (
+        _parse_mp4,
+        _parse_wav,
+        _tiff_header,
+        _webp_header,
+    )
     from cog3pio_spark.tiff.reader import file_range_fetcher
 
     def tiff_ranged(blob):
@@ -339,6 +364,8 @@ def _sweep_cases(tmpdir: str):
         *[(n, fixture(n), _jpeg_mutants, jpegs) for n in (
             "java_gray.jpg", "java_rgb420.jpg", "java_gray_prog.jpg", "java_rgb_prog.jpg")],
         ("built.wav", _built_wav(), _riff_mutants, [("_parse_wav", _parse_wav, ValueError)]),
+        *[(n, b, _riff_mutants, [("_webp_header", _webp_header, ValueError)])
+          for n, b in _built_webps()],
         ("built.mp4", _built_mp4(), _mp4_mutants, [("_parse_mp4", _parse_mp4, ValueError)]),
     ]
     for src, raw, mutants, surfaces in sources:

@@ -456,3 +456,52 @@ def test_zero_dims_tiff_is_error_row_not_crash(tmp_path):
     row = _decode_one("file://" + str(p), include_pixels=False)
     assert row["status"] == "error"
     assert "zero-sized image" in row["error_msg"]
+
+
+def _ifd_offsets(raw: bytes) -> list[int]:
+    import struct as _s
+
+    offs, (off,) = [], _s.unpack_from("<I", raw, 4)
+    while off:
+        offs.append(off)
+        (n,) = _s.unpack_from("<H", raw, off)
+        (off,) = _s.unpack_from("<I", raw, off + 2 + 12 * n)
+    return offs
+
+
+def test_select_image_wraps_corrupt_overview_tags(tmp_path):
+    """An overview IFD whose ImageWidth holds no value is refused with
+    TiffDecodeError by both entry points: the constructor and select_image,
+    which binds an IFD of an already-parsed chain."""
+    import struct as _s
+
+    p = str(tmp_path / "ovr.tif")
+    write_tiff(p, np.arange(32 * 32, dtype=np.uint8).reshape(1, 32, 32),
+               tiled=True, tile_size=16, overviews=1)
+    raw = bytearray(open(p, "rb").read())
+    ifd1 = _ifd_offsets(bytes(raw))[1]
+    assert _s.unpack_from("<H", raw, ifd1 + 2)[0] == 256  # ImageWidth first
+    _s.pack_into("<I", raw, ifd1 + 2 + 4, 0)  # its count
+    reader = CogReader(bytes(raw))
+    assert reader.num_images == 2 and reader.to_numpy().shape == (1, 32, 32)
+    with pytest.raises(TiffDecodeError, match="Cannot parse TIFF: truncated or corrupt"):
+        reader.select_image(1)
+    with pytest.raises(TiffDecodeError, match="Cannot parse TIFF: truncated or corrupt"):
+        CogReader(bytes(raw), image_index=1)
+
+
+def test_short_tiepoint_gives_stats_only_row(tmp_path):
+    """A ModelTiepoint with fewer than 6 values is a corrupt geo tag:
+    transform() raises TiffDecodeError, so decode keeps the pixel
+    statistics and leaves the geo columns NULL instead of failing the
+    task."""
+    from cog3pio_spark.operators.decode import _decode_one
+
+    p = tmp_path / "tie3.tif"
+    write_tiff(str(p), np.ones((1, 4, 4), np.float32), pixel_scale=(1.0, 1.0),
+               tiepoint=(0.0, 0.0, 0.0))
+    with pytest.raises(TiffDecodeError, match="Cannot parse TIFF: truncated or corrupt"):
+        CogReader(p.read_bytes()).transform()
+    row = _decode_one("file://" + str(p), include_pixels=False)
+    assert row["status"] == "ok" and row["mean"] == 1.0
+    assert row.get("c") is None and row.get("centroid_x") is None

@@ -1,5 +1,5 @@
 """Differential test: the one chunk-grid TIFF assembly in
-``CogReader._to_numpy`` against the per-layout oracles in
+``CogReader.to_numpy`` against the per-layout oracles in
 tests/tiff_oracle.py (the former per-tile loop for tiled images, the former
 strip branches for striped ones) — equal arrays and dtype, or the same
 exception type — across dtypes, sample counts, predictors, byte orders,

@@ -17,11 +17,7 @@ from cog3pio_spark.operators.dedupe import (
     simhash_dupes,
     simhash_hamming_pairs_exact,
 )
-from cog3pio_spark.operators.multimodal import (
-    attach_media_meta,
-    extract_features,
-    frame_sample,
-)
+from cog3pio_spark.operators.multimodal import attach_media_meta, extract_features
 from cog3pio_spark.operators.text import text_features
 
 
@@ -175,9 +171,6 @@ def test_multimodal_plumbing(spark):
     }
     feats = extract_features(df).collect()
     assert all(len(r["features"]) == 16 for r in feats)
-    frames = frame_sample(df, n_frames=4).collect()
-    assert len(frames) == 16
-    assert {r["frame_idx"] for r in frames} == {0, 1, 2, 3}
 
 
 def test_minhash_zipf_cluster_bounded(spark):
@@ -1617,10 +1610,11 @@ def test_corrupt_blobs_surface_as_error_rows_not_crashes(spark):
     declaring channels=0, marker fill-bytes running to EOF) must come out
     as error/byte-path rows through every operator surface — the decoders
     wrap their own crash classes into the documented taxonomy, so the
-    operators' narrowed corrupt-input catches hold. Two header bombs ride
-    along: a TIFF tag whose count claims 2^28 values and a GIF whose
-    logical screen claims 65535x65535 — both must be refused from the
-    bytes present, not allocated."""
+    operators' ValueError catch holds. Two header bombs ride along: a TIFF
+    tag whose count claims 2^28 values and a GIF whose logical screen
+    claims 65535x65535 — both must be refused from the bytes present, not
+    allocated. A JPEG whose SOF declares height 0 (DNL, which the decoder
+    does not read) is refused by the header parse and the decoder alike."""
     import io
     import os
     import struct
@@ -1633,7 +1627,6 @@ def test_corrupt_blobs_surface_as_error_rows_not_crashes(spark):
         audio_features,
         audio_meta,
         extract_features,
-        frame_sample,
         image_meta,
         resize_media,
         video_meta,
@@ -1666,6 +1659,11 @@ def test_corrupt_blobs_surface_as_error_rows_not_crashes(spark):
     data = os.path.join(os.path.dirname(__file__), "data")
     gif_bomb = bytearray(open(os.path.join(data, "java_indexed.gif"), "rb").read())
     struct.pack_into("<HH", gif_bomb, 6, 0xFFFF, 0xFFFF)  # logical screen
+    jpeg0h = bytearray(open(os.path.join(data, "java_gray.jpg"), "rb").read())
+    sof = jpeg0h.index(b"\xff\xc0")
+    struct.pack_into(">H", jpeg0h, sof + 5, 0)  # SOF height
+    with pytest.raises(JpegDecodeError, match="zero frame dimension"):
+        decode_jpeg(bytes(jpeg0h))
 
     rows = [
         ("sof", short_sof),
@@ -1674,6 +1672,7 @@ def test_corrupt_blobs_surface_as_error_rows_not_crashes(spark):
         ("tiffjunk", b"II*\x00" + b"\x01" * 6),
         ("tiffbomb", bytes(tiff_bomb)),
         ("gifbomb", bytes(gif_bomb)),
+        ("jpeg0h", bytes(jpeg0h)),
     ]
     df = spark.createDataFrame(rows, ["media_id", "blob"])
     feats = {r["media_id"]: r["media_type"] for r in extract_features(df).collect()}
@@ -1681,13 +1680,13 @@ def test_corrupt_blobs_surface_as_error_rows_not_crashes(spark):
     assert all(t == "raw-bytes" for t in feats.values()), feats
     hdr = {r["media_id"]: r["status"] for r in image_meta(df).collect()}
     assert hdr["sof"] == "error" and hdr["fill"] == "error"
-    assert hdr["tiffbomb"] == "error"
+    assert hdr["tiffbomb"] == "error" and hdr["jpeg0h"] == "error"
     ameta = {r["media_id"]: r["status"] for r in audio_meta(df).collect()}
     assert ameta["wav0"] == "error"
     assert audio_features(df).filter(F.col("media_id") == "wav0").count() == 0
     resized = {r["media_id"]: r for r in resize_media(df, 4, 4).collect()}
     assert resized["wav0"]["status"] == "unsupported"
-    for mid in ("sof", "fill", "tiffjunk", "tiffbomb", "gifbomb"):
+    for mid in ("sof", "fill", "tiffjunk", "tiffbomb", "gifbomb", "jpeg0h"):
         r = resized[mid]
         assert r["status"] == "error" and r["error_msg"], r
         assert (r["width"], r["height"], r["resized"]) == (None, None, None)
@@ -1696,11 +1695,6 @@ def test_corrupt_blobs_surface_as_error_rows_not_crashes(spark):
     for r in vmeta:
         assert r["status"] == "error" and r["error_msg"], r
         assert all(r[k] is None for k in ("brand", "duration_s", "n_tracks", "tracks"))
-    frames = frame_sample(df, n_frames=3).collect()
-    for mid, blob in rows:
-        got = sorted((r["frame_idx"], bytes(r["frame"])) for r in frames if r["media_id"] == mid)
-        step = max(1, len(blob) // 3)
-        assert got == [(i, blob[i * step : (i + 1) * step]) for i in range(3)], mid
 
 
 def test_dedupe_corpus_one_call(dup_docs):

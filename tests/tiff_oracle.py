@@ -1,5 +1,5 @@
 """Per-layout TIFF assemblies: the references the one chunk-grid assembly
-in ``cog3pio_spark/tiff/reader.py::CogReader._to_numpy`` is checked
+in ``cog3pio_spark/tiff/reader.py::CogReader.to_numpy`` is checked
 against in tests/test_tiff_assembly.py.
 
 ``tiled_to_numpy`` is the package's former tiled branch with its loop
@@ -17,8 +17,9 @@ from __future__ import annotations
 
 import numpy as np
 
+from cog3pio_spark.codec_errors import typed
 from cog3pio_spark.tiff import writer as W
-from cog3pio_spark.tiff.reader import _CRASH_CLASSES, CogReader, TiffDecodeError
+from cog3pio_spark.tiff.reader import CogReader, TiffDecodeError
 
 
 def tiled_to_numpy(
@@ -37,16 +38,9 @@ def striped_to_numpy(
     return _wrapped(_striped, reader, window)
 
 
+@typed(TiffDecodeError, "Cannot decode TIFF")
 def _wrapped(decode, reader, window):
-    try:
-        return decode(reader, window)
-    except TiffDecodeError:
-        raise
-    except _CRASH_CLASSES as exc:
-        raise TiffDecodeError(
-            f"Cannot decode TIFF: truncated or corrupt "
-            f"({type(exc).__name__}: {exc})"
-        ) from exc
+    return decode(reader, window)
 
 
 def _tiled(self, window):
