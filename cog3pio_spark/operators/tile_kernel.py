@@ -2,12 +2,16 @@
 
 ``fused_decode_assign_pip`` is the only code that turns media refs into
 cell and polygon rows. It runs the whole raster⋈vector branch as a single
-``mapInArrow`` pass: each distinct ref is decoded once, its centroid is
-assigned an S2 cell and hex cells res lo..hi, and it is probed against the
-broadcast polygon pack. ``decode_tiles``, ``assign_cells`` and ``pip_join``
-stay as separate public operators over the same helpers (``_decode_one``,
-the cell functions' NULL mask ``_valid_rows``/``_masked``,
-``_pip_candidates``), not as a second tile path.
+``mapInArrow`` pass over the ``media_ref`` column: each distinct ref is
+decoded once, its centroid is assigned an S2 cell and hex cells at
+``assign.py``'s levels (``S2_LEVEL_DEFAULT``, ``HEX_RES_LO``..``HEX_RES_HI``,
+the same definition ``assign_cells`` defaults to), and it is probed against
+the broadcast polygon pack. ``decode_tiles``, ``assign_cells`` and
+``pip_join`` stay as separate public operators over the same helpers
+(``_decode_one``, the cell functions' NULL mask ``_valid_rows``/``_masked``),
+not as a second tile path. The polygon side is ``pip_join.py``'s, unchanged:
+``pack_polygons`` (one Arrow collect, one validity rule, the ids as one
+Arrow string array this kernel ``take``s from) and ``_pip_candidates``.
 
 Passthrough contract: every input column is carried to the output (Arrow
 ``take``), so callers can pipe pre-aggregated per-ref statistics (counts,
@@ -32,7 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from cog3pio_spark.operators.assign import HEX_RES_HI, HEX_RES_LO, S2_LEVEL_DEFAULT
 from cog3pio_spark.operators.decode import DECODE_SCHEMA
+from cog3pio_spark.operators.pip_join import _pip_candidates, pack_polygons
 
 COMPUTED_FIELDS = [
     *(DECODE_SCHEMA[n] for n in ("status", "error_msg", "dtype", "bands", "mean")),
@@ -48,34 +54,23 @@ _DECODED = to_arrow_schema(
 )
 
 
-def fused_decode_assign_pip(
-    refs: DataFrame,
-    polygons: DataFrame,
-    s2_level: int = 12,
-    hex_lo: int = 5,
-    hex_hi: int = 12,
-    ref_col: str = "media_ref",
-) -> DataFrame:
+def fused_decode_assign_pip(refs: DataFrame, polygons: DataFrame) -> DataFrame:
     """One-Python-stage tile branch over distinct-ref rows (+ passthrough)."""
-    from cog3pio_spark.operators.pip_join import pack_polygons
-
     spark = refs.sparkSession
     bc = spark.sparkContext.broadcast(pack_polygons(polygons))
 
     in_schema = refs.schema
     out_schema = T.StructType(list(in_schema.fields) + COMPUTED_FIELDS)
-    ref_idx = in_schema.fieldNames().index(ref_col)
-    hex_res = list(range(hex_lo, hex_hi + 1))
+    ref_idx = in_schema.fieldNames().index("media_ref")
+    hex_res = list(range(HEX_RES_LO, HEX_RES_HI + 1))
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from cog3pio_spark.cells import h3x, s2
         from cog3pio_spark.functions.cells import _masked, _past_pole, _valid_rows
         from cog3pio_spark.functions.geo import EARTH_RADIUS_M
         from cog3pio_spark.operators.decode import _decode_one
-        from cog3pio_spark.operators.pip_join import _pip_candidates
 
         pack = bc.value
-        poly_ids = pa.array([str(i) for i in pack["ids"]], pa.string())
         for batch in batches:
             n = batch.num_rows
             if n == 0:
@@ -94,7 +89,7 @@ def fused_decode_assign_pip(
             )
             lat, lng = np.degrees(cy / EARTH_RADIUS_M), np.degrees(cx / EARTH_RADIUS_M)
             no_cell = nulls | _past_pole(lat)
-            s2c = _masked(s2.to_signed(s2.latlng_to_cell(lat, lng, s2_level)), no_cell)
+            s2c = _masked(s2.to_signed(s2.latlng_to_cell(lat, lng, S2_LEVEL_DEFAULT)), no_cell)
             hexes = _masked(h3x.latlng_to_cells_multi(lat, lng, hex_res), no_cell)
             pt_idx, pg_idx = _pip_candidates(
                 np.where(nulls, np.nan, cx), np.where(nulls, np.nan, cy), pack
@@ -111,7 +106,7 @@ def fused_decode_assign_pip(
             computed.update(s2_cell=s2c, hex_cells=hexes)
             cols = [c.take(take) for c in batch.columns]
             cols += [computed[f.name].take(take) for f in COMPUTED_FIELDS[:-1]]
-            cols.append(poly_ids.take(pa.array(poly, mask=poly < 0)))
+            cols.append(pack["ids"].take(pa.array(poly, mask=poly < 0)))
             yield pa.RecordBatch.from_arrays(cols, names=out_schema.fieldNames())
 
     return refs.mapInArrow(kernel, out_schema)

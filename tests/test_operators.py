@@ -400,10 +400,13 @@ def test_checkpoint_many_keys_antijoin_resume(spark, tmp_path, monkeypatch):
     assert got.count() == 240
 
 
-def test_pip_grid_max_extent_matches_dense(spark):
+def test_pip_grid_max_extent_matches_oracle(spark):
     """ADVICE r1: a point exactly on the layer's max extent must be contained
-    by the grid-indexed path (>256 polygons) exactly like the dense path —
-    the grid clamps in-extent boundary points into the last cell."""
+    by the grid index exactly like the dense bbox mask of the row-loop
+    oracle (tests/pip_oracle.py) — the grid clamps in-extent boundary points
+    into the last cell."""
+    from pip_oracle import pack_rows, pip_candidates
+
     from cog3pio_spark.fixtures.polygons import polygon_schema
 
     def square(pid, x0, y0, s=1.0):
@@ -414,31 +417,26 @@ def test_pip_grid_max_extent_matches_dense(spark):
             {"xmin": x0, "ymin": y0, "xmax": x0 + s, "ymax": y0 + s},
         )
 
-    # 300 unit squares tiling [0,30)x[0,10) → grid path; global max = (30,10)
+    # 300 unit squares tiling [0,30)x[0,10); global max = (30,10)
     polys = [square(f"p{i:03d}", float(i % 30), float(i // 30)) for i in range(300)]
     poly_df = spark.createDataFrame(polys, polygon_schema())
-    pts = spark.createDataFrame(
-        [
-            ("maxcorner", 30.0, 10.0),   # exactly the global bbox max
-            ("maxedge_x", 30.0, 5.5),    # on x max extent
-            ("inside", 15.5, 5.5),
-            ("beyond", 30.0001, 10.0),   # strictly outside stays rejected
-        ],
-        ["pid", "centroid_x", "centroid_y"],
-    )
+    pt_rows = [
+        ("maxcorner", 30.0, 10.0),   # exactly the global bbox max
+        ("maxedge_x", 30.0, 5.5),    # on x max extent
+        ("inside", 15.5, 5.5),
+        ("beyond", 30.0001, 10.0),   # strictly outside stays rejected
+    ]
+    pts = spark.createDataFrame(pt_rows, ["pid", "centroid_x", "centroid_y"])
     got = {(r["pid"], r["polygon_id"]) for r in pip_join(pts, poly_df).collect()}
-    dense = {
-        (r["pid"], r["polygon_id"])
-        for r in pip_join(pts, poly_df.limit(200)).collect()  # ≤256 → dense path
-        if r["pid"] != "beyond"
-    }
     assert ("maxcorner", "p299") in got     # boundary-inclusive at global max
     assert ("maxedge_x", "p179") in got     # x1 edge of its row's last square
     assert ("inside", "p165") in got
     assert not any(p == "beyond" for p, _ in got)
-    # grid and dense agree on every point that lies within the dense subset
-    grid_subset = {(p, pid) for p, pid in got if pid in {f"p{i:03d}" for i in range(200)}}
-    assert dense == grid_subset
+    # the grid and the oracle's dense mask agree on every point
+    oracle = pack_rows([dict(zip(("polygon_id", "ring", "bbox"), p)) for p in polys], has_holes=False)
+    px, py = (np.array([r[k] for r in pt_rows]) for k in (1, 2))
+    pt, pg = pip_candidates(px, py, oracle)
+    assert got == {(pt_rows[i][0], oracle["ids"][j]) for i, j in zip(pt, pg)}
 
     # r5 review: NaN in EITHER coordinate must be excluded cleanly on the
     # grid path (only px was isfinite-guarded; NaN py reached an undefined
@@ -463,11 +461,7 @@ def test_pip_grid_non_finite_points_cast_nothing(spark):
     import warnings
 
     from cog3pio_spark.fixtures.polygons import polygon_schema
-    from cog3pio_spark.operators.pip_join import (
-        GRID_THRESHOLD,
-        _pip_candidates,
-        pack_polygons,
-    )
+    from cog3pio_spark.operators.pip_join import _pip_candidates, pack_polygons
 
     def square(i):
         x, y = float(i % 30), float(i // 30)
@@ -475,8 +469,8 @@ def test_pip_grid_non_finite_points_cast_nothing(spark):
         bbox = {"xmin": x, "ymin": y, "xmax": x + 1, "ymax": y + 1}
         return f"p{i:03d}", [{"x": u, "y": v} for u, v in ring], bbox
 
-    # 300 unit squares tiling [0,30]x[0,10]: above GRID_THRESHOLD → grid
-    polys = [square(i) for i in range(GRID_THRESHOLD + 44)]
+    # 300 unit squares tiling [0,30]x[0,10]
+    polys = [square(i) for i in range(300)]
     pack = pack_polygons(spark.createDataFrame(polys, polygon_schema()))
     assert "grid" in pack
 

@@ -62,7 +62,9 @@ def test_hex_ring_distance_bound(lat, lng, res, k):
 def test_pip_raycast_matches_scalar_oracle(k, seed, spike):
     """Vectorized even-odd PIP ≡ independent scalar implementation, on
     random (possibly non-convex) star rings and random points."""
-    from cog3pio_spark.operators.pip_join import _pip_candidates
+    import pyarrow as pa
+
+    from cog3pio_spark.operators.pip_join import _pack_layer, _pip_candidates
 
     rng = np.random.RandomState(seed)
     ang = np.sort(rng.uniform(0, 2 * np.pi, 2 * k))
@@ -71,13 +73,10 @@ def test_pip_raycast_matches_scalar_oracle(k, seed, spike):
     ring.append(ring[0])
     xs = [p[0] for p in ring]
     ys = [p[1] for p in ring]
-    pack = {
-        "ids": np.array(["r"]), "x": np.array(xs), "y": np.array(ys),
-        "eok": np.array([True] * (len(xs) - 1) + [False]),
-        "offs": np.array([0, len(xs)]),
-        "bxmin": np.array([min(xs)]), "bymin": np.array([min(ys)]),
-        "bxmax": np.array([max(xs)]), "bymax": np.array([max(ys)]),
-    }
+    pack = _pack_layer(pa.Table.from_pylist([{
+        "polygon_id": "r", "ring": [{"x": x, "y": y} for x, y in ring],
+        "bbox": {"xmin": min(xs), "ymin": min(ys), "xmax": max(xs), "ymax": max(ys)},
+    }]))
     px = rng.uniform(-11, 11, 300)
     py = rng.uniform(-11, 11, 300)
     pt, _ = _pip_candidates(px, py, pack)
