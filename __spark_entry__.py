@@ -1213,7 +1213,7 @@ def q43_knn_sort_merge(spark, sf):
     exact haversine scan at sf0.01), so the query carries an exact DuckDB
     oracle — the driver gate doubles as the curve-recall regression check.
     The operator itself stays approximate-by-contract (recall tuned by
-    scan_width; parity/recall tests in tests/test_knn_sort_merge.py)."""
+    scan_width; parity/recall tests in tests/test_knn.py)."""
     from cog3pio_spark.operators.knn import knn_sort_merge
 
     pts = _cust_points(spark, sf)

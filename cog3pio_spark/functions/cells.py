@@ -68,6 +68,17 @@ def _past_pole(lat: np.ndarray) -> np.ndarray:
     return np.abs(lat) > 90.0
 
 
+def _on_globe(lat: str, lng: str) -> Column:
+    """The rows whose point has a cell: lat and lng non-NULL and finite,
+    and |lat| ≤ 90 (``_valid_rows`` and ``_past_pole`` as a predicate). The
+    kNN operators keep only these rows, so a point past a pole is no
+    neighbour and a query there gets no rows."""
+    def finite(c):
+        return F.col(c).isNotNull() & ~F.isnan(c) & (F.abs(c) != float("inf"))
+
+    return finite(lat) & finite(lng) & (F.abs(lat) <= 90.0)
+
+
 def _masked(values: np.ndarray, nulls: np.ndarray) -> pa.Array:
     """``values`` (one per row) as an Arrow column, NULL where ``nulls``: a
     scalar column, or a ``ListArray`` of the rows of a (rows, width) array."""

@@ -10,10 +10,13 @@
   driver from those counts.
 * knn_sort_merge — curve-order sort-merge on the S2 Hilbert curve: the
   path for query sets too large to collect; approximate (recall tuned by
-  ``scan_width``).
+  ``scan_width``). Its per-bucket kernel scores each query's curve frame
+  in numpy and cuts it to k with the list-probe core's ``_topk``, the tail
+  ``_search`` uses too.
 
-Queries and points with a NULL or non-finite coordinate take part in none
-of them (``probe._finite_rows``): such a point has no distance to anything, and
+All three keep only the rows that have a cell (``functions/cells.py::
+_on_globe``: lat and lng non-NULL and finite, |lat| ≤ 90). A point with a
+NULL, non-finite or past-pole coordinate has no distance to anything, and
 a query at one has no neighbours.
 
 Used with points = tile centroids and queries = arbitrary lat/lng rows.
@@ -31,11 +34,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf, pandas_udf
 
-from cog3pio_spark.cells import h3x, s2
+from cog3pio_spark.cells import h3x
 from cog3pio_spark.functions import cells as C
 from cog3pio_spark.functions.geo import EARTH_RADIUS_M
+from cog3pio_spark.operators.pip_join import _ragged
 from cog3pio_spark.operators.probe import (
-    MAX_QUERIES, Scorer, _collect_query_batch, _finite_rows, _search)
+    MAX_QUERIES, PAIR_CHUNK, Scorer, _collect_query_batch, _search, _topk)
 from cog3pio_spark.session import spread_small_scan
 
 # target rows per sort-merge bucket once the corpus outgrows the shuffle
@@ -74,11 +78,11 @@ def knn_brute(
     """Exact kNN by broadcast cross product — knn_join's brute tier and the
     correctness oracle for the ring join (q20 checks it against DuckDB).
     Returns (query_id, rank, point_id, dist_m)."""
-    q = _finite_rows(queries, "lat", "lng").select(
+    q = queries.filter(C._on_globe("lat", "lng")).select(
         query_id, F.col("lat").alias("q_lat"), F.col("lng").alias("q_lng"))
     # spread first: the cross join scores in as many tasks as the points
     # have partitions, one for a single-split input (no-op at real scale)
-    p = _finite_rows(spread_small_scan(points), "lat", "lng").select(
+    p = spread_small_scan(points).filter(C._on_globe("lat", "lng")).select(
         point_id, F.col("lat").alias("p_lat"), F.col("lng").alias("p_lng"))
     w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(), F.col(point_id).asc())
     return (
@@ -100,7 +104,6 @@ def knn_sort_merge(
     scan_width: int = 64,
     query_id: str = "query_id",
     point_id: str = "point_id",
-    num_buckets: int | None = None,
     total_rows: int | None = None,
     cuts: list[int] | None = None,
 ) -> DataFrame:
@@ -110,26 +113,30 @@ def knn_sort_merge(
     curve ranges (cut points from approxQuantile — the same sampling idea as
     Spark's RangePartitioner). Within each bucket, rows sort by
     (_cell, _is_q, _id) — a total order — and each query examines the
-    ±``scan_width`` rows around it, re-ranking candidates by exact
-    haversine. Boundary correctness: the last/first ``scan_width`` rows of
+    ±``scan_width`` rows around it, ranking the points among them by exact
+    haversine: a band join on curve position (Band Joins for Interval Data,
+    EDBT 2020). Boundary correctness: the last/first ``scan_width`` rows of
     every bucket are duplicated as "ghost" rows into the adjacent bucket, so
     each in-bucket frame is EXACTLY the global curve-order frame (a frame
     overhangs a bucket edge by at most scan_width rows, which is precisely
-    what the ghosts supply). Precondition: every bucket holds ≥ scan_width
-    rows — the bucket count is capped at total/(4·scan_width) so AVERAGE
-    buckets are 4× over the minimum; a duplicate-heavy cell distribution
-    (one cell value holding a large fraction of rows) can still pinch an
-    individual bucket below scan_width, in which case frames near that
-    bucket see slightly fewer than ±scan_width global-order rows (the
-    operator is approximate anyway; the equality test pins parity on
-    realistic data).
+    what the ghosts supply). Every non-ghost query lives in exactly one
+    bucket, so the kernel's top-k cut (``_frame_topk``) is final: it emits
+    (query_id, rank, point_id, dist_m) with no window after it.
+    Precondition: every bucket holds ≥ scan_width rows — the bucket count is
+    capped at total/(4·scan_width) so AVERAGE buckets are 4× over the
+    minimum; a duplicate-heavy cell distribution (one cell value holding a
+    large fraction of rows) can still pinch an individual bucket below
+    scan_width, in which case frames near that bucket see slightly fewer
+    than ±scan_width global-order rows (the operator is approximate anyway;
+    the equality test pins parity on realistic data).
 
-    This replaces the round-1 global un-partitioned ``Window.orderBy``
-    (single task over the whole union — VERDICT r1 "What's wrong" #5): the
-    window stage now runs one task per bucket with no SinglePartition
-    exchange. Approximate: curve locality misses some true neighbors at
-    curve discontinuities; recall is tuned by scan_width. Use when the query
-    set is too large to broadcast and rings miss (sparse regions).
+    Only rows with a cell take part (``C._on_globe``, the cell layer's
+    rule): a point past a pole is no neighbour, and a query there gets no
+    rows, as for a NULL, NaN or ±inf coordinate.
+
+    Approximate: curve locality misses some true neighbors at curve
+    discontinuities; recall is tuned by scan_width. Use when the query set
+    is too large to broadcast and rings miss (sparse regions).
     """
     # _cell is the UNSIGNED curve key: s2_cell's int64 carrier stores uint64
     # ids two's-complement, so sorting the signed value directly would place
@@ -139,16 +146,9 @@ def knn_sort_merge(
     # relies on curve adjacency). XOR with the sign bit maps signed order to
     # uint order. ``cuts=`` hints are in this same flipped keyspace (any
     # monotone cut set is CORRECT regardless — cuts only shape buckets).
-    # The key is the raw level-30 kernel's cell, without s2_cell's pole
-    # rule: _finite_rows keeps a finite latitude past a pole, and a NULL
-    # key would break the "_cell is never NULL" invariant below.
-    sign_flip = F.lit(-(1 << 63))
-    cell = C._cell_udf(
-        T.LongType(), lambda la, ln: s2.to_signed(s2.latlng_to_cell(la, ln, 30)),
-        F.col("lat"), F.col("lng"),
-    ).bitwiseXOR(sign_flip).alias("_cell")
+    cell = C.s2_cell(F.col("lat"), F.col("lng"), 30).bitwiseXOR(F.lit(-(1 << 63))).alias("_cell")
     q, p = (
-        _finite_rows(df, "lat", "lng").select(
+        df.filter(C._on_globe("lat", "lng")).select(
             F.col(c).alias("_id"), F.lit(is_q).alias("_is_q"), "lat", "lng", cell)
         for df, c, is_q in ((queries, query_id, True), (points, point_id, False))
     )
@@ -164,12 +164,13 @@ def knn_sort_merge(
     # Callers with table stats skip both preparatory jobs (VERDICT r2 #4):
     # ``total_rows=`` skips the count, ``cuts=`` (precomputed curve cut
     # points, e.g. from a previous run or partition metadata) skips count
-    # AND approxQuantile. Ghost rows repair ADJACENT-bucket boundaries, so
-    # supplied cuts inherit the same precondition as the auto path: every
-    # INTERIOR bucket must hold ≥ scan_width rows. A thin middle bucket
-    # (fewer rows than scan_width between two cuts) shrinks the frames that
-    # overhang it — empty/thin EDGE buckets are harmless. Cut balance beyond
-    # that only affects task skew, never correctness.
+    # AND approxQuantile; ``cuts=[]`` is one bucket. Ghost rows repair
+    # ADJACENT-bucket boundaries, so supplied cuts inherit the same
+    # precondition as the auto path: every INTERIOR bucket must hold ≥
+    # scan_width rows. A thin middle bucket (fewer rows than scan_width
+    # between two cuts) shrinks the frames that overhang it — empty/thin
+    # EDGE buckets are harmless. Cut balance beyond that only affects task
+    # skew, never correctness.
     spark = both.sparkSession
     if cuts is None:
         total = total_rows if total_rows is not None else both.count()
@@ -183,12 +184,8 @@ def knn_sort_merge(
         # millions of rows into one pandas frame. Any bucket count yields
         # the same result while interior buckets hold ≥ scan_width rows
         # (the ghost contract above); 2M-row buckets satisfy that hugely.
-        # The floor binds an explicit ``num_buckets`` too: it is a memory
-        # bound, not a default.
         floor = total // _BUCKET_ROWS_TARGET
-        n_buckets = max(
-            1, min(max(num_buckets or default_p, floor), total // (4 * scan_width))
-        )
+        n_buckets = max(1, min(max(default_p, floor), total // (4 * scan_width)))
         if n_buckets > 1:
             cuts = both.stat.approxQuantile(
                 "_cell", [i / n_buckets for i in range(1, n_buckets)], 1.0 / (10 * n_buckets)
@@ -197,14 +194,11 @@ def knn_sort_merge(
     # 2^63, which overflows F.lit's long conversion (r4 review)
     int64_max = (1 << 63) - 1
     cuts = sorted({min(int(c), int64_max) for c in cuts}) if cuts else []
-    if cuts:
-        bucket_expr = reduce(
-            lambda acc, ic: F.when(F.col("_cell") <= F.lit(ic[1]), ic[0]).otherwise(acc),
-            reversed(list(enumerate(cuts))),
-            F.lit(len(cuts)),
-        )
-    else:
-        bucket_expr = F.lit(0)
+    bucket_expr = reduce(
+        lambda acc, ic: F.when(F.col("_cell") <= F.lit(ic[1]), ic[0]).otherwise(acc),
+        reversed(list(enumerate(cuts))),
+        F.lit(len(cuts)),
+    )
     both = both.withColumn("_bucket", bucket_expr)
 
     order_cols = [F.col("_cell"), F.col("_is_q"), F.col("_id")]
@@ -230,91 +224,62 @@ def knn_sort_merge(
             .withColumn("_ghost", F.lit(True))
         )
         rows = rows.unionByName(lo_ghosts).unionByName(hi_ghosts)
-    # _cell is never NULL: _finite_rows drops the NaN/NULL coordinates
-    # whose key would be NULL, and the key has no pole rule (a NULL would
-    # make Arrow deliver the whole bucket's _cell batch as float64,
-    # rounding every level-30 carrier)
+    # _cell is never NULL: _on_globe keeps only the rows that have a cell (a
+    # NULL would make Arrow deliver the whole bucket's _cell batch as
+    # float64, rounding every level-30 carrier)
     rows = rows.drop("_rn", "_n")
 
-    # curve-order neighborhood, one task per bucket (ghosts make each frame
-    # identical to global curve order). r6 (guide §4.2): the former
-    # Window.rowsBetween(-scan_width, scan_width) + collect_list built a
-    # (2·scan_width+1)-struct ARRAY FOR EVERY ROW — queries AND points —
-    # then threw away the ~95% of arrays belonging to point rows; at the
-    # 10× bench that is ~40M struct materializations to keep ~2M. The
-    # per-bucket pandas kernel sorts the bucket once by the SAME
-    # (_cell, _is_q, _id) total order (unique keys — pandas/JVM sort parity
-    # is exact) and slices the position-based ±scan_width frame for
-    # NON-GHOST QUERY rows only, emitting exactly the candidate rows the
-    # old explode produced (ghost points still serve as frame members;
-    # ghost/other query rows still occupy frame positions; the row itself
-    # and other queries are dropped from candidates, matching the
-    # collect_list's when(~_is_q) null-skip). Row-identical by construction;
-    # pinned by tests/test_knn.py parity tests + the q43 oracle.
+    # curve-order neighborhood and top-k, one task per bucket (ghosts make
+    # each frame identical to global curve order). r6 (guide §4.2): the
+    # former Window.rowsBetween(-scan_width, scan_width) + collect_list
+    # built a (2·scan_width+1)-struct ARRAY FOR EVERY ROW — queries AND
+    # points — then threw away the ~95% of arrays belonging to point rows.
     id_type = both.schema["_id"].dataType
-    cand_schema = T.StructType(
-        [
-            T.StructField(query_id, id_type),
-            T.StructField("q_lat", T.DoubleType()),
-            T.StructField("q_lng", T.DoubleType()),
-            T.StructField(point_id, id_type),
-            T.StructField("p_lat", T.DoubleType()),
-            T.StructField("p_lng", T.DoubleType()),
-        ]
+    out_schema = (
+        T.StructType().add(query_id, id_type).add("rank", T.IntegerType())
+        .add(point_id, id_type).add("dist_m", T.DoubleType())
     )
     sw = int(scan_width)
+    return rows.groupBy("_bucket").applyInPandas(
+        lambda pdf: _frame_topk(pdf, sw, k, query_id, point_id), out_schema)
 
-    def _frames(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not np.issubdtype(pdf["_cell"].to_numpy().dtype, np.integer):
-            raise TypeError(
-                "sort-merge kNN kernel received a non-integer _cell batch "
-                f"({pdf['_cell'].dtype}); a null slipped past _finite_rows "
-                "and the curve keys would be float64-rounded"
-            )
-        pdf = pdf.sort_values(["_cell", "_is_q", "_id"])
-        isq = pdf["_is_q"].to_numpy()
-        ghost = pdf["_ghost"].to_numpy()
-        ids = pdf["_id"].to_numpy()
-        lat = pdf["lat"].to_numpy()
-        lng = pdf["lng"].to_numpy()
-        nrows = len(pdf)
-        q_idx = np.nonzero(isq & ~ghost)[0]
-        qa, qla, qlg, pa, pla, plg = [], [], [], [], [], []
-        for i in q_idx:
-            lo, hi = max(0, i - sw), min(nrows, i + sw + 1)
-            sel = np.nonzero(~isq[lo:hi])[0] + lo
-            if sel.size:
-                qa.append(np.repeat(ids[i], sel.size))
-                qla.append(np.repeat(lat[i], sel.size))
-                qlg.append(np.repeat(lng[i], sel.size))
-                pa.append(ids[sel])
-                pla.append(lat[sel])
-                plg.append(lng[sel])
-        if not qa:
-            return pd.DataFrame(
-                {c.name: pd.Series(dtype="float64") for c in cand_schema}
-            )
-        return pd.DataFrame(
-            {
-                query_id: np.concatenate(qa),
-                "q_lat": np.concatenate(qla),
-                "q_lng": np.concatenate(qlg),
-                point_id: np.concatenate(pa),
-                "p_lat": np.concatenate(pla),
-                "p_lng": np.concatenate(plg),
-            }
+
+def _frame_topk(
+    pdf: pd.DataFrame, scan_width: int, k: int, query_id: str, point_id: str
+) -> pd.DataFrame:
+    """knn_sort_merge's kernel over one bucket: each non-ghost query's k
+    nearest points among the ±``scan_width`` rows around it in the bucket's
+    (_cell, _is_q, _id) order (unique keys — pandas/JVM sort parity is
+    exact). Ghost points serve as frame members; ghost and other queries
+    occupy frame positions but are never candidates. A query's frame points
+    are a run of the sorted point positions (``searchsorted``), expanded
+    with ``_ragged`` in slices of at most ``PAIR_CHUNK`` pairs, scored by
+    haversine and cut by the list-probe core's ``_topk``."""
+    if not np.issubdtype(pdf["_cell"].to_numpy().dtype, np.integer):
+        raise TypeError(
+            "sort-merge kNN kernel received a non-integer _cell batch "
+            f"({pdf['_cell'].dtype}); a null slipped past _on_globe "
+            "and the curve keys would be float64-rounded"
         )
-
-    cand = rows.groupBy("_bucket").applyInPandas(_frames, cand_schema)
-    dist = cand.withColumn(
-        "dist_m", haversine_m(F.col("q_lat"), F.col("q_lng"), F.col("p_lat"), F.col("p_lng"))
-    )
-    wr = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(), F.col(point_id).asc())
-    return (
-        dist.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "rank", point_id, "dist_m")
-    )
+    pdf = pdf.sort_values(["_cell", "_is_q", "_id"])
+    isq = pdf["_is_q"].to_numpy()
+    ids, lat, lng = (pdf[c].to_numpy() for c in ("_id", "lat", "lng"))
+    qpos = np.nonzero(isq & ~pdf["_ghost"].to_numpy())[0]
+    ppos = np.nonzero(~isq)[0]
+    first = np.searchsorted(ppos, qpos - scan_width)
+    count = np.searchsorted(ppos, qpos + scan_width + 1) - first
+    step = max(1, PAIR_CHUNK // (2 * scan_width + 1))
+    parts = []
+    for lo in range(0, max(1, len(qpos)), step):  # one slice at least: an empty frame
+        sl = slice(lo, lo + step)
+        qi = np.repeat(qpos[sl], count[sl])
+        pi = ppos[_ragged(first[sl], count[sl])]
+        d = _haversine_np(lat[qi], lng[qi], lat[pi], lng[pi])
+        o, rank = _topk(qi, ids[pi], -d, k)
+        parts.append(pd.DataFrame(
+            {query_id: ids[qi[o]], "rank": rank.astype(np.int32), point_id: ids[pi[o]],
+             "dist_m": d[o]}))
+    return pd.concat(parts, ignore_index=True)
 
 
 def ring_exactness_bound(cells: np.ndarray, ring: int) -> np.ndarray:
@@ -430,7 +395,7 @@ def knn_join(
     # run single-task on a single-split input (no-op at real scale)
     points = spread_small_scan(points)
     rows = _collect_query_batch(
-        _finite_rows(queries, "lat", "lng"), [query_id, "lat", "lng"], MAX_QUERIES,
+        queries.filter(C._on_globe("lat", "lng")), [query_id, "lat", "lng"], MAX_QUERIES,
         "Use knn_sort_merge for bulk query sets.",
     )
     qids = pd.Series([r[0] for r in rows]).to_numpy()
@@ -441,7 +406,7 @@ def knn_join(
         base, wide = h3x.k_ring(cell, ring), h3x.k_ring(cell, 3 * ring)
         cells = np.unique(wide)
         ivf_list = _cell_among(F.col("lat"), F.col("lng"), res, cells).alias("ivf_list")
-        encoded = _finite_rows(points, "lat", "lng").select(
+        encoded = points.filter(C._on_globe("lat", "lng")).select(
             point_id, ivf_list, "lat", "lng")
         # lazy: the histogram job fills the blocks and the search reads
         # them, so the scan, the spread and the cell UDF run once

@@ -14,6 +14,8 @@ driver-side query batch with its probes, and a ``Scorer``. Its callers:
 * operators/ann.py — lsh_topk, ivf_topk, ivf2_topk, ivfpq_topk and pq_topk,
   scoring by exact cosine or by ADC over PQ codes;
 * operators/knn.py — knn_join, scoring by negated haversine distance.
+
+Its top-k tail, ``_topk``, also cuts knn_sort_merge's curve frames.
 """
 
 from __future__ import annotations
@@ -26,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from cog3pio_spark.operators.pip_join import _ragged
 
 # largest query batch a list-probe search collects to the driver
 MAX_QUERIES = 10_000
@@ -86,6 +90,19 @@ def _rank_topk(
     return ranked.select(query_id_col, "rank", id_col, out)
 
 
+def _topk(qi: np.ndarray, ids: np.ndarray, s: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Top-k cut of scored (query, id) pairs: (positions, 1-based ranks) of
+    each query's ``k`` best, ordered by query, higher score first and
+    ascending id on ties (the oracle's ORDER BY)."""
+    o = np.lexsort((ids, -s, qi))
+    qi = qi[o]
+    head = np.r_[True, qi[1:] != qi[:-1]]
+    at = np.arange(len(qi))
+    rank = at - np.maximum.accumulate(np.where(head, at, 0))
+    keep = rank < k
+    return o[keep], rank[keep] + 1
+
+
 def _search(
     encoded: DataFrame,
     qids: np.ndarray,
@@ -126,16 +143,11 @@ def _search(
         pos = np.minimum(np.searchsorted(lists, lst), len(lists) - 1)
         cnt = np.where(lists[pos] == lst, counts[pos], 0)  # 0: an unprobed list
         row = np.repeat(np.arange(len(pdf)), cnt)
-        first = np.repeat(starts[pos] - (np.cumsum(cnt) - cnt), cnt)
-        qi = q_of[first + np.arange(len(row))]
+        qi = q_of[_ragged(starts[pos], cnt)]
         s = score(pdf, row, qi)
         ids = pdf[id_col].to_numpy()[row]
-        o = np.lexsort((ids, -s, qi))
-        qi, ids, s = qi[o], ids[o], s[o]
-        head = np.r_[True, qi[1:] != qi[:-1]]
-        at = np.arange(len(qi))
-        keep = at - np.maximum.accumulate(np.where(head, at, 0)) < k
-        return pd.DataFrame({query_id_col: qids[qi[keep]], id_col: ids[keep], col: s[keep]})
+        o, _ = _topk(qi, ids, s, k)
+        return pd.DataFrame({query_id_col: qids[qi[o]], id_col: ids[o], col: s[o]})
 
     def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

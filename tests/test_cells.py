@@ -379,6 +379,33 @@ def test_null_bearing_cell_batch_keeps_ids_bit_exact(null_mixed_batch, name):
             assert r["by_col"] == int(want[r["id"]]), r
 
 
+def test_knn_coordinate_rule_keeps_exactly_the_rows_with_a_cell(spark):
+    """The kNN operators' row predicate (``_on_globe``) keeps a row exactly
+    when the cell layer gives it an s2 and an h3x cell: NULL, NaN and ±inf
+    in either column and a latitude past a pole are dropped; lat exactly
+    ±90 and a longitude outside ±180 are kept."""
+    from pyspark.sql import functions as F
+
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        (0, 47.0, 8.0), (1, 90.0, 10.0), (2, -90.0, -170.0), (3, 10.0, 370.0),
+        (4, -10.0, -540.0), (5, None, 8.0), (6, 47.0, None), (7, nan, 8.0),
+        (8, 47.0, nan), (9, inf, 8.0), (10, -inf, 8.0), (11, 47.0, inf),
+        (12, 47.0, -inf), (13, 90.000001, 10.0), (14, -90.000001, 10.0),
+        (15, 95.0, 10.0), (16, None, None),
+    ]
+    df = spark.createDataFrame(rows, "id long, lat double, lng double")
+    got = df.select(
+        "id", C._on_globe("lat", "lng").alias("keep"),
+        C.s2_cell(F.col("lat"), F.col("lng"), 30).isNotNull().alias("s2"),
+        C.h3x_cell(F.col("lat"), F.col("lng"), 9).isNotNull().alias("h3x"),
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        assert bool(r["keep"]) == r["s2"] == r["h3x"], r
+    assert sorted(r["id"] for r in got if r["keep"]) == [0, 1, 2, 3, 4]
+
+
 def test_assign_cells_and_fused_kernel_share_one_null_mask(spark, tmp_path):
     """assign_cells and the fused tile kernel give the same cells on one
     centroid batch: bit-exact against the numpy kernels for finite

@@ -110,14 +110,25 @@ def test_sort_merge_knn_recall(clustered):
     assert recall >= 0.9, recall
 
 
-def test_sort_merge_partitioned_equals_single_bucket(clustered):
+def test_sort_merge_partitioned_equals_single_bucket(clustered, monkeypatch):
     """Ghost-row boundary duplication: bucketed execution must produce the
-    IDENTICAL result as one global bucket (VERDICT r1 fix #2)."""
+    IDENTICAL result as one global bucket (VERDICT r1 fix #2). The default
+    bucket count on these 612 rows is min(8 shuffle partitions, 612 // 128)
+    = 4; ``cuts=[]`` is one bucket."""
     from cog3pio_spark.operators.knn import knn_sort_merge
 
     queries, points = clustered
-    one = knn_sort_merge(queries, points, k=5, scan_width=32, num_buckets=1)
-    many = knn_sort_merge(queries, points, k=5, scan_width=32, num_buckets=4)
+    asked = []
+    orig = type(queries).approxQuantile
+
+    def spy(self, col, probabilities, relative_error):
+        asked.append(len(probabilities))
+        return orig(self, col, probabilities, relative_error)
+
+    monkeypatch.setattr(type(queries), "approxQuantile", spy)
+    one = knn_sort_merge(queries, points, k=5, scan_width=32, cuts=[])
+    many = knn_sort_merge(queries, points, k=5, scan_width=32)
+    assert asked == [3]
     a = {(r["query_id"], r["rank"], r["point_id"]) for r in one.collect()}
     b = {(r["query_id"], r["rank"], r["point_id"]) for r in many.collect()}
     assert a == b
@@ -133,14 +144,12 @@ def test_sort_merge_stat_hints_skip_jobs_same_output(clustered):
     from cog3pio_spark.operators.knn import knn_sort_merge
 
     queries, points = clustered
-    base = knn_sort_merge(queries, points, k=5, scan_width=32, num_buckets=4)
+    base = knn_sort_merge(queries, points, k=5, scan_width=32)
     a = {(r["query_id"], r["rank"], r["point_id"]) for r in base.collect()}
 
     # derive the same cuts the stat path would compute, then supply them
     total = queries.count() + points.count()
-    hinted = knn_sort_merge(
-        queries, points, k=5, scan_width=32, num_buckets=4, total_rows=total
-    )
+    hinted = knn_sort_merge(queries, points, k=5, scan_width=32, total_rows=total)
     b = {(r["query_id"], r["rank"], r["point_id"]) for r in hinted.collect()}
     assert a == b
 
@@ -163,15 +172,17 @@ def test_sort_merge_kernel_not_single_partition(clustered):
     Exchange SinglePartition feeding it (the round-1 scale-killer). r6: the
     neighborhood is a FlatMapGroupsInPandas kernel grouped by _bucket, so
     the guard pins that node and its grouping exchange rather than the
-    removed rowsBetween window (the surviving top-k rank Window partitions
-    by query_id and would satisfy a bare 'Window' check vacuously)."""
+    removed rowsBetween window. The kernel's top-k cut is final, so no
+    Window partitioned by query_id sits after it."""
     from cog3pio_spark.operators.knn import knn_sort_merge
 
     queries, points = clustered
-    sm = knn_sort_merge(queries, points, k=5, scan_width=32, num_buckets=4)
+    sm = knn_sort_merge(queries, points, k=5, scan_width=32)
     sm.collect()
     plan = sm._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan
+    assert "Window [" not in plan.split("FlatMapGroupsInPandas")[0]
+    assert "hashpartitioning(query_id" not in plan
     # the kernel's grouping exchange must hash-partition by _bucket, and no
     # SinglePartition exchange may sit near the kernel or any window
     for i, line in enumerate(plan.splitlines()):
@@ -194,41 +205,37 @@ def test_sort_merge_nan_coord_does_not_corrupt_bucket(spark, clustered):
     from cog3pio_spark.operators.knn import knn_sort_merge
 
     queries, points = clustered
-    clean = knn_sort_merge(queries, points, k=5, scan_width=32, num_buckets=4)
+    clean = knn_sort_merge(queries, points, k=5, scan_width=32)
     a = {(r["query_id"], r["rank"], r["point_id"]) for r in clean.collect()}
     noisy_points = points.unionByName(
         spark.createDataFrame(
             [(99999, float("nan"), float("nan"))], ["point_id", "lat", "lng"]
         )
     )
-    noisy = knn_sort_merge(
-        queries, noisy_points, k=5, scan_width=32, num_buckets=4
-    )
+    noisy = knn_sort_merge(queries, noisy_points, k=5, scan_width=32)
     b = {(r["query_id"], r["rank"], r["point_id"]) for r in noisy.collect()}
     assert a == b
 
 
-def test_sort_merge_past_pole_rows_keep_a_curve_key(spark, clustered):
-    """A finite latitude past a pole is kept by _finite_rows, so its curve
-    key must not be NULL: the cell functions' pole rule would make it NULL,
-    and one NULL key turns its bucket's _cell batch into float64, which the
-    kernel refuses. The key is the raw kernel's (wrapped) cell, so the job
-    finishes, the valid queries' neighbors stay the same and the past-pole
-    query finds its own point first."""
+def test_sort_merge_past_pole_rows_take_part_in_nothing(spark, clustered):
+    """A finite latitude past a pole has no cell (the cell layer's pole
+    rule), so the sort-merge operator drops it with the NULL and non-finite
+    rows: its curve key is the cell layer's own s2_cell, never NULL, the
+    past-pole query gets no rows and the valid queries' neighbours stay the
+    same. (The raw curve kernel folds (95, 10) onto the id of (85, 190), so
+    such a query used to find the past-pole point first.)"""
     from cog3pio_spark.operators.knn import knn_sort_merge
 
     queries, points = clustered
-    clean = knn_sort_merge(queries, points, k=5, scan_width=32, num_buckets=4)
+    clean = knn_sort_merge(queries, points, k=5, scan_width=32)
     a = {(r["query_id"], r["rank"], r["point_id"]) for r in clean.collect()}
     pole_q = queries.unionByName(
         spark.createDataFrame([(999, 95.0, 10.0)], ["query_id", "lat", "lng"]))
     pole_p = points.unionByName(
         spark.createDataFrame([(99999, 95.0, 10.0)], ["point_id", "lat", "lng"]))
-    out = knn_sort_merge(pole_q, pole_p, k=5, scan_width=32, num_buckets=4).collect()
-    b = {(r["query_id"], r["rank"], r["point_id"]) for r in out if r["query_id"] != 999}
-    assert a == b
-    pole = sorted((r["rank"], r["point_id"]) for r in out if r["query_id"] == 999)
-    assert len(pole) == 5 and pole[0] == (1, 99999)
+    out = knn_sort_merge(pole_q, pole_p, k=5, scan_width=32).collect()
+    assert {(r["query_id"], r["rank"], r["point_id"]) for r in out} == a
+    assert len(a) == 12 * 5
 
 
 def test_sparse_queries_fall_back(spark, clustered):
@@ -352,23 +359,27 @@ def test_null_or_nonfinite_coords_never_become_neighbours(spark, clustered, op):
     """A point with a NULL, NaN or infinite coordinate has no distance to
     anything, so it is never a neighbour (a NULL distance sorts first: such
     a point used to come back as rank 1 for every brute-served query), and
-    a query at such a coordinate gets no rows. knn_join's far query (999)
-    is brute-served; the sort-merge frame covers the whole curve."""
+    a query at such a coordinate gets no rows. A latitude past a pole is
+    one too: it has no cell (the cell layer's pole rule), and a query at
+    (95, 10) used to find a point there as rank 1. knn_join's far query
+    (999) is brute-served; the sort-merge frame covers the whole curve."""
     from cog3pio_spark.operators import knn
 
     queries, points = clustered
     kw = {
         "knn_brute": {},
         "knn_join": {"res": 6, "ring": 1},
-        "knn_sort_merge": {"scan_width": 1024, "num_buckets": 1},
+        "knn_sort_merge": {"scan_width": 1024, "cuts": []},
     }[op]
     bad_points = spark.createDataFrame(
-        [(900, None, None), (901, float("nan"), 8.0), (902, 47.0, float("inf"))],
+        [(900, None, None), (901, float("nan"), 8.0), (902, 47.0, float("inf")),
+         (903, 95.0, 10.0)],
         "point_id long, lat double, lng double",
     )
     far = spark.createDataFrame([(999, -40.0, 100.0)], "query_id long, lat double, lng double")
     bad_queries = spark.createDataFrame(
-        [(-1, None, None), (-2, float("nan"), float("nan")), (-3, float("-inf"), 8.0)],
+        [(-1, None, None), (-2, float("nan"), float("nan")), (-3, float("-inf"), 8.0),
+         (-4, 95.0, 10.0), (-5, -95.0, 10.0)],
         "query_id long, lat double, lng double",
     )
     fn = getattr(knn, op)
@@ -470,9 +481,10 @@ def test_spread_small_scan_decides_from_the_plan(spark):
     assert f"RoundRobinPartitioning({par})" in out._jdf.queryExecution().executedPlan().toString()
 
 
-def test_sort_merge_explicit_num_buckets_keeps_the_row_floor(clustered, monkeypatch):
+def test_sort_merge_row_floor_binds_over_shuffle_partitions(spark, clustered, monkeypatch):
     """The total // _BUCKET_ROWS_TARGET bucket floor bounds the rows one
-    pandas kernel task holds, so it binds an explicit num_buckets too."""
+    pandas kernel task holds, so it binds over a smaller shuffle partition
+    count."""
     from cog3pio_spark.operators import knn
 
     queries, points = clustered
@@ -485,7 +497,12 @@ def test_sort_merge_explicit_num_buckets_keeps_the_row_floor(clustered, monkeypa
         return orig(self, col, probabilities, relative_error)
 
     monkeypatch.setattr(type(queries), "approxQuantile", spy)
-    out = knn.knn_sort_merge(queries, points, k=5, scan_width=32, num_buckets=1)
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        out = knn.knn_sort_merge(queries, points, k=5, scan_width=32)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
     assert asked == [3]
     single = knn.knn_sort_merge(queries, points, k=5, scan_width=32, cuts=[])
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, single.collect()))
@@ -506,3 +523,21 @@ def test_q21_job_budget(spark):
     rows, jobs = _in_job_group(spark, lambda: E.queries()["q21_knn_ring"](spark, sf).collect())
     assert len(rows) == 15 * 5
     assert len(jobs) <= 9
+
+
+def test_q43_job_budget(spark):
+    """q43 (sort-merge kNN on the sf0.01 customer points) runs at most 11
+    Spark jobs: the union checkpoint, the count, the quantile cuts and the
+    bucketed kernel. Its kernel cuts each query to k, with no rank window
+    after it."""
+    import os
+
+    import __spark_entry__ as E
+
+    sf = "/root/testdata/sf0.01"
+    if not os.path.isdir(sf):
+        pytest.skip("sf0.01 test data not present")
+    rows, jobs = _in_job_group(
+        spark, lambda: E.queries()["q43_knn_sort_merge"](spark, sf).collect())
+    assert len(rows) == 24
+    assert len(jobs) <= 11
